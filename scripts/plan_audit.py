@@ -40,9 +40,9 @@ SKIP = {"stream_hourly", "stream_sliding", "stream_sessionize", "stream_dedup", 
 #:   - events_user_setops: a 1-row min(ts) scalar broadcast
 #:   - knn_top3: the 1-row exactness-bound scalar in the rescue path
 _REGRID_AXIS_BNLJ = {
-    "regrid_conservative", "regrid_conservative_clip",
+    "regrid_conservative",
     "regrid_bilinear_periodic", "regrid_bilinear_noperiodic",
-    "regrid_unmapped", "regrid_patch", "regrid_nearest_s2d",
+    "regrid_patch", "regrid_nearest_s2d",
     "regrid_nearest_d2s", "regrid_bilinear_locstream",
     "regrid_dataset_multivar", "regrid_conservative_4d",
 }

@@ -17,3 +17,22 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(body)`` runs ``body()`` under a fresh job group and
+    returns ``(result, number of Spark jobs it launched)``."""
+    import uuid
+
+    def run(body):
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = body()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -1,5 +1,7 @@
 """Grid-constructor tests — port of xesmf/tests/test_util.py:5-21."""
 
+import warnings
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -44,3 +46,126 @@ def test_locstream(spark):
     assert g.shape == (1, 4)
     assert not g.has_bounds
     assert g.df.count() == 4
+
+
+def _crossjoin_cells(spark, spec):
+    """The meshgrid as a cross join of two grid_1d axis tables — the
+    reference construction the one-range cell table must reproduce."""
+    from xesmf_spark.grids import grid_1d
+
+    lon0, lon1, dlon, lat0, lat1, dlat = spec
+    lon_ax, n_x = grid_1d(spark, lon0, lon1, dlon, "i")
+    lat_ax, _ = grid_1d(spark, lat0, lat1, dlat, "j")
+    lat = lat_ax.select(
+        "j", F.col("lo").alias("lat_lo"), F.col("hi").alias("lat_hi"), F.col("c").alias("lat")
+    )
+    lon = lon_ax.select(
+        "i", F.col("lo").alias("lon_lo"), F.col("hi").alias("lon_hi"), F.col("c").alias("lon")
+    )
+    return lat.crossJoin(lon).select(
+        (F.col("j") * F.lit(n_x) + F.col("i")).alias("cell_id"),
+        "j", "i", "lon", "lat", "lon_lo", "lon_hi", "lat_lo", "lat_hi",
+    )
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        (-180.0, 180.0, 20.0, -90.0, 90.0, 15.0),
+        (0.0, 4.0, 1.0, 0.0, 4.0, 1.0),
+        (-120.0, 120.0, 0.4, -60.0, 60.0, 0.3),
+        (-120.0, 120.0, 0.6, -60.0, 60.0, 0.4),
+    ],
+)
+def test_grid_2d_matches_crossjoin_bit_for_bit(spark, spec):
+    from xesmf_spark.grids import grid_2d
+
+    g = grid_2d(spark, *spec)
+    ref = _crossjoin_cells(spark, spec)
+    assert g.df.dtypes == ref.dtypes
+    # repr keeps every bit that matters (it tells -0.0 from 0.0)
+    got = sorted(tuple(map(repr, r)) for r in g.df.collect())
+    want = sorted(tuple(map(repr, r)) for r in ref.collect())
+    assert len(got) == g.n_cells
+    assert got == want
+
+
+def _constructor_grids(spark):
+    from xesmf_spark.grids import grid_2d, grid_from_2d_arrays, grid_from_arrays
+
+    return {
+        "grid_2d": grid_2d(spark, 0.0, 4.0, 1.0, 0.0, 2.0, 1.0),
+        "grid_from_arrays": grid_from_arrays(
+            spark, [0.5, 1.5, 2.5], [10.0, 30.0], [0.0, 1.0, 2.0, 3.0], [0.0, 20.0, 40.0]
+        ),
+        "grid_from_arrays_centres": grid_from_arrays(spark, [0.0, 1.0], [95.0, 0.0]),
+        # bottom cell row collapsed to lines: its first two node rows coincide
+        "grid_from_2d_arrays": grid_from_2d_arrays(
+            spark,
+            [[0.5, 1.5, 2.5]] * 3,
+            [[0.0] * 3, [0.5] * 3, [1.5] * 3],
+            lon_b=[[0.0, 1.0, 2.0, 3.0]] * 4,
+            lat_b=[[0.0] * 4, [0.0] * 4, [1.0] * 4, [2.0] * 4],
+        ),
+        "locstream": locstream(spark, [0.0, 5.0, 10.0], [-20.0, 0.0, 91.0]),
+    }
+
+
+def test_constructor_grid_facts_run_no_job(spark, jobs_in):
+    """Latitude range, degeneracy and the cache digest of a
+    constructor-built grid come from its driver-side geometry."""
+    from xesmf_spark.grids import count_degenerate_cells, validate_lat_range
+
+    grids = _constructor_grids(spark)
+
+    def probe():
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            for g in grids.values():
+                validate_lat_range(g)
+                count_degenerate_cells(g)
+                g.facts.digest
+        return len(caught)
+
+    n_warned, jobs = jobs_in(probe)
+    assert jobs == 0
+    assert n_warned == 2  # the 95 and 91 degree latitudes
+    assert count_degenerate_cells(grids["grid_from_2d_arrays"]) == 3
+
+
+def test_driver_facts_match_cell_table_aggregate(spark, jobs_in):
+    """A hand-built Grid (no geometry) gets the same latitude and
+    degeneracy facts from ONE aggregate over its cells."""
+    from xesmf_spark.grids import Grid
+
+    for name, g in _constructor_grids(spark).items():
+        bare = Grid(df=g.df, shape=g.shape, has_bounds=g.has_bounds, curvilinear=g.curvilinear)
+        facts, jobs = jobs_in(lambda: bare.facts)
+        assert jobs <= 2, name  # one aggregate: its shuffle map stage + result
+        assert facts.lat_out_of_range == g.facts.lat_out_of_range, name
+        assert facts.n_degenerate == g.facts.n_degenerate, name
+        assert jobs_in(lambda: bare.facts)[1] == 0  # once per Grid
+
+
+def test_geometry_digest_tells_same_shape_grids_apart(spark):
+    from xesmf_spark.grids import grid_from_arrays
+
+    lon = [-135.0, -45.0, 45.0, 135.0]
+    uniform = grid_from_arrays(spark, lon, [-60.0, -20.0, 20.0, 60.0])
+    gaussian = grid_from_arrays(spark, lon, [-70.0, -25.0, 25.0, 70.0])
+    assert uniform.shape == gaussian.shape
+    assert uniform.facts.digest != gaussian.facts.digest
+    again = grid_from_arrays(spark, lon, [-60.0, -20.0, 20.0, 60.0])
+    assert again.facts.digest == uniform.facts.digest
+    assert grid_global(spark, 20, 12).facts.digest == grid_global(spark, 20, 12).facts.digest
+
+
+def test_axis_tables_are_lazy_and_match_grid_1d(spark):
+    from xesmf_spark.grids import grid_1d, grid_2d
+
+    g = grid_2d(spark, -30.0, 30.0, 10.0, -20.0, 20.0, 5.0)
+    assert "_axes" not in g.__dict__
+    lon = sorted(map(tuple, g.get_lon_axis().collect()))
+    assert g.get_lon_axis() is g.get_lon_axis()
+    assert lon == sorted(map(tuple, grid_1d(spark, -30.0, 30.0, 10.0, "i")[0].collect()))
+    assert g.get_lat_axis().count() == g.n_y

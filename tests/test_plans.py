@@ -200,9 +200,8 @@ def test_ann_and_knn_joins_never_cartesian(spark):
     g_pool = grid_2d(spark, -60, 60, 5.0, -30, 30, 5.0)
     kj = knn_join(g_need, g_pool, k=2, strategy="bucketed", bin_deg=12.0)
     plan2 = _plan(kj)
-    # no unkeyed product between the two point relations (the axis
-    # cross-joins inside grid construction are tiny Ranges and fine);
-    # the candidate path must carry a keyed hash join on the bin key
+    # no unkeyed product between the two point relations; the
+    # candidate path must carry a keyed hash join on the bin key
     assert "CartesianProduct" not in plan2, plan2
     # the candidate join is keyed on the (blat, blon) bin columns
     assert "BroadcastHashJoin [blat#" in plan2 or "SortMergeJoin [blat#" in plan2 or (

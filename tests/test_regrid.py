@@ -478,3 +478,83 @@ def test_unmapped_cells_diagnostic(spark, g_in, g_out):
 
     rg2 = Regridder(spark, g_in, g_out, "conservative")
     assert rg2.unmapped_cells().count() == 0
+
+
+def test_reuse_construction_runs_no_job(spark, tmp_path, jobs_in):
+    """From a warm cache, a Regridder on freshly built grids validates,
+    keys and loads its weights without a Spark job."""
+    wdir = str(tmp_path)
+    Regridder(spark, grid_global(spark, 20, 12), grid_global(spark, 15, 9),
+              "conservative", weights_dir=wdir)
+    g_in, g_out = grid_global(spark, 20, 12), grid_global(spark, 15, 9)
+    rg, jobs = jobs_in(lambda: Regridder(
+        spark, g_in, g_out, "conservative", reuse_weights=True, weights_dir=wdir))
+    assert jobs == 0
+    assert rg.nnz > 0
+
+
+def test_cache_filename_follows_geometry(spark, tmp_path):
+    """Same shape, different latitudes: different cache files. The same
+    geometry built twice: the same file."""
+    from xesmf_spark.grids import grid_from_arrays
+
+    wdir = str(tmp_path)
+    lon = [-135.0, -45.0, 45.0, 135.0]
+    dst = locstream(spark, [0.0, 40.0], [10.0, -10.0])
+
+    def rg(lat):
+        src = grid_from_arrays(spark, lon, lat, periodic=True)
+        return Regridder(spark, src, dst, "nearest_s2d", reuse_weights=True, weights_dir=wdir)
+
+    uniform = rg([-60.0, -20.0, 20.0, 60.0])
+    gaussian = rg([-70.0, -25.0, 25.0, 70.0])
+    assert uniform.filename != gaussian.filename
+    assert rg([-60.0, -20.0, 20.0, 60.0]).filename == uniform.filename
+
+
+def test_reuse_shares_csr_broadcast_rebuild_does_not(spark, g_in, g_out, tmp_path, jobs_in):
+    """Reuse constructions on an unchanged cache file share the weights
+    frame, so regrid_numpy's CSR broadcast is collected once; a rebuilt
+    file gets a fresh frame and broadcast."""
+    import numpy as np
+
+    wdir = str(tmp_path)
+    x = np.random.default_rng(0).random((1,) + g_in.shape)
+
+    def regrid(reuse):
+        rg = Regridder(spark, g_in, g_out, "bilinear", periodic=True,
+                       reuse_weights=reuse, weights_dir=wdir)
+        y, jobs = jobs_in(lambda: rg.regrid_numpy(x))
+        return rg, y, jobs
+
+    first, y1, jobs_first = regrid(reuse=False)
+    second, y2, jobs_second = regrid(reuse=True)
+    assert second.weights is first.weights
+    assert jobs_second == jobs_first - 1  # no CSR collect
+    rebuilt, y3, jobs_rebuilt = regrid(reuse=False)
+    assert rebuilt.weights is not first.weights
+    assert jobs_rebuilt == jobs_first
+    np.testing.assert_array_equal(y1, y2)
+    np.testing.assert_array_equal(y1, y3)
+
+
+def test_prepare_with_auto_shuffle_partitions(spark, g_in, g_out, monkeypatch, tmp_path):
+    """A runtime that reports spark.sql.shuffle.partitions as "auto"
+    (open-source Spark rejects setting it) must not break prepare()."""
+    conf = spark.conf
+    real_get = conf.get
+
+    def get(key, *default):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(key, *default)
+
+    monkeypatch.setattr(conf, "get", get)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "auto"
+    rg = Regridder(spark, g_in, g_out, "bilinear", weights_dir=str(tmp_path))
+    rg.prepare()
+    try:
+        assert rg._prepared.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        assert rg(_field(g_in)).count() == g_out.n_cells
+    finally:
+        rg.finalize()

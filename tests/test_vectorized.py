@@ -105,3 +105,38 @@ def test_smm_apply_files_discard_sink(spark, tmp_path):
             spark, in_dir, w, out_dir, n_in=g_in.n_cells, n_out=g_out.n_cells,
             extra_cols=("time",), sink="s3",
         )
+
+
+def test_smm_apply_files_returns_written_schema_without_a_job(spark, tmp_path, jobs_in):
+    """The parquet sink's result DataFrame carries the schema the tasks
+    wrote, so an apply (CSR broadcast warm) is ONE job — the manifest —
+    with no schema-inference job, and the frame reads back the values."""
+    import numpy as np
+
+    from xesmf_spark.vectorized import smm_apply_files, write_wide_parquet
+
+    g_in = grid_global(spark, 20, 12)
+    g_out = grid_global(spark, 15, 9)
+    w = conservative_weights(g_in, g_out)
+    in_dir = str(tmp_path / "in")
+    write_wide_parquet(
+        [(t,) for t in range(1, 4)], in_dir, g_in.n_cells,
+        lambda e: np.full(g_in.n_cells, float(e[0])), extra_names=("time",), files=2,
+    )
+
+    def apply(k):
+        return smm_apply_files(
+            spark, in_dir, w, str(tmp_path / f"out{k}"), n_in=g_in.n_cells,
+            n_out=g_out.n_cells, extra_cols=("time",),
+        )
+
+    apply(0)  # collects and broadcasts the CSR
+    out, jobs = jobs_in(lambda: apply(1))
+    assert jobs == 1
+    assert out.dtypes == [("time", "bigint"), ("values", "array<double>")]
+    rows = sorted(out.collect())
+    assert [r.time for r in rows] == [1, 2, 3]
+    # a constant field stays constant wherever the conservative weights map
+    for r in rows:
+        v = np.array(r["values"])
+        assert np.allclose(v[v != 0.0], float(r.time))

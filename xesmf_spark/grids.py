@@ -5,8 +5,9 @@ Reference semantics reproduced here (see SURVEY.md §1, §2A #25-28):
 - ``_grid_1d`` (xesmf/util.py:6-28): bounds ``b_k = start + k*step`` via
   ``np.arange(start, end + step, step)``; centers are bound midpoints.
 - ``grid_2d`` (xesmf/util.py:31-69): 2-D rectilinear grid = meshgrid of
-  the two 1-D axes. Spark-native reading: a **cross join** of two tiny
-  axis DataFrames (xesmf/frontend.py:21-30 ``as_2d_mesh``).
+  the two 1-D axes. Spark-native reading: ONE ``spark.range(n_y*n_x)``
+  projection with ``j = id div n_x``, ``i = id % n_x`` and the 1-D axis
+  formula applied to each index (xesmf/frontend.py:21-30 ``as_2d_mesh``).
 - ``grid_global`` (xesmf/util.py:72-98): grid_2d over [-180,180]x[-90,90]
   with a divisibility warning.
 - ``wave_smooth`` (xesmf/data.py:8-44): the analytic benchmark field
@@ -20,17 +21,27 @@ Cell table schema (FIXTURES.md §1.1)::
     lon, lat          DOUBLE  -- cell centers, degrees
     lon_lo, lon_hi, lat_lo, lat_hi  DOUBLE  -- cell bounds, degrees
 
-Scale note: cells are generated with ``spark.range`` (distributed, no
-driver-side materialization) and the 2-D table is a cross join of two
-1-D axes — an n_y x n_x grid of any size never touches the driver.
+Scale note: ``grid_2d`` cells are generated with ``spark.range``
+(distributed, no driver-side materialization), so an n_y x n_x grid of
+any size never touches the driver. What the driver does hold is the
+grid's :class:`Geometry` — the 1-D axes of a rectilinear grid, or the
+arrays a curvilinear mesh or point list was built from — and the facts
+a Regridder construction checks (latitude range, degenerate cells, the
+weight-cache digest) are computed from it with numpy, launching no
+Spark job.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import warnings
+from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
+from functools import cached_property
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +57,21 @@ def _arange_n(start: float, stop: float, step: float) -> int:
     return n
 
 
+def _axis_bounds(k: Column, start_b: float, step: float) -> tuple[Column, Column]:
+    """Bounds of 1-D cell ``k``: ``start + k*step`` and ``start + (k+1)*step``
+    — ``np.arange``'s own arithmetic, so every value is bit-identical to
+    the reference's bounds array (and to :func:`_axis_geometry`)."""
+    lo = F.lit(float(start_b)) + k.cast("double") * F.lit(float(step))
+    hi = F.lit(float(start_b)) + (k + 1).cast("double") * F.lit(float(step))
+    return lo, hi
+
+
+def _axis_geometry(start_b: float, step: float, n_cells: int) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side (centers, bounds) of the axis :func:`grid_1d` builds."""
+    b = float(start_b) + np.arange(n_cells + 1, dtype=np.float64) * float(step)
+    return (b[:-1] + b[1:]) / 2.0, b
+
+
 def grid_1d(
     spark: SparkSession, start_b: float, end_b: float, step: float, idx_name: str = "i"
 ) -> tuple[DataFrame, int]:
@@ -55,17 +81,95 @@ def grid_1d(
     ``np.arange(start_b, end_b + step, step)``, centers are midpoints.
     Returns (axis DataFrame, n_cells).
     """
-    n_bounds = _arange_n(start_b, end_b + step, step)
-    n_cells = n_bounds - 1
+    n_cells = _arange_n(start_b, end_b + step, step) - 1
+    lo, hi = _axis_bounds(F.col("id"), start_b, step)
     ax = spark.range(n_cells).select(
-        F.col("id").alias(idx_name),
-        (F.lit(float(start_b)) + F.col("id").cast("double") * F.lit(float(step))).alias("lo"),
-        (F.lit(float(start_b)) + (F.col("id") + 1).cast("double") * F.lit(float(step))).alias(
-            "hi"
-        ),
+        F.col("id").alias(idx_name), lo.alias("lo"), hi.alias("hi")
     )
     ax = ax.withColumn("c", (F.col("lo") + F.col("hi")) / F.lit(2.0))
     return ax, n_cells
+
+
+def _frozen(a) -> np.ndarray:
+    """Float64 copy the caller can no longer mutate under the grid."""
+    a = np.array(a, dtype=np.float64)
+    a.setflags(write=False)
+    return a
+
+
+@dataclass(frozen=True, eq=False)
+class Geometry:
+    """Driver-side record of a grid's cell geometry, in degrees — what
+    every constructor already holds before it builds the cell table.
+
+    - rectilinear grids keep their separable 1-D axes: ``lon`` (n_x,) and
+      ``lat`` (n_y,) centers, ``lon_b`` (n_x+1,) and ``lat_b`` (n_y+1,)
+      bounds (cell ``k`` spans ``b[k]..b[k+1]``);
+    - curvilinear meshes and point lists keep (n_y, n_x) ``lon``/``lat``
+      center fields and (n_y+1, n_x+1) corner-node arrays.
+
+    ``lon_b``/``lat_b`` are None for a grid without bounds.
+    """
+
+    lon: np.ndarray
+    lat: np.ndarray
+    lon_b: np.ndarray | None = None
+    lat_b: np.ndarray | None = None
+
+    @property
+    def rectilinear(self) -> bool:
+        return self.lon.ndim == 1
+
+    def facts(self, shape: tuple[int, int]) -> "CellFacts":
+        """:class:`CellFacts` with numpy, launching no Spark job."""
+        bad = ~((self.lat >= -90.0) & (self.lat <= 90.0))  # NaN counts as bad
+        h = hashlib.md5(f"geometry|{shape}".encode())
+        for a in (self.lon, self.lat, self.lon_b, self.lat_b):
+            if a is None:
+                h.update(b"none")
+            else:
+                # rounded to 9 decimals like the cell-table digest; +0.0
+                # folds -0.0 into 0.0 so equal geometry hashes equally
+                h.update(repr(a.shape).encode())
+                h.update((np.round(a, 9) + 0.0).tobytes())
+        return CellFacts(bool(bad.any()), self._n_degenerate(), h.hexdigest()[:8])
+
+    def _n_degenerate(self) -> int:
+        if self.lon_b is None:
+            return 0
+        if self.rectilinear:
+            # a rectilinear cell is degenerate iff one of its intervals
+            # collapses: count the cells outside the good-lon x good-lat block
+            good_x = int(np.count_nonzero(self.lon_b[1:] != self.lon_b[:-1]))
+            good_y = int(np.count_nonzero(self.lat_b[1:] != self.lat_b[:-1]))
+            return self.lon.size * self.lat.size - good_x * good_y
+        n_y, n_x = self.lon.shape
+        ring = ((0, 0), (0, 1), (1, 1), (1, 0))  # (j,i) -> (j,i+1) -> (j+1,i+1) -> (j+1,i)
+        cx = [self.lon_b[dj : dj + n_y, di : di + n_x] for dj, di in ring]
+        cy = [self.lat_b[dj : dj + n_y, di : di + n_x] for dj, di in ring]
+        xs = [np.radians(c) for c in cx]
+        ys = [np.sin(np.radians(c)) for c in cy]
+        area2 = sum(xs[k] * ys[(k + 1) % 4] - xs[(k + 1) % 4] * ys[k] for k in range(4))
+        deg = np.abs(area2) < 1e-16
+        # a ring with fewer than 4 distinct nodes at 12 decimals (numpy
+        # rounds exact ties to even where Spark's round() rounds half up)
+        rx = [np.round(c, 12) for c in cx]
+        ry = [np.round(c, 12) for c in cy]
+        for a in range(4):
+            for b in range(a + 1, 4):
+                deg |= (rx[a] == rx[b]) & (ry[a] == ry[b])
+        return int(np.count_nonzero(deg))
+
+
+class CellFacts(NamedTuple):
+    """What a Regridder construction checks about a grid."""
+
+    #: some cell center lies outside [-90, 90]
+    lat_out_of_range: bool
+    #: cells that are triangles or lines instead of quadrilaterals
+    n_degenerate: int
+    #: short digest of the full geometry, part of the weight-cache key
+    digest: str
 
 
 @dataclass
@@ -74,7 +178,8 @@ class Grid:
 
     Spark analogue of the ESMF Grid object (xesmf/backend.py:55-114).
     ``shape = (n_y, n_x)``; ``periodic`` declares 360-degree longitude
-    wrap (xesmf/backend.py:92-95, source grids only).
+    wrap (xesmf/backend.py:92-95, source grids only). A Grid is treated
+    as immutable once built.
     """
 
     df: DataFrame
@@ -89,9 +194,15 @@ class Grid:
     #: (xesmf/frontend.py:424-430); carried as metadata and used by the
     #: Regridder facade to name attached dim-index columns
     dims: tuple[str, str] = ("y", "x")
-    # optional cached 1-D axis tables for rectilinear grids (tiny)
-    lon_axis: DataFrame | None = dc_field(default=None, repr=False)
-    lat_axis: DataFrame | None = dc_field(default=None, repr=False)
+    #: driver-side geometry the constructors keep; None for a Grid built
+    #: by hand around a cell DataFrame
+    geometry: Geometry | None = dc_field(default=None, repr=False)
+    #: builds the tiny 1-D ``(lon, lat)`` axis tables of a rectilinear
+    #: grid; called once, on the first :meth:`get_lon_axis` /
+    #: :meth:`get_lat_axis`. None derives them from the cells.
+    axis_tables: Callable[[], tuple[DataFrame, DataFrame]] | None = dc_field(
+        default=None, repr=False
+    )
 
     @property
     def n_cells(self) -> int:
@@ -105,26 +216,41 @@ class Grid:
     def n_y(self) -> int:
         return self.shape[0]
 
-    def get_lon_axis(self) -> DataFrame:
-        """1-D lon axis (i, lo, hi, c); derived from cells if not cached."""
-        if self.lon_axis is not None:
-            return self.lon_axis
-        return self.df.select(
+    @cached_property
+    def facts(self) -> CellFacts:
+        """Latitude range, degenerate-cell count and geometry digest.
+        Computed with numpy from :attr:`geometry` (no Spark job); a
+        hand-built Grid pays ONE aggregate over its cell table. Either
+        way, once per Grid."""
+        if self.geometry is not None:
+            return self.geometry.facts(self.shape)
+        return _cell_table_facts(self)
+
+    @cached_property
+    def _axes(self) -> tuple[DataFrame, DataFrame]:
+        if self.axis_tables is not None:
+            return self.axis_tables()
+        lon = self.df.select(
             F.col("i"),
             F.col("lon_lo").alias("lo"),
             F.col("lon_hi").alias("hi"),
             F.col("lon").alias("c"),
         ).distinct()
-
-    def get_lat_axis(self) -> DataFrame:
-        if self.lat_axis is not None:
-            return self.lat_axis
-        return self.df.select(
+        lat = self.df.select(
             F.col("j"),
             F.col("lat_lo").alias("lo"),
             F.col("lat_hi").alias("hi"),
             F.col("lat").alias("c"),
         ).distinct()
+        return lon, lat
+
+    def get_lon_axis(self) -> DataFrame:
+        """1-D lon axis (i, lo, hi, c)."""
+        return self._axes[0]
+
+    def get_lat_axis(self) -> DataFrame:
+        """1-D lat axis (j, lo, hi, c)."""
+        return self._axes[1]
 
 
 def grid_2d(
@@ -139,44 +265,48 @@ def grid_2d(
 ) -> Grid:
     """Rectilinear 2-D grid (xesmf/util.py:31-69) as a cell DataFrame.
 
-    ``lat_axis CROSS JOIN lon_axis`` — the relational meshgrid.
+    One ``spark.range`` over the flattened cells with ``j = id div n_x``
+    and ``i = id % n_x``; each index goes through :func:`grid_1d`'s
+    bound formula, so the table equals the meshgrid of the two axes
+    value for value, with no join.
     """
-    lon_ax, n_x = grid_1d(spark, lon0_b, lon1_b, d_lon, "i")
-    lat_ax, n_y = grid_1d(spark, lat0_b, lat1_b, d_lat, "j")
-    cells = (
-        lat_ax.select(
-            F.col("j"),
-            F.col("lo").alias("lat_lo"),
-            F.col("hi").alias("lat_hi"),
-            F.col("c").alias("lat"),
-        )
-        .crossJoin(
-            lon_ax.select(
-                F.col("i"),
-                F.col("lo").alias("lon_lo"),
-                F.col("hi").alias("lon_hi"),
-                F.col("c").alias("lon"),
-            )
-        )
-        .select(
-            (F.col("j") * F.lit(n_x) + F.col("i")).alias("cell_id"),
-            "j",
-            "i",
-            "lon",
-            "lat",
-            "lon_lo",
-            "lon_hi",
-            "lat_lo",
-            "lat_hi",
-        )
+    n_x = _arange_n(lon0_b, lon1_b + d_lon, d_lon) - 1
+    n_y = _arange_n(lat0_b, lat1_b + d_lat, d_lat) - 1
+    j, i = F.expr(f"id div {n_x}"), F.col("id") % F.lit(n_x)
+    lon_lo, lon_hi = _axis_bounds(i, lon0_b, d_lon)
+    lat_lo, lat_hi = _axis_bounds(j, lat0_b, d_lat)
+    cells = spark.range(n_y * n_x).select(
+        F.col("id").alias("cell_id"),
+        j.alias("j"),
+        i.alias("i"),
+        lon_lo.alias("lon_lo"),
+        lon_hi.alias("lon_hi"),
+        lat_lo.alias("lat_lo"),
+        lat_hi.alias("lat_hi"),
     )
+    cells = cells.select(
+        "cell_id",
+        "j",
+        "i",
+        ((F.col("lon_lo") + F.col("lon_hi")) / F.lit(2.0)).alias("lon"),
+        ((F.col("lat_lo") + F.col("lat_hi")) / F.lit(2.0)).alias("lat"),
+        "lon_lo",
+        "lon_hi",
+        "lat_lo",
+        "lat_hi",
+    )
+    lon, lon_b = _axis_geometry(lon0_b, d_lon, n_x)
+    lat, lat_b = _axis_geometry(lat0_b, d_lat, n_y)
     return Grid(
         df=cells,
         shape=(n_y, n_x),
         periodic=periodic,
         has_bounds=True,
-        lon_axis=lon_ax,
-        lat_axis=lat_ax,
+        geometry=Geometry(_frozen(lon), _frozen(lat), _frozen(lon_b), _frozen(lat_b)),
+        axis_tables=lambda: (
+            grid_1d(spark, lon0_b, lon1_b, d_lon, "i")[0],
+            grid_1d(spark, lat0_b, lat1_b, d_lat, "j")[0],
+        ),
     )
 
 
@@ -259,8 +389,13 @@ def grid_from_arrays(
         shape=(n_y, n_x),
         periodic=periodic,
         has_bounds=has_bounds,
-        lon_axis=lon_ax,
-        lat_axis=lat_ax,
+        geometry=Geometry(
+            _frozen(lon),
+            _frozen(lat),
+            _frozen(lon_b) if has_bounds else None,
+            _frozen(lat_b) if has_bounds else None,
+        ),
+        axis_tables=lambda: (lon_ax, lat_ax),
     )
 
 
@@ -279,11 +414,10 @@ def grid_from_2d_arrays(
     carries its 4-corner ring ``clon0..3 / clat0..3`` in node order
     (j,i) → (j,i+1) → (j+1,i+1) → (j+1,i). Without bounds: bilinear
     (point-in-quad) and nearest only, gated by the Regridder."""
-    import numpy as np
     import pandas as pd
 
-    lon2d = np.asarray(lon2d, dtype=np.float64)
-    lat2d = np.asarray(lat2d, dtype=np.float64)
+    lon2d = _frozen(lon2d)
+    lat2d = _frozen(lat2d)
     if lon2d.ndim != 2 or lon2d.shape != lat2d.shape:
         raise ValueError("lon2d and lat2d must be equal-shaped 2-D arrays")
     n_y, n_x = lon2d.shape
@@ -291,8 +425,8 @@ def grid_from_2d_arrays(
     if (lon_b is None) != (lat_b is None):
         raise ValueError("provide both lon_b and lat_b, or neither")
     if has_corners:
-        lon_b = np.asarray(lon_b, dtype=np.float64)
-        lat_b = np.asarray(lat_b, dtype=np.float64)
+        lon_b = _frozen(lon_b)
+        lat_b = _frozen(lat_b)
         if lon_b.shape != (n_y + 1, n_x + 1) or lat_b.shape != lon_b.shape:
             raise ValueError(
                 "corner arrays lon_b/lat_b must have shape (n_y+1, n_x+1)"
@@ -327,6 +461,7 @@ def grid_from_2d_arrays(
         periodic=periodic,
         has_bounds=has_corners,
         curvilinear=True,
+        geometry=Geometry(lon2d, lat2d, lon_b, lat_b),
     )
 
 
@@ -348,7 +483,13 @@ def locstream(spark: SparkSession, lons: list[float], lats: list[float]) -> Grid
         .withColumn("lat_lo", F.lit(None).cast("double"))
         .withColumn("lat_hi", F.lit(None).cast("double"))
     )
-    return Grid(df=df, shape=(1, len(lons)), periodic=False, has_bounds=False)
+    return Grid(
+        df=df,
+        shape=(1, len(lons)),
+        periodic=False,
+        has_bounds=False,
+        geometry=Geometry(_frozen([lons]), _frozen([lats])),
+    )
 
 
 def wave_smooth(lon: Column | str = "lon", lat: Column | str = "lat") -> Column:
@@ -373,20 +514,11 @@ def wrap_lon(c: Column) -> Column:
     return c - F.lit(360.0) * F.floor((c + F.lit(180.0)) / F.lit(360.0))
 
 
-def count_degenerate_cells(grid: Grid) -> int:
-    """Number of DEGENERATE cells — "triangles or lines, instead of
-    quadrilaterals" (xesmf/frontend.py:148-150): a corner ring with
-    fewer than 4 distinct nodes, or (near-)zero area in the equal-area
-    map ``(radians(lon), sin(lat))`` the conservative builders measure
-    in. Rectilinear grids are degenerate iff an interval bound
-    collapses. One aggregate over the cell table — same O(cells) shape
-    as the geometry digest the cache key already pays — MEMOIZED per
-    (immutable) Grid object so repeated conservative Regridder
-    constructions don't re-scan (same treatment as the geometry digest
-    and the lat-range probe)."""
-    cached = getattr(grid, "_n_degenerate", None)
-    if cached is not None:
-        return cached
+def _cell_table_facts(grid: Grid) -> CellFacts:
+    """:class:`CellFacts` of a Grid without driver-side geometry, from
+    ONE aggregate over its cell table. The digest is an order-insensitive
+    sum of per-row md5 hashes over (cell_id, lon, lat [, bounds,
+    corners]) rounded to 9 decimals."""
     df = grid.df
     corner_cols = [f"c{ax}{k}" for k in range(4) for ax in ("lon", "lat")]
     if all(c in df.columns for c in corner_cols):
@@ -410,20 +542,35 @@ def count_degenerate_cells(grid: Grid) -> int:
             F.col("lat_hi") == F.col("lat_lo")
         )
     else:
-        return 0
-    n = df.filter(deg).count()
-    object.__setattr__(grid, "_n_degenerate", n)
-    return n
+        deg = F.lit(False)
+    cols = [F.col("cell_id").cast("string")]
+    geom_cols = ["lon", "lat", "lon_lo", "lon_hi", "lat_lo", "lat_hi"] + corner_cols
+    for c in geom_cols:
+        if c in df.columns:
+            cols.append(F.round(F.col(c), 9).cast("string"))
+    row_h = F.conv(
+        F.substring(F.md5(F.encode(F.concat_ws(",", *cols), "utf-8")), 1, 15), 16, 10
+    ).cast("long")
+    n_bad, n_deg, digest = df.agg(
+        F.count(F.when(~F.col("lat").between(-90.0, 90.0), 1)),
+        F.count(F.when(deg, 1)),
+        F.sum(row_h % 1_000_000_007),
+    ).first()
+    raw = f"cells|{grid.shape}|{digest}"
+    return CellFacts(n_bad > 0, n_deg, hashlib.md5(raw.encode()).hexdigest()[:8])
+
+
+def count_degenerate_cells(grid: Grid) -> int:
+    """Number of DEGENERATE cells — "triangles or lines, instead of
+    quadrilaterals" (xesmf/frontend.py:148-150): a corner ring with
+    fewer than 4 distinct nodes (at 12 decimals), or (near-)zero area in
+    the equal-area map ``(radians(lon), sin(lat))`` the conservative
+    builders measure in. Rectilinear grids are degenerate iff an
+    interval bound collapses; grids without bounds have none."""
+    return grid.facts.n_degenerate
 
 
 def validate_lat_range(grid: Grid) -> None:
-    """Warn if any |lat| > 90 (xesmf/backend.py:40-52 ``warn_lat_range``).
-    Memoized per Grid object — geometry is immutable once built, and the
-    probe is a Spark job; re-running it on every Regridder construction
-    dominated the cached-weights reuse latency."""
-    bad = getattr(grid, "_lat_range_bad", None)
-    if bad is None:
-        bad = grid.df.filter(~F.col("lat").between(-90.0, 90.0)).limit(1).count()
-        object.__setattr__(grid, "_lat_range_bad", bad)
-    if bad:
+    """Warn if any |lat| > 90 (xesmf/backend.py:40-52 ``warn_lat_range``)."""
+    if grid.facts.lat_out_of_range:
         warnings.warn("Latitude is out of range [-90, 90]. Results are likely wrong.")

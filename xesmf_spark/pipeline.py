@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from xesmf_spark.session import shuffle_partition_count
+
 #: modulus keeping all hash arithmetic < 2^60 (ANSI-safe in both engines)
 P = 1_000_000_007
 #: stopword list for the ratio/langid heuristics (tiny, embedded)
@@ -2622,9 +2624,10 @@ def editdist_dedup_pairs(
     # STREAM side is exempt from AQE coalescing, costs one linear
     # pass over the (small) doc rows — never the pair table — and
     # balances a hot block's quadratic work across tasks (§2.5/§2.6).
-    a = a.repartition(
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    )
+    # The balancing holds while the pair join broadcasts its build
+    # side; under a sort-merge join Spark re-exchanges both sides on
+    # ``block`` and a hot block lands in one task again.
+    a = a.repartition(shuffle_partition_count(df.sparkSession))
     c = b.select(F.col(id_col).alias("id_b"), F.col("ntext").alias("tb"), "block")
     pairs = a.join(c, "block").filter(F.col("id_a") < F.col("id_b"))
     # BANDED Levenshtein (Spark >= 3.5 threshold form): O(len*k)
@@ -3518,9 +3521,7 @@ def record_linkage_pairs(
     # bytes, so AQE's byte-based coalescing would run the whole
     # verification in one task; an explicit-numPartitions round-robin
     # exchange of the stream side is AQE-exempt and linear in records
-    left = left.repartition(
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    )
+    left = left.repartition(shuffle_partition_count(df.sparkSession))
     right = b.select(
         "__block",
         F.col("__id").alias("id_b"),

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from xesmf_spark.apply import smm_apply
 from xesmf_spark.grids import Grid, count_degenerate_cells, validate_lat_range
+from xesmf_spark.session import shuffle_partition_count
 from xesmf_spark.weights import (
     METHODS,
     bilinear_weights,
@@ -56,46 +57,26 @@ def _require_xarray():
     return xr
 
 
-def _grid_extent_hash(grid: Grid) -> str:
-    """Memoized per Grid OBJECT: grid geometry is immutable once built,
-    and re-running the digest aggregate made every reuse_weights
-    Regridder construction pay two Spark jobs (~1 s) against the
-    reference's 36 ms cached-construction baseline
-    (Reuse_regridder.ipynb cell 30). First construction still pays —
-    the digest is what makes the shared cache dir SAFE (shape-only keys
-    silently load wrong weights for same-shape different-geometry
-    grids)."""
-    cached = getattr(grid, "_extent_hash", None)
-    if cached is None:
-        cached = _grid_extent_hash_uncached(grid)
-        object.__setattr__(grid, "_extent_hash", cached)
-    return cached
+#: weight-cache path -> (part-file signature, weights DataFrame). A
+#: reuse construction on an unchanged cache file gets the SAME frame an
+#: earlier construction resolved, and with it the CSR broadcast that
+#: ``vectorized`` keeps per weights frame — built once per file, not
+#: once per Regridder. A rebuilt file has new part files, hence a new
+#: signature and a fresh frame: a stale CSR is never served.
+_WEIGHT_FRAMES: dict[str, tuple[tuple, DataFrame]] = {}
 
 
-def _grid_extent_hash_uncached(grid: Grid) -> str:
-    """Short digest of the grid's FULL geometry for the weight-cache
-    key: an order-insensitive hash over every (cell_id, lon, lat
-    [, bounds]) row, rounded to 9 decimals. Shape + bounding box alone
-    under-determine a grid — Gaussian vs uniform latitudes, or a
-    curvilinear vs rectilinear mesh, share both — and reuse_weights=True
-    would then silently load the wrong cached weights. Cost: ONE
-    aggregate over the cell table (same shape as the min/max collect it
-    replaces; md5 per cell of an O(cells) table is noise next to the
-    weight build itself)."""
-    import hashlib
-
-    cols = [F.col("cell_id").cast("string")]
-    geom_cols = ["lon", "lat", "lon_lo", "lon_hi", "lat_lo", "lat_hi"]
-    geom_cols += [f"c{ax}{k}" for k in range(4) for ax in ("lon", "lat")]
-    for c in geom_cols:
-        if c in grid.df.columns:
-            cols.append(F.round(F.col(c), 9).cast("string"))
-    row_h = F.conv(
-        F.substring(F.md5(F.encode(F.concat_ws(",", *cols), "utf-8")), 1, 15), 16, 10
-    ).cast("long")
-    digest = grid.df.agg(F.sum(row_h % 1_000_000_007)).collect()[0][0]
-    raw = f"{grid.shape}|{digest}"
-    return hashlib.md5(raw.encode()).hexdigest()[:8]
+def _part_files(path: str) -> tuple:
+    """``(name, size, mtime_ns)`` of every parquet part under ``path``."""
+    with os.scandir(path) as entries:
+        return tuple(
+            sorted(
+                (e.name, st.st_size, st.st_mtime_ns)
+                for e in entries
+                if e.name.endswith(".parquet")
+                for st in (e.stat(),)
+            )
+        )
 
 
 class Regridder:
@@ -160,9 +141,10 @@ class Regridder:
         self.n_out = grid_out.n_cells
         self.reuse_weights = reuse_weights
         # cache key mirrors _get_default_filename (frontend.py:251-262),
-        # extended with a geometry digest: shapes alone under-determine
-        # the grid pair and reuse_weights=True would silently load
-        # mismatched weights from the shared cache dir
+        # extended with each grid's geometry digest (Grid.facts): shapes
+        # and bounding boxes alone under-determine a grid — Gaussian vs
+        # uniform latitudes share both — and reuse_weights=True would
+        # silently load mismatched weights from the shared cache dir
         if filename is None:
             filename = "{}_{}x{}_{}x{}{}_{}_{}.parquet".format(
                 method,
@@ -171,8 +153,8 @@ class Regridder:
                 grid_out.n_y,
                 grid_out.n_x,
                 "_peri" if self.periodic else "",
-                _grid_extent_hash(grid_in),
-                _grid_extent_hash(grid_out),
+                grid_in.facts.digest,
+                grid_out.facts.digest,
             )
         self.filename = os.path.join(weights_dir, filename)
 
@@ -187,26 +169,29 @@ class Regridder:
         # count() here was a full Spark job per construction, the bulk
         # of the cached-construction latency the reference does in 36 ms
         # (Reuse_regridder.ipynb cell 30)
-        import glob
-
         import pyarrow.parquet as pq
 
+        self._parts = _part_files(self.filename)
         self.nnz = sum(
-            pq.read_metadata(f).num_rows
-            for f in glob.glob(os.path.join(self.filename, "*.parquet"))
+            pq.read_metadata(os.path.join(self.filename, name)).num_rows
+            for name, _, _ in self._parts
         )
 
     @property
     def weights(self) -> DataFrame:
         """The (row, col, S) triplet DataFrame, resolved LAZILY on first
         access with an explicit schema: construction from a warm cache
-        then costs only the geometry digest + footer nnz (no JVM file
-        listing / schema inference until a query actually needs the
-        weights)."""
+        then costs only the footer nnz (no JVM file listing / schema
+        inference until a query actually needs the weights). Shared
+        with every Regridder on the same unchanged cache file."""
         if self._weights is None:
-            self._weights = self.spark.read.schema(
-                "row BIGINT, col BIGINT, S DOUBLE"
-            ).parquet(self.filename)
+            hit = _WEIGHT_FRAMES.get(self.filename)
+            if hit is None or hit[0] != self._parts or hit[1].sparkSession is not self.spark:
+                frame = self.spark.read.schema("row BIGINT, col BIGINT, S DOUBLE").parquet(
+                    self.filename
+                )
+                hit = _WEIGHT_FRAMES[self.filename] = (self._parts, frame)
+            self._weights = hit[1]
         return self._weights
 
     # -- weight lifecycle (frontend.py:264-293) --------------------------
@@ -265,9 +250,7 @@ class Regridder:
         if self._prepared is None:
             # match the session shuffle-partition count so the planner
             # aligns the field-side exchange to the cached distribution
-            n = num_partitions or int(
-                self.spark.conf.get("spark.sql.shuffle.partitions")
-            )
+            n = num_partitions or shuffle_partition_count(self.spark)
             self._prepared = self.weights.repartition(n, "col").persist()
             self._prepared.count()
         return self
@@ -305,6 +288,12 @@ class Regridder:
         from xesmf_spark.apply import release_persisted
 
         release_persisted()
+        # drop the shared weights frame, and with it the CSR broadcast
+        # once no other Regridder holds the frame
+        hit = _WEIGHT_FRAMES.get(self.filename)
+        if hit is not None and hit[1] is self._weights:
+            del _WEIGHT_FRAMES[self.filename]
+        self._weights = None
         if self._prepared is not None:
             self._prepared.unpersist()
             self._prepared = None

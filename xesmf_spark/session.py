@@ -51,3 +51,15 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+
+
+def shuffle_partition_count(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as a count. Some
+    runtimes accept ``"auto"`` (or another non-integer) there and size
+    shuffles themselves; an explicit partition count then falls back to
+    ``defaultParallelism``."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(value)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism

@@ -58,6 +58,7 @@ def _init_worker_allocator() -> None:
 _init_worker_allocator()
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -74,7 +75,8 @@ from pyspark.sql.types import (
 #: applies the SAME weights to stream after stream — the reference
 #: holds its scipy matrix across calls for exactly this reason
 #: (xesmf/frontend.py:315-318). Weak keys so dropped weight frames
-#: release their broadcast.
+#: release their broadcast. Regridders on one unchanged weight-cache
+#: file share a single weights frame, hence a single broadcast.
 import weakref
 
 _CSR_BC_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -234,7 +236,8 @@ def smm_apply_files(
     natively with pyarrow (no JVM transit of field bytes), runs the
     transposed-gather kernel once over all its rows, and writes one
     output part file. Returns the output as a DataFrame
-    (``spark.read.parquet(output_path)``).
+    (``spark.read.parquet(output_path)`` with the written schema, so
+    resolving it runs no job).
 
     At cluster scale this is the plan you want for a 100-TB field: scan
     and sink are both executor-local and Arrow-native, the weight
@@ -268,6 +271,11 @@ def smm_apply_files(
             splits.append((p, rg))
     if not splits:
         raise FileNotFoundError(f"no parquet files under {input_path}")
+    in_schema = pq.read_schema(splits[0][0])
+    out_schema = pa.schema(
+        [in_schema.field(e) for e in extra_cols]
+        + [pa.field(value_col, pa.list_(pa.float64()))]
+    )
     if tasks is None:
         tasks = min(len(splits), spark.sparkContext.defaultParallelism)
     os.makedirs(output_path, exist_ok=True)
@@ -317,10 +325,6 @@ def smm_apply_files(
         t1 = _time.perf_counter()
         Y = _spmv_batch(X, bc.value, n_out)
         t2 = _time.perf_counter()
-        out_schema = pa.schema(
-            [tb.schema.field(e) for e in extra_cols]
-            + [pa.field(value_col, pa.list_(pa.float64()))]
-        )
         ot = pa.Table.from_arrays(
             [tb.column(e).combine_chunks() for e in extra_cols] + [_matrix_to_list(Y)],
             schema=out_schema,
@@ -375,7 +379,9 @@ def smm_apply_files(
     LAST_MANIFEST = manifest.collect()  # run the job (commit point)
     if sink == "discard":
         return None
-    return spark.read.parquet(output_path)
+    # the schema the tasks wrote: reading without it runs a
+    # schema-inference job on every apply
+    return spark.read.schema(from_arrow_schema(out_schema)).parquet(output_path)
 
 
 #: per-task rows of the most recent smm_apply_files run, including the
