@@ -112,6 +112,108 @@ def test_regrid_numpy_shape_validation(spark, grids):
         rg("not a field")
 
 
+def _apply_vectorized(spark, rg, X):
+    """``X`` (k, n_in) through the executor-side ``smm_apply_vectorized``."""
+    import pandas as pd
+
+    from xesmf_spark.vectorized import smm_apply_vectorized
+
+    wide = spark.createDataFrame(
+        pd.DataFrame({"slice_idx": np.arange(len(X)), "values": list(X)}),
+        schema="slice_idx long, values array<double>",
+    )
+    out = smm_apply_vectorized(wide, rg.weights, rg.n_in, rg.n_out, extra_cols=["slice_idx"])
+    return np.stack(out.toPandas().sort_values("slice_idx")["values"].to_numpy())
+
+
+@pytest.mark.parametrize("method", ["bilinear", "conservative", "nearest_s2d", "locstream"])
+def test_regrid_numpy_bit_identical_to_vectorized(spark, grids, tmp_path, method):
+    """The driver-side regrid_numpy and the executor-side
+    smm_apply_vectorized run one kernel on one CSR: same bits."""
+    from xesmf_spark.grids import locstream
+
+    g_in, g_out = grids
+    if method == "locstream":
+        g_in = locstream(spark, [-120.0, -40.0, 10.0, 75.0, 160.0], [-60.0, 10.0, 45.0, -20.0, 70.0])
+        method = "nearest_s2d"
+    rg = Regridder(spark, g_in, g_out, method, weights_dir=str(tmp_path))
+    X = np.random.default_rng(1).random((6, rg.n_in))
+    shape_in = (rg.n_in,) if rg.locstream_in else g_in.shape
+    got = rg.regrid_numpy(X.reshape((2, 3) + shape_in))
+    assert got.shape == (2, 3) + g_out.shape
+    np.testing.assert_array_equal(got.reshape(6, rg.n_out), _apply_vectorized(spark, rg, X))
+
+
+def test_regrid_numpy_jobs(spark, grids, tmp_path, jobs_in):
+    """The first call on a weights frame collects the triplets (one
+    job); later calls on the cached CSR launch none."""
+    g_in, g_out = grids
+    rg = Regridder(spark, g_in, g_out, "bilinear", weights_dir=str(tmp_path))
+    x = np.ones((4,) + g_in.shape)
+    _, jobs_first = jobs_in(lambda: rg.regrid_numpy(x))
+    _, jobs_warm = jobs_in(lambda: rg(x))
+    assert (jobs_first, jobs_warm) == (1, 0)
+
+
+def test_regrid_numpy_returns_independent_arrays(spark, grids, tmp_path):
+    """Each call returns an array of its own: a second call must not
+    overwrite the first result (the kernel's scratch is shared)."""
+    from xesmf_spark.vectorized import _SCRATCH
+
+    g_in, g_out = grids
+    rg = Regridder(spark, g_in, g_out, "conservative", weights_dir=str(tmp_path))
+    rng = np.random.default_rng(2)
+    y1 = rg.regrid_numpy(rng.random((3,) + g_in.shape))
+    kept = y1.copy()
+    y2 = rg.regrid_numpy(rng.random((3,) + g_in.shape))
+    np.testing.assert_array_equal(y1, kept)
+    assert not np.shares_memory(y1, y2)
+    assert "Y" not in _SCRATCH or not np.shares_memory(y1, _SCRATCH["Y"])
+
+
+def test_regrid_numpy_leaves_no_stack_sized_buffer(spark, grids, tmp_path):
+    """A large stack does not grow the process-global kernel scratch."""
+    from xesmf_spark.vectorized import _SCRATCH
+
+    g_in, g_out = grids
+    rg = Regridder(spark, g_in, g_out, "bilinear", weights_dir=str(tmp_path))
+    before = _SCRATCH["Y"].size if "Y" in _SCRATCH else 0
+    rg.regrid_numpy(np.ones((2000,) + g_in.shape))
+    after = _SCRATCH["Y"].size if "Y" in _SCRATCH else 0
+    assert after <= before
+
+
+def test_regrid_numpy_threads_get_their_own_results(spark, grids, tmp_path):
+    """Driver threads share the kernel's scratch buffers; concurrent
+    calls must still each return their own input's regridding."""
+    import sys
+    import threading
+
+    g_in, g_out = grids
+    rg = Regridder(spark, g_in, g_out, "bilinear", weights_dir=str(tmp_path))
+    inputs = [np.random.default_rng(s).random((4,) + g_in.shape) for s in range(8)]
+    expected = [rg.regrid_numpy(x) for x in inputs]
+    mismatches = []
+
+    def work(i):
+        for _ in range(20):
+            if not np.array_equal(rg.regrid_numpy(inputs[i]), expected[i]):
+                mismatches.append(i)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(len(inputs))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert mismatches == []
+
+
 def test_xarray_facade_gated(spark, grids):
     # without xarray the DataArray path must fail with a clear message,
     # not an AttributeError mid-regrid

@@ -512,10 +512,10 @@ def test_cache_filename_follows_geometry(spark, tmp_path):
     assert rg([-60.0, -20.0, 20.0, 60.0]).filename == uniform.filename
 
 
-def test_reuse_shares_csr_broadcast_rebuild_does_not(spark, g_in, g_out, tmp_path, jobs_in):
+def test_reuse_shares_driver_csr_rebuild_does_not(spark, g_in, g_out, tmp_path, jobs_in):
     """Reuse constructions on an unchanged cache file share the weights
-    frame, so regrid_numpy's CSR broadcast is collected once; a rebuilt
-    file gets a fresh frame and broadcast."""
+    frame, so the driver CSR cache regrid_numpy runs on is collected
+    once; a rebuilt file gets a fresh frame and a fresh collect."""
     import numpy as np
 
     wdir = str(tmp_path)
@@ -530,10 +530,10 @@ def test_reuse_shares_csr_broadcast_rebuild_does_not(spark, g_in, g_out, tmp_pat
     first, y1, jobs_first = regrid(reuse=False)
     second, y2, jobs_second = regrid(reuse=True)
     assert second.weights is first.weights
-    assert jobs_second == jobs_first - 1  # no CSR collect
+    assert jobs_second == 0  # no CSR collect
     rebuilt, y3, jobs_rebuilt = regrid(reuse=False)
     assert rebuilt.weights is not first.weights
-    assert jobs_rebuilt == jobs_first
+    assert jobs_first == jobs_rebuilt == 1
     np.testing.assert_array_equal(y1, y2)
     np.testing.assert_array_equal(y1, y3)
 

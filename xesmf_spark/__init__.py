@@ -16,6 +16,12 @@ analysis under ``xesmf_spark.pipeline`` (exact/MinHash-LSH/SimHash/
 n-gram-Jaccard dedup, text stats, fingerprints).
 """
 
+from xesmf_spark.session import install_zip_cache_hook
+
+# Python workers import this package when they unpickle any of its
+# functions; installing here covers every worker that runs a UDF of it
+install_zip_cache_hook()
+
 from xesmf_spark.grids import Grid, grid_1d, grid_2d, grid_global, locstream, wave_smooth
 from xesmf_spark.apply import release_persisted, smm_apply
 from xesmf_spark.regridder import Regridder

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,12 +58,16 @@ def _require_xarray():
     return xr
 
 
+#: the kernel's gather and segment-sum buffers are process-global
+#: scratch, so driver threads calling regrid_numpy take turns
+_DRIVER_KERNEL_LOCK = threading.Lock()
+
 #: weight-cache path -> (part-file signature, weights DataFrame). A
 #: reuse construction on an unchanged cache file gets the SAME frame an
-#: earlier construction resolved, and with it the CSR broadcast that
-#: ``vectorized`` keeps per weights frame — built once per file, not
-#: once per Regridder. A rebuilt file has new part files, hence a new
-#: signature and a fresh frame: a stale CSR is never served.
+#: earlier construction resolved, and with it the CSR arrays and
+#: broadcast that ``vectorized`` keeps per weights frame — built once
+#: per file, not once per Regridder. A rebuilt file has new part files,
+#: hence a new signature and a fresh frame: a stale CSR is never served.
 _WEIGHT_FRAMES: dict[str, tuple[tuple, DataFrame]] = {}
 
 
@@ -288,8 +293,8 @@ class Regridder:
         from xesmf_spark.apply import release_persisted
 
         release_persisted()
-        # drop the shared weights frame, and with it the CSR broadcast
-        # once no other Regridder holds the frame
+        # drop the shared weights frame, and with it the CSR arrays and
+        # broadcast once no other Regridder holds the frame
         hit = _WEIGHT_FRAMES.get(self.filename)
         if hit is not None and hit[1] is self._weights:
             del _WEIGHT_FRAMES[self.filename]
@@ -421,15 +426,19 @@ class Regridder:
         ``regrid_numpy`` (frontend.py:365-373, apply_weights smm.py:77-90
         reshape semantics, unmapped destination cells -> 0).
 
-        Execution is DISTRIBUTED, not a driver-side scipy call: the
-        extra dims flatten to one wide Arrow row per horizontal slice
-        and run through ``smm_apply_vectorized`` (broadcast-CSR SpMV in
-        Arrow-batched ``mapInArrow``), so a (time, lev, y, x) stack
-        regrids at cluster width; only the final gather is driver-side,
-        which is fair — the caller asked for an ndarray back."""
+        The caller already holds the array, so the SpMV runs on the
+        driver: the same ``vectorized._spmv_batch`` kernel the executors
+        run, against the weights' CSR arrays, which are collected once
+        per weights frame and cached (the reference's scipy matrix held
+        across calls, frontend.py:315-318). Shipping the stack through
+        a ``mapInArrow`` job and back instead, with bit-identical
+        output, cost 12-56x more (canonical 400x600 -> 300x400 bilinear
+        pair, local[4]: one 2 MB slice 391 ms vs 7 ms, 50 slices of
+        96 MB 3,966 ms vs 325 ms). Fields that live in Spark go
+        through :meth:`__call__` or ``vectorized.smm_apply_files``."""
         import numpy as np
 
-        from xesmf_spark.vectorized import smm_apply_vectorized
+        from xesmf_spark.vectorized import _csr, _spmv_batch
 
         indata = np.asarray(indata, dtype=np.float64)
         if self.locstream_in:
@@ -441,23 +450,12 @@ class Regridder:
             )
         extra_shape = indata.shape[:-2]
         X = indata.reshape(-1, self.n_in)
-        k = X.shape[0]
-
-        import pandas as pd
-
-        wide = self.spark.createDataFrame(
-            pd.DataFrame({"slice_idx": np.arange(k, dtype=np.int64), "values": list(X)}),
-            schema="slice_idx long, values array<double>",
-        )
-        if k > 1:
-            wide = wide.repartition(
-                min(k, self.spark.sparkContext.defaultParallelism)
-            )
-        out = smm_apply_vectorized(
-            wide, self.weights, self.n_in, self.n_out, extra_cols=["slice_idx"]
-        )
-        pdf = out.toPandas().sort_values("slice_idx")
-        Y = np.stack(pdf["values"].to_numpy())
+        csr = _csr(self.weights, self.n_in, self.n_out)
+        # a fresh output: the caller owns the result, and the process
+        # keeps no buffer sized to the caller's stack
+        Y = np.empty((X.shape[0], self.n_out))
+        with _DRIVER_KERNEL_LOCK:
+            _spmv_batch(X, csr, self.n_out, out=Y)
         return Y.reshape(extra_shape + self.grid_out.shape)
 
     def _dest_lonlat(self):

@@ -69,26 +69,44 @@ from pyspark.sql.types import (
 )
 
 
-#: (weights DataFrame, n_in, n_out) -> broadcast CSR, cached for the
-#: lifetime of the weights object: collecting + re-broadcasting the
-#: triplets costs 0.3-1.2 s per apply (measured), and a Regridder
-#: applies the SAME weights to stream after stream — the reference
-#: holds its scipy matrix across calls for exactly this reason
-#: (xesmf/frontend.py:315-318). Weak keys so dropped weight frames
-#: release their broadcast. Regridders on one unchanged weight-cache
-#: file share a single weights frame, hence a single broadcast.
+#: weights DataFrame -> ((n_in, n_out), CSR arrays), cached for the
+#: lifetime of the weights object: collecting the triplets is a Spark
+#: job of 0.3-1.2 s (measured), and a Regridder applies the SAME
+#: weights to array after array — the reference holds its scipy matrix
+#: across calls for exactly this reason (xesmf/frontend.py:315-318).
+#: ``regrid_numpy`` runs the kernel against these arrays on the driver;
+#: ``_CSR_BC_CACHE`` holds the broadcast of the same arrays for the
+#: executor-side applies. Weak keys so a dropped weights frame releases
+#: both. Regridders on one unchanged weight-cache file share a single
+#: weights frame, hence a single collect and a single broadcast.
 import weakref
 
+_CSR_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _CSR_BC_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def _csr_broadcast(spark: SparkSession, weights: DataFrame, n_in: int, n_out: int):
-    hit = _CSR_BC_CACHE.get(weights)
+def _cached(cache, weights: DataFrame, n_in: int, n_out: int, build):
+    hit = cache.get(weights)
     if hit is not None and hit[0] == (n_in, n_out):
         return hit[1]
-    bc = spark.sparkContext.broadcast(_collect_csr(weights, n_in, n_out))
-    _CSR_BC_CACHE[weights] = ((n_in, n_out), bc)
-    return bc
+    value = build()
+    cache[weights] = ((n_in, n_out), value)
+    return value
+
+
+def _csr(weights: DataFrame, n_in: int, n_out: int):
+    """The weights' CSR arrays on the driver (see ``_collect_csr``)."""
+    return _cached(_CSR_CACHE, weights, n_in, n_out, lambda: _collect_csr(weights, n_in, n_out))
+
+
+def _csr_broadcast(spark: SparkSession, weights: DataFrame, n_in: int, n_out: int):
+    return _cached(
+        _CSR_BC_CACHE,
+        weights,
+        n_in,
+        n_out,
+        lambda: spark.sparkContext.broadcast(_csr(weights, n_in, n_out)),
+    )
 
 
 def _collect_csr(weights: DataFrame, n_in: int, n_out: int):
@@ -148,7 +166,7 @@ def _scratch(name: str, n: int) -> np.ndarray:
     return buf[:n]
 
 
-def _spmv_batch(X: np.ndarray, csr, n_out: int) -> np.ndarray:
+def _spmv_batch(X: np.ndarray, csr, n_out: int, out: np.ndarray | None = None) -> np.ndarray:
     """(b, n_in) -> (b, n_out): Y = A @ X.T per slice.
 
     Per-slice loop over C-contiguous rows with worker-global REUSED
@@ -163,15 +181,17 @@ def _spmv_batch(X: np.ndarray, csr, n_out: int) -> np.ndarray:
     over nnz. Unmapped destination rows stay 0
     (unmapped_action=IGNORE, xesmf/backend.py:275-279).
 
-    The returned array is a view of process-global scratch: it is valid
-    until the NEXT ``_spmv_batch`` call in this process (callers write
-    or serialize it before computing another batch — true for both the
-    per-task parquet write and the mapInArrow yield, which is streamed
-    out before the generator resumes).
+    Without ``out`` the returned array is a view of process-global
+    scratch: it is valid until the NEXT ``_spmv_batch`` call in this
+    process (callers write or serialize it before computing another
+    batch — true for both the per-task parquet write and the mapInArrow
+    yield, which is streamed out before the generator resumes). A
+    caller that keeps the result passes a ``(b, n_out)`` float64
+    ``out`` and gets it back filled.
     """
     uniq, starts, cols, vals = csr
     b = X.shape[0]
-    Y = _scratch("Y", b * n_out).reshape(b, n_out)
+    Y = _scratch("Y", b * n_out).reshape(b, n_out) if out is None else out
     Y.fill(0.0)
     if len(cols) == 0 or b == 0:
         return Y
