@@ -498,3 +498,68 @@ def test_seam_with_non_divisor_bin_width(spark):
     cc = {(r.row, r.col): r.S for r in conservative_weights_clip(srcq_c, dst).collect()}
     assert len(cc) > 0 and set(cw) == set(cc)
     assert max(abs(cw[k] - cc[k]) for k in cc) < 1e-9
+
+
+# ---------------------------------------------------------------------------
+# rectilinear source onto a curvilinear destination
+# ---------------------------------------------------------------------------
+
+
+def _sheared_dst(spark, corners: bool):
+    """A 6x9 mesh over lon ±45, lat ±30, sheared by ``lon += 0.3*lat``:
+    no separable axes, with or without its corner nodes."""
+    import numpy as np
+
+    x, y = np.linspace(-45.0, 45.0, 9), np.linspace(-30.0, 30.0, 6)
+    X, Y = np.meshgrid(x, y)
+    kw = {}
+    if corners:
+        XB, YB = np.meshgrid(
+            np.linspace(-50.625, 50.625, 10), np.linspace(-36.0, 36.0, 7)
+        )
+        kw = {"lon_b": XB + 0.3 * YB, "lat_b": YB}
+    return grid_from_2d_arrays(spark, X + 0.3 * Y, Y, **kw)
+
+
+def _sheared_quadratic(lon, lat):
+    return 1 + 0.02 * lon - 0.03 * lat + 1e-3 * lon * lon + 2e-3 * lat * lat \
+        - 1e-3 * lon * lat
+
+
+def test_curvilinear_grid_has_no_axes(spark):
+    """Separability is decided by the Grid: asking a curvilinear mesh
+    for 1-D axes is an error, not a table built from its cells."""
+    dst = _sheared_dst(spark, corners=False)
+    with pytest.raises(ValueError, match="curvilinear"):
+        dst.get_lon_axis()
+    with pytest.raises(ValueError, match="curvilinear"):
+        dst.get_lat_axis()
+
+
+def test_bilinear_onto_curvilinear_ignores_corners(spark):
+    """Bilinear onto a curvilinear mesh interpolates at its centers:
+    the same triplets whether or not the mesh carries corner nodes."""
+    src = grid_global(spark, 20, 12, periodic=True)
+    plain = bilinear_weights(src, _sheared_dst(spark, corners=False))
+    cornered = bilinear_weights(src, _sheared_dst(spark, corners=True))
+    a = sorted((r.row, r.col, r.S) for r in plain.collect())
+    b = sorted((r.row, r.col, r.S) for r in cornered.collect())
+    assert len(a) > 0
+    assert a == b
+
+
+@pytest.mark.parametrize("corners", [False, True])
+def test_patch_onto_curvilinear_quadratic_exact(spark, corners):
+    """Patch from a rectilinear source onto a sheared mesh reproduces a
+    full 2-D quadratic at every (interior) destination center."""
+    from xesmf_spark.weights import patch_weights
+
+    src = grid_global(spark, 20, 12, periodic=True)
+    dst = _sheared_dst(spark, corners)
+    field = src.df.select(
+        "cell_id", _sheared_quadratic(F.col("lon"), F.col("lat")).alias("value")
+    )
+    out = smm_apply(field, patch_weights(src, dst), dst).collect()
+    assert len(out) == dst.n_cells
+    err = max(abs(r.value - _sheared_quadratic(r.lon, r.lat)) for r in out)
+    assert err < 1e-9, err

@@ -1,4 +1,4 @@
-"""Differential test: vectorized mapInPandas path ≡ relational join-agg
+"""Differential test: vectorized mapInArrow path ≡ relational join-agg
 path — the engine's analogue of the reference's scipy≡ESMPy exactness
 test (xesmf/tests/test_backend.py:142-157). Sum order differs between
 the two physical plans, so equality is to 1e-9 abs rather than bitwise.
@@ -69,6 +69,23 @@ def test_vectorized_shape_check(spark):
     )
     with pytest.raises(ValueError):
         smm_apply_vectorized(wide, w, n_in=10, n_out=5, extra_cols=("time",))
+
+
+def test_negative_weight_index_rejected(spark):
+    """A negative row or col must not wrap around to the far end of the
+    field (numpy indexing): the CSR build rejects it like an index past
+    the shape."""
+    import pytest
+
+    g_in = grid_global(spark, 20, 12)
+    wide = long_to_wide(
+        g_in.df.select("cell_id", wave_smooth().alias("value")).withColumn("time", F.lit(1)),
+        extra_keys=("time",),
+    )
+    for trip in [(0, -1, 1.0)], [(-1, 0, 1.0)]:
+        w = spark.createDataFrame(trip, "row long, col long, S double")
+        with pytest.raises(ValueError, match="outside shape"):
+            smm_apply_vectorized(wide, w, n_in=g_in.n_cells, n_out=2, extra_cols=("time",))
 
 
 def test_smm_apply_files_discard_sink(spark, tmp_path):

@@ -1,0 +1,92 @@
+"""Weight values pinned per builder path.
+
+Each case builds one weight set and compares the md5 of its sorted
+``(row, col, round(S, 9))`` arrays with a recorded digest. The other
+weight tests check properties (row sums, quadratic exactness, oracle
+agreement after apply); these catch any change to the triplets
+themselves, such as a refactor that moves one weight by more than 1e-9.
+"""
+
+import hashlib
+
+import numpy as np
+import pytest
+
+from xesmf_spark.queries import _curvilinear_pair, _fixture_grids, _locstream_pair
+from xesmf_spark.weights import (
+    bilinear_weights,
+    conservative_weights,
+    nearest_weights,
+    patch_weights,
+)
+
+
+CASES = {
+    "bilinear_periodic": (
+        lambda s: bilinear_weights(*_fixture_grids(s), periodic=True),
+        "1654d8ed15b501e59455f581a0c2f0e6",
+    ),
+    "bilinear_noperiodic": (
+        lambda s: bilinear_weights(*_fixture_grids(s), periodic=False),
+        "68d08cfc001f06ca3790a2ef6cbfe416",
+    ),
+    "bilinear_locstream": (
+        lambda s: bilinear_weights(*_locstream_pair(s), periodic=True),
+        "248c38c81cc4ce62b52134f1e368b4ca",
+    ),
+    "patch_periodic": (
+        lambda s: patch_weights(*_fixture_grids(s), periodic=True),
+        "a0669289b1a205f8925e87d10f935b6a",
+    ),
+    "conservative_axis": (
+        lambda s: conservative_weights(*_fixture_grids(s), strategy="axis"),
+        "ce98491cdd60abeb95862a22034b1cd4",
+    ),
+    # equal to the axis digest: on a rectilinear pair the clipper's
+    # overlaps agree with the axis decomposition to 1e-12
+    "conservative_clip": (
+        lambda s: conservative_weights(*_fixture_grids(s), strategy="clip"),
+        "ce98491cdd60abeb95862a22034b1cd4",
+    ),
+    "nearest_s2d_broadcast": (
+        lambda s: nearest_weights(*_fixture_grids(s), direction="s2d", strategy="broadcast"),
+        "f52ef643f3be7e063906ac8aa6488ffe",
+    ),
+    "nearest_s2d_bucketed": (
+        lambda s: nearest_weights(*_fixture_grids(s), direction="s2d", strategy="bucketed"),
+        "f52ef643f3be7e063906ac8aa6488ffe",
+    ),
+    "nearest_d2s_broadcast": (
+        lambda s: nearest_weights(*_fixture_grids(s), direction="d2s", strategy="broadcast"),
+        "18e217f121212004e254c0fc32ff45c4",
+    ),
+    "nearest_d2s_bucketed": (
+        lambda s: nearest_weights(*_fixture_grids(s), direction="d2s", strategy="bucketed"),
+        "18e217f121212004e254c0fc32ff45c4",
+    ),
+    "bilinear_curvilinear": (
+        lambda s: bilinear_weights(*_curvilinear_pair(s)),
+        "70ef9905c7da6f9789c6d99e7185566b",
+    ),
+    "patch_curvilinear": (
+        lambda s: patch_weights(*_curvilinear_pair(s)),
+        "49185d54f0cdf65ba20d6ab00c2a42e3",
+    ),
+}
+
+
+def _digest(weights) -> str:
+    pdf = weights.select("row", "col", "S").toPandas()
+    row, col, s = (pdf[c].to_numpy() for c in ("row", "col", "S"))
+    order = np.lexsort((s, col, row))
+    h = hashlib.md5()
+    h.update(np.ascontiguousarray(row[order], np.int64).tobytes())
+    h.update(np.ascontiguousarray(col[order], np.int64).tobytes())
+    h.update(np.ascontiguousarray(np.round(s[order], 9), np.float64).tobytes())
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_weights_match_pinned_digest(spark, case):
+    build, want = CASES[case]
+    assert _digest(build(spark)) == want

@@ -186,8 +186,8 @@ class Grid:
     shape: tuple[int, int]
     periodic: bool = False
     has_bounds: bool = True
-    #: True when lon/lat are full 2-D fields (no separable axes) —
-    #: weight builders must not derive 1-D axis tables from the cells
+    #: True when lon/lat are full 2-D fields (no separable axes);
+    #: :meth:`get_lon_axis` / :meth:`get_lat_axis` then raise
     curvilinear: bool = False
     #: horizontal dimension names, (y-like, x-like) — the analogue of
     #: the xarray dims the reference renames outputs to
@@ -228,6 +228,11 @@ class Grid:
 
     @cached_property
     def _axes(self) -> tuple[DataFrame, DataFrame]:
+        if self.curvilinear:
+            raise ValueError(
+                "a curvilinear grid has no separable 1-D lon/lat axes; "
+                "its weights come from the mesh builders"
+            )
         if self.axis_tables is not None:
             return self.axis_tables()
         lon = self.df.select(
@@ -245,11 +250,13 @@ class Grid:
         return lon, lat
 
     def get_lon_axis(self) -> DataFrame:
-        """1-D lon axis (i, lo, hi, c)."""
+        """1-D lon axis (i, lo, hi, c). Raises ValueError on a
+        curvilinear grid."""
         return self._axes[0]
 
     def get_lat_axis(self) -> DataFrame:
-        """1-D lat axis (j, lo, hi, c)."""
+        """1-D lat axis (j, lo, hi, c). Raises ValueError on a
+        curvilinear grid."""
         return self._axes[1]
 
 

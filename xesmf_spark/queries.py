@@ -110,27 +110,43 @@ def regrid_nearest_d2s(spark, sf_dir):
     return _regrid(spark, "nearest_d2s")
 
 
-def regrid_bilinear_locstream(spark, sf_dir, n_pts: int = 49):
-    """Bilinear onto a POINT destination (locstream_out=True,
-    frontend.py:178-184): per-point brackets keyed by location id.
-    Points are a deterministic arithmetic sequence spanning ±88° so the
-    periodic wrap AND the ALLAVG virtual-pole rows are both exercised."""
+def _point_grid(spark: SparkSession, n_pts: int, lon, lat):
+    """A bounds-free point set of ``n_pts`` points, ``lon``/``lat``
+    Column expressions over ``id`` (the locstream shape (1, n))."""
     from xesmf_spark.grids import Grid
 
-    g_in = grid_global(spark, 20, 12)
-    d_lat = 176.0 / 48.0
     pts = spark.range(n_pts).select(
         F.col("id").alias("cell_id"),
         F.lit(0).cast("bigint").alias("j"),
         F.col("id").alias("i"),
-        (F.lit(-180.0) + F.col("id").cast("double") * F.lit(7.25)).alias("lon"),
-        (F.lit(-88.0) + F.col("id").cast("double") * F.lit(d_lat)).alias("lat"),
+        lon.alias("lon"),
+        lat.alias("lat"),
         F.lit(None).cast("double").alias("lon_lo"),
         F.lit(None).cast("double").alias("lon_hi"),
         F.lit(None).cast("double").alias("lat_lo"),
         F.lit(None).cast("double").alias("lat_hi"),
     )
-    dst = Grid(df=pts, shape=(1, n_pts), periodic=False, has_bounds=False)
+    return Grid(df=pts, shape=(1, n_pts), periodic=False, has_bounds=False)
+
+
+def _locstream_pair(spark: SparkSession, n_pts: int = 49):
+    """The fixture source grid and a deterministic arithmetic point
+    sequence spanning ±88°, so the periodic wrap AND the ALLAVG
+    virtual-pole rows are both exercised."""
+    d_lat = 176.0 / 48.0
+    dst = _point_grid(
+        spark,
+        n_pts,
+        F.lit(-180.0) + F.col("id").cast("double") * F.lit(7.25),
+        F.lit(-88.0) + F.col("id").cast("double") * F.lit(d_lat),
+    )
+    return grid_global(spark, 20, 12), dst
+
+
+def regrid_bilinear_locstream(spark, sf_dir, n_pts: int = 49):
+    """Bilinear onto a POINT destination (locstream_out=True,
+    frontend.py:178-184): per-point brackets keyed by location id."""
+    g_in, dst = _locstream_pair(spark, n_pts)
     w = bilinear_weights(g_in, dst, periodic=True)
     field = g_in.df.select("cell_id", wave_smooth().alias("value"))
     out = smm_apply(field, w, dst)
@@ -142,12 +158,11 @@ def regrid_bilinear_locstream(spark, sf_dir, n_pts: int = 49):
     )
 
 
-def regrid_bilinear_curvilinear(spark, sf_dir, n_y: int = 20, n_x: int = 30):
-    """Bilinear from a CURVILINEAR source mesh (sheared/stretched by a
-    pure-arithmetic deformation — reproducible bit-for-bit in SQL) onto
-    a deterministic interior point set. Exercises the point-in-quad
-    bin join + inverse-bilinear quadratic (weights/curvilinear.py)."""
-    from xesmf_spark.grids import Grid, grid_from_2d_arrays
+def _curvilinear_pair(spark: SparkSession, n_y: int = 20, n_x: int = 30):
+    """A CURVILINEAR source mesh (sheared/stretched by a pure-arithmetic
+    deformation — reproducible bit-for-bit in SQL) and a deterministic
+    64-point set inside it."""
+    from xesmf_spark.grids import grid_from_2d_arrays
 
     lon2d, lat2d = [], []
     for j in range(n_y):
@@ -160,22 +175,23 @@ def regrid_bilinear_curvilinear(spark, sf_dir, n_y: int = 20, n_x: int = 30):
         lon2d.append(lon_row)
         lat2d.append(lat_row)
     src = grid_from_2d_arrays(spark, lon2d, lat2d)
-
-    n_pts = 64
-    pts = spark.range(n_pts).select(
-        F.col("id").alias("cell_id"),
-        F.lit(0).cast("bigint").alias("j"),
-        F.col("id").alias("i"),
-        (F.lit(-18.0) + (F.col("id") % 8).cast("double") * F.lit(5.0)
-         + (F.col("id") / 8).cast("long").cast("double") * F.lit(0.37)).alias("lon"),
-        (F.lit(-13.0) + (F.col("id") / 8).cast("long").cast("double") * F.lit(3.5)
-         + (F.col("id") % 8).cast("double") * F.lit(0.21)).alias("lat"),
-        F.lit(None).cast("double").alias("lon_lo"),
-        F.lit(None).cast("double").alias("lon_hi"),
-        F.lit(None).cast("double").alias("lat_lo"),
-        F.lit(None).cast("double").alias("lat_hi"),
+    dst = _point_grid(
+        spark,
+        64,
+        F.lit(-18.0) + (F.col("id") % 8).cast("double") * F.lit(5.0)
+        + (F.col("id") / 8).cast("long").cast("double") * F.lit(0.37),
+        F.lit(-13.0) + (F.col("id") / 8).cast("long").cast("double") * F.lit(3.5)
+        + (F.col("id") % 8).cast("double") * F.lit(0.21),
     )
-    dst = Grid(df=pts, shape=(1, n_pts), periodic=False, has_bounds=False)
+    return src, dst
+
+
+def regrid_bilinear_curvilinear(spark, sf_dir, n_y: int = 20, n_x: int = 30):
+    """Bilinear from a CURVILINEAR source mesh (sheared/stretched by a
+    pure-arithmetic deformation — reproducible bit-for-bit in SQL) onto
+    a deterministic interior point set. Exercises the point-in-quad
+    bin join + inverse-bilinear quadratic (weights/curvilinear.py)."""
+    src, dst = _curvilinear_pair(spark, n_y, n_x)
     w = bilinear_weights(src, dst)
     field = src.df.select("cell_id", wave_smooth().alias("value"))
     out = smm_apply(field, w, dst)
@@ -201,36 +217,9 @@ def regrid_patch_curvilinear(spark, sf_dir, n_y: int = 20, n_x: int = 30):
     DuckDB twin computes the quadratic analytically at the destination
     points — a full value check without replicating the least-squares
     solves in SQL (weights/patch_curvilinear.py)."""
-    from xesmf_spark.grids import Grid, grid_from_2d_arrays
     from xesmf_spark.weights import patch_weights
 
-    lon2d, lat2d = [], []
-    for j in range(n_y):
-        lon_row, lat_row = [], []
-        for i in range(n_x):
-            x = -30.0 + 60.0 * i / (n_x - 1)
-            y = -20.0 + 40.0 * j / (n_y - 1)
-            lon_row.append(x + 0.25 * y + 0.004 * x * y)
-            lat_row.append(y + 0.15 * x - 0.003 * x * y)
-        lon2d.append(lon_row)
-        lat2d.append(lat_row)
-    src = grid_from_2d_arrays(spark, lon2d, lat2d)
-
-    n_pts = 64
-    pts = spark.range(n_pts).select(
-        F.col("id").alias("cell_id"),
-        F.lit(0).cast("bigint").alias("j"),
-        F.col("id").alias("i"),
-        (F.lit(-18.0) + (F.col("id") % 8).cast("double") * F.lit(5.0)
-         + (F.col("id") / 8).cast("long").cast("double") * F.lit(0.37)).alias("lon"),
-        (F.lit(-13.0) + (F.col("id") / 8).cast("long").cast("double") * F.lit(3.5)
-         + (F.col("id") % 8).cast("double") * F.lit(0.21)).alias("lat"),
-        F.lit(None).cast("double").alias("lon_lo"),
-        F.lit(None).cast("double").alias("lon_hi"),
-        F.lit(None).cast("double").alias("lat_lo"),
-        F.lit(None).cast("double").alias("lat_hi"),
-    )
-    dst = Grid(df=pts, shape=(1, n_pts), periodic=False, has_bounds=False)
+    src, dst = _curvilinear_pair(spark, n_y, n_x)
     w = patch_weights(src, dst)  # dispatches to the curvilinear builder
     quad = (
         F.lit(1.5)

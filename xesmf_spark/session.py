@@ -17,8 +17,20 @@ import sys
 # aggregate) but page-faults fresh anonymous pages at only ~5 GB/s
 # aggregate, so glibc must REUSE freed pages instead of returning them
 # to the kernel. Raising the mmap/trim thresholds keeps numpy's large
-# buffers on the reusable heap; routing Arrow through the system
-# allocator lets it benefit from the same tuning.
+# buffers on the reusable heap.
+#
+# Arrow's memory pool differs by process. ARROW_DEFAULT_MEMORY_POOL
+# makes glibc malloc, with the tuning above, the default pool of this
+# process and of the Python workers the JVM forks (they inherit the
+# environment). Importing xesmf_spark.vectorized then switches that
+# process to a jemalloc pool that keeps freed pages for 10 minutes
+# (vectorized._init_worker_allocator). So:
+# - a worker that has run an Arrow apply (smm_apply_vectorized,
+#   smm_apply_files) uses jemalloc for the rest of its life;
+# - a worker that has only run other Python UDFs uses the system pool;
+# - the process that owns the SparkSession uses the system pool until
+#   regrid_numpy or an Arrow apply imports vectorized, and jemalloc
+#   after.
 os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")

@@ -118,9 +118,11 @@ def _collect_csr(weights: DataFrame, n_in: int, n_out: int):
     rows = trip["row"].to_numpy(np.int64)
     cols = trip["col"].to_numpy(np.int64)
     vals = trip["S"].to_numpy(np.float64)
-    if len(rows) and (rows.max() >= n_out or cols.max() >= n_in):
+    if len(rows) and (
+        rows.min() < 0 or cols.min() < 0 or rows.max() >= n_out or cols.max() >= n_in
+    ):
         raise ValueError(
-            f"weight indices exceed shape ({n_out}, {n_in}) — shape metadata is "
+            f"weight indices outside shape ({n_out}, {n_in}) — shape metadata is "
             "required because max indices under-determine it (xesmf/smm.py:20-27)"
         )
     order = np.argsort(rows, kind="stable")

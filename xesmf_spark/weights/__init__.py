@@ -6,10 +6,20 @@ Fortran). Each builder is a pure DataFrame query producing COO triplets
 Methods (xesmf/backend.py:241-246):
 - ``conservative``  → interval-overlap join  (conservative.py)
 - ``bilinear``      → bracketing range join  (bilinear.py)
-- ``nearest_s2d`` / ``nearest_d2s`` → distance-ranked window (nearest.py)
-- ``patch``         → Lagrange patch-recovery tensor build (patch.py);
-  conservative and bilinear additionally dispatch to the curvilinear
-  builders (conservative_clip.py / curvilinear.py) for 2-D meshes
+- ``nearest_s2d`` / ``nearest_d2s`` → argmin hash aggregate over a
+  broadcast or bin equi-join (nearest.py)
+- ``patch``         → Lagrange patch-recovery tensor build (patch.py)
+
+Separable axes are the grid's call: ``Grid.get_lon_axis()`` /
+``get_lat_axis()`` raise on a curvilinear mesh, so the builders check
+``Grid.curvilinear`` before asking for them:
+- conservative: a curvilinear mesh on either side → polygon clipping
+  (conservative_clip.py);
+- bilinear: a curvilinear source → point-in-quad search
+  (curvilinear.py); a curvilinear or locstream destination →
+  per-point brackets (bilinear.py);
+- patch: a curvilinear mesh on either side → least-squares patches
+  over the located quad (patch_curvilinear.py).
 """
 
 from xesmf_spark.weights.conservative import conservative_weights

@@ -3,7 +3,10 @@
 Reference: ``method='bilinear'`` (xesmf/backend.py:241). For rectilinear
 grids the interpolation separates per axis: bracket each destination
 coordinate between the two nearest source centers, 1-D linear weights,
-tensor product of the two axes → ≤4 nnz per destination cell.
+tensor product of the two axes → ≤4 nnz per destination cell. A
+destination without separable axes (a locstream, or a curvilinear
+mesh's centers) gets per-point brackets instead. patch.py builds on the
+same bracket join, pole rows and tensor-product combine.
 
 Periodic longitude (xesmf/backend.py:92-95): the source lon axis is
 UNIONed with ±360°-shifted copies before the bracketing join, so
@@ -30,19 +33,22 @@ from pyspark.sql import functions as F
 from xesmf_spark.grids import Grid
 
 
-def _axis_bracket(
-    src_ax: DataFrame, dst_ax: DataFrame, idx_dst: str, periodic: bool = False
-) -> DataFrame:
-    """Bracketing range join of dest centers into adjacent-src-center
-    intervals. Returns ``(idx_dst, k, w)``: source index + linear weight
-    (two rows per bracketed dest element; zero-weight rows dropped).
-    """
+def _source_axis(src_ax: DataFrame, periodic: bool) -> DataFrame:
+    """Source axis as ``(k, c)``, UNIONed with its ±360°-shifted copies
+    when ``periodic`` so destination centers past either end wrap."""
     s = src_ax.select(F.col(src_ax.columns[0]).alias("k"), F.col("c"))
     if periodic:
         s = (
             s.unionByName(s.select("k", (F.col("c") - 360.0).alias("c")))
             .unionByName(s.select("k", (F.col("c") + 360.0).alias("c")))
         )
+    return s
+
+
+def _brackets(s: DataFrame, dst_ax: DataFrame, idx_dst: str) -> DataFrame:
+    """Bracketing range join of dest centers into adjacent-source-center
+    intervals of ``s`` (:func:`_source_axis`). Returns ``(idx_dst, x,
+    k_lo, c_lo, k_hi, c_hi)``, one row per bracketed dest element."""
     # adjacent center pairs, ordered by coordinate — axis tables are tiny
     # (O(n) rows), so a single-partition window is fine here.
     win = Window.orderBy("c")
@@ -61,7 +67,7 @@ def _axis_bracket(
     )
     # a dest center equal to an interior src center matches two brackets;
     # keep one deterministically (equivalent weights either way)
-    br = (
+    return (
         br.withColumn(
             "_rn",
             F.row_number().over(Window.partitionBy(idx_dst).orderBy(F.col("c_lo"))),
@@ -69,6 +75,16 @@ def _axis_bracket(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def _axis_bracket(
+    src_ax: DataFrame, dst_ax: DataFrame, idx_dst: str, periodic: bool = False
+) -> DataFrame:
+    """1-D linear weights of each bracketed dest element. Returns
+    ``(idx_dst, k, w)``: source index + linear weight (two rows per
+    bracketed dest element; zero-weight rows dropped).
+    """
+    br = _brackets(_source_axis(src_ax, periodic), dst_ax, idx_dst)
     w_hi = (F.col("x") - F.col("c_lo")) / (F.col("c_hi") - F.col("c_lo"))
     out = br.select(idx_dst, F.col("k_lo").alias("k"), (F.lit(1.0) - w_hi).alias("w")).unionByName(
         br.select(idx_dst, F.col("k_hi").alias("k"), w_hi.alias("w"))
@@ -83,7 +99,7 @@ def _pole_brackets(
     rows, against virtual poles at ±90. Virtual index: -1 = south pole,
     ``n_y`` = north pole. Returns (idx_dst, k, w) like ``_axis_bracket``.
     """
-    s = src_lat_ax.select(F.col(src_lat_ax.columns[0]).alias("k"), "c")
+    s = _source_axis(src_lat_ax, periodic=False)
     # outermost rows (tiny table -> min/max via agg, broadcast)
     ext = s.agg(
         F.min_by("k", "c").alias("k_bot"),
@@ -108,9 +124,52 @@ def _pole_brackets(
     return north_rows.unionByName(south_rows).filter(F.col("w") > 0.0)
 
 
+def _renamed(rows: DataFrame, k: str, w: str) -> DataFrame:
+    """Per-axis weights ``(idx_dst, k, w)`` with index and weight renamed."""
+    return rows.withColumnRenamed("k", k).withColumnRenamed("w", w)
+
+
+def _lat_rows(axis_weights, src_lat, dst_lat, idx_dst: str, n_y: int, periodic: bool) -> DataFrame:
+    """``(idx_dst, sj, w_lat)``: ``axis_weights`` (:func:`_axis_bracket`
+    or patch's ``_axis_patch``) on the lat axis, plus — when periodic —
+    the ALLAVG brackets against the virtual poles (:func:`_pole_brackets`)."""
+    lat_br = _renamed(axis_weights(src_lat, dst_lat, idx_dst, periodic=False), "sj", "w_lat")
+    if periodic:
+        lat_br = lat_br.unionByName(
+            _renamed(_pole_brackets(src_lat, dst_lat, n_y, idx_dst), "sj", "w_lat")
+        )
+    return lat_br
+
+
+def _split_poles(lat_br: DataFrame, n_y_src: int) -> tuple[DataFrame, DataFrame]:
+    """Lat rows on real source rows, and lat rows on the virtual poles
+    (``sj`` = -1 or ``n_y_src``)."""
+    return (
+        lat_br.filter((F.col("sj") >= 0) & (F.col("sj") < n_y_src)),
+        lat_br.filter((F.col("sj") < 0) | (F.col("sj") >= n_y_src)),
+    )
+
+
+def _pole_rows(pole: DataFrame, src_lon: DataFrame, n_x_src: int, n_y_src: int, row) -> DataFrame:
+    """ALLAVG virtual-pole triplets: the pole value is the MEAN of the
+    adjacent source row, lon-independent, so ``S = w_lat / n_x`` is
+    spread over every cell of that row. ``row`` is the destination
+    index expression over ``pole``'s columns."""
+    src_i = src_lon.select(F.col(src_lon.columns[0]).alias("si"))
+    return pole.crossJoin(F.broadcast(src_i)).select(
+        row.alias("row"),
+        (
+            F.when(F.col("sj") < 0, F.lit(0)).otherwise(F.lit(n_y_src - 1)) * F.lit(n_x_src)
+            + F.col("si")
+        ).alias("col"),
+        (F.col("w_lat") / F.lit(float(n_x_src))).alias("S"),
+    )
+
+
 def bilinear_weights(src: Grid, dst: Grid, periodic: bool | None = None) -> DataFrame:
-    """COO weight triplets for bilinear regridding between rectilinear
-    grids (destination may be a locstream — any point set with lon/lat).
+    """COO weight triplets for bilinear regridding from a rectilinear
+    source grid onto a rectilinear grid, a locstream or a curvilinear
+    mesh's centers; a curvilinear source goes to curvilinear.py.
     """
     if periodic is None:
         periodic = src.periodic
@@ -122,41 +181,28 @@ def bilinear_weights(src: Grid, dst: Grid, periodic: bool | None = None) -> Data
         return bilinear_weights_curvilinear(src, dst)
     src_lon = src.get_lon_axis()
     src_lat = src.get_lat_axis()
-    if not dst.has_bounds:
-        # point destinations (locstream): per-POINT brackets keyed by the
-        # location id — a locstream has no separable axes (all points
-        # share j=0), so the tensor-product path below would collapse
-        # every location's lat bracket into one (frontend.py:178-184
-        # allows bilinear -> locstream; weights must be per point).
+    if dst.curvilinear or not dst.has_bounds:
+        # point destinations (locstream, or a curvilinear mesh's
+        # centers): per-POINT brackets keyed by the cell id — neither
+        # has separable axes (a locstream's points all share j=0), so
+        # the tensor-product path below would mix the points' brackets
+        # (frontend.py:178-184 allows bilinear -> locstream).
         return _bilinear_points(src, dst, src_lon, src_lat, periodic)
     dst_lon = dst.get_lon_axis()
     dst_lat = dst.get_lat_axis()
 
-    lon_br = _axis_bracket(src_lon, dst_lon, "di", periodic=periodic).withColumnRenamed(
-        "k", "si"
-    ).withColumnRenamed("w", "w_lon")
-    lat_br = _axis_bracket(src_lat, dst_lat, "dj", periodic=False).withColumnRenamed(
-        "k", "sj"
-    ).withColumnRenamed("w", "w_lat")
-    if periodic:
-        lat_br = lat_br.unionByName(
-            _pole_brackets(src_lat, dst_lat, src.n_y)
-            .withColumnRenamed("k", "sj")
-            .withColumnRenamed("w", "w_lat")
-        )
-
-    n_x_src, n_x_dst, n_y_src = src.n_x, dst.n_x, src.n_y
+    lon_br = _renamed(_axis_bracket(src_lon, dst_lon, "di", periodic=periodic), "si", "w_lon")
+    lat_br = _lat_rows(_axis_bracket, src_lat, dst_lat, "dj", src.n_y, periodic)
     return _tensor_product(
-        lon_br, lat_br, dst_lon, src_lon, n_x_src, n_x_dst, n_y_src, periodic
+        lon_br, lat_br, dst_lon, src_lon, src.n_x, dst.n_x, src.n_y, periodic
     )
 
 
 def _tensor_product(lon_br, lat_br, dst_lon, src_lon, n_x_src, n_x_dst, n_y_src, periodic):
-
     # interior tensor product: ≤4 nnz per dest cell
+    lat_in, pole = _split_poles(lat_br, n_y_src)
     interior = (
-        lat_br.filter((F.col("sj") >= 0) & (F.col("sj") < n_y_src))
-        .crossJoin(F.broadcast(lon_br))
+        lat_in.crossJoin(F.broadcast(lon_br))
         .select(
             (F.col("dj") * F.lit(n_x_dst) + F.col("di")).alias("row"),
             (F.col("sj") * F.lit(n_x_src) + F.col("si")).alias("col"),
@@ -166,25 +212,18 @@ def _tensor_product(lon_br, lat_br, dst_lon, src_lon, n_x_src, n_x_dst, n_y_src,
     if not periodic:
         return interior
 
-    # pole part: virtual pole value = mean of the adjacent row (ALLAVG) —
-    # lon-independent, so the dest's lon weights do not enter; but only
-    # dest cells whose lon IS bracketed (always true when periodic).
-    pole = lat_br.filter((F.col("sj") < 0) | (F.col("sj") >= n_y_src))
+    # pole part: lon-independent, so the dest's lon weights do not
+    # enter; but only dest cells whose lon IS bracketed (always true
+    # when periodic).
     if pole.isEmpty():
         return interior
     dst_i = dst_lon.select(F.col(dst_lon.columns[0]).alias("di"))
-    src_i = src_lon.select(F.col(src_lon.columns[0]).alias("si"))
-    pole_rows = (
-        pole.crossJoin(F.broadcast(dst_i))
-        .crossJoin(F.broadcast(src_i))
-        .select(
-            (F.col("dj") * F.lit(n_x_dst) + F.col("di")).alias("row"),
-            (
-                F.when(F.col("sj") < 0, F.lit(0)).otherwise(F.lit(n_y_src - 1)) * F.lit(n_x_src)
-                + F.col("si")
-            ).alias("col"),
-            (F.col("w_lat") / F.lit(float(n_x_src))).alias("S"),
-        )
+    pole_rows = _pole_rows(
+        pole.crossJoin(F.broadcast(dst_i)),
+        src_lon,
+        n_x_src,
+        n_y_src,
+        F.col("dj") * F.lit(n_x_dst) + F.col("di"),
     )
     return interior.unionByName(pole_rows)
 
@@ -192,10 +231,11 @@ def _tensor_product(lon_br, lat_br, dst_lon, src_lon, n_x_src, n_x_dst, n_y_src,
 def _bilinear_points(
     src: Grid, dst: Grid, src_lon: DataFrame, src_lat: DataFrame, periodic: bool
 ) -> DataFrame:
-    """Bilinear weights onto a POINT destination (locstream).
+    """Bilinear weights onto POINT destinations (a locstream, or the
+    centers of a curvilinear mesh).
 
-    Each location gets its own lon bracket and lat bracket, both keyed by
-    the location id (``row = cell_id`` directly — the locstream shape
+    Each point gets its own lon bracket and lat bracket, both keyed by
+    its cell id (``row = cell_id`` directly — for a locstream the shape
     hack (1, n) of xesmf/frontend.py:102 makes cell_id == i). The two
     brackets combine with an EQUI-join on the id, so a point's lat
     weights can never leak to another point.
@@ -208,23 +248,13 @@ def _bilinear_points(
     pts_lon = dst.df.select(F.col("cell_id").alias("pid"), F.col("lon").alias("c"))
     pts_lat = dst.df.select(F.col("cell_id").alias("pid"), F.col("lat").alias("c"))
 
-    lon_br = _axis_bracket(src_lon, pts_lon, "pid", periodic=periodic).withColumnRenamed(
-        "k", "si"
-    ).withColumnRenamed("w", "w_lon")
-    lat_br = _axis_bracket(src_lat, pts_lat, "pid", periodic=False).withColumnRenamed(
-        "k", "sj"
-    ).withColumnRenamed("w", "w_lat")
-    if periodic:
-        lat_br = lat_br.unionByName(
-            _pole_brackets(src_lat, pts_lat, src.n_y, idx_dst="pid")
-            .withColumnRenamed("k", "sj")
-            .withColumnRenamed("w", "w_lat")
-        )
+    lon_br = _renamed(_axis_bracket(src_lon, pts_lon, "pid", periodic=periodic), "si", "w_lon")
+    lat_br = _lat_rows(_axis_bracket, src_lat, pts_lat, "pid", src.n_y, periodic)
 
     n_x_src, n_y_src = src.n_x, src.n_y
+    lat_in, pole = _split_poles(lat_br, n_y_src)
     interior = (
-        lat_br.filter((F.col("sj") >= 0) & (F.col("sj") < n_y_src))
-        .join(lon_br, "pid")
+        lat_in.join(lon_br, "pid")
         .select(
             F.col("pid").alias("row"),
             (F.col("sj") * F.lit(n_x_src) + F.col("si")).alias("col"),
@@ -233,17 +263,4 @@ def _bilinear_points(
     )
     if not periodic:
         return interior
-
-    # ALLAVG virtual-pole rows: value = mean of the adjacent source row,
-    # lon-independent -> spread S = w_lat / n_x over every cell of it
-    pole = lat_br.filter((F.col("sj") < 0) | (F.col("sj") >= n_y_src))
-    src_i = src_lon.select(F.col(src_lon.columns[0]).alias("si"))
-    pole_rows = pole.crossJoin(F.broadcast(src_i)).select(
-        F.col("pid").alias("row"),
-        (
-            F.when(F.col("sj") < 0, F.lit(0)).otherwise(F.lit(n_y_src - 1)) * F.lit(n_x_src)
-            + F.col("si")
-        ).alias("col"),
-        (F.col("w_lat") / F.lit(float(n_x_src))).alias("S"),
-    )
-    return interior.unionByName(pole_rows)
+    return interior.unionByName(_pole_rows(pole, src_lon, n_x_src, n_y_src, F.col("pid")))

@@ -46,12 +46,14 @@ builders):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xesmf_spark.grids import Grid
+from xesmf_spark.grids import Grid, wrap_lon
 
 #: corner columns carried by curvilinear grids built with corner bounds
 #: (grids.grid_from_2d_arrays(lon_b=..., lat_b=...)); order is the node
@@ -88,28 +90,40 @@ def cell_quads(g: Grid, prefix: str) -> DataFrame:
     return g.df.select(*sel)
 
 
-def _binned(quads: DataFrame, p: str, bin_deg: float, nlon: int) -> DataFrame:
-    """SEAM-AWARE bin explode: corner lons are first LOCALIZED around the
-    quad's first corner (``wrap_lon(xk - x0) + wrap_lon(x0)``), so a
+def _snap_bins(bin_deg: float) -> tuple[int, float]:
+    """(nlon, effective bin_deg) with ``nlon * bin_deg == 360`` EXACTLY.
+    The mod-nlon wrap of lon-bin indices is only a congruence when the
+    bin width divides 360 — with a non-divisor width (e.g. the
+    2-cells-per-bin default on an odd n_x) a 360° shift is a fractional
+    number of bins and seam-straddling quads land in the wrong wrapped
+    bin. Snapping the width to 360/nlon preserves the ~requested
+    granularity and restores the identity."""
+    nlon = max(1, int(round(360.0 / bin_deg)))
+    return nlon, 360.0 / nlon
+
+
+def _binned(
+    quads: DataFrame, corners: Sequence[str], p: str, bin_deg: float, nlon: int
+) -> DataFrame:
+    """SEAM-AWARE bin explode of quads whose corners are the flattened
+    ``(x, y)`` column pairs ``corners``: corner lons are first LOCALIZED
+    around the first corner (``wrap_lon(xk - x0) + wrap_lon(x0)``), so a
     quad straddling the ±180° antimeridian keeps a contiguous, cell-width
     bbox instead of a 360°-wide one; the bbox's lon-bin range is then
     wrapped mod ``nlon`` so seam-crossing quads land in the bins on both
     sides of the seam. (Assumes cells narrower than 180° — any physical
-    mesh.) Keeps the localized bbox coords for the owner-bin dedup."""
-    from xesmf_spark.grids import wrap_lon
-
+    mesh.) Keeps the localized bbox as ``{p}xmin .. {p}ymax`` for the
+    owner-bin dedup. ``(nlon, bin_deg)`` come from :func:`_snap_bins`."""
+    x0, *x_rest = corners[::2]
     # materialize the wrapped reference corner once: inlining it into
     # all four corner projections quadruples the codegen surface (JIT
     # warm-up of this stage dominates cold build time)
-    q = quads.withColumn("_ref", wrap_lon(F.col(f"{p}x0")))
+    q = quads.withColumn("_ref", wrap_lon(F.col(x0)))
     q = q.withColumns(
-        {
-            f"{p}x{k}": F.col("_ref") + wrap_lon(F.col(f"{p}x{k}") - F.col(f"{p}x0"))
-            for k in (1, 2, 3)
-        }
-    ).withColumn(f"{p}x0", F.col("_ref")).drop("_ref")
-    xs = [F.col(f"{p}x{k}") for k in range(4)]
-    ys = [F.col(f"{p}y{k}") for k in range(4)]
+        {x: F.col("_ref") + wrap_lon(F.col(x) - F.col(x0)) for x in x_rest}
+    ).withColumn(x0, F.col("_ref")).drop("_ref")
+    xs = [F.col(x) for x in corners[::2]]
+    ys = [F.col(y) for y in corners[1::2]]
     q = (
         q.withColumn("_xmin", F.least(*xs))
         .withColumn("_xmax", F.greatest(*xs))
@@ -242,12 +256,12 @@ def conservative_weights_clip(
     # only a congruence when the bin width divides 360 — a non-divisor
     # width makes a 360° shift a fractional number of bins and drops
     # seam-straddling candidate pairs silently
-    from xesmf_spark.weights.curvilinear import _snap_bins
-
     nlon, bin_deg = _snap_bins(bin_deg)
 
-    sq = _binned(cell_quads(src, "s"), "s", bin_deg, nlon)
-    dq = _binned(cell_quads(dst, "d"), "d", bin_deg, nlon)
+    cols_s = [f"s{ax}{k}" for k in range(4) for ax in ("x", "y")]
+    cols_d = [f"d{ax}{k}" for k in range(4) for ax in ("x", "y")]
+    sq = _binned(cell_quads(src, "s"), cols_s, "s", bin_deg, nlon)
+    dq = _binned(cell_quads(dst, "d"), cols_d, "d", bin_deg, nlon)
 
     # PRE-PARTITION both sides by the join key at full cluster width:
     # the join reuses these exchanges (HashPartitioning(bin, N) matches
@@ -296,9 +310,6 @@ def conservative_weights_clip(
         F.floor((ix + 180.0) / bin_deg).cast("long"), F.lit(nlon)
     )
     cand = cand.filter(F.col("bin") == own)
-
-    cols_s = [f"s{ax}{k}" for k in range(4) for ax in ("x", "y")]
-    cols_d = [f"d{ax}{k}" for k in range(4) for ax in ("x", "y")]
 
     # STATIC physical-strategy split. When BOTH grids are rectilinear
     # every candidate pair is a pair of AXIS-ALIGNED rectangles by

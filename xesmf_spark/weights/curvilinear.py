@@ -24,8 +24,9 @@ mod nlon, the point shifted by whole turns into the quad's frame), so
 meshes straddling the ±180° antimeridian — global tripolar/rotated
 grids — regrid correctly in either lon convention (±180 or 0..360).
 The reference gets this for free from ESMF's 3-D Cartesian internals
-(xesmf/backend.py:44-45); here the wrap arithmetic mirrors the
-bucketed-nearest builder's wrapped neighborhoods (nearest.py).
+(xesmf/backend.py:44-45). The quad explode is the clip builder's
+seam-aware bin explode (conservative_clip._binned), so both mesh
+builders localize and bin quads with the same code.
 
 Limitations (documented, mirroring SURVEY.md §7 phase-7 scope):
 - planar approximation in lon/lat space (adequate away from the poles
@@ -40,7 +41,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from xesmf_spark.grids import Grid
+from xesmf_spark.grids import Grid, wrap_lon
+from xesmf_spark.weights.conservative_clip import _binned, _snap_bins
+
+#: the quad's corner-center columns, flattened (x, y) pairs; the first
+#: is the lon frame the others are localized into
+_CORNER_COLS = ("x00", "y00", "x10", "y10", "x01", "y01", "x11", "y11")
 
 #: |a| below this -> the quad is a parallelogram and the quadratic
 #: degenerates to the linear case
@@ -72,26 +78,11 @@ def _quads(src: Grid) -> DataFrame:
     return p00.join(p10, ["j", "i"]).join(p01, ["j", "i"]).join(p11, ["j", "i"])
 
 
-def _snap_bins(bin_deg: float) -> tuple[int, float]:
-    """(nlon, effective bin_deg) with ``nlon * bin_deg == 360`` EXACTLY.
-    The mod-nlon wrap of lon-bin indices is only a congruence when the
-    bin width divides 360 — with a non-divisor width (e.g. the
-    2-cells-per-bin default on an odd n_x) a 360° shift is a fractional
-    number of bins and seam-straddling quads land in the wrong wrapped
-    bin. Snapping the width to 360/nlon preserves the ~requested
-    granularity and restores the identity."""
-    nlon = max(1, int(round(360.0 / bin_deg)))
-    return nlon, 360.0 / nlon
-
-
-def _bin_id(lon_col, lat_col, bin_deg: float):
+def _bin_id(lon_col, lat_col, bin_deg: float, nlon: int):
     """Seam-aware bin key: lon is wrapped into [-180, 180) first and the
     lon-bin index wrapped mod nlon, so any input convention (0..360,
-    ±180) hashes to the same geographic bin. ``bin_deg`` must already be
-    snapped via :func:`_snap_bins`."""
-    from xesmf_spark.grids import wrap_lon
-
-    nlon, bin_deg = _snap_bins(bin_deg)
+    ±180) hashes to the same geographic bin. ``(nlon, bin_deg)`` come
+    from :func:`~xesmf_spark.weights.conservative_clip._snap_bins`."""
     blat = F.floor((lat_col + F.lit(90.0)) / F.lit(bin_deg)).cast("long")
     blon = F.pmod(
         F.floor((wrap_lon(lon_col) + F.lit(180.0)) / F.lit(bin_deg)).cast("long"),
@@ -112,40 +103,14 @@ def locate_points(src: Grid, dst: Grid, bin_deg: float | None = None) -> DataFra
     # snap so nlon * bin_deg == 360 exactly (seam-wrap congruence)
     nlon, bin_deg = _snap_bins(bin_deg)
 
-    from xesmf_spark.grids import wrap_lon
-
-    quads = _quads(src)
-    # SEAM-AWARE localization: corner lons wrapped into the frame of the
-    # (wrapped) first corner, so a quad straddling the ±180° seam keeps a
-    # contiguous cell-width bbox (assumes cells narrower than 180°)
-    ref = wrap_lon(F.col("x00"))
-    quads = quads.withColumns(
-        {c: ref + wrap_lon(F.col(c) - F.col("x00")) for c in ("x10", "x01", "x11")}
-    ).withColumn("x00", ref)
-    # explode each quad into every bin its bbox overlaps, lon-bin index
-    # wrapped mod nlon so seam-crossing quads land on both sides
-    qx_min = F.least("x00", "x10", "x01", "x11")
-    qx_max = F.greatest("x00", "x10", "x01", "x11")
-    qy_min = F.least("y00", "y10", "y01", "y11")
-    qy_max = F.greatest("y00", "y10", "y01", "y11")
-    nlon = max(1, int(round(360.0 / bin_deg)))
-    quads = (
-        quads.withColumn("bx0", F.floor((qx_min + 180.0) / bin_deg).cast("long"))
-        .withColumn("bx1", F.floor((qx_max + 180.0) / bin_deg).cast("long"))
-        .withColumn("by0", F.floor((qy_min + 90.0) / bin_deg).cast("long"))
-        .withColumn("by1", F.floor((qy_max + 90.0) / bin_deg).cast("long"))
-        .withColumn("bx", F.explode(F.sequence("bx0", "bx1")))
-        .withColumn("by", F.explode(F.sequence("by0", "by1")))
-        .withColumn(
-            "bin", F.col("by") * F.lit(nlon) + F.pmod(F.col("bx"), F.lit(nlon))
-        )
-        .drop("bx0", "bx1", "by0", "by1", "bx", "by")
-    )
+    # each quad explodes into every bin its bbox overlaps, corners
+    # localized into the first corner's lon frame (seam-aware)
+    quads = _binned(_quads(src), _CORNER_COLS, "q", bin_deg, nlon)
     pts = dst.df.select(
         F.col("cell_id").alias("pid"),
         F.col("lon").alias("px"),
         F.col("lat").alias("py"),
-    ).withColumn("bin", _bin_id(F.col("px"), F.col("py"), bin_deg))
+    ).withColumn("bin", _bin_id(F.col("px"), F.col("py"), bin_deg, nlon))
 
     cand = pts.join(quads, "bin").drop("bin")
     # localize the point into the quad's lon frame (whole turns only):
@@ -216,6 +181,14 @@ def locate_points(src: Grid, dst: Grid, bin_deg: float | None = None) -> DataFra
     )
 
 
+def _bilinear_basis() -> list:
+    """The bilinear blend of a located point's quad corners, over the
+    ``u``/``v`` columns of :func:`locate_points`, in corner order
+    00, 10, 01, 11."""
+    u, v = F.col("u"), F.col("v")
+    return [(1 - u) * (1 - v), u * (1 - v), (1 - u) * v, u * v]
+
+
 def bilinear_weights_curvilinear(
     src: Grid, dst: Grid, bin_deg: float | None = None
 ) -> DataFrame:
@@ -223,13 +196,14 @@ def bilinear_weights_curvilinear(
     mesh onto any destination point set (grid cells or locstream).
     Returns (row, col, S) with row = destination cell_id."""
     solved = locate_points(src, dst, bin_deg)
+    b00, b10, b01, b11 = _bilinear_basis()
     w = solved.select(
         "pid",
         F.array(
-            F.struct(F.col("id00").alias("col"), ((1 - F.col("u")) * (1 - F.col("v"))).alias("S")),
-            F.struct(F.col("id10").alias("col"), (F.col("u") * (1 - F.col("v"))).alias("S")),
-            F.struct(F.col("id01").alias("col"), ((1 - F.col("u")) * F.col("v")).alias("S")),
-            F.struct(F.col("id11").alias("col"), (F.col("u") * F.col("v")).alias("S")),
+            F.struct(F.col("id00").alias("col"), b00.alias("S")),
+            F.struct(F.col("id10").alias("col"), b10.alias("S")),
+            F.struct(F.col("id01").alias("col"), b01.alias("S")),
+            F.struct(F.col("id11").alias("col"), b11.alias("S")),
         ).alias("ws"),
     )
     return (

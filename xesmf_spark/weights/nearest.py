@@ -48,6 +48,7 @@ agree.
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -99,6 +100,9 @@ def _dist2(p: str, q: str):
     )
 
 
+#: needle columns: id plus the precomputed trig of :func:`_points`
+_N_COLS = ("n_id", "n_lon", "n_lat", "n_cla", "n_sla", "n_clo", "n_slo")
+
 #: argmin encoding: quantized distance in the high bits, candidate id in
 #: the low 30 — lexicographic (dist, id) order as ONE primitive BIGINT.
 #: d2 <= 4 so the quantized part is < 4.1e9; 4.1e9 * 2^30 < 2^63. Ids
@@ -107,8 +111,18 @@ def _dist2(p: str, q: str):
 _ID_SHIFT = 1 << 30
 
 
-def _argmin_agg(cand: DataFrame) -> DataFrame:
-    """(n_id, p_id, d2r) of the nearest candidate per needle.
+def _quantized_d2():
+    """Squared chord distance on the 1e-9 grid, as a BIGINT: the
+    ordering key of every argmin and top-k here (and in the DuckDB
+    oracle), so geometric ties break on the point id everywhere."""
+    return F.round(_dist2("n", "p") * F.lit(1e9)).cast("long")
+
+
+def _argmin_agg(cand: DataFrame, keys: Sequence[str] = ("n_id",)) -> DataFrame:
+    """``(*keys, p_id, d2r)`` of the nearest candidate per needle;
+    ``keys`` identify the needle (``n_id`` first, any needle columns
+    the caller wants carried along after it). A needle whose candidates
+    are all null gets null ``p_id`` and ``d2r``.
 
     The min runs over a PRIMITIVE encoding of (quantized d2, p_id), not
     min(struct(...)) / min_by(...): struct-ordered aggregates plan as
@@ -116,20 +130,27 @@ def _argmin_agg(cand: DataFrame) -> DataFrame:
     a 2.9e10-row broadcast-nn candidate set spilled the disk to death).
     A primitive min is a HashAggregate with map-side partial combine —
     tasks emit at most one row per needle and nothing ever sorts."""
-    enc = (
-        F.round(_dist2("n", "p") * F.lit(1e9)).cast("long") * F.lit(_ID_SHIFT)
-        + F.col("p_id")
-    ).alias("enc")
+    enc = (_quantized_d2() * F.lit(_ID_SHIFT) + F.col("p_id")).alias("enc")
     return (
-        cand.select("n_id", enc)
-        .groupBy("n_id")
-        .agg(F.min("enc").alias("enc"))
+        cand.select(*keys, enc)
+        .groupBy(*keys)
+        .agg(F.min("enc").alias("enc"))  # min() skips null candidates
         .select(
-            "n_id",
+            *keys,
             (F.col("enc") % _ID_SHIFT).alias("p_id"),
             (F.floor(F.col("enc") / _ID_SHIFT).cast("double") / 1e9).alias("d2r"),
         )
     )
+
+
+def _trusted_d2(bin_deg: float):
+    """Exactness bound (see module docstring) as a squared chord
+    distance: a neighborhood winner at most this far from needle
+    ``n_lat`` is nearer than any point outside its 3x3 neighborhood."""
+    bin_rad = math.radians(bin_deg)
+    phi_max = F.least(F.lit(math.pi / 2), F.abs(F.col("n_lat")) + F.lit(2 * bin_rad))
+    bound = F.lit(2.0) * F.cos(phi_max) * F.lit(math.sin(bin_rad / 2.0))
+    return bound * bound
 
 
 def _bin_candidates(
@@ -181,13 +202,7 @@ def _bin_candidates(
         )
         .select("*", F.explode(wrapped_bins).alias("off"))
         .select(
-            "n_id",
-            "n_lon",
-            "n_lat",
-            "n_cla",
-            "n_sla",
-            "n_clo",
-            "n_slo",
+            *_N_COLS,
             F.col("off.blat").alias("blat"),
             F.col("off.blon").alias("blon"),
         )
@@ -209,35 +224,17 @@ def _argmin_join(need: DataFrame, pool: DataFrame, strategy: str, bin_deg: float
     # the hash key). No join against `need` afterwards: the exactness
     # check reads n_lat straight from the aggregate, and the miss set
     # already carries the trig columns the rescue pass needs.
-    n_cols = ["n_id", "n_lon", "n_lat", "n_cla", "n_sla", "n_clo", "n_slo"]
-    cand = _bin_candidates(need, pool, bin_deg, join_type="left")
-    enc = (
-        F.round(_dist2("n", "p") * F.lit(1e9)).cast("long") * F.lit(_ID_SHIFT)
-        + F.col("p_id")
-    ).alias("enc")
-    hit = (
-        cand.select(*n_cols, enc)
-        .groupBy(*n_cols)
-        .agg(F.min("enc").alias("enc"))  # min() skips null candidates
-        .select(
-            *n_cols,
-            (F.col("enc") % _ID_SHIFT).alias("p_id"),
-            (F.floor(F.col("enc") / _ID_SHIFT).cast("double") / 1e9).alias("d2r"),
-        )
-    )
-    # exactness bound (see module docstring): a winner farther than the
-    # closest possible out-of-neighborhood point cannot be trusted
-    bin_rad = math.radians(bin_deg)
-    phi_max = F.least(F.lit(math.pi / 2), F.abs(F.col("n_lat")) + F.lit(2 * bin_rad))
-    bound = F.lit(2.0) * F.cos(phi_max) * F.lit(math.sin(bin_rad / 2.0))
+    hit = _argmin_agg(_bin_candidates(need, pool, bin_deg, join_type="left"), _N_COLS)
+    # a winner farther than the closest possible out-of-neighborhood
+    # point cannot be trusted
     checked = hit.withColumn(
-        "_ok", F.col("p_id").isNotNull() & (F.col("d2r") <= bound * bound)
+        "_ok", F.col("p_id").isNotNull() & (F.col("d2r") <= _trusted_d2(bin_deg))
     ).persist(StorageLevel.MEMORY_AND_DISK)
     ok = checked.filter("_ok").select("n_id", "p_id")
     # rescue: empty neighborhoods + out-of-bound winners, resolved
     # EXACTLY by broadcasting the (small) miss set against the
     # distributed pool — the pool side is never collected
-    missed = checked.filter(~F.col("_ok")).select(*n_cols)
+    missed = checked.filter(~F.col("_ok")).select(*_N_COLS)
     rescue = _argmin_agg(pool.crossJoin(F.broadcast(missed))).select("n_id", "p_id")
     return ok.unionByName(rescue)
 
@@ -286,7 +283,7 @@ def knn_join(
 
     # quantized ordering key (same 1e-9 grid as _argmin_agg, so ties
     # break identically in Spark and the DuckDB oracle)
-    qd = F.round(_dist2("n", "p") * F.lit(1e9)).cast("long").alias("qd")
+    qd = _quantized_d2().alias("qd")
     w = Window.partitionBy("n_id").orderBy(F.col("qd").asc(), F.col("p_id").asc())
 
     def topk(cand: DataFrame) -> DataFrame:
@@ -313,17 +310,13 @@ def knn_join(
     # out-of-neighborhood bound) is computed by window aggregates over
     # the SAME partitioning as the rank — no per-needle groupBy, no
     # semi/anti joins, no persist
-    n_cols = ["n_id", "n_lon", "n_lat", "n_cla", "n_sla", "n_clo", "n_slo"]
     cand = _bin_candidates(need, pool, bin_deg, join_type="left")
     w_ord = Window.partitionBy("n_id").orderBy(
         F.col("qd").asc_nulls_last(), F.col("p_id").asc_nulls_last()
     )
     w_all = Window.partitionBy("n_id")
-    bin_rad = math.radians(bin_deg)
-    phi_max = F.least(F.lit(math.pi / 2), F.abs(F.col("n_lat")) + F.lit(2 * bin_rad))
-    bound = F.lit(2.0) * F.cos(phi_max) * F.lit(math.sin(bin_rad / 2.0))
     ranked = (
-        cand.select(*n_cols, "p_id", qd)
+        cand.select(*_N_COLS, "p_id", qd)
         .withColumn("rank", F.row_number().over(w_ord))
         .withColumn("n_found", F.count("p_id").over(w_all))
         .withColumn(
@@ -335,7 +328,7 @@ def knn_join(
             "_ok",
             F.col("p_id").isNotNull()
             & (F.col("n_found") >= k)
-            & (F.col("d_kth") <= bound * bound),
+            & (F.col("d_kth") <= _trusted_d2(bin_deg)),
         )
     )
     ok = (
@@ -343,7 +336,7 @@ def knn_join(
         .withColumn("dist2", F.col("qd").cast("double") / F.lit(1e9))
         .select("n_id", "p_id", "rank", "dist2")
     )
-    missed = ranked.filter((F.col("rank") == 1) & ~F.col("_ok")).select(*n_cols)
+    missed = ranked.filter((F.col("rank") == 1) & ~F.col("_ok")).select(*_N_COLS)
     rescue = topk(pool.crossJoin(F.broadcast(missed)))
     return (
         ok.unionByName(rescue.select("n_id", "p_id", "rank", "dist2"))

@@ -17,19 +17,21 @@ quadratic through those 3 centers, evaluated at the destination
 coordinate, gives closed-form Lagrange weights; blend the two corners'
 quadratics with the linear bracket weights. The 2-D patch is the tensor
 product — per-corner biquadratic patches blended bilinearly, which
-factorizes axis-by-axis, so the whole build reuses bilinear.py's
-skeleton: tiny per-axis tables, broadcast range joins, one cross
-combine, <=16 nnz per destination cell. Pure JVM Column arithmetic —
-no UDF, no linear solve (the tensor-grid least-squares system is
-interpolatory, so its solution IS the Lagrange form).
+factorizes axis-by-axis. The build calls bilinear.py's helpers for
+the periodic extension and bracket join, the virtual-pole rows and the
+tensor-product combine: tiny per-axis tables, broadcast range joins,
+one cross combine, <=16 nnz per destination cell. Pure JVM Column
+arithmetic — no UDF, no linear solve (the tensor-grid least-squares
+system is interpolatory, so its solution IS the Lagrange form).
 
 Reproduces any quadratic field exactly on interior destinations
 (tested), degrades to the bilinear ALLAVG virtual-pole treatment
 poleward of the outermost source row (periodic grids), and yields
 unmapped-zero outside the source mesh — the same boundary semantics as
-bilinear.py. Curvilinear sources dispatch to the general-mesh form
-(patch_curvilinear.py: per-corner 3x3 least-squares quadratic patches
-blended over the located quad — same defining contract).
+bilinear.py. A curvilinear mesh on either side dispatches to the
+general-mesh form (patch_curvilinear.py: per-corner 3x3 least-squares
+quadratic patches blended over the located quad — same defining
+contract).
 """
 
 from __future__ import annotations
@@ -38,7 +40,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xesmf_spark.grids import Grid
-from xesmf_spark.weights.bilinear import _pole_brackets, _tensor_product
+from xesmf_spark.weights.bilinear import (
+    _brackets,
+    _lat_rows,
+    _renamed,
+    _source_axis,
+    _tensor_product,
+)
 
 
 def _axis_patch(
@@ -49,12 +57,7 @@ def _axis_patch(
     Lagrange stencils, blended by the linear bracket weights. Returns
     ``(idx_dst, k, w)``; weights per dest sum to 1 (each Lagrange basis
     sums to 1 and the corner blend is affine)."""
-    s = src_ax.select(F.col(src_ax.columns[0]).alias("k"), F.col("c"))
-    if periodic:
-        s = (
-            s.unionByName(s.select("k", (F.col("c") - 360.0).alias("c")))
-            .unionByName(s.select("k", (F.col("c") + 360.0).alias("c")))
-        )
+    s = _source_axis(src_ax, periodic)
     # per-corner canonical 3-point stencil from the sorted center axis:
     # interior (prev, self, next); shifted inward at hard edges. Axis
     # tables are tiny — a single-partition window is deliberate.
@@ -100,27 +103,7 @@ def _axis_patch(
         .alias("cc"),
     )
 
-    # bracketing pairs + dedup, exactly as bilinear's _axis_bracket
-    pairs = s.select(
-        F.col("k").alias("k_lo"),
-        F.col("c").alias("c_lo"),
-        F.lead("k").over(win).alias("k_hi"),
-        F.lead("c").over(win).alias("c_hi"),
-    ).filter(F.col("k_hi").isNotNull())
-    d = dst_ax.select(F.col(dst_ax.columns[0]).alias(idx_dst), F.col("c").alias("x"))
-    br = d.join(
-        F.broadcast(pairs),
-        (F.col("x") >= F.col("c_lo")) & (F.col("x") <= F.col("c_hi")),
-        "inner",
-    )
-    br = (
-        br.withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy(idx_dst).orderBy(F.col("c_lo"))),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    br = _brackets(s, dst_ax, idx_dst)
     b_hi = (F.col("x") - F.col("c_lo")) / (F.col("c_hi") - F.col("c_lo"))
 
     # both corners' stencils attach with two broadcast joins, then ONE
@@ -160,15 +143,16 @@ def _axis_patch(
 
 def patch_weights(src: Grid, dst: Grid, periodic: bool | None = None) -> DataFrame:
     """COO weight triplets for patch-recovery regridding between
-    rectilinear grids (destination may be any point set — a locstream
+    rectilinear grids, or from or onto a curvilinear mesh (a locstream
     destination is rejected upstream by the Regridder's validation
     matrix, frontend.py:178-184)."""
     if periodic is None:
         periodic = src.periodic
-    if src.curvilinear:
-        # general-mesh form: per-corner 3x3 LS quadratic patches blended
-        # bilinearly over the located quad (patch_curvilinear.py) — same
-        # defining contract (quadratic-exact, C0, partition of unity)
+    if src.curvilinear or dst.curvilinear:
+        # no separable axes on one side: the general-mesh form —
+        # per-corner 3x3 LS quadratic patches blended bilinearly over
+        # the located source quad (patch_curvilinear.py), same defining
+        # contract (quadratic-exact, C0, partition of unity)
         from xesmf_spark.weights.patch_curvilinear import patch_weights_curvilinear
 
         return patch_weights_curvilinear(src, dst)
@@ -177,20 +161,10 @@ def patch_weights(src: Grid, dst: Grid, periodic: bool | None = None) -> DataFra
     src_lon, src_lat = src.get_lon_axis(), src.get_lat_axis()
     dst_lon, dst_lat = dst.get_lon_axis(), dst.get_lat_axis()
 
-    lon_br = _axis_patch(src_lon, dst_lon, "di", periodic=periodic).withColumnRenamed(
-        "k", "si"
-    ).withColumnRenamed("w", "w_lon")
-    lat_br = _axis_patch(src_lat, dst_lat, "dj", periodic=False).withColumnRenamed(
-        "k", "sj"
-    ).withColumnRenamed("w", "w_lat")
-    if periodic:
-        # poleward of the outermost source row: ALLAVG virtual-pole
-        # blending, identical to bilinear (linear accuracy there)
-        lat_br = lat_br.unionByName(
-            _pole_brackets(src_lat, dst_lat, src.n_y)
-            .withColumnRenamed("k", "sj")
-            .withColumnRenamed("w", "w_lat")
-        )
+    lon_br = _renamed(_axis_patch(src_lon, dst_lon, "di", periodic=periodic), "si", "w_lon")
+    # poleward of the outermost source row: ALLAVG virtual-pole
+    # blending, identical to bilinear (linear accuracy there)
+    lat_br = _lat_rows(_axis_patch, src_lat, dst_lat, "dj", src.n_y, periodic)
     return _tensor_product(
         lon_br, lat_br, dst_lon, src_lon, src.n_x, dst.n_x, src.n_y, periodic
     )

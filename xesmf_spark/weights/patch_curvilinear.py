@@ -1,4 +1,4 @@
-"""Patch-recovery weights for CURVILINEAR source meshes.
+"""Patch-recovery weights for CURVILINEAR meshes, on either side.
 
 The reference supports ``method='patch'`` on any 2-D mesh because ESMF
 builds the least-squares polynomial patches in Fortran
@@ -99,10 +99,12 @@ def patch_weights_curvilinear(
     src: Grid, dst: Grid, bin_deg: float | None = None
 ) -> DataFrame:
     """COO weight triplets (row, col, S) for patch-recovery regridding
-    FROM a curvilinear source mesh onto any destination point set."""
+    from a source mesh onto any destination point set. patch.py sends
+    every pair with a curvilinear side here; a rectilinear source is
+    read as its mesh of centers."""
     if src.n_x < 3 or src.n_y < 3:
         raise ValueError("patch needs >= 3 source centers per axis")
-    from xesmf_spark.weights.curvilinear import locate_points
+    from xesmf_spark.weights.curvilinear import _bilinear_basis, locate_points
 
     loc = locate_points(src, dst, bin_deg)
 
@@ -117,14 +119,7 @@ def patch_weights_curvilinear(
                 (F.col("i") + F.lit(c % 2)).alias("ic"),
                 b.alias("blend"),
             )
-            for c, b in enumerate(
-                [
-                    (1 - F.col("u")) * (1 - F.col("v")),
-                    F.col("u") * (1 - F.col("v")),
-                    (1 - F.col("u")) * F.col("v"),
-                    F.col("u") * F.col("v"),
-                ]
-            )
+            for c, b in enumerate(_bilinear_basis())
         ]
     )
     ex = loc.select(
