@@ -498,6 +498,25 @@ def test_ivf_topk_gemm_matches_fold(spark):
     assert len(fold) > 0
 
 
+def test_ivf_topk_fold_releases_its_assignments(spark):
+    """The fold path's persisted assignment table is registered, so
+    release_persisted() leaves the session cache empty."""
+    import random
+
+    from xesmf_spark import release_persisted
+    from xesmf_spark import similarity as SIM
+
+    rng = random.Random(7)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1.0, 1.0) for _ in range(4)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    spark.catalog.clearCache()
+    assert SIM.ivf_topk(emb, strategy="fold").count() > 0
+    release_persisted()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_kmeans_centroids_improve_ivf_recall(spark):
     """Trained (spherical k-means) centroids must match-or-beat the
     seed-subset codebook's top-k recall on the planted-duplicate corpus

@@ -375,7 +375,7 @@ def test_finalize_releases_persisted_intermediates(spark, g_in, g_out):
     and the regridder must stay usable afterwards."""
     from pyspark.sql import functions as F
 
-    from xesmf_spark import apply as apply_mod
+    from xesmf_spark import materialize
     from xesmf_spark.grids import wave_smooth
     from xesmf_spark.regridder import Regridder
 
@@ -383,23 +383,56 @@ def test_finalize_releases_persisted_intermediates(spark, g_in, g_out):
     # persistent-RDD count: Spark's cache manager dedupes canonicalized
     # plans, so an earlier test's persist can absorb this one and make a
     # count-based assertion order-dependent (flaked in full-suite order)
-    already = set(map(id, apply_mod._PERSISTED))
+    already = set(map(id, materialize.pinned_since(0)))
     with Regridder(spark, g_in, g_out, "conservative") as rg:
         field = (
             g_in.df.select("cell_id", wave_smooth().alias("value"))
             .crossJoin(spark.range(2, 7).select(F.col("id").alias("t_fin")))
         )
         rg(field, extra_keys=("t_fin",)).count()   # derives combos -> persists
-        pinned = [d for d in apply_mod._PERSISTED if id(d) not in already]
+        pinned = [d for d in materialize.pinned_since(0) if id(d) not in already]
         assert len(pinned) == 1
         lvl = pinned[0].storageLevel
         assert lvl.useMemory or lvl.useDisk
     # finalize released it (and emptied the registry entry)
     lvl = pinned[0].storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
-    assert all(id(d) in already for d in apply_mod._PERSISTED)
+    assert all(id(d) in already for d in materialize.pinned_since(0))
     # still usable after finalize
     assert rg(g_in.df.select("cell_id", wave_smooth().alias("value"))).count() > 0
+
+
+def test_finalize_keeps_other_operators_pins(spark, g_in, g_out):
+    """finalize releases only what its own applies pinned. The frame
+    dense_rank_distributed pins is what keeps a lazy suffix_ranks
+    result correct (un-cached, repartitionByRange re-samples its
+    boundaries and rows drop), so it must survive ``with Regridder``."""
+    from xesmf_spark import materialize
+    from xesmf_spark.relational import dense_rank_distributed
+
+    def cached(df):
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    depth = materialize.mark()
+    keys = spark.range(40).select((F.col("id") % 9).alias("k_keep"))
+    ranked = dense_rank_distributed(keys, ["k_keep"], "r_keep")
+    (local,) = materialize.pinned_since(depth)
+    with Regridder(spark, g_in, g_out, "conservative") as rg:
+        field = _field(g_in).crossJoin(
+            spark.range(3, 6).select(F.col("id").alias("t_keep"))
+        )
+        rg(field, extra_keys=("t_keep",)).count()
+        combos = materialize.pinned_since(depth)[1:]
+        assert len(combos) == 1 and cached(combos[0])
+    assert cached(local)
+    assert [id(d) for d in materialize.pinned_since(depth)] == [id(local)]
+    assert not cached(combos[0])
+    assert sorted(r.r_keep for r in ranked.collect()) == sorted(
+        i % 9 + 1 for i in range(40)
+    )
+    materialize.release_since(depth)
+    assert not cached(local)
 
 
 def test_call_metadata_facade(spark, g_in, g_out):

@@ -1494,6 +1494,42 @@ def test_pagerank_weighted_rejects_nonpositive_weights(spark):
         pagerank_weighted(null_w)
 
 
+def test_pagerank_raise_paths_release_their_pins(spark, monkeypatch):
+    """The raise paths of pagerank_weighted (non-positive weight) and
+    pagerank_personalized (empty seeds) leave the materialize registry
+    at its prior depth and nothing they pinned still cached."""
+    import pytest as _pytest
+
+    from xesmf_spark import materialize
+    from xesmf_spark import relational as R
+
+    pinned = []
+
+    def recording_pin(df):
+        pinned.append(materialize.pin(df))
+        return df
+
+    monkeypatch.setattr(R, "pin", recording_pin)
+    bad_w = spark.createDataFrame(
+        [(11, 12, 3), (12, 11, -3)], "src long, dst long, w long"
+    )
+    edf = spark.createDataFrame([(21, 22), (22, 23)], "src long, dst long")
+    no_seeds = spark.createDataFrame([], "node long")
+    for call, match in (
+        (lambda: R.pagerank_weighted(bad_w), "non-positive"),
+        (lambda: R.pagerank_personalized(edf, no_seeds), "empty seed"),
+    ):
+        depth = materialize.mark()
+        pinned.clear()
+        with _pytest.raises(ValueError, match=match):
+            call()
+        assert materialize.mark() == depth
+        assert pinned
+        for df in pinned:
+            lvl = df.storageLevel
+            assert not (lvl.useMemory or lvl.useDisk)
+
+
 def test_skyline_matches_bruteforce_and_keeps_ties(spark):
     """skyline: equals the O(n^2) strict-dominance brute force on a
     mixed max/min criterion set; identical criterion vectors all
@@ -1959,12 +1995,12 @@ def test_longest_repeats_matches_brute_force(spark):
 def test_longest_repeats_random_ab_corpus_and_storage_hygiene(spark):
     """Seeded fuzz on a repeat-dense two-letter alphabet (maximal
     stress for the identical-tail clamp and rank-tie handling), plus
-    the storage contract: the op must leave _PERSISTED at its prior
-    depth and its own checkpoint directory free of files."""
+    the storage contract: the op must leave the materialize registry
+    at its prior depth and its own checkpoint directory free of files."""
     import os
     import random
 
-    from xesmf_spark.apply import _PERSISTED
+    from xesmf_spark import materialize
     from xesmf_spark.relational import longest_repeats
 
     rng = random.Random(1507)
@@ -1974,7 +2010,7 @@ def test_longest_repeats_random_ab_corpus_and_storage_hygiene(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    n_persisted0 = len(_PERSISTED)
+    depth = materialize.mark()
     got = [
         (r.lcp, r.a_id, r.a_pos, r.b_id, r.b_pos)
         for r in longest_repeats(df, top_k=12).collect()
@@ -2000,7 +2036,7 @@ def test_longest_repeats_random_ab_corpus_and_storage_hygiene(spark):
     assert got == pairs[:12]
 
     # storage contract — the hygiene regression lock
-    assert len(_PERSISTED) == n_persisted0
+    assert materialize.mark() == depth
     ckpt = spark.sparkContext.getCheckpointDir()
     if ckpt is not None and "xesmf_spark_ckpt" in ckpt:
         leftover = [

@@ -23,7 +23,8 @@ from xesmf_spark.session import install_zip_cache_hook
 install_zip_cache_hook()
 
 from xesmf_spark.grids import Grid, grid_1d, grid_2d, grid_global, locstream, wave_smooth
-from xesmf_spark.apply import release_persisted, smm_apply
+from xesmf_spark.apply import smm_apply
+from xesmf_spark.materialize import release_persisted
 from xesmf_spark.regridder import Regridder
 from xesmf_spark.relational import (
     asof_join,

@@ -28,23 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xesmf_spark.grids import Grid
-
-#: DataFrames persisted by smm_apply (the derived extra-combos cache).
-#: Spark evicts them LRU, but long-lived sessions applying many
-#: regridders should release them deterministically — see
-#: :func:`release_persisted` / ``Regridder.finalize`` (the analogue of
-#: esmf_regrid_finalize's destroy() chain, xesmf/backend.py:333-350).
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> int:
-    """Unpersist every intermediate smm_apply pinned in executor caches;
-    returns how many were released."""
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-        n += 1
-    return n
+from xesmf_spark.materialize import pin
 
 
 def smm_apply(
@@ -109,8 +93,7 @@ def smm_apply(
         # derive combos from the (small) aggregate, and persist it so
         # the field is scanned exactly once — a dense field's combos
         # all survive the inner join (reference contract smm.py:77-86)
-        applied = applied.persist()
-        _PERSISTED.append(applied)
+        applied = pin(applied)
         extra_combos = applied.select(*extra).distinct()
 
     # base = dest cells x distinct extra-dim combos (so unmapped cells and

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from xesmf_spark.materialize import pin
 from xesmf_spark.session import shuffle_partition_count
 
 #: modulus keeping all hash arithmetic < 2^60 (ANSI-safe in both engines)
@@ -275,10 +276,10 @@ def _pairs_from_buckets(
     with the :data:`MAX_LSH_BUCKET` skew valve: oversized buckets are
     excluded BEFORE the join. The valve is a window count over the
     SAME (band, bh) key the self-join uses, and the counted bucket
-    rows are persisted (docs x bands rows — id + band + hash, bounded,
-    registered in ``_PERSISTED``): one exchange materializes once and
-    the valve filter, the optional drop-count job, and BOTH self-join
-    sides read it with no further exchange (the earlier
+    rows are pinned (docs x bands rows — id + band + hash, bounded):
+    one exchange materializes once and the valve filter, the optional
+    drop-count job, and BOTH self-join sides read it with no further
+    exchange (the earlier
     size-aggregate + join-back shape paid a second corpus-bucket
     exchange plus a full recompute for the ``log_drops`` count).
     ``log_drops`` triggers one extra small job counting the dropped
@@ -286,12 +287,9 @@ def _pairs_from_buckets(
     if max_bucket is not None:
         from pyspark.sql import Window
 
-        from xesmf_spark.apply import _PERSISTED
-
-        counted = buckets.withColumn(
+        counted = pin(buckets.withColumn(
             "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "bh"))
-        ).persist()
-        _PERSISTED.append(counted)
+        ))
         if log_drops:
             import logging
 
@@ -339,26 +337,20 @@ def minhash_dedup_pairs(
     tokenize + n-gram) is the expensive map-side step and must not run
     per consumer.
     """
-    from xesmf_spark.apply import _PERSISTED
-
-    sh = (
+    sh = pin(
         df.select(
             F.col(id_col).alias("sid"), shingles(F.col(text_col)).alias("sh_set")
-        )
-        .withColumn("n_sh", F.size("sh_set"))
-        .persist()
+        ).withColumn("n_sh", F.size("sh_set"))
     )
-    _PERSISTED.append(sh)
     ex = sh.select("sid", F.explode("sh_set").alias("shingle"))
 
     # signatures as ONE let-bound array column (base hashes computed
     # once per doc, not once per sig), persisted because the bucket
     # construction reads 16 elements and the bucket self-join has two
     # consumers — output-sized (k longs per doc), cheap to pin
-    sigs = sh.select(
+    sigs = pin(sh.select(
         F.col("sid").alias(id_col), _sig_array(F.col("sh_set")).alias("sig")
-    ).persist()
-    _PERSISTED.append(sigs)
+    ))
     cand = _pairs_from_buckets(
         _buckets_from_sig_array(sigs, id_col),
         id_col,
@@ -422,20 +414,16 @@ def dedup_groups(
     the previous label so the convergence count is a limit-1 scan
     over the materialized frame), never collects data rows.
     """
-    from xesmf_spark.apply import _PERSISTED
-
     half = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # pre-partition the persisted edge list on dst — the key EVERY
     # round's propagation join uses — so each round shuffles only the
     # O(N) label table against the cached partitioning instead of
     # re-exchanging |E| edges per round (guide §2.4; partition count
     # inherits spark.sql.shuffle.partitions, scale-adaptive via conf)
-    edges = (
+    edges = pin(
         half.unionByName(
             half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(F.col("dst"))
-        .persist()
+        ).repartition(F.col("dst"))
     )
     # localCheckpoint (not persist) each round: persist keeps the FULL
     # logical plan, which nests once per round and grows exponentially
@@ -449,7 +437,6 @@ def dedup_groups(
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint()
     )
-    _PERSISTED.append(edges)
     for _ in range(max_iter):
         prop = (
             edges.join(labels, edges["dst"] == labels["node"])
@@ -607,10 +594,10 @@ def simhash_pairs(
     same plan shape. Returns (id_a, id_b, hamming), id_a < id_b.
 
     CACHING CONTRACT (all persisting operators in this module): the
-    fingerprint intermediate is persisted (MEMORY_AND_DISK, LRU-
-    evictable — bounded, not a hard leak) and registered with
-    ``xesmf_spark.apply._PERSISTED``; long-lived sessions invoking
-    these operators repeatedly should call
+    fingerprint intermediate is pinned with
+    :func:`xesmf_spark.materialize.pin` (MEMORY_AND_DISK, LRU-evictable
+    — bounded, not a hard leak); long-lived sessions invoking these
+    operators repeatedly should call
     :func:`xesmf_spark.release_persisted` (or
     ``spark.catalog.clearCache()``) between invocations, as bench.py
     does between timed runs.
@@ -626,14 +613,10 @@ def simhash_pairs(
     # persist the fingerprint table (2 longs/doc): the valve sizing, the
     # a-side and the b-side of the candidate join all read it — without
     # this the md5 fingerprint pass runs 3x over the corpus
-    from xesmf_spark.apply import _PERSISTED
-
-    sh = (
+    sh = pin(
         simhash(df, id_col=id_col, text_col=text_col, bits=bits)
         .filter(F.col("simhash").isNotNull())
-        .persist()
     )
-    _PERSISTED.append(sh)
     bands = sh.select(
         F.col(id_col),
         F.col("simhash"),
@@ -891,11 +874,8 @@ def winnowing_overlap_pairs(
     gram volume and feeds four consumers — sizes, df counts, both join
     legs; without the persist Spark replays the char-gram explode per
     consumer: measured 1.8× at sf0.1)."""
-    from xesmf_spark.apply import _PERSISTED
-
     fp = winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
-    hashes = fp.select(F.col(id_col).alias("sid"), "fp_hash").distinct().persist()
-    _PERSISTED.append(hashes)
+    hashes = pin(fp.select(F.col(id_col).alias("sid"), "fp_hash").distinct())
     sizes = hashes.groupBy("sid").agg(F.count(F.lit(1)).alias("n_fp"))
     dfc = hashes.groupBy("fp_hash").agg(F.countDistinct("sid").alias("__df"))
     rare = hashes.join(
@@ -963,7 +943,6 @@ def rake_keyphrases(
     shaped, spills to disk at scale; without it Spark replays the
     explode+window per consumer — measured 2.15× at sf0.1).  Output:
     ``(id, phrase, n_words, score_milli, first_pos)``."""
-    from xesmf_spark.apply import _PERSISTED
     if max_phrase_len < 1 or topk < 1:
         raise ValueError(
             f"max_phrase_len and topk must be >= 1, got "
@@ -982,7 +961,7 @@ def rake_keyphrases(
     # gaps-and-islands: a content token starts a new phrase iff the
     # previous position was a delimiter (or doc start)
     wp = Window.partitionBy("__id").orderBy("pos")
-    runs = (
+    runs = pin(
         toks.withColumn(
             "brk",
             F.when(
@@ -996,9 +975,7 @@ def rake_keyphrases(
             F.sum("brk").over(wp.rowsBetween(Window.unboundedPreceding, 0)),
         )
         .filter(~F.col("is_delim"))
-        .persist()
     )
-    _PERSISTED.append(runs)
     phrases = (
         runs.groupBy("__id", "run")
         .agg(
@@ -1521,21 +1498,13 @@ def decontaminate_fuzzy(
     must be distinct WITHIN each side; the two sides' id spaces are
     independent (columns are tagged, never unioned).
     """
-    from xesmf_spark.apply import _PERSISTED
-
     def _side(df: DataFrame, tag: str):
-        sh = (
+        sh = pin(
             df.select(
                 F.col(id_col).alias(tag), shingles(F.col(text_col)).alias("sh_set")
-            )
-            .withColumn("n_sh", F.size("sh_set"))
-            .persist()
+            ).withColumn("n_sh", F.size("sh_set"))
         )
-        _PERSISTED.append(sh)
-        sigs = sh.select(
-            F.col(tag), _sig_array(F.col("sh_set")).alias("sig")
-        ).persist()
-        _PERSISTED.append(sigs)
+        sigs = pin(sh.select(F.col(tag), _sig_array(F.col("sh_set")).alias("sig")))
         return sh, _buckets_from_sig_array(sigs, tag)
 
     sh_t, b_t = _side(train, "__train_id")
@@ -1552,7 +1521,7 @@ def decontaminate_fuzzy(
 
         t_type = dict(b_t.dtypes)["__train_id"]
         e_type = dict(b_e.dtypes)["__eval_id"]
-        u = (
+        u = pin(
             b_t.select(
                 "__train_id",
                 F.lit(None).cast(e_type).alias("__eval_id"),
@@ -1572,9 +1541,7 @@ def decontaminate_fuzzy(
                 F.count(F.lit(1)).over(Window.partitionBy("band", "bh")),
             )
             .filter(F.col("bucket_n") <= max_bucket)
-            .persist()
         )
-        _PERSISTED.append(u)
         b_t = u.filter(F.col("__train_id").isNotNull()).select(
             "__train_id", "band", "bh"
         )
@@ -1702,8 +1669,6 @@ def dedup_spans(
     on the SAME lowest-level gram explode plus one (doc, keeper,
     diagonal)-partitioned window — still linear, still no pair join.
     """
-    from xesmf_spark.apply import _PERSISTED
-
     if levels is None:
         norm_levels = ((int(n), int(min_docs)),)
     else:
@@ -1727,12 +1692,10 @@ def dedup_spans(
             f"({norm_levels[0][0]}) — shorter runs contain no full gram"
         )
 
-    toks_df = (
+    toks_df = pin(
         df.select(F.col(id_col).alias("sid"), tokens(F.col(text_col)).alias("t"))
         .withColumn("L", F.size("t"))
-        .persist()
     )
-    _PERSISTED.append(toks_df)
 
     def _grams(nl: int, lowest: bool) -> DataFrame:
         src = toks_df if lowest else toks_df.filter(F.col("L") >= nl)
@@ -3144,8 +3107,6 @@ def kneser_ney_logprob_score(
     continuation aggregate, type total); c1/N1+ aggregates are keyed
     groupBys OF the type table (far smaller than the corpus); scoring
     = three keyed joins + the 1-row T broadcast + one per-doc agg."""
-    from xesmf_spark.apply import _PERSISTED
-
     t = tokens(F.col(text_col))
     pairs_arr = F.when(
         F.size(t) >= 2,
@@ -3158,8 +3119,7 @@ def kneser_ney_logprob_score(
     big = df.select(F.col(id_col), F.explode(pairs_arr).alias("bg")).select(
         F.col(id_col), F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
     )
-    c2 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")).persist()
-    _PERSISTED.append(c2)
+    c2 = pin(big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")))
     ctx = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("n1f")
     )
@@ -3655,8 +3615,6 @@ def dsir_weights(
     are a groupBy of that table (n_buckets rows — model-sized) and
     join back as ONE broadcast of ``n_buckets`` rows; scoring is a
     per-doc keyed SUM.  Nothing corpus-shaped crosses the driver."""
-    from xesmf_spark.apply import _PERSISTED
-
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     t = tokens(F.col(text_col))
@@ -3678,16 +3636,14 @@ def dsir_weights(
         is_target.alias("__tgt"),
         F.explode(pairs_arr).alias("term"),
     ).filter(F.col("term") != " ")
-    feats = (
+    feats = pin(
         uni.unionByName(big)
         .select(
             "id", "__tgt", (base_hash(F.col("term")) % n_buckets).alias("bucket")
         )
         .groupBy("id", "__tgt", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
-    _PERSISTED.append(feats)
     # the two hashed-feature distributions: n_buckets rows each side
     side = feats.groupBy("bucket").agg(
         F.sum(F.when(F.col("__tgt"), F.col("cnt")).otherwise(F.lit(0))).alias("ct"),

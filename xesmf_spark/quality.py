@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xesmf_spark.materialize import pin
+
 M = 1_000_000
 
 
@@ -261,15 +263,11 @@ def _two_sample_cdf(
     n = new.select(F.col(val_col).cast("long").alias("v")).select(
         "v", F.lit(0).alias("db"), F.lit(1).alias("dn")
     )
-    per = (
+    per = pin(
         b.unionByName(n)
         .groupBy("v")
         .agg(F.sum("db").alias("db"), F.sum("dn").alias("dn"))
-        .persist()
     )
-    from xesmf_spark.apply import _PERSISTED
-
-    _PERSISTED.append(per)
     lo, hi, n_b, n_n = [
         int(x)
         for x in per.agg(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from xesmf_spark.apply import smm_apply
 from xesmf_spark.grids import grid_global, wave_smooth
+from xesmf_spark.materialize import pin
 from xesmf_spark.weights import bilinear_weights, conservative_weights, nearest_weights
 
 ROUND = 7
@@ -1919,8 +1920,6 @@ def pipeline_curate(spark, sf_dir):
     shuffle is the final aggregate."""
     from xesmf_spark.pipeline import repetition_stats, scrub_pii, stratified_sample
 
-    from xesmf_spark.apply import _PERSISTED
-
     scrubbed = scrub_pii(_with_planted_pii(_docs(spark, sf_dir))).withColumn(
         "n_pii", F.col("n_emails") + F.col("n_ips") + F.col("n_phones")
     )
@@ -1936,10 +1935,9 @@ def pipeline_curate(spark, sf_dir):
     # are CodegenFallback, so no CSE saves them).  The persisted row
     # is the SLIM decision table (guide §8 "decide on small rows"):
     # doc_id/lang/n_pii + 4 numeric stats, O(docs) x ~50 B at any
-    # scale, text column long gone.  Registered in _PERSISTED;
-    # bench.py clears it after the timed query.
-    enriched = enriched.persist()
-    _PERSISTED.append(enriched)
+    # scale, text column long gone.  Pinned; bench.py clears it after
+    # the timed query.
+    enriched = pin(enriched)
     kept = enriched.filter(
         (F.col("distinct_ratio") >= 0.4) & (F.col("top_token_frac") <= 0.12)
     )

@@ -19,6 +19,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xesmf_spark import materialize
 from xesmf_spark.apply import smm_apply
 from xesmf_spark.grids import Grid, count_degenerate_cells, validate_lat_range
 from xesmf_spark.session import shuffle_partition_count
@@ -170,6 +171,9 @@ class Regridder:
         self._weights: DataFrame | None = None
         #: set by :meth:`prepare` — weights pinned partitioned-by-col
         self._prepared: DataFrame | None = None
+        #: registry frames this regridder's applies pinned; released by
+        #: :meth:`finalize`
+        self._pinned: list[DataFrame] = []
         # nnz from the parquet FOOTERS, driver-side (milliseconds) — a
         # count() here was a full Spark job per construction, the bulk
         # of the cached-construction latency the reference does in 36 ms
@@ -284,15 +288,15 @@ class Regridder:
     def finalize(self, clean_weights: bool = False) -> None:
         """Release engine-side resources — the analogue of
         ``esmf_regrid_finalize``'s destroy() chain
-        (xesmf/backend.py:333-350): unpersist every intermediate the
-        apply path pinned in executor caches, and optionally delete the
-        weight cache file. The Regridder stays usable afterwards (the
-        weights re-read from parquet) — unlike ESMF, Spark state is
-        rebuildable, so "finalized" here means "holding no cluster
-        memory", not "destroyed"."""
-        from xesmf_spark.apply import release_persisted
-
-        release_persisted()
+        (xesmf/backend.py:333-350): unpersist every intermediate this
+        regridder's applies pinned in executor caches, and optionally
+        delete the weight cache file. Other operators' pins stay: a lazy
+        result elsewhere may still read them. The Regridder stays usable
+        afterwards (the weights re-read from parquet) — unlike ESMF,
+        Spark state is rebuildable, so "finalized" here means "holding
+        no cluster memory", not "destroyed"."""
+        materialize.release(self._pinned)
+        self._pinned = []
         # drop the shared weights frame, and with it the CSR arrays and
         # broadcast once no other Regridder holds the frame
         hit = _WEIGHT_FRAMES.get(self.filename)
@@ -392,6 +396,7 @@ class Regridder:
             )
         if broadcast_weights is None:
             broadcast_weights = self.nnz <= BROADCAST_NNZ_LIMIT
+        depth = materialize.mark()
         out = smm_apply(
             field,
             self._prepared if self._prepared is not None else self.weights,
@@ -401,6 +406,7 @@ class Regridder:
             broadcast_weights=broadcast_weights,
             extra_combos=extra_combos,
         )
+        self._pinned += materialize.pinned_since(depth)
         if attach_dims:
             dims = self.out_horiz_dims
             if self.locstream_out:

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xesmf_spark.materialize import mark, pin, release_since
+
 # Closing-edge probe strategy bound for the triangle family (guide
 # §3.1/§3.2): when the oriented edge list is small enough to broadcast
 # (a pair-key hash relation; 4M edges ~ 64 MB built), the wedge table —
@@ -1037,15 +1039,16 @@ def pagerank(
     nodes = e.select(F.col("src").alias("node")).union(
         e.select(F.col("dst").alias("node"))
     ).distinct()
-    nodes = nodes.persist()
+    depth = mark()
+    nodes = pin(nodes)
     n = nodes.count()
     if n == 0:
-        nodes.unpersist()
+        release_since(depth)
         return e.sparkSession.createDataFrame([], "node long, rank_micro long")
     base = (1_000_000 - damp_micro) // n
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = e.join(outdeg, "src").repartition(F.col("src")).persist()
-    outdeg_nodes = outdeg.select("src").persist()
+    ed = pin(e.join(outdeg, "src").repartition(F.col("src")))
+    outdeg_nodes = pin(outdeg.select("src"))
     ranks = nodes.select("node", F.lit(1_000_000 // n).alias("rank_micro"))
     for _ in range(iters):
         contribs = (
@@ -1089,15 +1092,6 @@ def pagerank(
             )
             .localCheckpoint(eager=False)
         )
-    # caches stay registered (not unpersisted here): the returned frame
-    # is LAZY — its checkpoint chain still reads ed/outdeg_nodes/nodes
-    # when the CALLER first executes it.  Same CACHING CONTRACT as the
-    # pipeline module's persisting operators (MEMORY_AND_DISK,
-    # LRU-evictable, released by release_persisted()/clearCache between
-    # bench runs).
-    from xesmf_spark.apply import _PERSISTED
-
-    _PERSISTED.extend((nodes, ed, outdeg_nodes))
     return ranks
 
 
@@ -1864,26 +1858,23 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
     ``(node, auth_micro, hub_micro)`` for every node."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = edges.select("src", "dst").distinct().persist()
+    depth = mark()
+    e = pin(edges.select("src", "dst").distinct())
     # the auth half-step joins e on src, the hub half-step on dst —
     # every iteration, both directions.  Persist one pre-partitioned
     # copy per key so each half-step shuffles only the O(N) score
     # table (guide §2.4); e itself stays persisted for nodes/degree
     # consumers.
-    e_by_src = e.repartition(F.col("src")).persist()
-    e_by_dst = e.repartition(F.col("dst")).persist()
-    nodes = (
+    e_by_src = pin(e.repartition(F.col("src")))
+    e_by_dst = pin(e.repartition(F.col("dst")))
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     n = nodes.count()
     if n == 0:
-        e.unpersist()
-        e_by_src.unpersist()
-        e_by_dst.unpersist()
-        nodes.unpersist()
+        release_since(depth)
         return e.sparkSession.createDataFrame(
             [], "node long, auth_micro long, hub_micro long"
         )
@@ -1892,10 +1883,7 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
         # the L1 normalization total can reach 0, turning every score
         # NULL via non-ANSI div while the SQL replay errors — gate
         # loudly instead (rescale the micro unit to go bigger).
-        e.unpersist()
-        e_by_src.unpersist()
-        e_by_dst.unpersist()
-        nodes.unpersist()
+        release_since(depth)
         raise ValueError(
             f"hits: {n} nodes exceeds the 1e6-node micro-unit bound; "
             "normalization seed would truncate to 0"
@@ -1939,11 +1927,6 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
         .join(hub.withColumnRenamed("s", "hub_micro"), "node")
         .select("node", "auth_micro", "hub_micro")
     )
-    # lazy result still reads the caches — registry, not unpersist
-    # (see :func:`pagerank`)
-    from xesmf_spark.apply import _PERSISTED
-
-    _PERSISTED.extend((e, e_by_src, e_by_dst, nodes))
     return out
 
 
@@ -1974,32 +1957,30 @@ def pagerank_weighted(
     Scale shape: identical to :func:`pagerank` — per iteration one
     keyed edge-rank equi-join + map-side SUM + one scalar dangling
     agg, eager-truncated lineage; driver scalar = N only."""
-    e = (
+    depth = mark()
+    e = pin(
         edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
-        .persist()
     )
     # Loud gate: a NULL or non-positive collapsed weight makes the
     # `div wout` share NULL (silently dropped by SUM — rank mass would
     # vanish) or negative; the SQL replay instead divides by zero.
     # One limit(1) probe over the already-persisted collapsed edges.
     if e.filter(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count():
-        e.unpersist()
+        release_since(depth)
         raise ValueError(
             "pagerank_weighted: NULL or non-positive collapsed edge "
             "weight; filter weights > 0 upstream"
         )
-    nodes = (
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     n = nodes.count()
     if n == 0:
-        e.unpersist()
-        nodes.unpersist()
+        release_since(depth)
         return e.sparkSession.createDataFrame([], "node long, rank_micro long")
     base = (1_000_000 - damp_micro) // n
     # same invariant-frame discipline as :func:`pagerank`: the
@@ -2007,8 +1988,8 @@ def pagerank_weighted(
     # pre-partitioned on src (the per-iteration join key) so each
     # iteration shuffles only the O(N) rank table (guide §2.4/§5)
     wout = e.groupBy("src").agg(F.sum("w").alias("wout"))
-    ew = e.join(wout, "src").repartition(F.col("src")).persist()
-    wout_nodes = wout.select("src").persist()
+    ew = pin(e.join(wout, "src").repartition(F.col("src")))
+    wout_nodes = pin(wout.select("src"))
     ranks = nodes.select("node", F.lit(1_000_000 // n).alias("rank_micro"))
     for _ in range(iters):
         contribs = (
@@ -2041,11 +2022,6 @@ def pagerank_weighted(
             )
             .localCheckpoint(eager=False)
         )
-    # lazy result still reads the caches — keep them registered for
-    # release_persisted()/clearCache, as in :func:`pagerank`
-    from xesmf_spark.apply import _PERSISTED
-
-    _PERSISTED.extend((e, nodes, ew, wout_nodes))
     return ranks
 
 
@@ -2405,29 +2381,26 @@ def pagerank_personalized(
     one seed count."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = edges.select("src", "dst").distinct().persist()
-    s = (
-        seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
-        .distinct()
-        .persist()
+    depth = mark()
+    e = pin(edges.select("src", "dst").distinct())
+    s = pin(
+        seeds.select(F.col(seeds.columns[0]).cast("long").alias("node")).distinct()
     )
     n_s = s.count()
     if n_s == 0:
-        e.unpersist()
-        s.unpersist()
+        release_since(depth)
         raise ValueError("pagerank_personalized: empty seed set")
-    nodes = (
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .union(s.select("node"))
         .distinct()
-        .persist()
     )
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     is_seed = s.select("node", F.lit(1).alias("__seed"))
-    base = nodes.join(is_seed, "node", "left").select(
+    base = pin(nodes.join(is_seed, "node", "left").select(
         "node", F.coalesce("__seed", F.lit(0)).alias("__seed")
-    ).persist()
+    ))
     ranks = base.select(
         "node",
         F.when(F.col("__seed") == 1, F.lit(1_000_000 // n_s))
@@ -2439,8 +2412,8 @@ def pagerank_personalized(
     # invariant-frame discipline (see :func:`pagerank`): the
     # (src, dst, deg) join is loop-invariant — persist once,
     # pre-partitioned on the per-iteration join key
-    ed = e.join(out_deg, "src").repartition(F.col("src")).persist()
-    deg_nodes = out_deg.select("src").persist()
+    ed = pin(e.join(out_deg, "src").repartition(F.col("src")))
+    deg_nodes = pin(out_deg.select("src"))
     for _ in range(iters):
         contribs = (
             ed
@@ -2477,11 +2450,6 @@ def pagerank_personalized(
             )
             .localCheckpoint(eager=False)
         )
-    # lazy result still reads the caches — registry, not unpersist
-    # (see :func:`pagerank`)
-    from xesmf_spark.apply import _PERSISTED
-
-    _PERSISTED.extend((e, s, nodes, base, ed, deg_nodes))
     return ranks
 
 
@@ -2511,8 +2479,6 @@ def dense_rank_distributed(
     mirror a DuckDB oracle should avoid NULL keys."""
     if not cols:
         raise ValueError("cols must be non-empty")
-    from xesmf_spark.apply import _PERSISTED
-
     order = [F.col(c).asc() for c in cols]
     # repartitionByRange executes its child twice (range-boundary
     # sampling + the shuffle).  An input persist was TRIED in the r15
@@ -2533,8 +2499,7 @@ def dense_rank_distributed(
     # (measured on the sf0.1 suffix corpus: 265k of 1.48M rows
     # survive, silently).  It also removes the r11 iterative-op
     # lineage doubling for callers like suffix_ranks.
-    local = d.withColumn("__lr", F.dense_rank().over(w)).persist()
-    _PERSISTED.append(local)
+    local = pin(d.withColumn("__lr", F.dense_rank().over(w)))
     counts = local.groupBy("__pid").agg(F.max("__lr").alias("__n"))
     woff = (
         Window.orderBy("__pid")
@@ -2628,33 +2593,25 @@ def suffix_ranks(
         raise ValueError(f"k must be a power of two >= 1, got {k}")
     w0 = min(k, _SEED_W)
     pref = _suffix_prefixes(df, id_col, text_col, w0)
-    from xesmf_spark.apply import _PERSISTED
-
     # truncate lineage per round (the longest_repeats discipline, on
     # the heap): un-truncated, the doubling plan nests once per round
     # and the FINAL plan carried ~2,600 Exchange nodes at k=16
     # (plans/r15/documents_suffix_ranks_before.txt) — the driver spent
     # a visible share of the query optimizing, not executing (guide
-    # §7.3).  Each round's persists are drained once its checkpoint
+    # §7.3).  Each round's pins are released once its checkpoint
     # materializes.
-    n_persisted0 = len(_PERSISTED)
-
-    def _drain():
-        while len(_PERSISTED) > n_persisted0:
-            _PERSISTED.pop().unpersist()
-
+    depth = mark()
     s = dense_rank_distributed(pref, ["__p"], "r").select("id", "pos", "r")
     if k <= w0:
         # the seed IS the answer — one dense rank, no doubling, no
         # checkpoint (single-consumer plan; the dense-rank-internal
-        # persist stays registered for release_persisted(), the
-        # standard non-iterative contract)
+        # pin stays registered, the standard non-iterative contract)
         return s.select(
             F.col("id"), F.col("pos").cast("long").alias("pos"),
             F.col("r").alias("rank"),
         )
     s = s.localCheckpoint(eager=True)
-    _drain()
+    release_since(depth)
     w_doc = Window.partitionBy("id").orderBy("pos")
     t = w0
     while t < k:
@@ -2672,7 +2629,7 @@ def suffix_ranks(
             .select("id", "pos", "r")
             .localCheckpoint(eager=True)
         )
-        _drain()
+        release_since(depth)
         t *= 2
     return s.select(
         F.col("id"), F.col("pos").cast("long").alias("pos"),
@@ -2724,8 +2681,6 @@ def longest_repeats(
     under /tmp after one round of local testing.  The cleanup assumes
     no CONCURRENT reliable-checkpoint user in the same SparkContext
     (true for this library: longest_repeats is the only one)."""
-    from xesmf_spark.apply import _PERSISTED
-
     nonempty = df.filter(
         F.col(text_col).isNotNull() & (F.length(text_col) > 0)
     )
@@ -2765,14 +2720,9 @@ def longest_repeats(
     # .checkpoint() is EAGER, so the dense-rank helper's internal
     # persist (correctness-load-bearing during ITS execution — see
     # dense_rank_distributed) is dead the moment the checkpoint
-    # returns; drain it per round instead of pinning ~35 frames until
-    # session cleanup
-    n_persisted0 = len(_PERSISTED)
-
-    def _drain_persisted():
-        while len(_PERSISTED) > n_persisted0:
-            _PERSISTED.pop().unpersist()
-
+    # returns; release it per round instead of pinning ~35 frames
+    # until session cleanup
+    depth = mark()
     # the seed frame CARRIES __p: the LCP walk's final sub-16 residue
     # is resolved by a direct common-prefix-length expression over
     # these strings (two survivor-sized joins) instead of building and
@@ -2785,7 +2735,7 @@ def longest_repeats(
         .select("id", "pos", "r", "__p")
         .checkpoint()
     )
-    _drain_persisted()
+    release_since(depth)
     seed_frame = s
     # Manber-Myers EARLY TERMINATION: once every suffix has a distinct
     # rank (max dense rank == #suffixes), further doubling rounds are
@@ -2822,7 +2772,7 @@ def longest_repeats(
             .select("id", "pos", "r")
             .checkpoint()
         )
-        _drain_persisted()
+        release_since(depth)
         k *= 2
         stack.append((k, s))
         mx = _max_rank(s)
@@ -2855,7 +2805,7 @@ def longest_repeats(
         ordered = s.select("id", "pos", F.col("r").alias("rn"))
     else:
         ordered = dense_rank_distributed(s, ["r", "id", "pos"], "rn").checkpoint()
-        _drain_persisted()
+        release_since(depth)
     a = ordered.select(
         F.col("rn"), F.col("id").alias("a_id"), F.col("pos").alias("a_pos")
     )
@@ -3013,7 +2963,7 @@ def longest_repeats(
     rows = ranked.collect()
     schema = ranked.schema
     lens.unpersist()
-    _drain_persisted()
+    release_since(depth)
     try:
         ckpt_dir = sc.getCheckpointDir()
         # delete only when the op owns the directory (it set the

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from xesmf_spark.materialize import pin
 from xesmf_spark.pipeline import tokens
 
 M = 1_000_000
@@ -334,20 +335,16 @@ def query_likelihood_topk(
     the corpus total T — no second tokenize), the |q|-row term table
     broadcast onto the doc-length table (docs × |q| scored rows), one
     doc-keyed agg."""
-    from xesmf_spark.apply import _PERSISTED
-
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     if mu < 1:
         raise ValueError(f"mu must be >= 1, got {mu}")
     terms = sorted(set(query_terms))
     lens = doc_lengths(docs, id_col, text_col)
-    tok = (
+    tok = pin(
         docs.select(id_col, F.explode(tokens(F.col(text_col))).alias("term"))
         .filter(F.col("term").isin(terms))
-        .persist()
     )
-    _PERSISTED.append(tok)
     tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     # corpus totals: T = sum of per-doc lengths — the lens projection
     # already tokenized every doc, no second corpus pass

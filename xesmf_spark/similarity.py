@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xesmf_spark.materialize import pin
+
 ROUND_ORD = 6  #: cosine rounding used in ordering + output
 
 
@@ -642,9 +644,9 @@ def ivf_topk(
         )
     else:
         # one assignment pass serves both roles: pool membership is the
-        # rank-1 cell, probes are the top n_probe cells (persisted —
-        # the |vecs| x |centroids| window runs once)
-        assign = assign.persist()
+        # rank-1 cell, probes are the top n_probe cells (pinned — the
+        # |vecs| x |centroids| window runs once)
+        assign = pin(assign)
         pool = assign.filter(F.col("crank") == 1).select(
             F.col("cell"), F.col("id").alias("pid"), F.col("v").alias("pv"), F.col("nrm").alias("pnrm")
         )
@@ -1424,12 +1426,9 @@ def ivf_topk_filtered(
     Fold-path scoring (per-pair Column arithmetic, bit-identical to
     the oracle); the gemm path of :func:`ivf_topk` applies the same
     pool mask inside its per-cell matmul at scale."""
-    from xesmf_spark.apply import _PERSISTED
-
-    assign = ivf_assignments(
+    assign = pin(ivf_assignments(
         df, n_centroids, id_col, vec_col, n_probe=n_probe, strategy="fold"
-    ).persist()
-    _PERSISTED.append(assign)  # releasable via release_persisted()
+    ))
     pool = assign.filter((F.col("crank") == 1) & pool_pred).select(
         F.col("cell"),
         F.col("id").alias("pid"),

@@ -248,7 +248,6 @@ def smm_apply_files(
     n_out: int,
     extra_cols: Sequence[str] = ("time", "lev"),
     value_col: str = "values",
-    tasks: int | None = None,
     part_naming: str = "unique",
     sink: str = "parquet",
 ) -> DataFrame | None:
@@ -298,8 +297,7 @@ def smm_apply_files(
         [in_schema.field(e) for e in extra_cols]
         + [pa.field(value_col, pa.list_(pa.float64()))]
     )
-    if tasks is None:
-        tasks = min(len(splits), spark.sparkContext.defaultParallelism)
+    tasks = min(len(splits), spark.sparkContext.defaultParallelism)
     os.makedirs(output_path, exist_ok=True)
     run_id = uuid.uuid4().hex[:8]
 
