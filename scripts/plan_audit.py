@@ -33,17 +33,17 @@ SKIP = {"stream_hourly", "stream_sliding", "stream_sessionize", "stream_dedup", 
 #: red flags that are deliberate & bounded where they appear.
 #: BroadcastNestedLoopJoin is allowlisted ONLY where its broadcast side
 #: is a bounded relation by construction — never a data-volume table:
-#:   - regrid_* weight builds: the non-equi interval/bracket joins run
-#:     on AXIS tables (<= 10^3 rows; SURVEY.md §4 — at scale the
-#:     builders bucketize these into equi-joins, which is exactly what
-#:     the bucketed nearest/clip/curvilinear paths do)
+#:   - regrid_* weight builds: the rectilinear builders' tensor
+#:     product is a cross join against the broadcast per-axis weight
+#:     table (O(n_x) rows, computed on the driver from the grid's
+#:     axes); the nearest builders' broadcast path crosses the two
+#:     point sets, the smaller one broadcast (below BROADCAST_LIMIT)
 #:   - events_user_setops: a 1-row min(ts) scalar broadcast
 #:   - knn_top3: the 1-row exactness-bound scalar in the rescue path
 _REGRID_AXIS_BNLJ = {
     "regrid_conservative",
     "regrid_bilinear_periodic", "regrid_bilinear_noperiodic",
-    "regrid_patch", "regrid_nearest_s2d",
-    "regrid_nearest_d2s", "regrid_bilinear_locstream",
+    "regrid_patch", "regrid_nearest_s2d", "regrid_nearest_d2s",
     "regrid_dataset_multivar", "regrid_conservative_4d",
 }
 ALLOW = {

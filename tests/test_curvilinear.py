@@ -531,9 +531,7 @@ def test_curvilinear_grid_has_no_axes(spark):
     for 1-D axes is an error, not a table built from its cells."""
     dst = _sheared_dst(spark, corners=False)
     with pytest.raises(ValueError, match="curvilinear"):
-        dst.get_lon_axis()
-    with pytest.raises(ValueError, match="curvilinear"):
-        dst.get_lat_axis()
+        dst.axes
 
 
 def test_bilinear_onto_curvilinear_ignores_corners(spark):
@@ -563,3 +561,29 @@ def test_patch_onto_curvilinear_quadratic_exact(spark, corners):
     assert len(out) == dst.n_cells
     err = max(abs(r.value - _sheared_quadratic(r.lon, r.lat)) for r in out)
     assert err < 1e-9, err
+
+
+def test_patch_onto_curvilinear_across_seam_and_poles(spark):
+    """Patch from a periodic rectilinear source onto a mesh that crosses
+    the 180° seam and reaches ±89° maps every cell (wrapped brackets and
+    virtual-pole rows, as bilinear), and reproduces a quadratic field
+    wherever no stencil wraps and no cell lies poleward of the source."""
+    import numpy as np
+
+    from xesmf_spark.weights import patch_weights
+
+    src = grid_global(spark, 20, 12, periodic=True)
+    X, Y = np.meshgrid(np.linspace(120.0, 240.0, 9), np.linspace(-89.0, 89.0, 6))
+    dst = grid_from_2d_arrays(spark, X + 0.1 * Y, Y)
+    w = patch_weights(src, dst).toPandas()
+    assert w["row"].nunique() == dst.n_cells == 54
+
+    src_lon, src_lat = np.meshgrid(*(a.c for a in src.axes))
+    field = _sheared_quadratic(src_lon.ravel(), src_lat.ravel())
+    got = np.bincount(w["row"], weights=w["S"] * field[w["col"]], minlength=54)
+    lon = (dst.geometry.lon.ravel() + 180.0) % 360.0 - 180.0
+    lat = dst.geometry.lat.ravel()
+    inner = (np.abs(lon) < 140.0) & (np.abs(lat) < 80.0)
+    assert inner.sum() >= 12
+    err = np.abs(got - _sheared_quadratic(lon, lat))[inner]
+    assert err.max() < 1e-9, err.max()

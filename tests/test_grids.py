@@ -160,12 +160,13 @@ def test_geometry_digest_tells_same_shape_grids_apart(spark):
     assert grid_global(spark, 20, 12).facts.digest == grid_global(spark, 20, 12).facts.digest
 
 
-def test_axis_tables_are_lazy_and_match_grid_1d(spark):
+def test_axes_are_lazy_and_match_grid_1d(spark):
     from xesmf_spark.grids import grid_1d, grid_2d
 
     g = grid_2d(spark, -30.0, 30.0, 10.0, -20.0, 20.0, 5.0)
-    assert "_axes" not in g.__dict__
-    lon = sorted(map(tuple, g.get_lon_axis().collect()))
-    assert g.get_lon_axis() is g.get_lon_axis()
-    assert lon == sorted(map(tuple, grid_1d(spark, -30.0, 30.0, 10.0, "i")[0].collect()))
-    assert g.get_lat_axis().count() == g.n_y
+    assert "axes" not in g.__dict__
+    lon, lat = g.axes
+    assert g.axes is g.axes
+    want = sorted(map(tuple, grid_1d(spark, -30.0, 30.0, 10.0, "i")[0].collect()))
+    assert [(k, lon.lo[k], lon.hi[k], lon.c[k]) for k in range(g.n_x)] == want
+    assert lat.c.shape == lat.lo.shape == lat.hi.shape == (g.n_y,)

@@ -9,6 +9,7 @@ reference's tolerance thresholds remain valid (SURVEY.md §5, §7):
 - nearest to locstream: one source per location, S=1.0 (:209-246)
 """
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -591,3 +592,64 @@ def test_prepare_with_auto_shuffle_partitions(spark, g_in, g_out, monkeypatch, t
         assert rg(_field(g_in)).count() == g_out.n_cells
     finally:
         rg.finalize()
+
+
+def _sorted_triplets(w):
+    pdf = w.select("row", "col", "S").toPandas()
+    row, col, s = (pdf[c].to_numpy() for c in ("row", "col", "S"))
+    order = np.lexsort((s, col, row))
+    return row[order], col[order], s[order]
+
+
+def _separable_builds(g_in, g_out):
+    from xesmf_spark.weights import bilinear_weights, patch_weights
+
+    return {
+        "bilinear_periodic": lambda: bilinear_weights(g_in, g_out, periodic=True),
+        "bilinear_noperiodic": lambda: bilinear_weights(g_in, g_out, periodic=False),
+        "patch_periodic": lambda: patch_weights(g_in, g_out, periodic=True),
+        "patch_noperiodic": lambda: patch_weights(g_in, g_out, periodic=False),
+        "conservative": lambda: conservative_weights(g_in, g_out),
+    }
+
+
+def test_separable_builds_run_no_job(spark, g_in, g_out, jobs_in):
+    """Between constructor-built grids the 1-D stage is driver numpy:
+    building the weights (not running them) launches no Spark job, also
+    onto point destinations."""
+    from xesmf_spark.weights import bilinear_weights
+
+    pts = locstream(spark, [-170.0, 0.0, 175.0], [-88.0, 0.0, 89.0])
+    builds = dict(_separable_builds(g_in, g_out), points=lambda: bilinear_weights(g_in, pts, True))
+    for name, build in builds.items():
+        w, jobs = jobs_in(build)
+        assert jobs == 0, name
+        assert w.count() > 0, name
+
+
+def test_hand_built_grid_gives_identical_triplets(spark, g_in, g_out):
+    """A Grid built by hand around a constructor's cell table collects
+    its axes from the cells; the weights are bit-identical."""
+    from xesmf_spark.grids import Grid
+
+    def by_hand(g):
+        return Grid(df=g.df, shape=g.shape, periodic=g.periodic)
+
+    built = _separable_builds(g_in, g_out)
+    hand = _separable_builds(by_hand(g_in), by_hand(g_out))
+    for name in built:
+        a, b = _sorted_triplets(built[name]()), _sorted_triplets(hand[name]())
+        assert len(a[0]) > 0, name
+        assert all(np.array_equal(x, y) for x, y in zip(a, b)), name
+
+
+def test_bucketed_nearest_pin_is_released(spark, g_in, g_out):
+    """The bucketed nearest build pins its trust-checked frame through
+    the registry, so release_persisted() leaves no cached frame."""
+    from xesmf_spark import release_persisted
+    from xesmf_spark.weights import nearest_weights
+
+    spark.catalog.clearCache()
+    nearest_weights(g_in, g_out, direction="s2d", strategy="bucketed").collect()
+    release_persisted()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

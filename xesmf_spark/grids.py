@@ -25,9 +25,10 @@ Scale note: ``grid_2d`` cells are generated with ``spark.range``
 (distributed, no driver-side materialization), so an n_y x n_x grid of
 any size never touches the driver. What the driver does hold is the
 grid's :class:`Geometry` — the 1-D axes of a rectilinear grid, or the
-arrays a curvilinear mesh or point list was built from — and the facts
-a Regridder construction checks (latitude range, degenerate cells, the
-weight-cache digest) are computed from it with numpy, launching no
+arrays a curvilinear mesh or point list was built from. The facts a
+Regridder construction checks (latitude range, degenerate cells, the
+weight-cache digest) and the 1-D axes the rectilinear weight builders
+work on (:attr:`Grid.axes`) are read from it with numpy, launching no
 Spark job.
 """
 
@@ -36,7 +37,6 @@ from __future__ import annotations
 import hashlib
 import math
 import warnings
-from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
 from functools import cached_property
 from typing import NamedTuple
@@ -108,7 +108,8 @@ class Geometry:
     - curvilinear meshes and point lists keep (n_y, n_x) ``lon``/``lat``
       center fields and (n_y+1, n_x+1) corner-node arrays.
 
-    ``lon_b``/``lat_b`` are None for a grid without bounds.
+    ``lon_b``/``lat_b`` are None for a grid without bounds. The weight
+    builders get a rectilinear record's axes through :attr:`Grid.axes`.
     """
 
     lon: np.ndarray
@@ -172,6 +173,21 @@ class CellFacts(NamedTuple):
     digest: str
 
 
+class Axis(NamedTuple):
+    """One separable axis of a rectilinear grid, indexed by ``i`` (lon)
+    or ``j`` (lat): centers ``c`` and cell bounds ``lo``/``hi``, in
+    degrees; ``lo``/``hi`` are None for a grid without bounds."""
+
+    c: np.ndarray
+    lo: np.ndarray | None
+    hi: np.ndarray | None
+
+    @classmethod
+    def of(cls, c: np.ndarray, b: np.ndarray | None) -> "Axis":
+        """The axis of centers ``c`` and n+1 bounds ``b`` (or None)."""
+        return cls(c, None, None) if b is None else cls(c, b[:-1], b[1:])
+
+
 @dataclass
 class Grid:
     """A 2-D quadrilateral mesh as a cell DataFrame + shape metadata.
@@ -187,7 +203,7 @@ class Grid:
     periodic: bool = False
     has_bounds: bool = True
     #: True when lon/lat are full 2-D fields (no separable axes);
-    #: :meth:`get_lon_axis` / :meth:`get_lat_axis` then raise
+    #: :attr:`axes` then raises
     curvilinear: bool = False
     #: horizontal dimension names, (y-like, x-like) — the analogue of
     #: the xarray dims the reference renames outputs to
@@ -197,12 +213,6 @@ class Grid:
     #: driver-side geometry the constructors keep; None for a Grid built
     #: by hand around a cell DataFrame
     geometry: Geometry | None = dc_field(default=None, repr=False)
-    #: builds the tiny 1-D ``(lon, lat)`` axis tables of a rectilinear
-    #: grid; called once, on the first :meth:`get_lon_axis` /
-    #: :meth:`get_lat_axis`. None derives them from the cells.
-    axis_tables: Callable[[], tuple[DataFrame, DataFrame]] | None = dc_field(
-        default=None, repr=False
-    )
 
     @property
     def n_cells(self) -> int:
@@ -227,37 +237,21 @@ class Grid:
         return _cell_table_facts(self)
 
     @cached_property
-    def _axes(self) -> tuple[DataFrame, DataFrame]:
+    def axes(self) -> tuple[Axis, Axis]:
+        """The separable ``(lon, lat)`` :class:`Axis` pair of a
+        rectilinear grid, in numpy. Read from :attr:`geometry`; a
+        hand-built Grid pays ONE collect of its distinct axis rows.
+        Either way, once per Grid. Raises ValueError on a curvilinear
+        grid."""
         if self.curvilinear:
             raise ValueError(
                 "a curvilinear grid has no separable 1-D lon/lat axes; "
                 "its weights come from the mesh builders"
             )
-        if self.axis_tables is not None:
-            return self.axis_tables()
-        lon = self.df.select(
-            F.col("i"),
-            F.col("lon_lo").alias("lo"),
-            F.col("lon_hi").alias("hi"),
-            F.col("lon").alias("c"),
-        ).distinct()
-        lat = self.df.select(
-            F.col("j"),
-            F.col("lat_lo").alias("lo"),
-            F.col("lat_hi").alias("hi"),
-            F.col("lat").alias("c"),
-        ).distinct()
-        return lon, lat
-
-    def get_lon_axis(self) -> DataFrame:
-        """1-D lon axis (i, lo, hi, c). Raises ValueError on a
-        curvilinear grid."""
-        return self._axes[0]
-
-    def get_lat_axis(self) -> DataFrame:
-        """1-D lat axis (j, lo, hi, c). Raises ValueError on a
-        curvilinear grid."""
-        return self._axes[1]
+        g = self.geometry
+        if g is None or not g.rectilinear:
+            return _cell_table_axes(self)
+        return Axis.of(g.lon, g.lon_b), Axis.of(g.lat, g.lat_b)
 
 
 def grid_2d(
@@ -310,10 +304,6 @@ def grid_2d(
         periodic=periodic,
         has_bounds=True,
         geometry=Geometry(_frozen(lon), _frozen(lat), _frozen(lon_b), _frozen(lat_b)),
-        axis_tables=lambda: (
-            grid_1d(spark, lon0_b, lon1_b, d_lon, "i")[0],
-            grid_1d(spark, lat0_b, lat1_b, d_lat, "j")[0],
-        ),
     )
 
 
@@ -402,7 +392,6 @@ def grid_from_arrays(
             _frozen(lon_b) if has_bounds else None,
             _frozen(lat_b) if has_bounds else None,
         ),
-        axis_tables=lambda: (lon_ax, lat_ax),
     )
 
 
@@ -565,6 +554,26 @@ def _cell_table_facts(grid: Grid) -> CellFacts:
     ).first()
     raw = f"cells|{grid.shape}|{digest}"
     return CellFacts(n_bad > 0, n_deg, hashlib.md5(raw.encode()).hexdigest()[:8])
+
+
+def _cell_table_axes(grid: Grid) -> tuple[Axis, Axis]:
+    """:attr:`Grid.axes` of a Grid without driver-side geometry, from
+    ONE collect of the distinct ``(axis, index, lo, hi, center)`` rows
+    of its cell table."""
+    rows = (
+        grid.df.select(F.lit(0), "i", "lon_lo", "lon_hi", "lon")
+        .union(grid.df.select(F.lit(1), "j", "lat_lo", "lat_hi", "lat"))
+        .distinct()
+        .collect()
+    )
+    axes = []
+    for a, n in enumerate((grid.n_x, grid.n_y)):
+        c, lo, hi = np.full((3, n), np.nan)
+        for axis, k, lo_k, hi_k, c_k in rows:
+            if axis == a:
+                lo[k], hi[k], c[k] = lo_k, hi_k, c_k  # None (no bounds) -> NaN
+        axes.append(Axis(c, lo, hi) if grid.has_bounds else Axis(c, None, None))
+    return axes[0], axes[1]
 
 
 def count_degenerate_cells(grid: Grid) -> int:

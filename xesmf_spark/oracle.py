@@ -88,7 +88,9 @@ w AS (
 
 def bilinear_weights_ctes(src: GridSpec, dst: GridSpec, periodic: bool) -> str:
     """CTE `w(row, col, S)` — mirrors weights/bilinear.py (incl. the
-    ±360 wrap-union and the ALLAVG virtual-pole rows when periodic)."""
+    ±360 periodic extension and the ALLAVG virtual-pole rows when
+    periodic). The library brackets with numpy ``searchsorted``; the
+    SQL re-derives the same brackets as a range join."""
     if periodic:
         lon_ext = (
             "SELECT i AS k, c FROM src_lon "
@@ -132,7 +134,8 @@ w AS (
   SELECT dj * {dst.n_x} + di AS row, sj * {src.n_x} + si AS col, w_lat * w_lon AS S
   FROM lat_w CROSS JOIN lon_w WHERE w_lat * w_lon > 0.0
 )"""
-    # periodic: add ALLAVG pole rows (weights/bilinear.py::_pole_brackets)
+    # periodic: add ALLAVG pole rows (the numpy
+    # weights/bilinear.py::_pole_brackets as SQL)
     return interior + f""",
 lat_ext AS (
   SELECT MAX(c) AS c_top, MIN(c) AS c_bot, ARG_MAX(j, c) AS k_top, ARG_MIN(j, c) AS k_bot FROM src_lat
@@ -173,7 +176,8 @@ w AS (
 
 
 def _axis_patch_ctes(prefix: str, axis: str, idx: str, dst_idx: str, periodic: bool) -> str:
-    """Per-axis patch-weight CTEs mirroring weights/patch.py::_axis_patch:
+    """Per-axis patch-weight CTEs re-deriving in SQL what the numpy
+    weights/patch.py::_axis_patch computes on the driver:
     3-point corner stencils (edge-shifted) + bracketing + Lagrange
     quadratic evaluation + corner blend, summed per source index.
     Emits ``{prefix}_w({dst_idx}, s{idx}, w_{prefix})``."""
@@ -373,9 +377,9 @@ FROM dst_cells d LEFT JOIN agg a ON d.cell_id = a.row
 
 def bilinear_locstream_oracle_sql(n_pts: int = 49, src: GridSpec = G_IN) -> str:
     """Oracle for bilinear -> POINT destination (locstream): per-point
-    lon/lat brackets joined on the point id — mirrors
-    weights/bilinear.py::_bilinear_points (incl. periodic wrap + ALLAVG
-    virtual-pole rows). Point set is a deterministic arithmetic
+    lon/lat brackets joined on the point id — mirrors the per-point
+    path of weights/bilinear.py (``_point_weights``, incl. periodic wrap
+    + ALLAVG virtual-pole rows). Point set is a deterministic arithmetic
     sequence so both engines compute bit-identical coordinates."""
     dlat = repr(176.0 / 48.0)
     return f"""

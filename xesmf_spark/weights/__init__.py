@@ -1,25 +1,29 @@
 """Weight-builder queries — the Spark-native replacement for
 ``esmf_regrid_build`` (xesmf/backend.py:191-282, which runs in ESMF
-Fortran). Each builder is a pure DataFrame query producing COO triplets
+Fortran). Each builder returns a lazy DataFrame of COO triplets
 ``(row BIGINT, col BIGINT, S DOUBLE)`` (FIXTURES.md §1.4).
 
 Methods (xesmf/backend.py:241-246):
-- ``conservative``  → interval-overlap join  (conservative.py)
-- ``bilinear``      → bracketing range join  (bilinear.py)
+- ``conservative``  → interval overlaps per axis  (conservative.py)
+- ``bilinear``      → 1-D brackets per axis        (bilinear.py)
 - ``nearest_s2d`` / ``nearest_d2s`` → argmin hash aggregate over a
   broadcast or bin equi-join (nearest.py)
 - ``patch``         → Lagrange patch-recovery tensor build (patch.py)
 
-Separable axes are the grid's call: ``Grid.get_lon_axis()`` /
-``get_lat_axis()`` raise on a curvilinear mesh, so the builders check
-``Grid.curvilinear`` before asking for them:
+A rectilinear source has separable axes (``Grid.axes``, numpy read
+from the grid's driver-side geometry; it raises on a curvilinear
+mesh, so the builders check ``Grid.curvilinear`` first). Its 1-D
+weights are computed on the driver in numpy; one Spark stage — a
+broadcast cross join of the per-axis tables, or a ``mapInPandas``
+over point destinations — emits the O(nnz) triplets. Otherwise:
 - conservative: a curvilinear mesh on either side → polygon clipping
   (conservative_clip.py);
 - bilinear: a curvilinear source → point-in-quad search
   (curvilinear.py); a curvilinear or locstream destination →
   per-point brackets (bilinear.py);
-- patch: a curvilinear mesh on either side → least-squares patches
-  over the located quad (patch_curvilinear.py).
+- patch: a curvilinear source → least-squares patches over the
+  located quad (patch_curvilinear.py); a curvilinear destination →
+  per-point patch weights (patch.py).
 """
 
 from xesmf_spark.weights.conservative import conservative_weights

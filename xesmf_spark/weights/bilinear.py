@@ -3,13 +3,11 @@
 Reference: ``method='bilinear'`` (xesmf/backend.py:241). For rectilinear
 grids the interpolation separates per axis: bracket each destination
 coordinate between the two nearest source centers, 1-D linear weights,
-tensor product of the two axes → ≤4 nnz per destination cell. A
-destination without separable axes (a locstream, or a curvilinear
-mesh's centers) gets per-point brackets instead. patch.py builds on the
-same bracket join, pole rows and tensor-product combine.
+tensor product of the two axes → ≤4 nnz per destination cell. patch.py
+builds on the same brackets, pole rows and combine.
 
-Periodic longitude (xesmf/backend.py:92-95): the source lon axis is
-UNIONed with ±360°-shifted copies before the bracketing join, so
+Periodic longitude (xesmf/backend.py:92-95): the source lon centers are
+extended with their ±360°-shifted copies before bracketing, so
 destination cells past the last source column wrap around. Without it
 they get no weights → 0 on apply (unmapped_action=IGNORE,
 tests/test_frontend.py:116-127 asserts max rel err == exactly 1.0).
@@ -20,150 +18,202 @@ source-center row interpolate between that row and a virtual pole point
 whose value is the MEAN of the whole row. Encoded here as extra weight
 triplets ``S = w_pole / n_x`` spread over every cell of the adjacent row.
 
-Spark plan: all joins involve only the tiny 1-D axis tables (O(n_x+n_y)
-rows), broadcast; the O(nnz) triplet output is produced by one cross
-combine. Nothing here scales with n_cells^2.
+Two stages. The 1-D stage runs on the driver in numpy over the grids'
+axis arrays (``Grid.axes``, O(n_x + n_y) numbers even for a 100k x
+100k-cell grid): a ``searchsorted`` bracket per destination coordinate
+and its weights, one ``(idx_dst, k, w)`` table per axis. The product
+stage is Spark: each axis table enters through one ``createDataFrame``
+and one broadcast cross join emits the O(nnz) triplets; the ALLAVG
+pole rows, when numpy finds any, are one explode unioned onto it.
+Point destinations (a locstream, or a curvilinear mesh's
+centers) have no separable axes; one ``mapInPandas`` over their cells
+runs the same 1-D functions per point. No Spark job runs before the
+caller's first action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xesmf_spark.grids import Grid
 
+_OUT_SCHEMA = "row long, col long, S double"
 
-def _source_axis(src_ax: DataFrame, periodic: bool) -> DataFrame:
-    """Source axis as ``(k, c)``, UNIONed with its ±360°-shifted copies
-    when ``periodic`` so destination centers past either end wrap."""
-    s = src_ax.select(F.col(src_ax.columns[0]).alias("k"), F.col("c"))
+
+def _extended(c: np.ndarray, periodic: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Source axis as ``(k, c)`` sorted by coordinate, extended with its
+    ±360°-shifted copies when ``periodic`` so destination centers past
+    either end wrap."""
+    k = np.arange(c.size)
     if periodic:
-        s = (
-            s.unionByName(s.select("k", (F.col("c") - 360.0).alias("c")))
-            .unionByName(s.select("k", (F.col("c") + 360.0).alias("c")))
-        )
-    return s
+        k, c = np.concatenate([k, k, k]), np.concatenate([c, c - 360.0, c + 360.0])
+    order = np.argsort(c, kind="stable")
+    return k[order], c[order]
 
 
-def _brackets(s: DataFrame, dst_ax: DataFrame, idx_dst: str) -> DataFrame:
-    """Bracketing range join of dest centers into adjacent-source-center
-    intervals of ``s`` (:func:`_source_axis`). Returns ``(idx_dst, x,
-    k_lo, c_lo, k_hi, c_hi)``, one row per bracketed dest element."""
-    # adjacent center pairs, ordered by coordinate — axis tables are tiny
-    # (O(n) rows), so a single-partition window is fine here.
-    win = Window.orderBy("c")
-    pairs = s.select(
-        F.col("k").alias("k_lo"),
-        F.col("c").alias("c_lo"),
-        F.lead("k").over(win).alias("k_hi"),
-        F.lead("c").over(win).alias("c_hi"),
-    ).filter(F.col("k_hi").isNotNull())
-
-    d = dst_ax.select(F.col(dst_ax.columns[0]).alias(idx_dst), F.col("c").alias("x"))
-    br = d.join(
-        F.broadcast(pairs),
-        (F.col("x") >= F.col("c_lo")) & (F.col("x") <= F.col("c_hi")),
-        "inner",
-    )
-    # a dest center equal to an interior src center matches two brackets;
-    # keep one deterministically (equivalent weights either way)
-    return (
-        br.withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy(idx_dst).orderBy(F.col("c_lo"))),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def _bracket(c: np.ndarray, x: np.ndarray):
+    """Brackets ``c[p] <= x <= c[p + 1]`` of destination coordinates
+    ``x`` over sorted centers ``c``. Returns ``(d, p, w_hi)`` for the
+    bracketed ones: their positions in ``x``, the lower bracket end and
+    the linear weight of the upper one. A coordinate equal to an
+    interior center takes the lower bracket (equivalent weights either
+    way)."""
+    ok = (x >= c[0]) & (x <= c[-1]) & (c.size > 1)
+    d = np.flatnonzero(ok)
+    p = np.clip(np.searchsorted(c, x[d], side="left") - 1, 0, None)
+    return d, p, (x[d] - c[p]) / (c[p + 1] - c[p])
 
 
-def _axis_bracket(
-    src_ax: DataFrame, dst_ax: DataFrame, idx_dst: str, periodic: bool = False
-) -> DataFrame:
-    """1-D linear weights of each bracketed dest element. Returns
-    ``(idx_dst, k, w)``: source index + linear weight (two rows per
-    bracketed dest element; zero-weight rows dropped).
-    """
-    br = _brackets(_source_axis(src_ax, periodic), dst_ax, idx_dst)
-    w_hi = (F.col("x") - F.col("c_lo")) / (F.col("c_hi") - F.col("c_lo"))
-    out = br.select(idx_dst, F.col("k_lo").alias("k"), (F.lit(1.0) - w_hi).alias("w")).unionByName(
-        br.select(idx_dst, F.col("k_hi").alias("k"), w_hi.alias("w"))
-    )
-    return out.filter(F.col("w") > 0.0)
+def _axis_bracket(c_src: np.ndarray, x: np.ndarray, periodic: bool):
+    """1-D linear weights of each bracketed destination coordinate.
+    Returns ``(d, k, w)``: position in ``x``, source index and weight
+    (two per bracketed coordinate; zero weights dropped)."""
+    k, c = _extended(c_src, periodic)
+    d, p, w_hi = _bracket(c, x)
+    w = np.concatenate([1.0 - w_hi, w_hi])
+    return _where(w > 0.0, np.concatenate([d, d]), np.concatenate([k[p], k[p + 1]]), w)
 
 
-def _pole_brackets(
-    src_lat_ax: DataFrame, dst_lat_ax: DataFrame, n_y: int, idx_dst: str = "dj"
-) -> DataFrame:
-    """Lat brackets for dest centers poleward of the outermost src-center
-    rows, against virtual poles at ±90. Virtual index: -1 = south pole,
-    ``n_y`` = north pole. Returns (idx_dst, k, w) like ``_axis_bracket``.
-    """
-    s = _source_axis(src_lat_ax, periodic=False)
-    # outermost rows (tiny table -> min/max via agg, broadcast)
-    ext = s.agg(
-        F.min_by("k", "c").alias("k_bot"),
-        F.min("c").alias("c_bot"),
-        F.max_by("k", "c").alias("k_top"),
-        F.max("c").alias("c_top"),
-    )
-    d = dst_lat_ax.select(F.col(dst_lat_ax.columns[0]).alias(idx_dst), F.col("c").alias("x"))
-    d = d.crossJoin(F.broadcast(ext))
-
-    north = d.filter(F.col("x") > F.col("c_top"))
-    w_pole_n = (F.col("x") - F.col("c_top")) / (F.lit(90.0) - F.col("c_top"))
-    north_rows = north.select(idx_dst, F.col("k_top").alias("k"), (F.lit(1.0) - w_pole_n).alias("w")).unionByName(
-        north.select(idx_dst, F.lit(n_y).alias("k"), w_pole_n.alias("w"))
-    )
-
-    south = d.filter(F.col("x") < F.col("c_bot"))
-    w_pole_s = (F.col("c_bot") - F.col("x")) / (F.col("c_bot") - F.lit(-90.0))
-    south_rows = south.select(idx_dst, F.col("k_bot").alias("k"), (F.lit(1.0) - w_pole_s).alias("w")).unionByName(
-        south.select(idx_dst, F.lit(-1).cast("bigint").alias("k"), w_pole_s.alias("w"))
-    )
-    return north_rows.unionByName(south_rows).filter(F.col("w") > 0.0)
+def _pole_brackets(c_src: np.ndarray, x: np.ndarray):
+    """Lat brackets of destination coordinates poleward of the outermost
+    source-center rows, against virtual poles at ±90. Virtual index: -1
+    = south pole, ``c_src.size`` = north pole. Returns ``(d, k, w)``
+    like :func:`_axis_bracket`."""
+    top, bot = int(np.argmax(c_src)), int(np.argmin(c_src))
+    c_top, c_bot = c_src[top], c_src[bot]
+    n, s = np.flatnonzero(x > c_top), np.flatnonzero(x < c_bot)
+    w_n = (x[n] - c_top) / (90.0 - c_top)
+    w_s = (c_bot - x[s]) / (c_bot - (-90.0))
+    k = np.repeat([top, c_src.size, bot, -1], [n.size, n.size, s.size, s.size])
+    w = np.concatenate([1.0 - w_n, w_n, 1.0 - w_s, w_s])
+    return _where(w > 0.0, np.concatenate([n, n, s, s]), k, w)
 
 
-def _renamed(rows: DataFrame, k: str, w: str) -> DataFrame:
-    """Per-axis weights ``(idx_dst, k, w)`` with index and weight renamed."""
-    return rows.withColumnRenamed("k", k).withColumnRenamed("w", w)
+def _where(mask: np.ndarray, *cols: np.ndarray) -> tuple[np.ndarray, ...]:
+    """The rows of the equal-length ``cols`` where ``mask`` holds."""
+    return tuple(c[mask] for c in cols)
 
 
-def _lat_rows(axis_weights, src_lat, dst_lat, idx_dst: str, n_y: int, periodic: bool) -> DataFrame:
-    """``(idx_dst, sj, w_lat)``: ``axis_weights`` (:func:`_axis_bracket`
-    or patch's ``_axis_patch``) on the lat axis, plus — when periodic —
-    the ALLAVG brackets against the virtual poles (:func:`_pole_brackets`)."""
-    lat_br = _renamed(axis_weights(src_lat, dst_lat, idx_dst, periodic=False), "sj", "w_lat")
+def _axis_rows(axis_weights, src_lon, src_lat, x_lon, x_lat, periodic: bool):
+    """``axis_weights`` (:func:`_axis_bracket` or patch's
+    ``_axis_patch``) of the ``x_lon``/``x_lat`` coordinates against the
+    source centers ``src_lon``/``src_lat``: ``(lon, lat)`` tables of
+    ``(d, k, w)``. When periodic the lon axis wraps and the lat table
+    gains the ALLAVG virtual-pole brackets (:func:`_pole_brackets`)."""
+    lon = axis_weights(src_lon, x_lon, periodic)
+    lat = axis_weights(src_lat, x_lat, False)
     if periodic:
-        lat_br = lat_br.unionByName(
-            _renamed(_pole_brackets(src_lat, dst_lat, n_y, idx_dst), "sj", "w_lat")
-        )
-    return lat_br
+        lat = tuple(map(np.concatenate, zip(lat, _pole_brackets(src_lat, x_lat))))
+    return lon, lat
 
 
-def _split_poles(lat_br: DataFrame, n_y_src: int) -> tuple[DataFrame, DataFrame]:
-    """Lat rows on real source rows, and lat rows on the virtual poles
-    (``sj`` = -1 or ``n_y_src``)."""
-    return (
-        lat_br.filter((F.col("sj") >= 0) & (F.col("sj") < n_y_src)),
-        lat_br.filter((F.col("sj") < 0) | (F.col("sj") >= n_y_src)),
+def _separable(axis_weights, src: Grid, dst: Grid, periodic: bool) -> DataFrame:
+    """Weight triplets of a separable method from a rectilinear source:
+    the tensor product of the per-axis ``axis_weights`` onto a
+    rectilinear grid, per-point products onto point destinations."""
+    if dst.curvilinear or not dst.has_bounds:
+        # point destinations (locstream, or a curvilinear mesh's
+        # centers): neither has separable axes (a locstream's points
+        # all share j=0), so each point pairs its own brackets
+        # (frontend.py:178-184 allows bilinear -> locstream)
+        return _point_weights(axis_weights, src, dst, periodic)
+    (src_lon, src_lat), (dst_lon, dst_lat) = src.axes, dst.axes
+    lon, lat = _axis_rows(axis_weights, src_lon.c, src_lat.c, dst_lon.c, dst_lat.c, periodic)
+    real = (lat[1] >= 0) & (lat[1] < src.n_y)
+    out = _tensor_product(src, dst, lon, _where(real, *lat))
+    if not real.all():
+        out = out.unionByName(_pole_rows(src, dst, _where(~real, *lat)))
+    return out
+
+
+def _frame(spark, names: str, cols) -> DataFrame:
+    """One axis table ``(idx_dst, k, w)`` as a local relation."""
+    idx, k, w = names.split()
+    pdf = pd.DataFrame({idx: cols[0].astype(np.int64), k: cols[1].astype(np.int64), w: cols[2]})
+    return spark.createDataFrame(pdf, f"{idx} long, {k} long, {w} double")
+
+
+def _tensor_product(src: Grid, dst: Grid, lon, lat) -> DataFrame:
+    """``S = w_lat * w_lon`` over every pair of a lat row and a lon row
+    of the per-axis ``(d, k, w)`` tables: one broadcast cross join, the
+    only O(nnz) stage of a separable build."""
+    spark = src.df.sparkSession
+    lat_df = _frame(spark, "dj sj w_lat", lat)
+    lon_df = _frame(spark, "di si w_lon", lon)
+    return lat_df.crossJoin(F.broadcast(lon_df)).select(
+        (F.col("dj") * F.lit(dst.n_x) + F.col("di")).alias("row"),
+        (F.col("sj") * F.lit(src.n_x) + F.col("si")).alias("col"),
+        (F.col("w_lat") * F.col("w_lon")).alias("S"),
     )
 
 
-def _pole_rows(pole: DataFrame, src_lon: DataFrame, n_x_src: int, n_y_src: int, row) -> DataFrame:
+def _pole_cols(sj: np.ndarray, n_x: int, n_y: int) -> np.ndarray:
+    """First column of the source row a virtual pole ``sj`` averages."""
+    return np.where(sj < 0, 0, n_y - 1) * n_x
+
+
+def _pole_rows(src: Grid, dst: Grid, pole) -> DataFrame:
     """ALLAVG virtual-pole triplets: the pole value is the MEAN of the
     adjacent source row, lon-independent, so ``S = w_lat / n_x`` is
-    spread over every cell of that row. ``row`` is the destination
-    index expression over ``pole``'s columns."""
-    src_i = src_lon.select(F.col(src_lon.columns[0]).alias("si"))
-    return pole.crossJoin(F.broadcast(src_i)).select(
-        row.alias("row"),
-        (
-            F.when(F.col("sj") < 0, F.lit(0)).otherwise(F.lit(n_y_src - 1)) * F.lit(n_x_src)
-            + F.col("si")
-        ).alias("col"),
-        (F.col("w_lat") / F.lit(float(n_x_src))).alias("S"),
+    spread over every cell of that row, for every destination column."""
+    dj, sj, w = pole
+    n_x = src.n_x
+    pdf = pd.DataFrame({"dj": dj, "c0": _pole_cols(sj, n_x, src.n_y), "S": w / float(n_x)})
+    return (
+        src.df.sparkSession.createDataFrame(pdf, "dj long, c0 long, S double")
+        .select("dj", "c0", "S", _each(dst.n_x).alias("di"))
+        .select((F.col("dj") * F.lit(dst.n_x) + F.col("di")).alias("row"), "c0", "S", _each(n_x).alias("si"))
+        .select("row", (F.col("c0") + F.col("si")).alias("col"), "S")
     )
+
+
+def _each(n: int):
+    """A generator over the indices ``0 .. n-1``: one row per index."""
+    return F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+
+
+def _point_weights(axis_weights, src: Grid, dst: Grid, periodic: bool) -> DataFrame:
+    """Weights onto POINT destinations (a locstream, or the centers of a
+    curvilinear mesh), keyed by cell id (``row = cell_id`` — for a
+    locstream the shape hack (1, n) of xesmf/frontend.py:102 makes
+    cell_id == i). Each point pairs only its own lon and lat weights;
+    one ``mapInPandas`` over the point cells, the source axes shipped
+    with the closure, so the point set is never shuffled or
+    broadcast."""
+    n_x, n_y = src.n_x, src.n_y
+    src_lon, src_lat = (a.c for a in src.axes)
+
+    def kernel(batches):
+        for pdf in batches:
+            pid = pdf["cell_id"].to_numpy()
+            x_lon, x_lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+            lon, lat = _axis_rows(axis_weights, src_lon, src_lat, x_lon, x_lat, periodic)
+            yield _point_products(pid, lon, lat, n_x, n_y)
+
+    return dst.df.select("cell_id", "lon", "lat").mapInPandas(kernel, _OUT_SCHEMA)
+
+
+def _point_products(pid, lon, lat, n_x: int, n_y: int) -> pd.DataFrame:
+    """``(row, col, S)`` of points ``pid``: each point's real lat rows
+    times its own lon rows (the ``(d, k, w)`` tables joined on ``d``),
+    and its pole lat rows spread over the ``n_x`` cells of the averaged
+    source row."""
+    lat = pd.DataFrame(dict(zip(("d", "sj", "w_lat"), lat)))
+    lon = pd.DataFrame(dict(zip(("d", "si", "w_lon"), lon)))
+    real = (lat["sj"] >= 0) & (lat["sj"] < n_y)
+    inner = lat[real].merge(lon, on="d")
+    pole = lat[~real].merge(pd.DataFrame({"si": np.arange(n_x)}), how="cross")
+    return pd.DataFrame({
+        "row": pid[np.concatenate([inner["d"], pole["d"]])],
+        "col": np.concatenate([
+            inner["sj"] * n_x + inner["si"],
+            _pole_cols(pole["sj"].to_numpy(), n_x, n_y) + pole["si"],
+        ]),
+        "S": np.concatenate([inner["w_lat"] * inner["w_lon"], pole["w_lat"] / float(n_x)]),
+    })
 
 
 def bilinear_weights(src: Grid, dst: Grid, periodic: bool | None = None) -> DataFrame:
@@ -179,88 +229,4 @@ def bilinear_weights(src: Grid, dst: Grid, periodic: bool | None = None) -> Data
         from xesmf_spark.weights.curvilinear import bilinear_weights_curvilinear
 
         return bilinear_weights_curvilinear(src, dst)
-    src_lon = src.get_lon_axis()
-    src_lat = src.get_lat_axis()
-    if dst.curvilinear or not dst.has_bounds:
-        # point destinations (locstream, or a curvilinear mesh's
-        # centers): per-POINT brackets keyed by the cell id — neither
-        # has separable axes (a locstream's points all share j=0), so
-        # the tensor-product path below would mix the points' brackets
-        # (frontend.py:178-184 allows bilinear -> locstream).
-        return _bilinear_points(src, dst, src_lon, src_lat, periodic)
-    dst_lon = dst.get_lon_axis()
-    dst_lat = dst.get_lat_axis()
-
-    lon_br = _renamed(_axis_bracket(src_lon, dst_lon, "di", periodic=periodic), "si", "w_lon")
-    lat_br = _lat_rows(_axis_bracket, src_lat, dst_lat, "dj", src.n_y, periodic)
-    return _tensor_product(
-        lon_br, lat_br, dst_lon, src_lon, src.n_x, dst.n_x, src.n_y, periodic
-    )
-
-
-def _tensor_product(lon_br, lat_br, dst_lon, src_lon, n_x_src, n_x_dst, n_y_src, periodic):
-    # interior tensor product: ≤4 nnz per dest cell
-    lat_in, pole = _split_poles(lat_br, n_y_src)
-    interior = (
-        lat_in.crossJoin(F.broadcast(lon_br))
-        .select(
-            (F.col("dj") * F.lit(n_x_dst) + F.col("di")).alias("row"),
-            (F.col("sj") * F.lit(n_x_src) + F.col("si")).alias("col"),
-            (F.col("w_lat") * F.col("w_lon")).alias("S"),
-        )
-    )
-    if not periodic:
-        return interior
-
-    # pole part: lon-independent, so the dest's lon weights do not
-    # enter; but only dest cells whose lon IS bracketed (always true
-    # when periodic).
-    if pole.isEmpty():
-        return interior
-    dst_i = dst_lon.select(F.col(dst_lon.columns[0]).alias("di"))
-    pole_rows = _pole_rows(
-        pole.crossJoin(F.broadcast(dst_i)),
-        src_lon,
-        n_x_src,
-        n_y_src,
-        F.col("dj") * F.lit(n_x_dst) + F.col("di"),
-    )
-    return interior.unionByName(pole_rows)
-
-
-def _bilinear_points(
-    src: Grid, dst: Grid, src_lon: DataFrame, src_lat: DataFrame, periodic: bool
-) -> DataFrame:
-    """Bilinear weights onto POINT destinations (a locstream, or the
-    centers of a curvilinear mesh).
-
-    Each point gets its own lon bracket and lat bracket, both keyed by
-    its cell id (``row = cell_id`` directly — for a locstream the shape
-    hack (1, n) of xesmf/frontend.py:102 makes cell_id == i). The two
-    brackets combine with an EQUI-join on the id, so a point's lat
-    weights can never leak to another point.
-
-    Scale: the bracketing joins are broadcast non-equi joins of the
-    point set against the tiny adjacent-center-pair axis tables
-    (O(n_pts * n_axis) nested-loop with the axis side broadcast) — the
-    point set itself is never shuffled or broadcast.
-    """
-    pts_lon = dst.df.select(F.col("cell_id").alias("pid"), F.col("lon").alias("c"))
-    pts_lat = dst.df.select(F.col("cell_id").alias("pid"), F.col("lat").alias("c"))
-
-    lon_br = _renamed(_axis_bracket(src_lon, pts_lon, "pid", periodic=periodic), "si", "w_lon")
-    lat_br = _lat_rows(_axis_bracket, src_lat, pts_lat, "pid", src.n_y, periodic)
-
-    n_x_src, n_y_src = src.n_x, src.n_y
-    lat_in, pole = _split_poles(lat_br, n_y_src)
-    interior = (
-        lat_in.join(lon_br, "pid")
-        .select(
-            F.col("pid").alias("row"),
-            (F.col("sj") * F.lit(n_x_src) + F.col("si")).alias("col"),
-            (F.col("w_lat") * F.col("w_lon")).alias("S"),
-        )
-    )
-    if not periodic:
-        return interior
-    return interior.unionByName(_pole_rows(pole, src_lon, n_x_src, n_y_src, F.col("pid")))
+    return _separable(_axis_bracket, src, dst, periodic)

@@ -53,9 +53,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-from pyspark import StorageLevel
 
 from xesmf_spark.grids import Grid
+from xesmf_spark.materialize import pin
 
 #: brute-force is fine (and faster) below this many points on the
 #: broadcast side; above it the bucketed equi-join path takes over.
@@ -227,9 +227,9 @@ def _argmin_join(need: DataFrame, pool: DataFrame, strategy: str, bin_deg: float
     hit = _argmin_agg(_bin_candidates(need, pool, bin_deg, join_type="left"), _N_COLS)
     # a winner farther than the closest possible out-of-neighborhood
     # point cannot be trusted
-    checked = hit.withColumn(
-        "_ok", F.col("p_id").isNotNull() & (F.col("d2r") <= _trusted_d2(bin_deg))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    checked = pin(
+        hit.withColumn("_ok", F.col("p_id").isNotNull() & (F.col("d2r") <= _trusted_d2(bin_deg)))
+    )
     ok = checked.filter("_ok").select("n_id", "p_id")
     # rescue: empty neighborhoods + out-of-bound winners, resolved
     # EXACTLY by broadcasting the (small) miss set against the

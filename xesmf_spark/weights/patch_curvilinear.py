@@ -1,9 +1,9 @@
-"""Patch-recovery weights for CURVILINEAR meshes, on either side.
+"""Patch-recovery weights from a CURVILINEAR source mesh.
 
 The reference supports ``method='patch'`` on any 2-D mesh because ESMF
 builds the least-squares polynomial patches in Fortran
-(xesmf/backend.py:243); the rectilinear tensor construction
-(patch.py) exploits separable axes, which a curvilinear mesh lacks.
+(xesmf/backend.py:243); the rectilinear construction (patch.py)
+exploits the source's separable axes, which a curvilinear mesh lacks.
 This module implements the method's DEFINING contract on general
 meshes — exact on quadratic fields, C0 across quad edges, weights
 summing to 1 — with the classic patch-recovery construction:
@@ -99,9 +99,10 @@ def patch_weights_curvilinear(
     src: Grid, dst: Grid, bin_deg: float | None = None
 ) -> DataFrame:
     """COO weight triplets (row, col, S) for patch-recovery regridding
-    from a source mesh onto any destination point set. patch.py sends
-    every pair with a curvilinear side here; a rectilinear source is
-    read as its mesh of centers."""
+    from a curvilinear source mesh onto any destination point set.
+    patch.py sends every curvilinear source here; a rectilinear source
+    (read as its mesh of centers) works too, but patch.py serves it
+    with its separable axes, seam and poles included."""
     if src.n_x < 3 or src.n_y < 3:
         raise ValueError("patch needs >= 3 source centers per axis")
     from xesmf_spark.weights.curvilinear import _bilinear_basis, locate_points
