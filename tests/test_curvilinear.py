@@ -587,3 +587,43 @@ def test_patch_onto_curvilinear_across_seam_and_poles(spark):
     assert inner.sum() >= 12
     err = np.abs(got - _sheared_quadratic(lon, lat))[inner]
     assert err.max() < 1e-9, err.max()
+
+
+# ---------------------------------------------------------------------------
+# plan shape of the curvilinear-source builders
+# ---------------------------------------------------------------------------
+
+
+def _curvilinear_builds(spark):
+    from xesmf_spark.queries import _curvilinear_pair
+    from xesmf_spark.weights import patch_weights
+
+    return {
+        "bilinear": lambda: bilinear_weights(*_curvilinear_pair(spark)),
+        "patch": lambda: patch_weights(*_curvilinear_pair(spark)),
+    }
+
+
+@pytest.mark.parametrize("method", ["bilinear", "patch"])
+def test_curvilinear_weights_run_without_codegen_fallback(spark, method):
+    """The weights plan compiles: with the interpreted fallback switched
+    off, a too-large generated method would raise instead of logging."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        rows = _curvilinear_builds(spark)[method]().collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(rows) == {"bilinear": 256, "patch": 1024}[method]
+
+
+@pytest.mark.parametrize("method", ["bilinear", "patch"])
+def test_curvilinear_weights_plan_is_one_map_over_destination(spark, method):
+    """The mesh and its bin index are broadcast from the driver, so the
+    weights plan is one mapInPandas over the destination cells: no
+    shuffle, no window."""
+    w = _curvilinear_builds(spark)[method]()
+    plan = w._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Window" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan

@@ -170,3 +170,26 @@ def test_axes_are_lazy_and_match_grid_1d(spark):
     want = sorted(map(tuple, grid_1d(spark, -30.0, 30.0, 10.0, "i")[0].collect()))
     assert [(k, lon.lo[k], lon.hi[k], lon.c[k]) for k in range(g.n_x)] == want
     assert lat.c.shape == lat.lo.shape == lat.hi.shape == (g.n_y,)
+
+
+def test_mesh_is_the_pivoted_cell_table(spark, jobs_in):
+    """Grid.mesh of a constructor-built grid comes from its driver-side
+    geometry (no job) and equals the cell table's centers pivoted by
+    cell_id; a hand-built Grid pays one collect, once."""
+    import numpy as np
+
+    from xesmf_spark.grids import Grid
+
+    for name, g in _constructor_grids(spark).items():
+        pdf = g.df.select("cell_id", "lon", "lat").toPandas().sort_values("cell_id")
+        want = [pdf[c].to_numpy().reshape(g.shape) for c in ("lon", "lat")]
+        mesh, jobs = jobs_in(lambda: g.mesh)
+        assert jobs == 0, name
+        assert all(not a.flags.writeable for a in mesh), name
+        assert all(np.array_equal(a, b) for a, b in zip(mesh, want)), name
+
+        bare = Grid(df=g.df, shape=g.shape, has_bounds=g.has_bounds, curvilinear=g.curvilinear)
+        mesh, jobs = jobs_in(lambda: bare.mesh)
+        assert jobs == 1, name
+        assert all(np.array_equal(a, b) for a, b in zip(mesh, want)), name
+        assert jobs_in(lambda: bare.mesh) == (mesh, 0)

@@ -653,3 +653,15 @@ def test_bucketed_nearest_pin_is_released(spark, g_in, g_out):
     nearest_weights(g_in, g_out, direction="s2d", strategy="bucketed").collect()
     release_persisted()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_prepare_pin_is_released(spark, g_in, g_out, tmp_path):
+    """prepare() pins its partitioned weights through the registry, so
+    release_persisted() frees them like every other pinned frame."""
+    from xesmf_spark import release_persisted
+
+    spark.catalog.clearCache()
+    Regridder(spark, g_in, g_out, "bilinear", weights_dir=str(tmp_path)).prepare()
+    assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    release_persisted()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -2133,3 +2133,14 @@ def test_longest_repeats_identical_docs_never_distinct(spark):
     )
     assert got == pairs[:20]
     assert got[0][0] == 5  # the full doc repeats across ids
+
+
+def test_longest_repeats_empty_corpus_releases_cache(spark):
+    """An all-empty corpus raises, and leaves nothing cached."""
+    from xesmf_spark.relational import longest_repeats
+
+    spark.catalog.clearCache()
+    df = spark.createDataFrame([(1, ""), (2, None)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="no non-empty"):
+        longest_repeats(df)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

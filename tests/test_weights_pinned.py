@@ -12,6 +12,7 @@ import hashlib
 import numpy as np
 import pytest
 
+from xesmf_spark.grids import grid_from_2d_arrays, grid_global
 from xesmf_spark.queries import _curvilinear_pair, _fixture_grids, _locstream_pair
 from xesmf_spark.weights import (
     bilinear_weights,
@@ -19,6 +20,16 @@ from xesmf_spark.weights import (
     nearest_weights,
     patch_weights,
 )
+
+
+def _global_mesh_pair(spark):
+    """The 20x12-degree global grid read as a PERIODIC curvilinear mesh
+    (its meshgrid of centers), onto the 15x9-degree global grid: the
+    patch stencils of the first and last columns wrap mod n_x."""
+    g = grid_global(spark, 20, 12)
+    lon, lat = np.meshgrid(g.geometry.lon, g.geometry.lat)
+    src = grid_from_2d_arrays(spark, lon, lat, periodic=True)
+    return src, grid_global(spark, 15, 9)
 
 
 CASES = {
@@ -71,6 +82,10 @@ CASES = {
     "patch_curvilinear": (
         lambda s: patch_weights(*_curvilinear_pair(s)),
         "49185d54f0cdf65ba20d6ab00c2a42e3",
+    ),
+    "patch_curvilinear_periodic": (
+        lambda s: patch_weights(*_global_mesh_pair(s)),
+        "a8dfbd934c78ef207f52c34f6254e0d6",
     ),
 }
 

@@ -4,9 +4,14 @@ A from-scratch engine with the query/data-processing capabilities of
 xESMF (reference: JiaweiZhuang/xESMF v0.3.0), re-expressed as idiomatic
 Spark DataFrame operations:
 
-- weight generation  = spatial joins over grid cell tables
-  (interval-overlap join for conservative, bracketing range join for
-  bilinear, distance-ranked window for nearest_s2d / nearest_d2s);
+- weight generation  = spatial joins over grid cell tables. A
+  rectilinear pair (conservative, bilinear, patch) separates per axis:
+  numpy 1-D weights on the driver, one broadcast cross join for the
+  product. Nearest_s2d / nearest_d2s are an argmin hash aggregate over a
+  broadcast or bin equi-join; curvilinear meshes get polygon clipping
+  (conservative) and, from a curvilinear source, one ``mapInPandas``
+  over the destination points against the broadcast source mesh
+  (bilinear, patch);
 - weight application = equi-join + hash aggregate
   (``out[row] = sum_col S(row, col) * in[col]``), the relational form of
   the scipy COO sparse matmul in the reference (xesmf/smm.py:44-95).

@@ -27,9 +27,10 @@ any size never touches the driver. What the driver does hold is the
 grid's :class:`Geometry` — the 1-D axes of a rectilinear grid, or the
 arrays a curvilinear mesh or point list was built from. The facts a
 Regridder construction checks (latitude range, degenerate cells, the
-weight-cache digest) and the 1-D axes the rectilinear weight builders
-work on (:attr:`Grid.axes`) are read from it with numpy, launching no
-Spark job.
+weight-cache digest), the 1-D axes the rectilinear weight builders
+work on (:attr:`Grid.axes`) and the 2-D centers the curvilinear-source
+builders broadcast (:attr:`Grid.mesh`) are read from it with numpy,
+launching no Spark job.
 """
 
 from __future__ import annotations
@@ -252,6 +253,20 @@ class Grid:
         if g is None or not g.rectilinear:
             return _cell_table_axes(self)
         return Axis.of(g.lon, g.lon_b), Axis.of(g.lat, g.lat_b)
+
+    @cached_property
+    def mesh(self) -> tuple[np.ndarray, np.ndarray]:
+        """The ``(lon, lat)`` cell centers as read-only ``(n_y, n_x)``
+        numpy arrays, ``[j, i]`` = cell ``j * n_x + i``. Read from
+        :attr:`geometry` (a rectilinear grid's axes broadcast, without
+        a copy); a hand-built Grid pays ONE collect of its cell table.
+        Either way, once per Grid."""
+        g = self.geometry
+        if g is None:
+            return _cell_table_mesh(self)
+        if g.rectilinear:
+            return np.broadcast_to(g.lon, self.shape), np.broadcast_to(g.lat[:, None], self.shape)
+        return g.lon, g.lat
 
 
 def grid_2d(
@@ -574,6 +589,16 @@ def _cell_table_axes(grid: Grid) -> tuple[Axis, Axis]:
                 lo[k], hi[k], c[k] = lo_k, hi_k, c_k  # None (no bounds) -> NaN
         axes.append(Axis(c, lo, hi) if grid.has_bounds else Axis(c, None, None))
     return axes[0], axes[1]
+
+
+def _cell_table_mesh(grid: Grid) -> tuple[np.ndarray, np.ndarray]:
+    """:attr:`Grid.mesh` of a Grid without driver-side geometry, from
+    ONE collect of its ``(cell_id, lon, lat)`` rows."""
+    pdf = grid.df.select("cell_id", "lon", "lat").toPandas()
+    lon, lat = np.full((2, grid.n_cells), np.nan)
+    k = pdf["cell_id"].to_numpy(np.int64)
+    lon[k], lat[k] = pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64)
+    return _frozen(lon.reshape(grid.shape)), _frozen(lat.reshape(grid.shape))
 
 
 def count_degenerate_cells(grid: Grid) -> int:

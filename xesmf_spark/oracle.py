@@ -476,7 +476,7 @@ def bilinear_curvilinear_oracle_sql(n_y: int = 20, n_x: int = 30, n_pts: int = 6
     pure arithmetic (bit-identical across engines); point-in-quad cross
     products, the inverse-bilinear quadratic, branch selections and
     clamps mirror weights/curvilinear.py operation-for-operation. The
-    candidate set here is the plain cross join — the engine's bin join
+    candidate set here is the plain cross join — the engine's bin index
     is an optimization that never drops a containing quad."""
     return f"""
 WITH

@@ -191,7 +191,7 @@ def regrid_bilinear_curvilinear(spark, sf_dir, n_y: int = 20, n_x: int = 30):
     """Bilinear from a CURVILINEAR source mesh (sheared/stretched by a
     pure-arithmetic deformation — reproducible bit-for-bit in SQL) onto
     a deterministic interior point set. Exercises the point-in-quad
-    bin join + inverse-bilinear quadratic (weights/curvilinear.py)."""
+    bin index + inverse-bilinear quadratic (weights/curvilinear.py)."""
     src, dst = _curvilinear_pair(spark, n_y, n_x)
     w = bilinear_weights(src, dst)
     field = src.df.select("cell_id", wave_smooth().alias("value"))

@@ -243,7 +243,7 @@ class Regridder:
         if os.path.exists(self.filename):
             shutil.rmtree(self.filename, ignore_errors=True)
 
-    def prepare(self, num_partitions: int | None = None) -> "Regridder":
+    def prepare(self) -> "Regridder":
         """Pin the weight triplets in executor memory HASH-PARTITIONED
         BY THE JOIN KEY (``col``) for the repeated-apply regime — the
         engine's analogue of the reference keeping the scipy COO in RAM
@@ -255,12 +255,15 @@ class Regridder:
         apply re-shuffles the weights side. A cached repartition('col')
         exposes its HashPartitioning to the planner, so subsequent
         applies exchange only the field side. No-op win when the
-        weights broadcast anyway. Released by :meth:`finalize`."""
+        weights broadcast anyway. The frame is registered with
+        ``materialize`` like the applies' pins; released by
+        :meth:`finalize` (or ``release_persisted()``)."""
         if self._prepared is None:
             # match the session shuffle-partition count so the planner
             # aligns the field-side exchange to the cached distribution
-            n = num_partitions or shuffle_partition_count(self.spark)
-            self._prepared = self.weights.repartition(n, "col").persist()
+            n = shuffle_partition_count(self.spark)
+            self._prepared = materialize.pin(self.weights.repartition(n, "col"))
+            self._pinned.append(self._prepared)
             self._prepared.count()
         return self
 
@@ -303,9 +306,7 @@ class Regridder:
         if hit is not None and hit[1] is self._weights:
             del _WEIGHT_FRAMES[self.filename]
         self._weights = None
-        if self._prepared is not None:
-            self._prepared.unpersist()
-            self._prepared = None
+        self._prepared = None
         if clean_weights:
             self.clean_weight_file()
 
@@ -464,22 +465,6 @@ class Regridder:
             _spmv_batch(X, csr, self.n_out, out=Y)
         return Y.reshape(extra_shape + self.grid_out.shape)
 
-    def _dest_lonlat(self):
-        """Destination lon/lat as (n_y, n_x) numpy arrays (cached) — the
-        coord values the reference attaches at frontend.py:432-439."""
-        if getattr(self, "_dest_lonlat_cache", None) is None:
-            pdf = (
-                self.grid_out.df.select("cell_id", "lon", "lat")
-                .orderBy("cell_id")
-                .toPandas()
-            )
-            shape = self.grid_out.shape
-            self._dest_lonlat_cache = (
-                pdf["lon"].to_numpy().reshape(shape),
-                pdf["lat"].to_numpy().reshape(shape),
-            )
-        return self._dest_lonlat_cache
-
     def regrid_dataarray(self, dr_in, keep_attrs: bool = False):
         """Regrid an ``xarray.DataArray`` (frontend.py:392-446): the
         trailing horizontal dims regrid through :meth:`regrid_numpy`,
@@ -496,7 +481,7 @@ class Regridder:
         extra_dims = dr_in.dims[:-n_horiz]
         data = self.regrid_numpy(np.asarray(dr_in.data, dtype=np.float64))
 
-        lon2d, lat2d = self._dest_lonlat()
+        lon2d, lat2d = self.grid_out.mesh  # frontend.py:432-439
         if self.locstream_out:
             data = data.reshape(data.shape[:-2] + (self.grid_out.n_cells,))
             dims = tuple(extra_dims) + ("locations",)

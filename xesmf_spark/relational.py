@@ -2703,6 +2703,7 @@ def longest_repeats(
     )
     max_len = lens.agg(F.max("len")).collect()[0][0]
     if max_len is None:
+        lens.unpersist()
         raise ValueError("corpus has no non-empty documents")
     # every round checkpoints RELIABLY (disk), not locally (heap):
     # ~log2(max_len) doubling rounds followed by as many LCP-walk

@@ -18,12 +18,16 @@ broadcast cross join of the per-axis tables, or a ``mapInPandas``
 over point destinations — emits the O(nnz) triplets. Otherwise:
 - conservative: a curvilinear mesh on either side → polygon clipping
   (conservative_clip.py);
-- bilinear: a curvilinear source → point-in-quad search
-  (curvilinear.py); a curvilinear or locstream destination →
-  per-point brackets (bilinear.py);
+- bilinear: a curvilinear source → point-in-quad search and inverse
+  bilinear map (curvilinear.py); a curvilinear or locstream
+  destination → per-point brackets (bilinear.py);
 - patch: a curvilinear source → least-squares patches over the
   located quad (patch_curvilinear.py); a curvilinear destination →
   per-point patch weights (patch.py).
+
+A curvilinear source's builders read its centers on the driver
+(``Grid.mesh``), broadcast them with a bin index, and run one
+``mapInPandas`` over the destination points; no join or shuffle.
 """
 
 from xesmf_spark.weights.conservative import conservative_weights

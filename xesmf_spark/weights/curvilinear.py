@@ -8,15 +8,28 @@ stretched tripolar grids) has none, so bilinear interpolation becomes:
 
 1. QUAD LOCATION — find the cell of the source CENTER mesh (the quad
    spanned by centers (j,i),(j,i+1),(j+1,i+1),(j+1,i)) containing each
-   destination point. Spark plan: a spatial-bin EQUI-join — each quad
-   is exploded to the coarse lat/lon bins its bounding box overlaps,
-   each destination point hashes to its bin, candidates join on the bin
-   key and are filtered by an exact point-in-quad test. Never all-pairs
-   — the same 100-TB shape as the bucketed nearest join.
+   destination point. Each quad is indexed under the coarse lat/lon
+   bins its bounding box overlaps; a point is tested only against the
+   quads of its own bin, with an exact, edge-inclusive point-in-quad
+   test (sign of the 2-D cross product per edge). A point on a shared
+   edge takes the quad with the lowest (j, i). Never all-pairs.
 2. INVERSE BILINEAR MAP — solve P = (1-u)(1-v)*P00 + u(1-v)*P10 +
    (1-u)v*P01 + uv*P11 for (u, v) in the unit square: eliminating u
-   gives a QUADRATIC in v (closed form, pure Column arithmetic — no
-   iteration, no UDF); weights are the four bilinear products.
+   gives a QUADRATIC in v (closed form, no iteration); the weights are
+   the four bilinear products. ``oracle.bilinear_curvilinear_oracle_sql``
+   mirrors this operation for operation.
+
+Plan: the driver reads the source centers (``Grid.mesh``), builds the
+bin index with numpy and broadcasts both; ONE ``mapInPandas`` over the
+destination cells locates and solves each Arrow batch of points with
+numpy (:func:`point_weights`, which patch_curvilinear.py shares). The
+weights plan holds no join, shuffle or window.
+
+Scale premise: a curvilinear source's centers already live on the
+driver — ``grid_from_2d_arrays`` builds the grid from driver arrays —
+so a broadcast of about 16 bytes per source cell (plus its bin index)
+replaces a distributed quad table. Destination points are streamed
+through the kernel, never collected, shuffled or broadcast.
 
 Seam handling: quads and destination points are LOCALIZED mod 360
 (corner lons wrapped into the first corner's frame, bin indices wrapped
@@ -24,190 +37,225 @@ mod nlon, the point shifted by whole turns into the quad's frame), so
 meshes straddling the ±180° antimeridian — global tripolar/rotated
 grids — regrid correctly in either lon convention (±180 or 0..360).
 The reference gets this for free from ESMF's 3-D Cartesian internals
-(xesmf/backend.py:44-45). The quad explode is the clip builder's
-seam-aware bin explode (conservative_clip._binned), so both mesh
-builders localize and bin quads with the same code.
+(xesmf/backend.py:44-45). The bin width and wrap rules are the clip
+builder's (conservative_clip._snap_bins), so both mesh builders bin
+quads alike.
 
 Limitations (documented, mirroring SURVEY.md §7 phase-7 scope):
 - planar approximation in lon/lat space (adequate away from the poles
   for meshes whose cells are small relative to curvature — the usual
   regional/global-model regime); cells must be narrower than 180°;
 - destination points outside the center mesh get no weights → 0 on
-  apply (unmapped_action=IGNORE semantics, xesmf/backend.py:275-279).
+  apply (unmapped_action=IGNORE semantics, xesmf/backend.py:275-279);
+  so does a point whose quad is degenerate (the inverse map would
+  divide by zero).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from typing import NamedTuple
 
-from xesmf_spark.grids import Grid, wrap_lon
-from xesmf_spark.weights.conservative_clip import _binned, _snap_bins
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 
-#: the quad's corner-center columns, flattened (x, y) pairs; the first
-#: is the lon frame the others are localized into
-_CORNER_COLS = ("x00", "y00", "x10", "y10", "x01", "y01", "x11", "y11")
+from xesmf_spark.grids import Grid
+from xesmf_spark.weights.conservative_clip import _snap_bins
+
+_OUT_SCHEMA = "row long, col long, S double"
 
 #: |a| below this -> the quad is a parallelogram and the quadratic
 #: degenerates to the linear case
 _EPS = 1e-12
 
-
-def _quads(src: Grid) -> DataFrame:
-    """Center-mesh quads: one row per (j, i) with the four corner
-    CENTERS as columns. Built with two self-joins on the cell table
-    (equi-joins on (j, i+1), (j+1, i), (j+1, i+1)) — shuffle-partitioned
-    by grid index, no driver materialization."""
-    c = src.df.select("j", "i", "cell_id", "lon", "lat")
-    p00 = c.select(
-        "j", "i",
-        F.col("cell_id").alias("id00"), F.col("lon").alias("x00"), F.col("lat").alias("y00"),
-    )
-    p10 = c.select(
-        "j", (F.col("i") - 1).alias("i"),
-        F.col("cell_id").alias("id10"), F.col("lon").alias("x10"), F.col("lat").alias("y10"),
-    )
-    p01 = c.select(
-        (F.col("j") - 1).alias("j"), "i",
-        F.col("cell_id").alias("id01"), F.col("lon").alias("x01"), F.col("lat").alias("y01"),
-    )
-    p11 = c.select(
-        (F.col("j") - 1).alias("j"), (F.col("i") - 1).alias("i"),
-        F.col("cell_id").alias("id11"), F.col("lon").alias("x11"), F.col("lat").alias("y11"),
-    )
-    return p00.join(p10, ["j", "i"]).join(p01, ["j", "i"]).join(p11, ["j", "i"])
+#: destination points located per numpy pass — bounds the (point,
+#: candidate quad) arrays of one pass
+_CHUNK = 4096
 
 
-def _bin_id(lon_col, lat_col, bin_deg: float, nlon: int):
-    """Seam-aware bin key: lon is wrapped into [-180, 180) first and the
-    lon-bin index wrapped mod nlon, so any input convention (0..360,
-    ±180) hashes to the same geographic bin. ``(nlon, bin_deg)`` come
-    from :func:`~xesmf_spark.weights.conservative_clip._snap_bins`."""
-    blat = F.floor((lat_col + F.lit(90.0)) / F.lit(bin_deg)).cast("long")
-    blon = F.pmod(
-        F.floor((wrap_lon(lon_col) + F.lit(180.0)) / F.lit(bin_deg)).cast("long"),
-        F.lit(nlon),
-    )
-    return blat * F.lit(nlon) + blon
+class Located(NamedTuple):
+    """Destination points that fell inside a source quad: ``k`` indexes
+    them in the input arrays; ``px`` is localized into the quad's lon
+    frame; ``(j, i)`` is the quad's lowest corner; ``(u, v)`` its
+    unit-square coordinates."""
+
+    k: np.ndarray
+    px: np.ndarray
+    py: np.ndarray
+    j: np.ndarray
+    i: np.ndarray
+    u: np.ndarray
+    v: np.ndarray
 
 
-def locate_points(src: Grid, dst: Grid, bin_deg: float | None = None) -> DataFrame:
-    """QUAD LOCATION + INVERSE BILINEAR MAP, shared by the curvilinear
-    bilinear and patch builders: for every destination point, the source
-    center-mesh quad containing it and the unit-square coordinates.
-    Returns (pid, px, py, j, i, id00, id10, id01, id11, u, v) — px
-    localized into the quad's lon frame (seam-safe)."""
-    if bin_deg is None:
-        # ~2 source cells per bin: the quad bbox then overlaps O(1) bins
-        bin_deg = max(0.5, 2.0 * 360.0 / max(src.n_x, 1))
-    # snap so nlon * bin_deg == 360 exactly (seam-wrap congruence)
-    nlon, bin_deg = _snap_bins(bin_deg)
+def _wrap(x: np.ndarray) -> np.ndarray:
+    """``grids.wrap_lon`` in numpy: longitude into [-180, 180)."""
+    return x - 360.0 * np.floor((x + 180.0) / 360.0)
 
-    # each quad explodes into every bin its bbox overlaps, corners
-    # localized into the first corner's lon frame (seam-aware)
-    quads = _binned(_quads(src), _CORNER_COLS, "q", bin_deg, nlon)
-    pts = dst.df.select(
-        F.col("cell_id").alias("pid"),
-        F.col("lon").alias("px"),
-        F.col("lat").alias("py"),
-    ).withColumn("bin", _bin_id(F.col("px"), F.col("py"), bin_deg, nlon))
 
-    cand = pts.join(quads, "bin").drop("bin")
-    # localize the point into the quad's lon frame (whole turns only):
-    # a point at -179.9 tests against a quad whose localized corners sit
-    # around +179.9 as 180.1 — the same geographic position
-    cand = cand.withColumn(
-        "px",
-        F.col("px")
-        - F.lit(360.0) * F.round((F.col("px") - F.col("x00")) / F.lit(360.0), 0),
-    )
+def _round_half_up(t: np.ndarray) -> np.ndarray:
+    """Nearest integer, ties away from zero (SQL ``round(t, 0)``)."""
+    a = np.abs(t)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), t)
 
-    # exact point-in-quad: the point is inside (or on the boundary of)
-    # the quad iff it is left-of (or on) every edge traversed in a
-    # consistent winding — sign of the 2-D cross product per edge.
-    def cross(ax, ay, bx, by, px, py):
-        return (F.col(bx) - F.col(ax)) * (py - F.col(ay)) - (F.col(by) - F.col(ay)) * (
-            px - F.col(ax)
-        )
 
-    px, py = F.col("px"), F.col("py")
-    c1 = cross("x00", "y00", "x10", "y10", px, py)
-    c2 = cross("x10", "y10", "x11", "y11", px, py)
-    c3 = cross("x11", "y11", "x01", "y01", px, py)
-    c4 = cross("x01", "y01", "x00", "y00", px, py)
-    inside = ((c1 >= 0) & (c2 >= 0) & (c3 >= 0) & (c4 >= 0)) | (
-        (c1 <= 0) & (c2 <= 0) & (c3 <= 0) & (c4 <= 0)
-    )
-    hits = cand.filter(inside)
-    # boundary points can match two adjacent quads — keep one per point
-    hits = hits.withColumn(
-        "_rk", F.row_number().over(Window.partitionBy("pid").orderBy("j", "i"))
-    ).filter(F.col("_rk") == 1)
+def _quad_corners(lon: np.ndarray, lat: np.ndarray, j: np.ndarray, i: np.ndarray):
+    """Corner centers of quads ``(j, i)`` in the order 00, 10, 01, 11:
+    ``(x, y)``, each ``(4, m)``, with the lons localized into the frame
+    of the wrapped first corner (seam-safe)."""
+    n_x = lon.shape[1]
+    c = np.stack([j * n_x + i, j * n_x + i + 1, (j + 1) * n_x + i, (j + 1) * n_x + i + 1])
+    x, y = lon.reshape(-1)[c], lat.reshape(-1)[c]
+    ref = _wrap(x[0])
+    return np.concatenate([ref[None], ref + _wrap(x[1:] - x[0])]), y
+
+
+def _bin(v: np.ndarray, origin: float, bin_deg: float) -> np.ndarray:
+    """Bin index along one axis of coordinates ``v``, counted from ``-origin``."""
+    return np.floor((v + origin) / bin_deg).astype(np.int64)
+
+
+class BinIndex(NamedTuple):
+    """The quads of a center mesh per seam-aware bin: the members of
+    bin ``keys[b]`` are ``quads[starts[b]:starts[b + 1]]``, ascending,
+    so the first hit is the lowest ``(j, i)``."""
+
+    nlon: int
+    bin_deg: float
+    keys: np.ndarray
+    starts: np.ndarray
+    quads: np.ndarray
+
+
+def _bin_index(lon: np.ndarray, lat: np.ndarray) -> BinIndex:
+    """Index every quad under each bin its localized bounding box
+    overlaps (lon-bin range wrapped mod nlon), about two source cells
+    per bin, snapped so ``nlon * bin_deg == 360``. A point inside a quad
+    lies in its box, so the point's bin always lists the quad."""
+    n_y, n_x = lon.shape
+    nlon, bin_deg = _snap_bins(max(0.5, 2.0 * 360.0 / n_x))
+    q = np.arange((n_y - 1) * (n_x - 1))
+    x, y = _quad_corners(lon, lat, *np.divmod(q, n_x - 1))
+    bx0, by0 = _bin(x.min(axis=0), 180.0, bin_deg), _bin(y.min(axis=0), 90.0, bin_deg)
+    nbx = _bin(x.max(axis=0), 180.0, bin_deg) - bx0 + 1
+    nby = _bin(y.max(axis=0), 90.0, bin_deg) - by0 + 1
+    # one entry per (quad, overlapped bin), quads ascending
+    n = nbx * nby
+    e = np.repeat(q, n)
+    off = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+    bins = (by0[e] + off // nbx[e]) * nlon + np.mod(bx0[e] + off % nbx[e], nlon)
+    order = np.argsort(bins, kind="stable")
+    keys, first = np.unique(bins[order], return_index=True)
+    # a sentinel key no point hashes to, with no members, closes the table
+    keys = np.append(keys, np.iinfo(np.int64).max)
+    starts = np.concatenate([first, [e.size, e.size]])
+    return BinIndex(nlon, bin_deg, keys, starts, e[order])
+
+
+def _locate(lon, lat, index: BinIndex, px: np.ndarray, py: np.ndarray) -> Located:
+    """QUAD LOCATION + INVERSE BILINEAR MAP of the points ``(px, py)``
+    against the center mesh ``(lon, lat)`` indexed by ``index``."""
+    nlon, bin_deg = index.nlon, index.bin_deg
+    pb = _bin(py, 90.0, bin_deg) * nlon + np.mod(_bin(_wrap(px), 180.0, bin_deg), nlon)
+    pos = np.searchsorted(index.keys, pb)
+    lo = index.starts[pos]
+    n = np.where(index.keys[pos] == pb, index.starts[pos + 1] - lo, 0)
+    # (point, candidate quad) pairs, each point's candidates ascending
+    p = np.repeat(np.arange(px.size), n)
+    q = index.quads[np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)]
+    j, i = np.divmod(q, lon.shape[1] - 1)
+    (x00, x10, x01, x11), (y00, y10, y01, y11) = _quad_corners(lon, lat, j, i)
+    # the point, shifted by whole turns into the quad's lon frame
+    qpx, qpy = px[p], py[p]
+    qpx = qpx - 360.0 * _round_half_up((qpx - x00) / 360.0)
+
+    # inside (or on the boundary) iff on the same side of every edge,
+    # traversed 00 -> 10 -> 11 -> 01
+    def cross(ax, ay, bx, by):
+        return (bx - ax) * (qpy - ay) - (by - ay) * (qpx - ax)
+
+    c = np.stack([
+        cross(x00, y00, x10, y10), cross(x10, y10, x11, y11),
+        cross(x11, y11, x01, y01), cross(x01, y01, x00, y00),
+    ])
+    inside = (c >= 0).all(axis=0) | (c <= 0).all(axis=0)
+    # the first hit per point is its lowest (j, i)
+    hit = np.flatnonzero(inside)
+    k, first = np.unique(p[hit], return_index=True)
+    h = hit[first]
+    x00, x10, x01, x11 = x00[h], x10[h], x01[h], x11[h]
+    y00, y10, y01, y11 = y00[h], y10[h], y01[h], y11[h]
+    qpx, qpy = qpx[h], qpy[h]
 
     # inverse bilinear map: with A = P00, b = P10-P00, c = P01-P00,
-    # d = P11-P10-P01+P00 and q = P-A, solve q = u*b + v*c + u*v*d.
-    bx_, by_ = F.col("x10") - F.col("x00"), F.col("y10") - F.col("y00")
-    cx_, cy_ = F.col("x01") - F.col("x00"), F.col("y01") - F.col("y00")
-    dx_ = F.col("x11") - F.col("x10") - F.col("x01") + F.col("x00")
-    dy_ = F.col("y11") - F.col("y10") - F.col("y01") + F.col("y00")
-    qx_, qy_ = px - F.col("x00"), py - F.col("y00")
-
-    # eliminating u from the pair of scalar equations yields the
-    # quadratic a*v^2 + bq*v + cq = 0 with:
-    a_ = cy_ * dx_ - cx_ * dy_
-    bq = qx_ * dy_ - qy_ * dx_ + bx_ * cy_ - by_ * cx_
-    cq = qx_ * by_ - qy_ * bx_
-    disc = bq * bq - F.lit(4.0) * a_ * cq
-    sq = F.sqrt(F.greatest(disc, F.lit(0.0)))
-    v_quad_1 = (F.lit(-1.0) * bq + sq) / (F.lit(2.0) * a_)
-    v_quad_2 = (F.lit(-1.0) * bq - sq) / (F.lit(2.0) * a_)
-    v_lin = F.lit(-1.0) * cq / bq  # parallelogram: a ~ 0
-    in01 = lambda e: (e >= F.lit(-1e-9)) & (e <= F.lit(1.0 + 1e-9))
-    v = F.when(F.abs(a_) < _EPS, v_lin).otherwise(
-        F.when(in01(v_quad_1), v_quad_1).otherwise(v_quad_2)
-    )
-    # back-substitute u from whichever component is better conditioned
-    den_x = bx_ + dx_ * v
-    den_y = by_ + dy_ * v
-    u = F.when(
-        F.abs(den_x) >= F.abs(den_y), (qx_ - cx_ * v) / den_x
-    ).otherwise((qy_ - cy_ * v) / den_y)
-    u = F.least(F.greatest(u, F.lit(0.0)), F.lit(1.0))
-    v = F.least(F.greatest(v, F.lit(0.0)), F.lit(1.0))
-
-    return hits.select(
-        "pid", "px", "py", "j", "i",
-        "id00", "id10", "id01", "id11", u.alias("u"), v.alias("v"),
-    )
+    # d = P11-P10-P01+P00 and q = P-A, solve q = u*b + v*c + u*v*d;
+    # eliminating u gives a*v^2 + bq*v + cq = 0
+    bx, by = x10 - x00, y10 - y00
+    cx, cy = x01 - x00, y01 - y00
+    dx = x11 - x10 - x01 + x00
+    dy = y11 - y10 - y01 + y00
+    qx, qy = qpx - x00, qpy - y00
+    a = cy * dx - cx * dy
+    bq = qx * dy - qy * dx + bx * cy - by * cx
+    cq = qx * by - qy * bx
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sq = np.sqrt(np.maximum(bq * bq - 4.0 * a * cq, 0.0))
+        v1 = (-1.0 * bq + sq) / (2.0 * a)
+        v2 = (-1.0 * bq - sq) / (2.0 * a)
+        v = np.where(
+            np.abs(a) < _EPS,
+            -1.0 * cq / bq,  # parallelogram: a ~ 0
+            np.where((v1 >= -1e-9) & (v1 <= 1.0 + 1e-9), v1, v2),
+        )
+        # back-substitute u from whichever component is better conditioned
+        den_x, den_y = bx + dx * v, by + dy * v
+        u = np.where(np.abs(den_x) >= np.abs(den_y), (qx - cx * v) / den_x, (qy - cy * v) / den_y)
+    ok = np.isfinite(u) & np.isfinite(v)  # a degenerate quad divided by zero
+    u, v = (np.minimum(np.maximum(t[ok], 0.0), 1.0) for t in (u, v))
+    return Located(k[ok], qpx[ok], qpy[ok], j[h][ok], i[h][ok], u, v)
 
 
-def _bilinear_basis() -> list:
-    """The bilinear blend of a located point's quad corners, over the
-    ``u``/``v`` columns of :func:`locate_points`, in corner order
-    00, 10, 01, 11."""
-    u, v = F.col("u"), F.col("v")
-    return [(1 - u) * (1 - v), u * (1 - v), (1 - u) * v, u * v]
+def bilinear_basis(u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """The bilinear blend of a quad's corners at ``(u, v)``, ``(4, m)``
+    in corner order 00, 10, 01, 11."""
+    return np.stack([(1 - u) * (1 - v), u * (1 - v), (1 - u) * v, u * v])
 
 
-def bilinear_weights_curvilinear(
-    src: Grid, dst: Grid, bin_deg: float | None = None
-) -> DataFrame:
+def point_weights(src: Grid, dst: Grid, emit) -> DataFrame:
+    """Weight triplets of every destination point a quad of the source
+    center mesh contains: the mesh and its bin index are broadcast, and
+    one ``mapInPandas`` over the destination cells locates each batch
+    of points (:func:`_locate`). ``emit(pid, located, lon, lat)``
+    returns the ``(row, col, S)`` frame of the located points."""
+    lon, lat = (np.ascontiguousarray(a) for a in src.mesh)
+    shared = src.df.sparkSession.sparkContext.broadcast((lon, lat, _bin_index(lon, lat)))
+
+    def kernel(batches):
+        lon, lat, index = shared.value
+        for pdf in batches:
+            pid = pdf["cell_id"].to_numpy(np.int64)
+            px, py = pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64)
+            for s in range(0, pid.size, _CHUNK):
+                c = slice(s, s + _CHUNK)
+                loc = _locate(lon, lat, index, px[c], py[c])
+                yield emit(pid[c][loc.k], loc, lon, lat)
+
+    return dst.df.select("cell_id", "lon", "lat").mapInPandas(kernel, _OUT_SCHEMA)
+
+
+def _bilinear_rows(pid, loc: Located, lon, lat) -> pd.DataFrame:
+    """The 4 corner weights of each located point; zeros dropped."""
+    n_x = lon.shape[1]
+    c00 = loc.j * n_x + loc.i
+    col = np.concatenate([c00, c00 + 1, c00 + n_x, c00 + n_x + 1])
+    S = bilinear_basis(loc.u, loc.v).reshape(-1)
+    keep = S > 0.0
+    return pd.DataFrame({"row": np.tile(pid, 4)[keep], "col": col[keep], "S": S[keep]})
+
+
+def bilinear_weights_curvilinear(src: Grid, dst: Grid) -> DataFrame:
     """COO triplets for bilinear regridding FROM a curvilinear source
     mesh onto any destination point set (grid cells or locstream).
     Returns (row, col, S) with row = destination cell_id."""
-    solved = locate_points(src, dst, bin_deg)
-    b00, b10, b01, b11 = _bilinear_basis()
-    w = solved.select(
-        "pid",
-        F.array(
-            F.struct(F.col("id00").alias("col"), b00.alias("S")),
-            F.struct(F.col("id10").alias("col"), b10.alias("S")),
-            F.struct(F.col("id01").alias("col"), b01.alias("S")),
-            F.struct(F.col("id11").alias("col"), b11.alias("S")),
-        ).alias("ws"),
-    )
-    return (
-        w.select("pid", F.explode("ws").alias("w"))
-        .select(F.col("pid").alias("row"), F.col("w.col").alias("col"), F.col("w.S").alias("S"))
-        .filter(F.col("S") > 0.0)
-    )
+    return point_weights(src, dst, _bilinear_rows)

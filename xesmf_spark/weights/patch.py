@@ -67,9 +67,13 @@ def _axis_patch(c_src: np.ndarray, x: np.ndarray, periodic: bool):
             idx.append(d)
             ks.append(k[s])
             ws.append(blend * num / den)
-    # a stencil index reached via both corners merges (summed in
-    # emission order); exact zeros drop
-    d, k, w = (np.concatenate(parts) for parts in (idx, ks, ws))
+    # a stencil index reached via both corners merges
+    return merge_repeats(*(np.concatenate(parts) for parts in (idx, ks, ws)))
+
+
+def merge_repeats(d: np.ndarray, k: np.ndarray, w: np.ndarray):
+    """``(d, k, w)`` with the weights of each repeated ``(d, k)`` pair
+    summed in emission order, sorted by ``(d, k)``; exact zeros drop."""
     order = np.lexsort((k, d))
     d, k, w = d[order], k[order], w[order]
     new = np.ones(d.size, dtype=bool)
