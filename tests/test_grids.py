@@ -90,6 +90,34 @@ def test_grid_2d_matches_crossjoin_bit_for_bit(spark, spec):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "spec",
+    [
+        (-120.0, 120.0, 0.4, -60.0, 60.0, 0.3),
+        (-180.0, 180.0, 0.7, -90.0, 90.0, 0.3),
+    ],
+)
+def test_grid_2d_matches_driver_geometry_bit_for_bit(spark, spec):
+    """Every bound and center of the cell table equals the numpy
+    geometry the grid keeps on the driver, bit for bit (fractional
+    steps, where a reassociated sum would move the last bit)."""
+    import numpy as np
+
+    from xesmf_spark.grids import grid_2d
+
+    g = grid_2d(spark, *spec)
+    pdf = g.df.toPandas().sort_values("cell_id")
+    geo = g.geometry
+    j, i = pdf["j"].to_numpy(), pdf["i"].to_numpy()
+    want = {
+        "lon": geo.lon[i], "lat": geo.lat[j],
+        "lon_lo": geo.lon_b[i], "lon_hi": geo.lon_b[i + 1],
+        "lat_lo": geo.lat_b[j], "lat_hi": geo.lat_b[j + 1],
+    }
+    for c, w in want.items():
+        assert np.array_equal(pdf[c].to_numpy().view(np.int64), w.view(np.int64)), c
+
+
 def _constructor_grids(spark):
     from xesmf_spark.grids import grid_2d, grid_from_2d_arrays, grid_from_arrays
 
@@ -193,3 +221,16 @@ def test_mesh_is_the_pivoted_cell_table(spark, jobs_in):
         assert jobs == 1, name
         assert all(np.array_equal(a, b) for a, b in zip(mesh, want)), name
         assert jobs_in(lambda: bare.mesh) == (mesh, 0)
+
+
+def test_grid_2d_is_one_projection_over_range(spark):
+    """The cell table is built by one SQL projection: its analyzed plan
+    is a single Project directly over the Range."""
+    from xesmf_spark.grids import grid_2d
+
+    plan = grid_2d(spark, -120.0, 120.0, 0.7, -60.0, 60.0, 0.3).df._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "Project"
+    assert plan.children().size() == 1
+    child = plan.children().apply(0)
+    assert child.nodeName() == "Range"
+    assert child.children().size() == 0

@@ -136,8 +136,8 @@ def test_smm_apply_broadcasts_small_weights(spark):
     df = smm_apply(field, w, g_out, attach_coords=False)
     plan = _plan(df)
     # the field-x-weights join (the one that carries data volume) must
-    # be a BroadcastHashJoin; the dest-grid zero-fill LEFT join is
-    # dest-sized and AQE localizes it at runtime
+    # be a BroadcastHashJoin; the zero-fill is not a join at all — the
+    # dest cells enter the same group-by-sum as NULL-valued rows
     assert "BroadcastHashJoin" in plan, plan
     # after execution, the AQE final plan must not leave a sort-merge
     # join on the data path either

@@ -1917,8 +1917,68 @@ def test_dense_rank_distributed_matches_global(spark):
     for parts in (1, 7):
         out = dense_rank_distributed(df.repartition(parts), ["a", "b"], "rk")
         assert all(want[(r.a, r.b)] == r.rk for r in out.collect())
+    assert dense_rank_distributed(df.limit(0), ["a", "b"], "rk").collect() == []
     with _pytest.raises(ValueError, match="cols"):
         dense_rank_distributed(df, [])
+
+
+def test_dense_rank_distributed_orders_nulls_nans_and_strings_like_spark(spark):
+    """The range boundaries are sorted on the driver; the ranks must
+    still follow Spark's own ascending order, where NULL sorts first,
+    NaN after every number and strings by code point."""
+    import random
+
+    from pyspark.sql import Window
+
+    from xesmf_spark.relational import dense_rank_distributed
+
+    random.seed(11)
+    words = ["", "a", "ab", "b", "Z", "é", "ß", "zz", None]
+    nums = [None, float("nan"), -0.0, 0.0, -1.5, 2.25, 1e300, -1e300]
+    rows = [(random.choice(words), random.choice(nums), random.randint(0, 40)) for _ in range(3000)]
+    df = spark.createDataFrame(rows, "s string, x double, n long")
+    cols = ["x", "s", "n"]
+    want = df.withColumn("rk", F.dense_rank().over(Window.orderBy(*cols)))
+    got = dense_rank_distributed(df, cols, "rk")
+    key = lambda r: (repr(r.s), repr(r.x), r.n, r.rk)  # noqa: E731
+    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+
+
+def test_dense_rank_distributed_survives_a_cleared_cache(spark):
+    """The ranks do not depend on the pinned intermediate: with the
+    cache cleared between the call and the collect, both of its
+    consumers re-execute an input whose rows land in different
+    partitions each time, and every row still survives with its
+    global dense rank."""
+    import random
+
+    from xesmf_spark.relational import dense_rank_distributed
+
+    shuffled = F.udf(lambda _: random.random(), "double").asNondeterministic()
+    random.seed(5)
+    rows = [(random.randint(0, 400), random.randint(0, 3)) for _ in range(3000)]
+    df = (
+        spark.createDataFrame(rows, "a long, b long")
+        .withColumn("__r", shuffled("a"))
+        .repartition(4, "__r")
+        .drop("__r")
+    )
+    want = {v: i + 1 for i, v in enumerate(sorted(set(rows)))}
+    # each consumer runs the input's shuffle itself (no exchange reuse),
+    # and small shuffles keep all their partitions (no coalescing)
+    confs = {"spark.sql.exchange.reuse": "false", "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        ranked = dense_rank_distributed(df, ["a", "b"], "rk")
+        spark.catalog.clearCache()
+        got = ranked.collect()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert len(got) == len(rows)
+    assert all(want[(r.a, r.b)] == r.rk for r in got)
 
 
 def test_suffix_ranks_matches_string_sort(spark):

@@ -58,13 +58,16 @@ def _arange_n(start: float, stop: float, step: float) -> int:
     return n
 
 
-def _axis_bounds(k: Column, start_b: float, step: float) -> tuple[Column, Column]:
-    """Bounds of 1-D cell ``k``: ``start + k*step`` and ``start + (k+1)*step``
-    — ``np.arange``'s own arithmetic, so every value is bit-identical to
-    the reference's bounds array (and to :func:`_axis_geometry`)."""
-    lo = F.lit(float(start_b)) + k.cast("double") * F.lit(float(step))
-    hi = F.lit(float(start_b)) + (k + 1).cast("double") * F.lit(float(step))
-    return lo, hi
+def _bounds_sql(k: str, start_b: float, step: float) -> tuple[str, str]:
+    """SQL bounds of 1-D cell ``k``: ``start + k*step`` and
+    ``start + (k+1)*step`` with double literals — ``np.arange``'s own
+    arithmetic, so every value is bit-identical to the reference's
+    bounds array (and to :func:`_axis_geometry`)."""
+    start, step = repr(float(start_b)) + "D", repr(float(step)) + "D"
+    return (
+        f"({start} + CAST({k} AS DOUBLE) * {step})",
+        f"({start} + CAST(({k} + 1) AS DOUBLE) * {step})",
+    )
 
 
 def _axis_geometry(start_b: float, step: float, n_cells: int) -> tuple[np.ndarray, np.ndarray]:
@@ -83,11 +86,10 @@ def grid_1d(
     Returns (axis DataFrame, n_cells).
     """
     n_cells = _arange_n(start_b, end_b + step, step) - 1
-    lo, hi = _axis_bounds(F.col("id"), start_b, step)
-    ax = spark.range(n_cells).select(
-        F.col("id").alias(idx_name), lo.alias("lo"), hi.alias("hi")
+    lo, hi = _bounds_sql("id", start_b, step)
+    ax = spark.range(n_cells).selectExpr(
+        f"id AS {idx_name}", f"{lo} AS lo", f"{hi} AS hi", f"({lo} + {hi}) / 2.0D AS c"
     )
-    ax = ax.withColumn("c", (F.col("lo") + F.col("hi")) / F.lit(2.0))
     return ax, n_cells
 
 
@@ -281,35 +283,29 @@ def grid_2d(
 ) -> Grid:
     """Rectilinear 2-D grid (xesmf/util.py:31-69) as a cell DataFrame.
 
-    One ``spark.range`` over the flattened cells with ``j = id div n_x``
-    and ``i = id % n_x``; each index goes through :func:`grid_1d`'s
-    bound formula, so the table equals the meshgrid of the two axes
-    value for value, with no join.
+    One ``spark.range`` over the flattened cells and ONE SQL projection
+    with ``j = id div n_x`` and ``i = id % n_x``; each index goes
+    through :func:`grid_1d`'s bound formula (:func:`_bounds_sql`), so
+    the table equals the meshgrid of the two axes value for value, with
+    no join. A single ``selectExpr`` is one call into the JVM, where
+    building the same projection from Column operators costs one per
+    operator.
     """
     n_x = _arange_n(lon0_b, lon1_b + d_lon, d_lon) - 1
     n_y = _arange_n(lat0_b, lat1_b + d_lat, d_lat) - 1
-    j, i = F.expr(f"id div {n_x}"), F.col("id") % F.lit(n_x)
-    lon_lo, lon_hi = _axis_bounds(i, lon0_b, d_lon)
-    lat_lo, lat_hi = _axis_bounds(j, lat0_b, d_lat)
-    cells = spark.range(n_y * n_x).select(
-        F.col("id").alias("cell_id"),
-        j.alias("j"),
-        i.alias("i"),
-        lon_lo.alias("lon_lo"),
-        lon_hi.alias("lon_hi"),
-        lat_lo.alias("lat_lo"),
-        lat_hi.alias("lat_hi"),
-    )
-    cells = cells.select(
-        "cell_id",
-        "j",
-        "i",
-        ((F.col("lon_lo") + F.col("lon_hi")) / F.lit(2.0)).alias("lon"),
-        ((F.col("lat_lo") + F.col("lat_hi")) / F.lit(2.0)).alias("lat"),
-        "lon_lo",
-        "lon_hi",
-        "lat_lo",
-        "lat_hi",
+    j, i = f"(id div {n_x})", f"(id % {n_x})"
+    lon_lo, lon_hi = _bounds_sql(i, lon0_b, d_lon)
+    lat_lo, lat_hi = _bounds_sql(j, lat0_b, d_lat)
+    cells = spark.range(n_y * n_x).selectExpr(
+        "id AS cell_id",
+        f"{j} AS j",
+        f"{i} AS i",
+        f"({lon_lo} + {lon_hi}) / 2.0D AS lon",
+        f"({lat_lo} + {lat_hi}) / 2.0D AS lat",
+        f"{lon_lo} AS lon_lo",
+        f"{lon_hi} AS lon_hi",
+        f"{lat_lo} AS lat_lo",
+        f"{lat_hi} AS lat_hi",
     )
     lon, lon_b = _axis_geometry(lon0_b, d_lon, n_x)
     lat, lat_b = _axis_geometry(lat0_b, d_lat, n_y)

@@ -13,6 +13,7 @@ sides (see oracle.py docstring).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2899,21 +2900,20 @@ def events_geomean_udaf(spark, sf_dir):
     like this one belongs in built-ins (exp(avg(ln))) — the pandas_udf
     form is for genuinely non-decomposable custom aggregates; the
     oracle uses the decomposed form, proving the equivalence."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # functionType passed explicitly: this module's
-    # `from __future__ import annotations` stringifies type hints, which
-    # defeats pandas_udf's signature-based eval-type inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
+    # Series -> scalar type hints make these GROUPED_AGG pandas UDFs;
+    # `from __future__ import annotations` leaves the hints as strings,
+    # which pandas_udf resolves against this module's globals — hence
+    # the module-level `import pandas as pd`
+    @F.pandas_udf("double")
+    def geomean(v: pd.Series) -> float:
         import numpy as np
 
         return float(np.exp(np.mean(np.log(v.to_numpy()))))
 
     # grouped-agg pandas UDFs cannot mix with built-in aggregates in
     # one agg, so the row count is a (trivial) second pandas UDAF
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_rows(v):
+    @F.pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
         return len(v)
 
     # geometric mean is defined on positive values only — sf0.1 events
@@ -5366,12 +5366,12 @@ def documents_suffix_ranks(spark, sf_dir):
     documents' normalized text dense-ranked by its first 16
     characters, log2(16) = 4 rounds of one keyed equi-join + one
     TWO-PHASE distributed dense rank (relational.
-    dense_rank_distributed: range repartition + per-partition window +
-    O(#partitions) offset broadcast — NO single-partition global
-    window anywhere).  Oracle = DENSE_RANK over substr(ntext, pos+1,
-    16): string order and sentinel-padded block order agree, the
-    classical doubling correctness argument, here pinned by hash every
-    round."""
+    dense_rank_distributed: ranges from one driver-side key sample +
+    per-range window + O(#ranges) offset broadcast — NO
+    single-partition global window anywhere).  Oracle = DENSE_RANK
+    over substr(ntext, pos+1, 16): string order and sentinel-padded
+    block order agree, the classical doubling correctness argument,
+    here pinned by hash every round."""
     from xesmf_spark.pipeline import normalize_text
     from xesmf_spark.relational import suffix_ranks
 

@@ -2453,6 +2453,24 @@ def pagerank_personalized(
     return ranks
 
 
+#: keys sampled per range when dense_rank_distributed draws its
+#: boundaries (Spark's RangePartitioner samples about 20 per partition)
+_RANK_SAMPLE_PER_RANGE = 20
+
+
+def _spark_order(v):
+    """Sort key that orders collected values as Spark's ascending sort
+    does: NULL first, NaN after every other number, structs and arrays
+    field by field."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    if isinstance(v, (tuple, list)):
+        return (1, tuple(_spark_order(x) for x in v))
+    return (1, v)
+
+
 def dense_rank_distributed(
     df: DataFrame, cols: list[str], out_col: str = "rank"
 ) -> DataFrame:
@@ -2461,45 +2479,56 @@ def dense_rank_distributed(
     ``Window.orderBy(...)`` (no partitionBy) would serialize the whole
     relation through one task:
 
-    1. ``repartitionByRange(cols)`` — a distributed range-partitioned
-       shuffle; equal keys land in one partition, partitions are
-       sorted ranges.
-    2. a PER-PARTITION dense_rank (window partitioned by
-       ``spark_partition_id()`` — parallel, no global sort), plus a
-       tiny per-partition distinct-count table.
-    3. cumulative offsets over that partition-count table (one window
-       over O(#partitions) rows) broadcast-joined back:
+    1. range boundaries from ONE driver-side sample of the keys
+       (a uniform random top-k, in Spark's order), written into the plan
+       as literals; each row's range ``__pid`` is a binary search of
+       its key among them — a deterministic, monotone function of the
+       key, so equal keys share a range and ranges are ordered.
+    2. a PER-RANGE dense_rank (window partitioned by ``__pid`` —
+       parallel, no global sort), plus a tiny per-range distinct-count
+       table.
+    3. cumulative offsets over that count table (one window over
+       O(#ranges) rows) broadcast-joined back:
        global rank = local rank + offset.
 
-    The result is independent of WHERE the range boundaries fall (rank
-    is a pure function of the ordering), so partition count and
-    sampling cannot change values — which is what makes the op
-    oracle-checkable.  Ranks are 1-based and dense.  NULL ordering
-    follows Spark's default (NULLS FIRST ascending) — callers that
-    mirror a DuckDB oracle should avoid NULL keys."""
+    The result is independent of WHERE the boundaries fall (rank is a
+    pure function of the ordering), so partition count and sampling
+    cannot change values — which is what makes the op oracle-checkable.
+    Because ``__pid`` is computed from the key alone, every execution
+    of the lineage agrees on it: the pin of the locally ranked rows
+    (consumed by the counts and by the join-back) saves a re-execution,
+    it does not hold the result together. Ranks are 1-based and dense.
+    NULL ordering follows Spark's default (NULLS FIRST ascending) —
+    callers that mirror a DuckDB oracle should avoid NULL keys."""
     if not cols:
         raise ValueError("cols must be non-empty")
+    from xesmf_spark.session import shuffle_partition_count
+
+    n_ranges = shuffle_partition_count(df.sparkSession)
+    key = F.struct(*[F.col(c) for c in cols])
+    # the sample executes the input once, as repartitionByRange's own
+    # sampling did; callers with an expensive input checkpoint it per
+    # round (an input persist regressed the suffix operators in r15)
+    top = df.select(key.alias("k")).orderBy(F.rand(7)).limit(_RANK_SAMPLE_PER_RANGE * n_ranges)
+    sample = sorted((r[0] for r in top.collect()), key=_spark_order)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    picks = [sample[p * len(sample) // n_ranges] for p in range(1, n_ranges)] if sample else []
+    bounds = [F.struct(*[F.lit(b[c]).cast(types[c]).alias(c) for c in cols]) for b in picks]
+
+    def range_of(lo: int, hi: int):
+        # the number of bounds <= key, searched among bounds[lo:hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(key < bounds[mid], range_of(lo, mid)).otherwise(range_of(mid + 1, hi))
+
     order = [F.col(c).asc() for c in cols]
-    # repartitionByRange executes its child twice (range-boundary
-    # sampling + the shuffle).  An input persist was TRIED in the r15
-    # optimization round and regressed the suffix operators (the
-    # callers now feed this a cheap projection over a checkpointed
-    # frame, so the cache write costs more than the re-execution) —
-    # callers with an expensive input should checkpoint/persist it
-    # themselves, as suffix_ranks/longest_repeats do per round.
-    d = df.repartitionByRange(*[F.col(c) for c in cols]).withColumn(
-        "__pid", F.spark_partition_id()
-    )
     w = Window.partitionBy("__pid").orderBy(*order)
-    # local is consumed TWICE (offset counts + the join-back); the
-    # persist is CORRECTNESS-load-bearing, not a cache: un-persisted,
-    # each consumer re-executes the lineage and repartitionByRange
-    # RE-SAMPLES its boundaries, so the two executions assign
-    # DIFFERENT __pid values and the offset join keys diverge
-    # (measured on the sf0.1 suffix corpus: 265k of 1.48M rows
-    # survive, silently).  It also removes the r11 iterative-op
-    # lineage doubling for callers like suffix_ranks.
-    local = pin(d.withColumn("__lr", F.dense_rank().over(w)))
+    local = pin(
+        df.withColumn("__pid", range_of(0, len(bounds))).withColumn(
+            "__lr", F.dense_rank().over(w)
+        )
+    )
     counts = local.groupBy("__pid").agg(F.max("__lr").alias("__n"))
     woff = (
         Window.orderBy("__pid")

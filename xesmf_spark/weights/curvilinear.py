@@ -37,9 +37,10 @@ mod nlon, the point shifted by whole turns into the quad's frame), so
 meshes straddling the ±180° antimeridian — global tripolar/rotated
 grids — regrid correctly in either lon convention (±180 or 0..360).
 The reference gets this for free from ESMF's 3-D Cartesian internals
-(xesmf/backend.py:44-45). The bin width and wrap rules are the clip
-builder's (conservative_clip._snap_bins), so both mesh builders bin
-quads alike.
+(xesmf/backend.py:44-45). The width snap and wrap rules are the clip
+builder's (conservative_clip._snap_bins); the width itself is the
+mesh's median quad extent, so a regional mesh gets bins as fine as a
+global one of the same resolution.
 
 Limitations (documented, mirroring SURVEY.md §7 phase-7 scope):
 - planar approximation in lon/lat space (adequate away from the poles
@@ -67,6 +68,10 @@ _OUT_SCHEMA = "row long, col long, S double"
 #: |a| below this -> the quad is a parallelogram and the quadratic
 #: degenerates to the linear case
 _EPS = 1e-12
+
+#: narrowest bin, degrees: bounds the bin count of a vanishingly fine
+#: (or collapsed) mesh
+_MIN_BIN_DEG = 1e-3
 
 #: destination points located per numpy pass — bounds the (point,
 #: candidate quad) arrays of one pass
@@ -130,13 +135,16 @@ class BinIndex(NamedTuple):
 
 def _bin_index(lon: np.ndarray, lat: np.ndarray) -> BinIndex:
     """Index every quad under each bin its localized bounding box
-    overlaps (lon-bin range wrapped mod nlon), about two source cells
-    per bin, snapped so ``nlon * bin_deg == 360``. A point inside a quad
-    lies in its box, so the point's bin always lists the quad."""
+    overlaps (lon-bin range wrapped mod nlon). A bin is as wide as the
+    median quad box is on its longer side — sized from the mesh itself,
+    whatever share of the globe it spans — and snapped so
+    ``nlon * bin_deg == 360``. A point inside a quad lies in its box,
+    so the point's bin always lists the quad."""
     n_y, n_x = lon.shape
-    nlon, bin_deg = _snap_bins(max(0.5, 2.0 * 360.0 / n_x))
     q = np.arange((n_y - 1) * (n_x - 1))
     x, y = _quad_corners(lon, lat, *np.divmod(q, n_x - 1))
+    extent = np.nanmedian(np.maximum(np.ptp(x, axis=0), np.ptp(y, axis=0))) if q.size else 360.0
+    nlon, bin_deg = _snap_bins(max(_MIN_BIN_DEG, extent))
     bx0, by0 = _bin(x.min(axis=0), 180.0, bin_deg), _bin(y.min(axis=0), 90.0, bin_deg)
     nbx = _bin(x.max(axis=0), 180.0, bin_deg) - bx0 + 1
     nby = _bin(y.max(axis=0), 90.0, bin_deg) - by0 + 1
