@@ -286,10 +286,10 @@ def _run_workloads(spark, sf_dir, timings, timed):
         "weight_conservative_clip_240k_to_120k",
         lambda: conservative_weights_clip(g_in, g_out).count(),
     )
-    # the same pair FORCED through the general Sutherland-Hodgman
-    # kernel (curvilinear metadata flag): the rectilinear bench pair
-    # otherwise takes the closed-form JVM path, and the honest general
-    # path must stay measured
+    # the same pair with the curvilinear metadata flag set: the clip
+    # builder reads the rectilinear geometry's rings either way, so
+    # both keys time the same Sutherland-Hodgman path (the key is kept
+    # so bench records stay comparable across rounds)
     from dataclasses import replace as _dc_replace
 
     g_in_c = _dc_replace(g_in, curvilinear=True)

@@ -594,17 +594,28 @@ def test_patch_onto_curvilinear_across_seam_and_poles(spark):
 # ---------------------------------------------------------------------------
 
 
+def _cornered_pair(spark):
+    """A rotated regional mesh with corner nodes and a rectilinear
+    destination inside it."""
+    from xesmf_spark.grids import grid_2d
+
+    lonc, latc, lonb, latb = _rotated_nodes(15, 20, 15.0)
+    src = grid_from_2d_arrays(spark, lonc, latc, lon_b=lonb, lat_b=latb)
+    return src, grid_2d(spark, -20, 20, 4.0, -5, 25, 3.0)
+
+
 def _curvilinear_builds(spark):
     from xesmf_spark.queries import _curvilinear_pair
-    from xesmf_spark.weights import patch_weights
+    from xesmf_spark.weights import conservative_weights, patch_weights
 
     return {
         "bilinear": lambda: bilinear_weights(*_curvilinear_pair(spark)),
         "patch": lambda: patch_weights(*_curvilinear_pair(spark)),
+        "conservative": lambda: conservative_weights(*_cornered_pair(spark)),
     }
 
 
-@pytest.mark.parametrize("method", ["bilinear", "patch"])
+@pytest.mark.parametrize("method", ["bilinear", "patch", "conservative"])
 def test_curvilinear_weights_run_without_codegen_fallback(spark, method):
     """The weights plan compiles: with the interpreted fallback switched
     off, a too-large generated method would raise instead of logging."""
@@ -615,15 +626,52 @@ def test_curvilinear_weights_run_without_codegen_fallback(spark, method):
         rows = _curvilinear_builds(spark)[method]().collect()
     finally:
         spark.conf.set(key, old)
-    assert len(rows) == {"bilinear": 256, "patch": 1024}[method]
+    assert len(rows) == {"bilinear": 256, "patch": 1024, "conservative": 391}[method]
 
 
-@pytest.mark.parametrize("method", ["bilinear", "patch"])
+@pytest.mark.parametrize("method", ["bilinear", "patch", "conservative"])
 def test_curvilinear_weights_plan_is_one_map_over_destination(spark, method):
-    """The mesh and its bin index are broadcast from the driver, so the
-    weights plan is one mapInPandas over the destination cells: no
-    shuffle, no window."""
+    """The mesh (or its corner rings) and its bin index are broadcast
+    from the driver, so the weights plan is one mapInPandas over the
+    destination cells: no shuffle, no window."""
     w = _curvilinear_builds(spark)[method]()
     plan = w._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Window" not in plan, plan
     assert plan.count("MapInPandas") == 1, plan
+
+
+def test_conservative_clip_builds_without_a_job_and_collects_in_one(spark, jobs_in):
+    """The source rings come from the grid's driver-side geometry, so
+    building the clip weights launches no job and collecting them is a
+    single job: the map over the destination cells."""
+    from xesmf_spark.weights import conservative_weights
+
+    src, dst = _cornered_pair(spark)
+    w, jobs = jobs_in(lambda: conservative_weights(src, dst))
+    assert jobs == 0
+    rows, jobs = jobs_in(w.collect)
+    assert len(rows) == 391
+    assert jobs == 1
+
+
+def test_conservative_clip_hand_built_grids_match_constructor_grids(spark):
+    """Grids built by hand around the constructors' cell tables (corner
+    columns, or interval bounds) read their rings from the cell table
+    and give the very same triplets."""
+    import numpy as np
+
+    from xesmf_spark.grids import Grid
+    from xesmf_spark.weights import conservative_weights_clip
+
+    def bare(g):
+        return Grid(df=g.df, shape=g.shape, has_bounds=g.has_bounds, curvilinear=g.curvilinear)
+
+    def triplets(w):
+        pdf = w.toPandas().sort_values(["row", "col"])
+        return [pdf[c].to_numpy() for c in ("row", "col", "S")]
+
+    src, dst = _cornered_pair(spark)
+    want = triplets(conservative_weights_clip(src, dst))
+    got = triplets(conservative_weights_clip(bare(src), bare(dst)))
+    assert len(want[0]) == 391
+    assert all(np.array_equal(a, b) for a, b in zip(got, want))

@@ -223,6 +223,35 @@ def test_mesh_is_the_pivoted_cell_table(spark, jobs_in):
         assert jobs_in(lambda: bare.mesh) == (mesh, 0)
 
 
+def test_rings_are_the_pivoted_cell_quads(spark, jobs_in):
+    """Grid.rings of a constructor-built grid with bounds comes from its
+    driver-side geometry (no job) and equals the cell table's corner
+    ring pivoted by cell_id; a hand-built Grid pays one collect, once.
+    A grid without bounds has no rings."""
+    import numpy as np
+
+    from xesmf_spark.grids import Grid, cell_quads
+
+    for name, g in _constructor_grids(spark).items():
+        bare = Grid(df=g.df, shape=g.shape, has_bounds=g.has_bounds, curvilinear=g.curvilinear)
+        if not g.has_bounds:
+            for grid in (g, bare):
+                with pytest.raises(KeyError, match="corners"):
+                    grid.rings
+            continue
+        pdf = cell_quads(g, "").toPandas().sort_values("id")
+        want = [pdf[[f"{ax}{k}" for k in range(4)]].to_numpy().T for ax in ("x", "y")]
+        rings, jobs = jobs_in(lambda: g.rings)
+        assert jobs == 0, name
+        assert all(not a.flags.writeable and a.shape == (4, g.n_cells) for a in rings), name
+        assert all(np.array_equal(a, b) for a, b in zip(rings, want)), name
+
+        rings, jobs = jobs_in(lambda: bare.rings)
+        assert jobs == 1, name
+        assert all(np.array_equal(a, b) for a, b in zip(rings, want)), name
+        assert jobs_in(lambda: bare.rings) == (rings, 0)
+
+
 def test_grid_2d_is_one_projection_over_range(spark):
     """The cell table is built by one SQL projection: its analyzed plan
     is a single Project directly over the Range."""

@@ -12,7 +12,8 @@ import hashlib
 import numpy as np
 import pytest
 
-from xesmf_spark.grids import grid_from_2d_arrays, grid_global
+from tests.test_curvilinear import _rotated_nodes, _seam_mesh
+from xesmf_spark.grids import grid_2d, grid_from_2d_arrays, grid_global
 from xesmf_spark.queries import _curvilinear_pair, _fixture_grids, _locstream_pair
 from xesmf_spark.weights import (
     bilinear_weights,
@@ -30,6 +31,10 @@ def _global_mesh_pair(spark):
     lon, lat = np.meshgrid(g.geometry.lon, g.geometry.lat)
     src = grid_from_2d_arrays(spark, lon, lat, periodic=True)
     return src, grid_global(spark, 15, 9)
+
+
+def _cornered(spark, lonc, latc, lonb, latb):
+    return grid_from_2d_arrays(spark, lonc, latc, lon_b=lonb, lat_b=latb)
 
 
 CASES = {
@@ -58,6 +63,22 @@ CASES = {
     "conservative_clip": (
         lambda s: conservative_weights(*_fixture_grids(s), strategy="clip"),
         "ce98491cdd60abeb95862a22034b1cd4",
+    ),
+    # curvilinear sources with corner nodes take the clipper's
+    # seam-aware candidate search: a rotated regional mesh, and a
+    # rotated mesh straddling the ±180° seam in the wrapped convention
+    "conservative_clip_curvilinear": (
+        lambda s: conservative_weights(
+            _cornered(s, *_rotated_nodes(15, 20, 15.0)), grid_2d(s, -20, 20, 4.0, -5, 25, 3.0)
+        ),
+        "7295265c68f3b11597042be6c0a4cf6a",
+    ),
+    "conservative_clip_seam": (
+        lambda s: conservative_weights(
+            _cornered(s, *_seam_mesh(6, 8, 12.0, wrap=True)),
+            grid_2d(s, 165.0, 195.0, 3.0, -12.0, 12.0, 3.0),
+        ),
+        "22eb35e52e5cf10a4edc70c701a0a2a7",
     ),
     "nearest_s2d_broadcast": (
         lambda s: nearest_weights(*_fixture_grids(s), direction="s2d", strategy="broadcast"),

@@ -28,9 +28,10 @@ grid's :class:`Geometry` — the 1-D axes of a rectilinear grid, or the
 arrays a curvilinear mesh or point list was built from. The facts a
 Regridder construction checks (latitude range, degenerate cells, the
 weight-cache digest), the 1-D axes the rectilinear weight builders
-work on (:attr:`Grid.axes`) and the 2-D centers the curvilinear-source
-builders broadcast (:attr:`Grid.mesh`) are read from it with numpy,
-launching no Spark job.
+work on (:attr:`Grid.axes`), the 2-D centers the curvilinear-source
+builders broadcast (:attr:`Grid.mesh`) and the cell corner rings the
+polygon-clipping builder broadcasts (:attr:`Grid.rings`) are read from
+it with numpy, launching no Spark job.
 """
 
 from __future__ import annotations
@@ -100,6 +101,22 @@ def _frozen(a) -> np.ndarray:
     return a
 
 
+#: corner offsets ``(dj, di)`` of a cell's ring, the reference's corner
+#: order: (j,i) -> (j,i+1) -> (j+1,i+1) -> (j+1,i)
+_RING = ((0, 0), (0, 1), (1, 1), (1, 0))
+
+#: the ring as cell-table columns, carried by curvilinear grids built
+#: with corner nodes (:func:`grid_from_2d_arrays`)
+CORNER_COLS = tuple(f"c{ax}{k}" for k in range(4) for ax in ("lon", "lat"))
+
+
+def node_ring(b: np.ndarray) -> np.ndarray:
+    """The 4 ring corners of every cell of the (n_y+1, n_x+1) corner-node
+    array ``b``, as one ``(4, n_y, n_x)`` array in :data:`_RING` order."""
+    n_y, n_x = b.shape[0] - 1, b.shape[1] - 1
+    return np.stack([b[dj : dj + n_y, di : di + n_x] for dj, di in _RING])
+
+
 @dataclass(frozen=True, eq=False)
 class Geometry:
     """Driver-side record of a grid's cell geometry, in degrees — what
@@ -147,18 +164,13 @@ class Geometry:
             good_x = int(np.count_nonzero(self.lon_b[1:] != self.lon_b[:-1]))
             good_y = int(np.count_nonzero(self.lat_b[1:] != self.lat_b[:-1]))
             return self.lon.size * self.lat.size - good_x * good_y
-        n_y, n_x = self.lon.shape
-        ring = ((0, 0), (0, 1), (1, 1), (1, 0))  # (j,i) -> (j,i+1) -> (j+1,i+1) -> (j+1,i)
-        cx = [self.lon_b[dj : dj + n_y, di : di + n_x] for dj, di in ring]
-        cy = [self.lat_b[dj : dj + n_y, di : di + n_x] for dj, di in ring]
-        xs = [np.radians(c) for c in cx]
-        ys = [np.sin(np.radians(c)) for c in cy]
+        cx, cy = node_ring(self.lon_b), node_ring(self.lat_b)
+        xs, ys = np.radians(cx), np.sin(np.radians(cy))
         area2 = sum(xs[k] * ys[(k + 1) % 4] - xs[(k + 1) % 4] * ys[k] for k in range(4))
         deg = np.abs(area2) < 1e-16
         # a ring with fewer than 4 distinct nodes at 12 decimals (numpy
         # rounds exact ties to even where Spark's round() rounds half up)
-        rx = [np.round(c, 12) for c in cx]
-        ry = [np.round(c, 12) for c in cy]
+        rx, ry = np.round(cx, 12), np.round(cy, 12)
         for a in range(4):
             for b in range(a + 1, 4):
                 deg |= (rx[a] == rx[b]) & (ry[a] == ry[b])
@@ -269,6 +281,29 @@ class Grid:
         if g.rectilinear:
             return np.broadcast_to(g.lon, self.shape), np.broadcast_to(g.lat[:, None], self.shape)
         return g.lon, g.lat
+
+    @cached_property
+    def rings(self) -> tuple[np.ndarray, np.ndarray]:
+        """The ``(lon, lat)`` corner rings of the cells as read-only
+        ``(4, n_cells)`` numpy arrays in :func:`node_ring` order,
+        ``[:, k]`` = cell ``k``. Read from :attr:`geometry`: the corner
+        nodes of a curvilinear mesh, the axis bounds of a rectilinear
+        grid; a hand-built Grid pays ONE collect of :func:`cell_quads`.
+        Either way, once per Grid. Raises KeyError on a grid without
+        bounds."""
+        g = self.geometry
+        if g is None:
+            return _cell_table_rings(self)
+        if g.lon_b is None:
+            raise KeyError(_NO_CORNERS)
+        lon_b, lat_b = g.lon_b, g.lat_b
+        if g.rectilinear:
+            nodes = (self.n_y + 1, self.n_x + 1)
+            lon_b, lat_b = np.broadcast_to(lon_b, nodes), np.broadcast_to(lat_b[:, None], nodes)
+        x, y = (node_ring(b).reshape(4, self.n_cells) for b in (lon_b, lat_b))
+        x.setflags(write=False)
+        y.setflags(write=False)
+        return x, y
 
 
 def grid_2d(
@@ -451,11 +486,10 @@ def grid_from_2d_arrays(
     }
     schema = "cell_id bigint, j bigint, i bigint, lon double, lat double"
     if has_corners:
-        # node ring (j,i) -> (j,i+1) -> (j+1,i+1) -> (j+1,i)
-        ring = ((0, 0), (0, 1), (1, 1), (1, 0))
-        for k, (dj, di) in enumerate(ring):
-            cols[f"clon{k}"] = lon_b[dj : dj + n_y, di : di + n_x].ravel()
-            cols[f"clat{k}"] = lat_b[dj : dj + n_y, di : di + n_x].ravel()
+        cx, cy = node_ring(lon_b), node_ring(lat_b)
+        for k in range(4):
+            cols[f"clon{k}"] = cx[k].ravel()
+            cols[f"clat{k}"] = cy[k].ravel()
         schema += "".join(
             f", clon{k} double, clat{k} double" for k in range(4)
         )
@@ -515,10 +549,36 @@ def wave_smooth(lon: Column | str = "lon", lat: Column | str = "lat") -> Column:
 def wrap_lon(c: Column) -> Column:
     """Longitude wrapped into [-180, 180) — pure Column arithmetic.
     ``wrap_lon(x - ref) + ref`` localizes ``x`` into the frame of
-    ``ref`` (within ±180°), the idiom the seam-aware builders use so a
-    cell straddling the ±180° antimeridian stays CONTIGUOUS instead of
-    exploding into a 360°-wide bbox."""
+    ``ref`` (within ±180°), so a cell straddling the ±180° antimeridian
+    stays CONTIGUOUS instead of exploding into a 360°-wide bbox. The
+    seam-aware weight builders apply the same arithmetic in numpy
+    (``weights.curvilinear._localize``)."""
     return c - F.lit(360.0) * F.floor((c + F.lit(180.0)) / F.lit(360.0))
+
+
+_NO_CORNERS = (
+    "conservative method requires cell corners: interval bounds "
+    "(rectilinear) or corner arrays lon_b/lat_b (curvilinear)"
+)
+
+
+def cell_quads(g: Grid, prefix: str) -> DataFrame:
+    """Per-cell corner ring as 8 columns ``{prefix}x0..3, {prefix}y0..3``
+    (degrees, ring order) plus ``{prefix}id``. Rectilinear grids derive
+    the ring from their interval bounds; curvilinear grids must carry
+    ``CORNER_COLS`` (ingested corner nodes)."""
+    p = prefix
+    if all(c in g.df.columns for c in CORNER_COLS):
+        ring = [(f"clon{k}", f"clat{k}") for k in range(4)]
+    elif g.has_bounds:
+        ring = [("lon_lo", "lat_lo"), ("lon_hi", "lat_lo"), ("lon_hi", "lat_hi"), ("lon_lo", "lat_hi")]
+    else:
+        raise KeyError(_NO_CORNERS)
+    sel = [F.col("cell_id").alias(f"{p}id")]
+    for k, (x, y) in enumerate(ring):
+        sel.append(F.col(x).alias(f"{p}x{k}"))
+        sel.append(F.col(y).alias(f"{p}y{k}"))
+    return g.df.select(*sel)
 
 
 def _cell_table_facts(grid: Grid) -> CellFacts:
@@ -527,8 +587,7 @@ def _cell_table_facts(grid: Grid) -> CellFacts:
     sum of per-row md5 hashes over (cell_id, lon, lat [, bounds,
     corners]) rounded to 9 decimals."""
     df = grid.df
-    corner_cols = [f"c{ax}{k}" for k in range(4) for ax in ("lon", "lat")]
-    if all(c in df.columns for c in corner_cols):
+    if all(c in df.columns for c in CORNER_COLS):
         ring = F.array(
             *[
                 F.struct(
@@ -551,7 +610,7 @@ def _cell_table_facts(grid: Grid) -> CellFacts:
     else:
         deg = F.lit(False)
     cols = [F.col("cell_id").cast("string")]
-    geom_cols = ["lon", "lat", "lon_lo", "lon_hi", "lat_lo", "lat_hi"] + corner_cols
+    geom_cols = ["lon", "lat", "lon_lo", "lon_hi", "lat_lo", "lat_hi", *CORNER_COLS]
     for c in geom_cols:
         if c in df.columns:
             cols.append(F.round(F.col(c), 9).cast("string"))
@@ -595,6 +654,17 @@ def _cell_table_mesh(grid: Grid) -> tuple[np.ndarray, np.ndarray]:
     k = pdf["cell_id"].to_numpy(np.int64)
     lon[k], lat[k] = pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64)
     return _frozen(lon.reshape(grid.shape)), _frozen(lat.reshape(grid.shape))
+
+
+def _cell_table_rings(grid: Grid) -> tuple[np.ndarray, np.ndarray]:
+    """:attr:`Grid.rings` of a Grid without driver-side geometry, from
+    ONE collect of its :func:`cell_quads`."""
+    pdf = cell_quads(grid, "").toPandas()
+    x, y = np.full((2, 4, grid.n_cells), np.nan)
+    k = pdf["id"].to_numpy(np.int64)
+    x[:, k] = pdf[[f"x{c}" for c in range(4)]].to_numpy(np.float64).T
+    y[:, k] = pdf[[f"y{c}" for c in range(4)]].to_numpy(np.float64).T
+    return _frozen(x), _frozen(y)
 
 
 def count_degenerate_cells(grid: Grid) -> int:

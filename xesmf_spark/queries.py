@@ -242,12 +242,13 @@ def regrid_patch_curvilinear(spark, sf_dir, n_y: int = 20, n_x: int = 30):
 
 def regrid_conservative_clip(spark, sf_dir):
     """Conservative via the GENERAL polygon-clipping builder
-    (weights/conservative_clip.py: bin equi-join candidates + vectorized
-    Sutherland-Hodgman), forced onto the rectilinear fixture pair where
-    its spherical-area measure coincides exactly with the axis
-    decomposition — so the closed-form interval-overlap SQL oracle
-    checks the clipper's full path (binning, owner-bin dedup, clip
-    kernel, area ratio) to the value hash."""
+    (weights/conservative_clip.py: broadcast source rings + bin index,
+    one mapInPandas of vectorized Sutherland-Hodgman over the
+    destination), forced onto the rectilinear fixture pair where its
+    spherical-area measure coincides with the axis decomposition — so
+    the closed-form interval-overlap SQL oracle checks the clipper's
+    full path (bin lookup, pair dedup, seam shift, clip kernel, area
+    ratio) to the value hash."""
     g_in, g_out = _fixture_grids(spark)
     w = conservative_weights(g_in, g_out, strategy="clip")
     field = g_in.df.select("cell_id", wave_smooth().alias("value"))

@@ -17,6 +17,7 @@ weights are computed on the driver in numpy; one Spark stage — a
 broadcast cross join of the per-axis tables, or a ``mapInPandas``
 over point destinations — emits the O(nnz) triplets. Otherwise:
 - conservative: a curvilinear mesh on either side → polygon clipping
+  of each destination cell against the source cells' corner rings
   (conservative_clip.py);
 - bilinear: a curvilinear source → point-in-quad search and inverse
   bilinear map (curvilinear.py); a curvilinear or locstream
@@ -25,9 +26,10 @@ over point destinations — emits the O(nnz) triplets. Otherwise:
   located quad (patch_curvilinear.py); a curvilinear destination →
   per-point patch weights (patch.py).
 
-A curvilinear source's builders read its centers on the driver
-(``Grid.mesh``), broadcast them with a bin index, and run one
-``mapInPandas`` over the destination points; no join or shuffle.
+These general-mesh builders share one shape: they read the source on
+the driver (its centers, ``Grid.mesh``, or its corner rings,
+``Grid.rings``), broadcast it with a numpy bin index, and run one
+``mapInPandas`` over the destination cells; no join or shuffle.
 """
 
 from xesmf_spark.weights.conservative import conservative_weights

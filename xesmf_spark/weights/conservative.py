@@ -54,11 +54,12 @@ def conservative_weights(src: Grid, dst: Grid, strategy: str | None = None) -> D
     (conservative_clip.py) when either mesh is curvilinear. ``"clip"``
     forces the general builder on rectilinear pairs too (differential /
     oracle checking — both compute spherical area in the same
-    (radians(lon), sin(lat)) measure, so they agree exactly there).
+    (radians(lon), sin(lat)) measure, so they agree to fp round-off
+    there).
 
-    Unmapped destination cells simply get no rows — the apply's left
-    join + coalesce(., 0.0) reproduces ``unmapped_action=IGNORE``
-    (xesmf/backend.py:275-279).
+    Unmapped destination cells simply get no rows — the apply's
+    NULL-valued destination rows and ``coalesce(sum, 0.0)`` reproduce
+    ``unmapped_action=IGNORE`` (xesmf/backend.py:275-279).
     """
     if strategy is None:
         strategy = "clip" if (src.curvilinear or dst.curvilinear) else "axis"

@@ -14,338 +14,177 @@ AREA MEASURE — cells are treated as quadrilaterals whose edges are
 straight in the equal-area map ``(x, y) = (radians(lon), sin(lat))``
 (Lambert cylindrical). Planar area in that map IS spherical area (the
 Jacobian is 1), so for rectilinear grids — whose edges follow meridians
-and parallels, which the map keeps straight — the weights are EXACTLY
-the axis-decomposed ``conservative.py`` weights (differential-tested,
-and oracle-checked against the same closed-form SQL). For curvilinear
-edges, "straight in the map" differs from ESMF's great-circle edges by
-O(edge_length²) — the usual small-cell regime of regional models; same
-planar-approximation contract as ``curvilinear.py``. The ±180° seam is
-handled by mod-360 localization (quad corners wrapped into the first
-corner's frame, bin indices wrapped mod nlon, candidate pairs re-shifted
-into a common frame before clipping) — the reference gets this for free
+and parallels, which the map keeps straight — the weights are the
+axis-decomposed ``conservative.py`` weights to fp round-off
+(differential-tested, and oracle-checked against the same closed-form
+SQL). For curvilinear edges, "straight in the map" differs from ESMF's
+great-circle edges by O(edge_length²) — the usual small-cell regime of
+regional models; same planar-approximation contract as
+``curvilinear.py``. The ±180° seam is handled by mod-360 localization
+(ring corners wrapped into the first corner's frame, bin indices wrapped
+mod nlon, each candidate source ring shifted by whole turns into its
+destination's frame before clipping) — the reference gets this for free
 from ESMF's 3-D Cartesian internals (xesmf/backend.py:44-45). Pole-cap
 cells remain planar-approximate (the equal-area map is exact for
 meridian/parallel edges, approximate for slanted edges near the pole).
 
-Spark plan (the 100-TB shape, same skeleton as the other bucketed
-builders):
+Plan — the shape of ``curvilinear.point_weights``: the driver reads the
+source corner rings (``Grid.rings``), builds the seam-aware bin index
+over their bounding boxes with numpy (``curvilinear._bin_index``) and
+broadcasts both; ONE ``mapInPandas`` over the destination rings then,
+per slice of ``_CHUNK`` destination cells:
 
-1. CANDIDATES — each cell explodes to the coarse lat/lon bins its
-   corner bbox overlaps; source and destination join on the bin key
-   (EQUI-join — never all-pairs). A pair sharing several bins is kept
-   only in the "owner" bin containing the min-corner of the two bboxes'
-   intersection — pure arithmetic dedup, no distinct shuffle.
-2. CLIP — one Arrow-batched ``mapInPandas`` kernel Sutherland-Hodgman
-   clips each source quad against each (convex) destination quad,
-   fully vectorized over the batch: 4 clip edges x <=8 vertex slots of
-   numpy passes, no per-row Python. Iterative clipping is the one step
-   Spark's built-in Column algebra genuinely cannot express.
-3. WEIGHT — shoelace area ratio; zero-area overlaps dropped, so grazing
-   candidates cost nothing downstream.
+1. CANDIDATES — lists the bins each destination box covers, gathers
+   their source rings and keeps each (destination, source) pair once;
+2. CLIP — shifts the source ring into the destination's lon frame,
+   drops pairs whose boxes do not strictly overlap, and clips the rest
+   with a Sutherland-Hodgman pass vectorized over the pairs
+   (:func:`overlap_fractions`);
+3. WEIGHT — shoelace area ratio; overlaps below ``_MIN_S`` are dropped,
+   so grazing candidates cost nothing downstream.
+
+The weights plan holds no join, shuffle or window. Scale premise: about
+64 bytes per source cell (plus its bin index) are broadcast; the
+destination is streamed through the kernel, never collected.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from xesmf_spark.grids import Grid, wrap_lon
-
-#: corner columns carried by curvilinear grids built with corner bounds
-#: (grids.grid_from_2d_arrays(lon_b=..., lat_b=...)); order is the node
-#: ring (j,i) -> (j,i+1) -> (j+1,i+1) -> (j+1,i)
-CORNER_COLS = tuple(f"c{ax}{k}" for k in range(4) for ax in ("lon", "lat"))
+from xesmf_spark.grids import Grid, cell_quads
+from xesmf_spark.weights.curvilinear import (
+    _CHUNK,
+    _OUT_SCHEMA,
+    _bin_index,
+    _candidates,
+    _localize,
+    _round_half_up,
+)
 
 #: overlap fractions below this are clipping noise, not weights
 _MIN_S = 1e-12
 
 
-def cell_quads(g: Grid, prefix: str) -> DataFrame:
-    """Per-cell corner ring as 8 columns ``{prefix}x0..3, {prefix}y0..3``
-    (degrees, ring order) plus ``{prefix}id``. Rectilinear grids derive
-    the ring from their interval bounds; curvilinear grids must carry
-    ``CORNER_COLS`` (ingested corner nodes)."""
-    p = prefix
-    if all(c in g.df.columns for c in CORNER_COLS):
-        sel = [F.col("cell_id").alias(f"{p}id")]
-        for k in range(4):
-            sel.append(F.col(f"clon{k}").alias(f"{p}x{k}"))
-            sel.append(F.col(f"clat{k}").alias(f"{p}y{k}"))
-        return g.df.select(*sel)
-    if not g.has_bounds:
-        raise KeyError(
-            "conservative method requires cell corners: interval bounds "
-            "(rectilinear) or corner arrays lon_b/lat_b (curvilinear)"
+def overlap_fractions(sx, sy, dx, dy) -> np.ndarray:
+    """``area(s ∩ d) / area(d)`` per pair of corner rings, each argument
+    ``(m, 4)`` in degrees: subject = source ring, clip = destination
+    ring (convex), both mapped to the equal-area plane
+    (radians(lon), sin(lat)) so shoelace area IS spherical area. A
+    degenerate (zero-area) destination gets 0."""
+    SX = np.radians(sx)
+    SY = np.sin(np.radians(sy))
+    DX = np.radians(dx)
+    DY = np.sin(np.radians(dy))
+    n = SX.shape[0]
+
+    def shoelace4(X, Y):
+        return 0.5 * sum(X[:, k] * Y[:, (k + 1) % 4] - X[:, (k + 1) % 4] * Y[:, k] for k in range(4))
+
+    area_d = shoelace4(DX, DY)
+    # canonicalize the clip ring to CCW (inside = left of edges)
+    flip = area_d < 0
+    DX[flip] = DX[flip][:, ::-1]
+    DY[flip] = DY[flip][:, ::-1]
+
+    MAXV = 16  # quad clipped by 4 half-planes has <= 8 vertices
+    P = np.zeros((n, MAXV, 2))
+    P[:, :4, 0] = SX
+    P[:, :4, 1] = SY
+    cnt = np.full(n, 4, np.int64)
+    idx = np.arange(MAXV)[None, :]
+    for e in range(4):
+        ax, ay = DX[:, e, None], DY[:, e, None]
+        ex = DX[:, (e + 1) % 4, None] - ax
+        ey = DY[:, (e + 1) % 4, None] - ay
+        valid = idx < cnt[:, None]
+        pidx = (idx - 1) % np.maximum(cnt, 1)[:, None]
+        prv = np.take_along_axis(P, pidx[:, :, None].repeat(2, 2), axis=1)
+        cur = P
+        cin = ex * (cur[:, :, 1] - ay) - ey * (cur[:, :, 0] - ax) >= 0.0
+        pin = ex * (prv[:, :, 1] - ay) - ey * (prv[:, :, 0] - ax) >= 0.0
+        seg = cur - prv
+        denom = ex * seg[:, :, 1] - ey * seg[:, :, 0]
+        cp = ex * (prv[:, :, 1] - ay) - ey * (prv[:, :, 0] - ax)
+        t = -cp / np.where(denom == 0.0, 1.0, denom)
+        X = prv + t[:, :, None] * seg
+        emit_int = valid & (cin != pin)
+        emit_cur = valid & cin
+        n_emit = emit_int.astype(np.int64) + emit_cur
+        pos_end = np.cumsum(n_emit, axis=1)
+        pos0 = pos_end - n_emit
+        newP = np.zeros_like(P)
+        ri, ci = np.nonzero(emit_int)
+        newP[ri, pos0[ri, ci]] = X[ri, ci]
+        rc, cc = np.nonzero(emit_cur)
+        newP[rc, pos0[rc, cc] + emit_int[rc, cc]] = P[rc, cc]
+        P = newP
+        cnt = pos_end[:, -1]
+    valid = idx < cnt[:, None]
+    nxt = (idx + 1) % np.maximum(cnt, 1)[:, None]
+    Pn = np.take_along_axis(P, nxt[:, :, None].repeat(2, 2), axis=1)
+    a_ov = 0.5 * np.abs(
+        np.sum(
+            np.where(valid, P[:, :, 0] * Pn[:, :, 1] - Pn[:, :, 0] * P[:, :, 1], 0.0),
+            axis=1,
         )
-    lo, hi, alo, ahi = F.col("lon_lo"), F.col("lon_hi"), F.col("lat_lo"), F.col("lat_hi")
-    ring = [(lo, alo), (hi, alo), (hi, ahi), (lo, ahi)]
-    sel = [F.col("cell_id").alias(f"{p}id")]
-    for k, (x, y) in enumerate(ring):
-        sel.append(x.alias(f"{p}x{k}"))
-        sel.append(y.alias(f"{p}y{k}"))
-    return g.df.select(*sel)
-
-
-def _snap_bins(bin_deg: float) -> tuple[int, float]:
-    """(nlon, effective bin_deg) with ``nlon * bin_deg == 360`` EXACTLY.
-    The mod-nlon wrap of lon-bin indices is only a congruence when the
-    bin width divides 360 — with a non-divisor width (e.g. the
-    2-cells-per-bin default on an odd n_x) a 360° shift is a fractional
-    number of bins and seam-straddling quads land in the wrong wrapped
-    bin. Snapping the width to 360/nlon preserves the ~requested
-    granularity and restores the identity."""
-    nlon = max(1, int(round(360.0 / bin_deg)))
-    return nlon, 360.0 / nlon
-
-
-def _binned(
-    quads: DataFrame, corners: Sequence[str], p: str, bin_deg: float, nlon: int
-) -> DataFrame:
-    """SEAM-AWARE bin explode of quads whose corners are the flattened
-    ``(x, y)`` column pairs ``corners``: corner lons are first LOCALIZED
-    around the first corner (``wrap_lon(xk - x0) + wrap_lon(x0)``), so a
-    quad straddling the ±180° antimeridian keeps a contiguous, cell-width
-    bbox instead of a 360°-wide one; the bbox's lon-bin range is then
-    wrapped mod ``nlon`` so seam-crossing quads land in the bins on both
-    sides of the seam. (Assumes cells narrower than 180° — any physical
-    mesh.) Keeps the localized bbox as ``{p}xmin .. {p}ymax`` for the
-    owner-bin dedup. ``(nlon, bin_deg)`` come from :func:`_snap_bins`."""
-    x0, *x_rest = corners[::2]
-    # materialize the wrapped reference corner once: inlining it into
-    # all four corner projections quadruples the codegen surface (JIT
-    # warm-up of this stage dominates cold build time)
-    q = quads.withColumn("_ref", wrap_lon(F.col(x0)))
-    q = q.withColumns(
-        {x: F.col("_ref") + wrap_lon(F.col(x) - F.col(x0)) for x in x_rest}
-    ).withColumn(x0, F.col("_ref")).drop("_ref")
-    xs = [F.col(x) for x in corners[::2]]
-    ys = [F.col(y) for y in corners[1::2]]
-    q = (
-        q.withColumn("_xmin", F.least(*xs))
-        .withColumn("_xmax", F.greatest(*xs))
-        .withColumn("_ymin", F.least(*ys))
-        .withColumn("_ymax", F.greatest(*ys))
     )
-    bx0 = F.floor((F.col("_xmin") + 180.0) / bin_deg).cast("long")
-    bx1 = F.floor((F.col("_xmax") + 180.0) / bin_deg).cast("long")
-    by0 = F.floor((F.col("_ymin") + 90.0) / bin_deg).cast("long")
-    by1 = F.floor((F.col("_ymax") + 90.0) / bin_deg).cast("long")
-    return (
-        q.withColumn("_bx", F.explode(F.sequence(bx0, bx1)))
-        .withColumn("_by", F.explode(F.sequence(by0, by1)))
-        .withColumn(
-            "bin", F.col("_by") * F.lit(nlon) + F.pmod(F.col("_bx"), F.lit(nlon))
-        )
-        .withColumnRenamed("_xmin", f"{p}xmin")
-        .withColumnRenamed("_ymin", f"{p}ymin")
-        .withColumnRenamed("_xmax", f"{p}xmax")
-        .withColumnRenamed("_ymax", f"{p}ymax")
+    # degenerate (zero-area) destination quads get NO weights — the
+    # guarded divide keeps them finite (ignore_degenerate=True
+    # semantics; the Regridder raises on them by default before this
+    # kernel ever runs)
+    abs_d = np.abs(area_d)
+    return np.where(abs_d > 0.0, a_ov / np.where(abs_d == 0.0, 1.0, abs_d), 0.0)
+
+
+def _clip_rows(did, dx, dy, sx, sy, index) -> pd.DataFrame:
+    """Triplets of the destination cells ``did`` with localized
+    ``(4, m)`` rings ``(dx, dy)`` against the localized source rings
+    ``(sx, sy)`` indexed by ``index``."""
+    d, s = _candidates(index, dx.min(axis=0), dx.max(axis=0), dy.min(axis=0), dy.max(axis=0))
+    # a source ring sharing several bins with a destination box is
+    # listed once per bin
+    d, s = np.divmod(np.unique(d * sx.shape[1] + s), sx.shape[1])
+    # each ring was localized around its OWN first corner, so the two
+    # rings of a pair can sit in lon frames 360° apart: shift the source
+    # by the whole number of turns separating them
+    px = sx[:, s] - 360.0 * _round_half_up((sx[0, s] - dx[0, d]) / 360.0)
+    py, qx, qy = sy[:, s], dx[:, d], dy[:, d]
+    # bbox prefilter: cheap reject before the clip sees the pair
+    ok = (
+        (px.min(axis=0) < qx.max(axis=0))
+        & (px.max(axis=0) > qx.min(axis=0))
+        & (py.min(axis=0) < qy.max(axis=0))
+        & (py.max(axis=0) > qy.min(axis=0))
     )
+    d, s = d[ok], s[ok]
+    S = overlap_fractions(px[:, ok].T, py[:, ok].T, qx[:, ok].T, qy[:, ok].T)
+    keep = S > _MIN_S
+    return pd.DataFrame({"row": did[d[keep]], "col": s[keep], "S": S[keep]})
 
 
-def _clip_kernel_factory(cols_s, cols_d):
-    """Vectorized Sutherland-Hodgman over a candidate batch: subject =
-    source quad, clip = destination quad (convex), coordinates mapped to
-    the equal-area plane (radians(lon), sin(lat)) so shoelace area IS
-    spherical area."""
-
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            SX = np.radians(pdf[[c for c in cols_s[::2]]].to_numpy(np.float64))
-            SY = np.sin(np.radians(pdf[[c for c in cols_s[1::2]]].to_numpy(np.float64)))
-            DX = np.radians(pdf[[c for c in cols_d[::2]]].to_numpy(np.float64))
-            DY = np.sin(np.radians(pdf[[c for c in cols_d[1::2]]].to_numpy(np.float64)))
-
-            def shoelace4(X, Y):
-                return 0.5 * sum(
-                    X[:, k] * Y[:, (k + 1) % 4] - X[:, (k + 1) % 4] * Y[:, k]
-                    for k in range(4)
-                )
-
-            area_d = shoelace4(DX, DY)
-            # canonicalize the clip ring to CCW (inside = left of edges)
-            flip = area_d < 0
-            DX[flip] = DX[flip][:, ::-1]
-            DY[flip] = DY[flip][:, ::-1]
-
-            MAXV = 16  # quad clipped by 4 half-planes has <= 8 vertices
-            P = np.zeros((n, MAXV, 2))
-            P[:, :4, 0] = SX
-            P[:, :4, 1] = SY
-            cnt = np.full(n, 4, np.int64)
-            idx = np.arange(MAXV)[None, :]
-            for e in range(4):
-                ax, ay = DX[:, e, None], DY[:, e, None]
-                ex = DX[:, (e + 1) % 4, None] - ax
-                ey = DY[:, (e + 1) % 4, None] - ay
-                valid = idx < cnt[:, None]
-                pidx = (idx - 1) % np.maximum(cnt, 1)[:, None]
-                prv = np.take_along_axis(P, pidx[:, :, None].repeat(2, 2), axis=1)
-                cur = P
-                cin = ex * (cur[:, :, 1] - ay) - ey * (cur[:, :, 0] - ax) >= 0.0
-                pin = ex * (prv[:, :, 1] - ay) - ey * (prv[:, :, 0] - ax) >= 0.0
-                seg = cur - prv
-                denom = ex * seg[:, :, 1] - ey * seg[:, :, 0]
-                cp = ex * (prv[:, :, 1] - ay) - ey * (prv[:, :, 0] - ax)
-                t = -cp / np.where(denom == 0.0, 1.0, denom)
-                X = prv + t[:, :, None] * seg
-                emit_int = valid & (cin != pin)
-                emit_cur = valid & cin
-                n_emit = emit_int.astype(np.int64) + emit_cur
-                pos_end = np.cumsum(n_emit, axis=1)
-                pos0 = pos_end - n_emit
-                newP = np.zeros_like(P)
-                ri, ci = np.nonzero(emit_int)
-                newP[ri, pos0[ri, ci]] = X[ri, ci]
-                rc, cc = np.nonzero(emit_cur)
-                newP[rc, pos0[rc, cc] + emit_int[rc, cc]] = P[rc, cc]
-                P = newP
-                cnt = pos_end[:, -1]
-            valid = idx < cnt[:, None]
-            nxt = (idx + 1) % np.maximum(cnt, 1)[:, None]
-            Pn = np.take_along_axis(P, nxt[:, :, None].repeat(2, 2), axis=1)
-            a_ov = 0.5 * np.abs(
-                np.sum(
-                    np.where(valid, P[:, :, 0] * Pn[:, :, 1] - Pn[:, :, 0] * P[:, :, 1], 0.0),
-                    axis=1,
-                )
-            )
-            # degenerate (zero-area) destination quads get NO weights —
-            # the guarded divide keeps them finite so `keep` drops them
-            # (ignore_degenerate=True semantics; the Regridder raises on
-            # them by default before this kernel ever runs)
-            abs_d = np.abs(area_d)
-            S = a_ov / np.where(abs_d == 0.0, 1.0, abs_d)
-            keep = (S > _MIN_S) & (abs_d > 0.0)
-            yield pd.DataFrame(
-                {
-                    "row": pdf["did"].to_numpy(np.int64)[keep],
-                    "col": pdf["sid"].to_numpy(np.int64)[keep],
-                    "S": S[keep],
-                }
-            )
-
-    return kernel
-
-
-def conservative_weights_clip(
-    src: Grid, dst: Grid, bin_deg: float | None = None
-) -> DataFrame:
+def conservative_weights_clip(src: Grid, dst: Grid) -> DataFrame:
     """COO weight triplets (row, col, S) for first-order conservative
     regridding between arbitrary quad meshes (either side rectilinear or
     curvilinear-with-corners). Unmapped destination cells get no rows —
     the apply's zero-fill reproduces unmapped_action=IGNORE
     (xesmf/backend.py:275-279)."""
-    if bin_deg is None:
-        # ~3/4 of a COARSER-grid cell per bin: each quad bbox still
-        # overlaps O(1) bins (<= 2-3 per axis) while a bin holds only a
-        # handful of cells of either grid, so the bin join emits ~1-2
-        # candidates per surviving pair instead of the ~13x fan-out the
-        # old 2-cell bins produced (measured: 7.5M joined rows pruned
-        # to 585k at 2-cell bins on the 240k->120k bench pair)
-        bin_deg = max(0.5, 0.75 * 360.0 / max(min(src.n_x, dst.n_x), 1))
-    # snap the width so nlon * bin_deg == 360 EXACTLY: the mod-nlon bin
-    # wrap (and the owner-bin arithmetic on pair-frame coordinates) is
-    # only a congruence when the bin width divides 360 — a non-divisor
-    # width makes a 360° shift a fractional number of bins and drops
-    # seam-straddling candidate pairs silently
-    nlon, bin_deg = _snap_bins(bin_deg)
+    sx, sy = src.rings
+    sx, sy = _localize(sx), np.ascontiguousarray(sy)
+    shared = src.df.sparkSession.sparkContext.broadcast((sx, sy, _bin_index(sx, sy)))
+    quads = cell_quads(dst, "d")
+    xcols, ycols = [f"dx{k}" for k in range(4)], [f"dy{k}" for k in range(4)]
 
-    cols_s = [f"s{ax}{k}" for k in range(4) for ax in ("x", "y")]
-    cols_d = [f"d{ax}{k}" for k in range(4) for ax in ("x", "y")]
-    sq = _binned(cell_quads(src, "s"), cols_s, "s", bin_deg, nlon)
-    dq = _binned(cell_quads(dst, "d"), cols_d, "d", bin_deg, nlon)
+    def kernel(batches):
+        sx, sy, index = shared.value
+        for pdf in batches:
+            did = pdf["did"].to_numpy(np.int64)
+            dx = _localize(pdf[xcols].to_numpy(np.float64).T)
+            dy = pdf[ycols].to_numpy(np.float64).T
+            for k in range(0, did.size, _CHUNK):
+                c = slice(k, k + _CHUNK)
+                yield _clip_rows(did[c], dx[:, c], dy[:, c], sx, sy, index)
 
-    # PRE-PARTITION both sides by the join key at full cluster width:
-    # the join reuses these exchanges (HashPartitioning(bin, N) matches
-    # its requirement — no extra shuffle), the EXPLICIT partition count
-    # pins the stage width so AQE cannot coalesce the compute-bound
-    # probe+clip tail to a few fat partitions, and — unlike the old
-    # post-join round-robin repartition — the wide candidate rows are
-    # never shuffled at all: the bbox/owner filters run during the join
-    # probe and the Arrow kernel maps directly over the join output
-    # (the old shape pushed ALL joined pairs — 13x the survivors —
-    # through a second full shuffle before pruning them).
-    width = sq.sparkSession.sparkContext.defaultParallelism
-    sq = sq.repartition(width, "bin")
-    dq = dq.repartition(width, "bin")
-    cand = sq.join(dq, "bin")
-    # PAIR re-localization: each quad was localized around its OWN first
-    # corner, so two quads meeting in a wrapped seam bin can sit in lon
-    # frames 360° apart — shift the source quad by the whole number of
-    # turns separating the two frames before any comparison
-    cand = cand.withColumn(
-        "_shift",
-        F.lit(360.0) * F.round((F.col("sx0") - F.col("dx0")) / F.lit(360.0), 0),
-    )
-    cand = cand.withColumns(
-        {
-            c: F.col(c) - F.col("_shift")
-            for c in ["sxmin", "sxmax"] + [f"sx{k}" for k in range(4)]
-        }
-    ).drop("_shift")
-    # bbox prefilter: cheap reject before the kernel sees the pair
-    cand = cand.filter(
-        (F.col("sxmin") < F.col("dxmax"))
-        & (F.col("sxmax") > F.col("dxmin"))
-        & (F.col("symin") < F.col("dymax"))
-        & (F.col("symax") > F.col("dymin"))
-    )
-    # owner-bin dedup: a pair sharing k bins survives only in the bin
-    # holding the intersection bbox's min corner (covered by both
-    # bboxes by construction) — arithmetic, no distinct shuffle; the
-    # lon owner index wraps mod nlon exactly like the explode above, so
-    # the pair-frame coordinate (possibly outside ±180) maps to the
-    # same wrapped bin every row of the pair computes
-    ix = F.greatest("sxmin", "dxmin")
-    iy = F.greatest("symin", "dymin")
-    own = F.floor((iy + 90.0) / bin_deg).cast("long") * F.lit(nlon) + F.pmod(
-        F.floor((ix + 180.0) / bin_deg).cast("long"), F.lit(nlon)
-    )
-    cand = cand.filter(F.col("bin") == own)
-
-    # STATIC physical-strategy split. When BOTH grids are rectilinear
-    # every candidate pair is a pair of AXIS-ALIGNED rectangles by
-    # construction (cell_quads derives the ring from interval bounds),
-    # and rect∩rect area in the equal-area map is a closed form over
-    # the bboxes (monotone per-axis maps keep rectangles rectangles):
-    # the whole build stays in JVM Column arithmetic — no Python
-    # workers, no Arrow transfer of 18 corner doubles per pair, and no
-    # fp-dust weights from grazing contacts (the bbox prefilter's
-    # strict inequalities already dropped them). The split is decided
-    # from grid METADATA, not per row — a per-row filter split would
-    # execute the candidate join once per branch. Curvilinear input on
-    # either side routes every pair through the S-H kernel unchanged.
-    if not src.curvilinear and not dst.curvilinear:
-
-        def _X(c):
-            return F.radians(F.col(c))
-
-        def _Y(c):
-            return F.sin(F.radians(F.col(c)))
-
-        ox = F.least(_X("sxmax"), _X("dxmax")) - F.greatest(_X("sxmin"), _X("dxmin"))
-        oy = F.least(_Y("symax"), _Y("dymax")) - F.greatest(_Y("symin"), _Y("dymin"))
-        area_d = (_X("dxmax") - _X("dxmin")) * (_Y("dymax") - _Y("dymin"))
-        s_expr = (F.greatest(F.lit(0.0), ox) * F.greatest(F.lit(0.0), oy)) / area_d
-        return (
-            cand.filter(area_d > F.lit(0.0))
-            .select(
-                F.col("did").alias("row"),
-                F.col("sid").alias("col"),
-                s_expr.alias("S"),
-            )
-            .filter(F.col("S") > F.lit(_MIN_S))
-        )
-
-    cand = cand.select("sid", "did", *cols_s, *cols_d)
-    return cand.mapInPandas(
-        _clip_kernel_factory(cols_s, cols_d), "row long, col long, S double"
-    )
+    return quads.mapInPandas(kernel, _OUT_SCHEMA)

@@ -37,10 +37,12 @@ mod nlon, the point shifted by whole turns into the quad's frame), so
 meshes straddling the ±180° antimeridian — global tripolar/rotated
 grids — regrid correctly in either lon convention (±180 or 0..360).
 The reference gets this for free from ESMF's 3-D Cartesian internals
-(xesmf/backend.py:44-45). The width snap and wrap rules are the clip
-builder's (conservative_clip._snap_bins); the width itself is the
-mesh's median quad extent, so a regional mesh gets bins as fine as a
-global one of the same resolution.
+(xesmf/backend.py:44-45). The bin width is the mesh's median quad
+extent, snapped to divide 360 (:func:`_snap_bins`), so a regional mesh
+gets bins as fine as a global one of the same resolution. The polygon
+clipper (conservative_clip.py) indexes the source cells' corner rings
+with the same :func:`_bin_index` and looks up each destination cell's
+box with the same :func:`_candidates`.
 
 Limitations (documented, mirroring SURVEY.md §7 phase-7 scope):
 - planar approximation in lon/lat space (adequate away from the poles
@@ -61,7 +63,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from xesmf_spark.grids import Grid
-from xesmf_spark.weights.conservative_clip import _snap_bins
 
 _OUT_SCHEMA = "row long, col long, S double"
 
@@ -105,15 +106,31 @@ def _round_half_up(t: np.ndarray) -> np.ndarray:
     return np.copysign(f + (a - f >= 0.5), t)
 
 
+def _localize(x: np.ndarray) -> np.ndarray:
+    """Lons of rings ``x`` (``(k, m)``, one ring per column) in the
+    frame of each ring's wrapped first corner, so a ring straddling the
+    ±180° seam stays contiguous (cells narrower than 180°)."""
+    ref = _wrap(x[0])
+    return np.concatenate([ref[None], ref + _wrap(x[1:] - x[0])])
+
+
 def _quad_corners(lon: np.ndarray, lat: np.ndarray, j: np.ndarray, i: np.ndarray):
     """Corner centers of quads ``(j, i)`` in the order 00, 10, 01, 11:
-    ``(x, y)``, each ``(4, m)``, with the lons localized into the frame
-    of the wrapped first corner (seam-safe)."""
+    ``(x, y)``, each ``(4, m)``, with the lons localized (seam-safe)."""
     n_x = lon.shape[1]
     c = np.stack([j * n_x + i, j * n_x + i + 1, (j + 1) * n_x + i, (j + 1) * n_x + i + 1])
-    x, y = lon.reshape(-1)[c], lat.reshape(-1)[c]
-    ref = _wrap(x[0])
-    return np.concatenate([ref[None], ref + _wrap(x[1:] - x[0])]), y
+    return _localize(lon.reshape(-1)[c]), lat.reshape(-1)[c]
+
+
+def _snap_bins(bin_deg: float) -> tuple[int, float]:
+    """(nlon, effective bin_deg) with ``nlon * bin_deg == 360`` EXACTLY.
+    The mod-nlon wrap of lon-bin indices is only a congruence when the
+    bin width divides 360: with any other width a 360° shift is a
+    fractional number of bins and seam-straddling quads land in the
+    wrong wrapped bin. Snapping the width to 360/nlon preserves the
+    ~requested granularity and restores the identity."""
+    nlon = max(1, int(round(360.0 / bin_deg)))
+    return nlon, 360.0 / nlon
 
 
 def _bin(v: np.ndarray, origin: float, bin_deg: float) -> np.ndarray:
@@ -121,10 +138,22 @@ def _bin(v: np.ndarray, origin: float, bin_deg: float) -> np.ndarray:
     return np.floor((v + origin) / bin_deg).astype(np.int64)
 
 
+def _bins_of(xmin, xmax, ymin, ymax, nlon: int, bin_deg: float):
+    """``(owner, bin)``: one entry per box and each seam-aware bin it
+    overlaps (the lon-bin range wrapped mod ``nlon``), owners ascending."""
+    bx0, by0 = _bin(xmin, 180.0, bin_deg), _bin(ymin, 90.0, bin_deg)
+    nbx = _bin(xmax, 180.0, bin_deg) - bx0 + 1
+    nby = _bin(ymax, 90.0, bin_deg) - by0 + 1
+    n = nbx * nby
+    e = np.repeat(np.arange(n.size), n)
+    off = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+    return e, (by0[e] + off // nbx[e]) * nlon + np.mod(bx0[e] + off % nbx[e], nlon)
+
+
 class BinIndex(NamedTuple):
-    """The quads of a center mesh per seam-aware bin: the members of
-    bin ``keys[b]`` are ``quads[starts[b]:starts[b + 1]]``, ascending,
-    so the first hit is the lowest ``(j, i)``."""
+    """Indexed rings per seam-aware bin: the members of bin ``keys[b]``
+    are ``quads[starts[b]:starts[b + 1]]``, ascending, so the first hit
+    is the lowest ring index."""
 
     nlon: int
     bin_deg: float
@@ -133,45 +162,42 @@ class BinIndex(NamedTuple):
     quads: np.ndarray
 
 
-def _bin_index(lon: np.ndarray, lat: np.ndarray) -> BinIndex:
-    """Index every quad under each bin its localized bounding box
-    overlaps (lon-bin range wrapped mod nlon). A bin is as wide as the
-    median quad box is on its longer side — sized from the mesh itself,
-    whatever share of the globe it spans — and snapped so
-    ``nlon * bin_deg == 360``. A point inside a quad lies in its box,
-    so the point's bin always lists the quad."""
-    n_y, n_x = lon.shape
-    q = np.arange((n_y - 1) * (n_x - 1))
-    x, y = _quad_corners(lon, lat, *np.divmod(q, n_x - 1))
-    extent = np.nanmedian(np.maximum(np.ptp(x, axis=0), np.ptp(y, axis=0))) if q.size else 360.0
+def _bin_index(x: np.ndarray, y: np.ndarray) -> BinIndex:
+    """Index every ring of the localized ``(k, m)`` corner arrays
+    ``(x, y)`` under each bin its bounding box overlaps. A bin is as
+    wide as the median ring box is on its longer side — sized from the
+    mesh itself, whatever share of the globe it spans — and snapped so
+    ``nlon * bin_deg == 360``. Whatever a ring's box overlaps shares a
+    bin with it, so :func:`_candidates` lists the ring."""
+    extent = np.nanmedian(np.maximum(np.ptp(x, axis=0), np.ptp(y, axis=0))) if x.shape[1] else 360.0
     nlon, bin_deg = _snap_bins(max(_MIN_BIN_DEG, extent))
-    bx0, by0 = _bin(x.min(axis=0), 180.0, bin_deg), _bin(y.min(axis=0), 90.0, bin_deg)
-    nbx = _bin(x.max(axis=0), 180.0, bin_deg) - bx0 + 1
-    nby = _bin(y.max(axis=0), 90.0, bin_deg) - by0 + 1
-    # one entry per (quad, overlapped bin), quads ascending
-    n = nbx * nby
-    e = np.repeat(q, n)
-    off = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
-    bins = (by0[e] + off // nbx[e]) * nlon + np.mod(bx0[e] + off % nbx[e], nlon)
+    e, bins = _bins_of(x.min(axis=0), x.max(axis=0), y.min(axis=0), y.max(axis=0), nlon, bin_deg)
     order = np.argsort(bins, kind="stable")
     keys, first = np.unique(bins[order], return_index=True)
-    # a sentinel key no point hashes to, with no members, closes the table
+    # a sentinel key no box hashes to, with no members, closes the table
     keys = np.append(keys, np.iinfo(np.int64).max)
     starts = np.concatenate([first, [e.size, e.size]])
     return BinIndex(nlon, bin_deg, keys, starts, e[order])
 
 
-def _locate(lon, lat, index: BinIndex, px: np.ndarray, py: np.ndarray) -> Located:
-    """QUAD LOCATION + INVERSE BILINEAR MAP of the points ``(px, py)``
-    against the center mesh ``(lon, lat)`` indexed by ``index``."""
-    nlon, bin_deg = index.nlon, index.bin_deg
-    pb = _bin(py, 90.0, bin_deg) * nlon + np.mod(_bin(_wrap(px), 180.0, bin_deg), nlon)
+def _candidates(index: BinIndex, xmin, xmax, ymin, ymax):
+    """``(owner, ring)`` pairs: every indexed ring listed in a bin that
+    box ``owner`` overlaps, owners ascending. A ring sharing several
+    bins with a box is listed once per bin."""
+    p, pb = _bins_of(xmin, xmax, ymin, ymax, index.nlon, index.bin_deg)
     pos = np.searchsorted(index.keys, pb)
     lo = index.starts[pos]
     n = np.where(index.keys[pos] == pb, index.starts[pos + 1] - lo, 0)
-    # (point, candidate quad) pairs, each point's candidates ascending
-    p = np.repeat(np.arange(px.size), n)
-    q = index.quads[np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)]
+    return np.repeat(p, n), index.quads[np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)]
+
+
+def _locate(lon, lat, index: BinIndex, px: np.ndarray, py: np.ndarray) -> Located:
+    """QUAD LOCATION + INVERSE BILINEAR MAP of the points ``(px, py)``
+    against the center mesh ``(lon, lat)`` indexed by ``index``."""
+    # (point, candidate quad) pairs, each point's candidates ascending:
+    # a point is a box of zero width, in one bin
+    wx = _wrap(px)
+    p, q = _candidates(index, wx, wx, py, py)
     j, i = np.divmod(q, lon.shape[1] - 1)
     (x00, x10, x01, x11), (y00, y10, y01, y11) = _quad_corners(lon, lat, j, i)
     # the point, shifted by whole turns into the quad's lon frame
@@ -237,7 +263,9 @@ def point_weights(src: Grid, dst: Grid, emit) -> DataFrame:
     of points (:func:`_locate`). ``emit(pid, located, lon, lat)``
     returns the ``(row, col, S)`` frame of the located points."""
     lon, lat = (np.ascontiguousarray(a) for a in src.mesh)
-    shared = src.df.sparkSession.sparkContext.broadcast((lon, lat, _bin_index(lon, lat)))
+    n_y, n_x = lon.shape
+    quads = _quad_corners(lon, lat, *np.divmod(np.arange((n_y - 1) * (n_x - 1)), n_x - 1))
+    shared = src.df.sparkSession.sparkContext.broadcast((lon, lat, _bin_index(*quads)))
 
     def kernel(batches):
         lon, lat, index = shared.value
