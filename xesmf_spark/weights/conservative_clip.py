@@ -74,10 +74,16 @@ def overlap_fractions(sx, sy, dx, dy) -> np.ndarray:
     ring (convex), both mapped to the equal-area plane
     (radians(lon), sin(lat)) so shoelace area IS spherical area. A
     degenerate (zero-area) destination gets 0."""
-    SX = np.radians(sx)
-    SY = np.sin(np.radians(sy))
     DX = np.radians(dx)
     DY = np.sin(np.radians(dy))
+    # clip relative to the destination's first corner: area is
+    # translation-invariant, and in absolute coordinates the edge
+    # intersections of two rings sharing an edge leave fp-dust overlaps
+    # (~1e-12 of a cell) that survive _MIN_S
+    ox, oy = DX[:, :1], DY[:, :1]
+    SX = np.radians(sx) - ox
+    SY = np.sin(np.radians(sy)) - oy
+    DX, DY = DX - ox, DY - oy
     n = SX.shape[0]
 
     def shoelace4(X, Y):
