@@ -67,6 +67,11 @@ from xesmf_spark.weights.curvilinear import (
 #: overlap fractions below this are clipping noise, not weights
 _MIN_S = 1e-12
 
+#: candidate pairs clipped per numpy pass: the clip holds ~3.5 KB of
+#: temporaries per pair, and a coarse destination cell can gather
+#: hundreds of fine source cells
+_PAIRS = 16384
+
 
 def overlap_fractions(sx, sy, dx, dy) -> np.ndarray:
     """``area(s ∩ d) / area(d)`` per pair of corner rings, each argument
@@ -165,8 +170,11 @@ def _clip_rows(did, dx, dy, sx, sy, index) -> pd.DataFrame:
         & (py.min(axis=0) < qy.max(axis=0))
         & (py.max(axis=0) > qy.min(axis=0))
     )
-    d, s = d[ok], s[ok]
-    S = overlap_fractions(px[:, ok].T, py[:, ok].T, qx[:, ok].T, qy[:, ok].T)
+    d, s, px, py, qx, qy = d[ok], s[ok], px[:, ok], py[:, ok], qx[:, ok], qy[:, ok]
+    S = np.empty(d.size)
+    for k in range(0, d.size, _PAIRS):
+        c = slice(k, k + _PAIRS)
+        S[c] = overlap_fractions(px[:, c].T, py[:, c].T, qx[:, c].T, qy[:, c].T)
     keep = S > _MIN_S
     return pd.DataFrame({"row": did[d[keep]], "col": s[keep], "S": S[keep]})
 

@@ -152,14 +152,14 @@ def _bins_of(xmin, xmax, ymin, ymax, nlon: int, bin_deg: float):
 
 class BinIndex(NamedTuple):
     """Indexed rings per seam-aware bin: the members of bin ``keys[b]``
-    are ``quads[starts[b]:starts[b + 1]]``, ascending, so the first hit
+    are ``members[starts[b]:starts[b + 1]]``, ascending, so the first hit
     is the lowest ring index."""
 
     nlon: int
     bin_deg: float
     keys: np.ndarray
     starts: np.ndarray
-    quads: np.ndarray
+    members: np.ndarray
 
 
 def _bin_index(x: np.ndarray, y: np.ndarray) -> BinIndex:
@@ -188,7 +188,7 @@ def _candidates(index: BinIndex, xmin, xmax, ymin, ymax):
     pos = np.searchsorted(index.keys, pb)
     lo = index.starts[pos]
     n = np.where(index.keys[pos] == pb, index.starts[pos + 1] - lo, 0)
-    return np.repeat(p, n), index.quads[np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)]
+    return np.repeat(p, n), index.members[np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)]
 
 
 def _locate(lon, lat, index: BinIndex, px: np.ndarray, py: np.ndarray) -> Located:
