@@ -185,10 +185,10 @@ def conservative_weights_clip(src: Grid, dst: Grid) -> DataFrame:
     curvilinear-with-corners). Unmapped destination cells get no rows —
     the apply's zero-fill reproduces unmapped_action=IGNORE
     (xesmf/backend.py:275-279)."""
-    sx, sy = src.rings
-    sx, sy = _localize(sx), np.ascontiguousarray(sy)
-    shared = src.df.sparkSession.sparkContext.broadcast((sx, sy, _bin_index(sx, sy)))
     quads = cell_quads(dst, "d")
+    sx, sy = src.rings
+    sx = _localize(sx)
+    shared = src.df.sparkSession.sparkContext.broadcast((sx, sy, _bin_index(sx, sy)))
     xcols, ycols = [f"dx{k}" for k in range(4)], [f"dy{k}" for k in range(4)]
 
     def kernel(batches):
