@@ -275,7 +275,7 @@ def _run_workloads(spark, sf_dir, timings, timed):
     timed2("weight_conservative_240k_to_120k", lambda: conservative_weights(g_in, g_out).count())
     timed2(
         "weight_nearest_s2d_bucketed_240k_to_120k",
-        lambda: nearest_weights(g_in, g_out, direction="s2d", strategy="bucketed").count(),
+        lambda: nearest_weights(g_in, g_out, direction="s2d").count(),
     )
     # the general (curvilinear-capable) builders on the same pair: the
     # polygon clipper forced onto the rectilinear grids, and the

@@ -36,14 +36,12 @@ SKIP = {"stream_hourly", "stream_sliding", "stream_sessionize", "stream_dedup", 
 #:   - regrid_* weight builds: the rectilinear builders' tensor
 #:     product is a cross join against the broadcast per-axis weight
 #:     table (O(n_x) rows, computed on the driver from the grid's
-#:     axes); the nearest builders' broadcast path crosses the two
-#:     point sets, the smaller one broadcast (below BROADCAST_LIMIT)
+#:     axes)
 #:   - events_user_setops: a 1-row min(ts) scalar broadcast
-#:   - knn_top3: the 1-row exactness-bound scalar in the rescue path
 _REGRID_AXIS_BNLJ = {
     "regrid_conservative",
     "regrid_bilinear_periodic", "regrid_bilinear_noperiodic",
-    "regrid_patch", "regrid_nearest_s2d", "regrid_nearest_d2s",
+    "regrid_patch",
     "regrid_dataset_multivar", "regrid_conservative_4d",
 }
 ALLOW = {
@@ -53,7 +51,6 @@ ALLOW = {
     # percentile is an ordered-statistics agg; group count is bounded
     # (event types), the sort is per-group in the agg buffer
     "events_percentiles": {"SortAggregate"},
-    "knn_top3": {"BroadcastNestedLoopJoin"},
     # NB classifier: the class-total/vocab-size and unseen/prior
     # constants are 1-row scalar crosses (the model TABLE itself joins
     # keyed on the token — never broadcast)

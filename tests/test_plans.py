@@ -184,9 +184,10 @@ def test_lsh_bucket_join_no_cartesian(spark):
 
 
 def test_ann_and_knn_joins_never_cartesian(spark):
-    """The candidate generation for IVF ANN and bucketed k-NN must stay
-    equi-joins on cell/bin keys — a cartesian or nested-loop product
-    here is the classic all-pairs scale killer."""
+    """The candidate generation for IVF ANN must stay an equi-join on
+    cell keys — a cartesian or nested-loop product here is the classic
+    all-pairs scale killer. The k-NN join plans no join at all: its rows
+    come from the driver's voxel search as one local relation."""
     from xesmf_spark import similarity as SIM
     from xesmf_spark.grids import grid_2d
     from xesmf_spark.weights.nearest import knn_join
@@ -198,15 +199,9 @@ def test_ann_and_knn_joins_never_cartesian(spark):
 
     g_need = grid_2d(spark, -60, 60, 10.0, -30, 30, 10.0)
     g_pool = grid_2d(spark, -60, 60, 5.0, -30, 30, 5.0)
-    kj = knn_join(g_need, g_pool, k=2, strategy="bucketed", bin_deg=12.0)
-    plan2 = _plan(kj)
-    # no unkeyed product between the two point relations; the
-    # candidate path must carry a keyed hash join on the bin key
-    assert "CartesianProduct" not in plan2, plan2
-    # the candidate join is keyed on the (blat, blon) bin columns
-    assert "BroadcastHashJoin [blat#" in plan2 or "SortMergeJoin [blat#" in plan2 or (
-        "ShuffledHashJoin [blat#" in plan2
-    ), plan2
+    plan2 = _plan(knn_join(g_need, g_pool, k=2))
+    assert "Join" not in plan2 and "CartesianProduct" not in plan2, plan2
+    assert "Window" not in plan2 and "Exchange" not in plan2, plan2
 
 
 def test_prepared_regridder_skips_weights_shuffle(spark):

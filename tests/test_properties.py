@@ -8,7 +8,8 @@ weights form a partition of unity, wrap_lon is a congruence into
 
 import math
 
-from hypothesis import given, settings, strategies as st
+import numpy as np
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -694,3 +695,94 @@ def test_winnowing_equals_bruteforce_fuzz(spark, seed, n_docs, k, w):
             pos = max(i for i in win if hs[i] == mn)  # rightmost min
             want.add((did, mn, pos))
     assert got == want
+
+
+def _centers(lon0, d_lon, n_x, lat0, d_lat, n_y):
+    """Row-major cell centers of a regular lon/lat grid."""
+    lon, lat = np.meshgrid(lon0 + d_lon * np.arange(n_x), lat0 + d_lat * np.arange(n_y))
+    return list(lon.ravel()), list(lat.ravel())
+
+
+#: coarse global pool with pole rows; needles up to lat ±82.5
+_POLE_PAIR = (*_centers(-175.0, 10.0, 36, -87.0, 6.0, 30), *_centers(-172.5, 15.0, 24, -82.5, 11.0, 16), 3, None)
+#: 30x18-degree global pool, 45x40-degree needles
+_WIDE_PAIR = (*_centers(-165.0, 30.0, 12, -81.0, 18.0, 10), *_centers(-157.5, 45.0, 8, -60.0, 40.0, 4), 3, None)
+#: pool point 1 sits one voxel closer than point 0, at the same key
+#: (exact tie, id 0 wins): the cube of radius 1 finds only point 1 and
+#: its key is within one quantum of the (r*h)**2 bound, so stopping
+#: there without the margin returns the wrong neighbor
+_MARGIN_TIE = ([-0.19098893264709385, 0.0], [0.0, 0.19098893264709385], [0.0], [0.0], 1, 0.0033333333222222224)
+#: d2 * 1e9 of pool point 1 is exactly 2796683550.5 and of point 0 a
+#: little more: half-up both round to ...551 (id 0 wins); half-even
+#: rounds point 1 down to ...550 and picks it
+_HALF_TIE = ([-132.4, -132.4], [53.789999997, 53.79], [0.0], [0.0], 1, None)
+
+
+@st.composite
+def _knn_cases(draw):
+    """(pool lons, pool lats, needle lons, needle lats, k, voxel side):
+    pole rows, the ±180 seam, both lon conventions and ±360 shifts,
+    exact duplicates, symmetric ties, k beyond the pool size, and any
+    voxel side (None sizes it from the pool)."""
+    coord = st.tuples(
+        st.one_of(st.sampled_from([-180.0, -90.0, 0.0, 90.0, 179.5, 180.0]), st.floats(-180.0, 180.0)),
+        st.one_of(st.sampled_from([-90.0, -89.5, 0.0, 45.0, 89.5, 90.0]), st.floats(-90.0, 90.0)),
+    )
+    pool = draw(st.lists(coord, min_size=1, max_size=40))
+    pool += draw(st.lists(st.sampled_from(pool), max_size=6))
+    need = draw(st.lists(coord, max_size=12)) + draw(st.lists(st.sampled_from(pool), max_size=6))
+    # a needle halfway between two pool points on its parallel
+    for (lon, lat), d in draw(st.lists(st.tuples(coord, st.floats(0.0, 40.0)), max_size=4)):
+        pool += [(lon - d, lat), (lon + d, lat)]
+        need.append((lon, lat))
+    east = draw(st.booleans())
+
+    def place(pts):
+        shifts = draw(st.lists(st.sampled_from([-360.0, 0.0, 360.0]), min_size=len(pts), max_size=len(pts)))
+        return [(lon % 360.0 if east else lon) + s for (lon, _), s in zip(pts, shifts)], [lat for _, lat in pts]
+
+    k = draw(st.integers(1, len(pool) + 3))
+    h = draw(st.one_of(st.none(), st.floats(0.01, 3.0)))
+    return (*place(pool), *place(need), k, h)
+
+
+def _brute_knn(plon, plat, nlon, nlat, k):
+    """``(needle, id, rank, key)`` of the k smallest ``(key, id)`` per
+    needle over the full distance matrix; key = round-half-up of
+    1e9 x the squared chord distance in the oracle's expanded form."""
+    def trig(lon, lat):
+        la, lo = np.radians(np.asarray(lat, float)), np.radians(np.asarray(lon, float))
+        return np.cos(la), np.sin(la), np.cos(lo), np.sin(lo)
+
+    (na, nb, nc, nd), (pa, pb, pc, pd) = trig(nlon, nlat), trig(plon, plat)
+    d2 = 2.0 - 2.0 * (na[:, None] * pa * (nc[:, None] * pc + nd[:, None] * pd) + nb[:, None] * pb)
+    t = d2 * 1e9
+    key = (np.floor(t) + (t - np.floor(t) >= 0.5)).astype(np.int64)
+    ids = np.broadcast_to(np.arange(len(plon)), key.shape)
+    top = np.lexsort((ids, key), axis=1)[:, :k]
+    kk = top.shape[1]
+    return (
+        np.repeat(np.arange(len(nlon)), kk),
+        top.ravel(),
+        np.tile(np.arange(1, kk + 1), len(nlon)),
+        np.take_along_axis(key, top, axis=1).ravel(),
+    )
+
+
+@settings(max_examples=80, deadline=None)
+@given(case=_knn_cases())
+@example(case=_POLE_PAIR)
+@example(case=_WIDE_PAIR)
+@example(case=_MARGIN_TIE)
+@example(case=_HALF_TIE)
+def test_knn_search_matches_brute_force(case):
+    """The voxel search behind nearest_weights and knn_join returns, for
+    every needle, exactly the brute-force top k under the
+    ``(round(d2 * 1e9), id)`` rule, whatever the voxel side."""
+    from xesmf_spark.weights import nearest as NN
+
+    plon, plat, nlon, nlat, k, h = case
+    pool = NN._pool(np.arange(len(plon)), NN._trig(np.asarray(plon, float), np.asarray(plat, float)), h)
+    got = NN._search(pool, NN._trig(np.asarray(nlon, float), np.asarray(nlat, float)), k)
+    want = _brute_knn(plon, plat, nlon, nlat, k)
+    assert all(np.array_equal(g, w) for g, w in zip(got, want)), (got, want)

@@ -169,18 +169,6 @@ def test_nearest_d2s(spark, g_in, g_out):
     rg.clean_weight_file()
 
 
-def test_nearest_bucketed_parity(spark, g_in, g_out):
-    """Bucketed (scale path) ≡ broadcast (exact path) — the engine's
-    analogue of the reference's scipy≡ESMPy differential test
-    (tests/test_backend.py:142-157)."""
-    from xesmf_spark.weights import nearest_weights
-
-    wb = nearest_weights(g_in, g_out, direction="s2d", strategy="broadcast")
-    wk = nearest_weights(g_in, g_out, direction="s2d", strategy="bucketed")
-    assert wb.count() == wk.count()
-    assert wb.exceptAll(wk).count() == 0
-
-
 def test_conservative_without_bounds_raises(spark, g_in):
     g_locs = locstream(spark, [0.0], [0.0])
     with pytest.raises((KeyError, ValueError)):
@@ -328,46 +316,57 @@ def test_smm_apply_scans_field_once(spark, g_in, g_out, tmp_path):
     assert out.count() == g_out.n_cells * 3
 
 
-def test_knn_join_bucketed_matches_broadcast(spark):
-    """The bucketed k-NN (bin equi-join + windowed rank + in-band trust
-    check + rescue) must reproduce the exact broadcast result,
-    including near-pole needles whose 3x3 neighborhood can't be
-    trusted (the exactness bound collapses there, forcing the rescue
-    pass)."""
-    from xesmf_spark.grids import grid_2d, grid_global
-    from xesmf_spark.weights.nearest import knn_join
-
-    g_pool = grid_global(spark, 10.0, 6.0)     # coarse global incl. poles
-    g_need = grid_2d(spark, -180, 180, 15.0, -88, 88, 11.0)
-    bb = knn_join(g_need, g_pool, k=3, strategy="broadcast").collect()
-    bk = knn_join(g_need, g_pool, k=3, strategy="bucketed", bin_deg=12.0).collect()
-    key = lambda r: (r.left_id, r.rank, r.right_id, r.dist2)
-    assert sorted(map(key, bb)) == sorted(map(key, bk))
-    assert len(bb) > 0
-
-
 def test_knn_join_auto_runs_no_job(spark):
-    """strategy='auto' must pick its path from metadata/Catalyst stats,
-    not a count() job — an extra Spark job per knn_join call is a full
-    pass over the pool at scale. Plan construction (no action) must
-    leave the job counter untouched, for Grid AND DataFrame pools."""
-    from pyspark.sql import functions as F
-
+    """Building a k-NN join or nearest weights from constructor grids
+    launches no Spark job: the search runs on the driver-held centers
+    and its rows enter as a local relation, so jobs start only at the
+    action."""
     from xesmf_spark.grids import grid_2d
+    from xesmf_spark.weights import nearest_weights
     from xesmf_spark.weights.nearest import knn_join
 
     g_need = grid_2d(spark, -60, 60, 20.0, -30, 30, 15.0)
     g_pool = grid_2d(spark, -60, 60, 10.0, -30, 30, 10.0)
-    pool_df = g_pool.df.select("cell_id", "lon", "lat").filter(F.col("lat") > -90)
 
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup())
-    df1 = knn_join(g_need, g_pool, k=2, strategy="auto")
-    df2 = knn_join(g_need, pool_df, k=2, strategy="auto")
+    df1 = knn_join(g_need, g_pool, k=2)
+    df2 = nearest_weights(g_pool, g_need, direction="d2s")
     after = len(tracker.getJobIdsForGroup())
-    assert after == before, "auto strategy selection launched a Spark job"
+    assert after == before, "building a nearest frame launched a Spark job"
     # the plans still execute correctly afterwards
-    assert df1.count() > 0 and df2.count() > 0
+    assert df1.count() == 2 * g_need.n_cells and df2.count() == g_pool.n_cells
+
+
+def test_knn_search_memory_is_bounded_per_chunk():
+    """A 1x1-degree pool of 10,000 points and 2,500 needles inside it.
+    The voxels are sized from the pool's own spread, not the sphere's
+    (sphere-sized voxels put this pool into two voxels, and every needle
+    then gathers all 10,000 points), and the pair budget keeps one
+    chunk's arrays small."""
+    import tracemalloc
+
+    from xesmf_spark.weights import nearest as NN
+
+    def centers(n):
+        c = 0.5 + np.arange(n)
+        lon, lat = np.meshgrid(10.0 + c / n, 40.0 + c / n)
+        return NN._trig(lon.ravel(), lat.ravel())
+
+    pool = NN._pool(np.arange(100 * 100), centers(100))
+    assert pool.h < 4 * np.radians(0.01)  # a few pool spacings
+    needles = centers(50)
+    tracemalloc.start()
+    try:
+        need, ids, rank, key = NN._search(pool, needles, 3)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert need.size == 3 * 2500 and (rank <= 3).all()
+    # each needle's nearest is within half a pool cell's diagonal
+    half_diagonal = np.radians(0.005) ** 2 * 2 * 1e9
+    assert key[rank == 1].max() <= half_diagonal
+    assert peak < 64 * 2**20, peak
 
 
 def test_finalize_releases_persisted_intermediates(spark, g_in, g_out):
@@ -641,18 +640,6 @@ def test_hand_built_grid_gives_identical_triplets(spark, g_in, g_out):
         a, b = _sorted_triplets(built[name]()), _sorted_triplets(hand[name]())
         assert len(a[0]) > 0, name
         assert all(np.array_equal(x, y) for x, y in zip(a, b)), name
-
-
-def test_bucketed_nearest_pin_is_released(spark, g_in, g_out):
-    """The bucketed nearest build pins its trust-checked frame through
-    the registry, so release_persisted() leaves no cached frame."""
-    from xesmf_spark import release_persisted
-    from xesmf_spark.weights import nearest_weights
-
-    spark.catalog.clearCache()
-    nearest_weights(g_in, g_out, direction="s2d", strategy="bucketed").collect()
-    release_persisted()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_prepare_pin_is_released(spark, g_in, g_out, tmp_path):

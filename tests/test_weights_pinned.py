@@ -21,6 +21,7 @@ from xesmf_spark.weights import (
     nearest_weights,
     patch_weights,
 )
+from xesmf_spark.weights.nearest import knn_join
 
 
 def _global_mesh_pair(spark):
@@ -80,20 +81,12 @@ CASES = {
         ),
         "22eb35e52e5cf10a4edc70c701a0a2a7",
     ),
-    "nearest_s2d_broadcast": (
-        lambda s: nearest_weights(*_fixture_grids(s), direction="s2d", strategy="broadcast"),
+    "nearest_s2d": (
+        lambda s: nearest_weights(*_fixture_grids(s), direction="s2d"),
         "f52ef643f3be7e063906ac8aa6488ffe",
     ),
-    "nearest_s2d_bucketed": (
-        lambda s: nearest_weights(*_fixture_grids(s), direction="s2d", strategy="bucketed"),
-        "f52ef643f3be7e063906ac8aa6488ffe",
-    ),
-    "nearest_d2s_broadcast": (
-        lambda s: nearest_weights(*_fixture_grids(s), direction="d2s", strategy="broadcast"),
-        "18e217f121212004e254c0fc32ff45c4",
-    ),
-    "nearest_d2s_bucketed": (
-        lambda s: nearest_weights(*_fixture_grids(s), direction="d2s", strategy="bucketed"),
+    "nearest_d2s": (
+        lambda s: nearest_weights(*_fixture_grids(s), direction="d2s"),
         "18e217f121212004e254c0fc32ff45c4",
     ),
     "bilinear_curvilinear": (
@@ -126,3 +119,17 @@ def _digest(weights) -> str:
 def test_weights_match_pinned_digest(spark, case):
     build, want = CASES[case]
     assert _digest(build(spark)) == want
+
+
+def test_knn_join_matches_pinned_digest(spark):
+    """``knn_join(g_out, g_in, k=3)`` on the fixture pair, as ``knn_top3``
+    calls it: md5 of the (left_id, rank)-sorted left_id, right_id, rank
+    and dist2 arrays."""
+    g_in, g_out = _fixture_grids(spark)
+    pdf = knn_join(g_out, g_in, k=3).toPandas()
+    cols = [pdf[c].to_numpy() for c in ("left_id", "right_id", "rank", "dist2")]
+    order = np.lexsort((cols[2], cols[0]))
+    h = hashlib.md5()
+    for c, t in zip(cols, (np.int64, np.int64, np.int64, np.float64)):
+        h.update(np.ascontiguousarray(c[order], t).tobytes())
+    assert h.hexdigest() == "9cfd5ffad7c76726ac5c479b981cdc0e"

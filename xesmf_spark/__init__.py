@@ -7,8 +7,9 @@ Spark DataFrame operations:
 - weight generation  = spatial joins over grid cell tables. A
   rectilinear pair (conservative, bilinear, patch) separates per axis:
   numpy 1-D weights on the driver, one broadcast cross join for the
-  product. Nearest_s2d / nearest_d2s are an argmin hash aggregate over a
-  broadcast or bin equi-join; curvilinear meshes get polygon clipping
+  product. Nearest_s2d / nearest_d2s are an exact voxel search over the
+  driver-held centers, entering Spark as one local relation;
+  curvilinear meshes get polygon clipping
   (conservative) and, from a curvilinear source, one ``mapInPandas``
   over the destination points against the broadcast source mesh
   (bilinear, patch);

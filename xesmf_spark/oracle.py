@@ -297,7 +297,7 @@ w AS (
 
 
 #: squared chord distance in the engine's EXPANDED trig form (see
-#: weights/nearest.py::_dist2) — same op order, so doubles agree
+#: weights/nearest.py::_keys) — same op order, so doubles agree
 _D2_EXPANDED = (
     "2.0 - 2.0 * (COS(RADIANS(n.lat)) * COS(RADIANS(p.lat))"
     " * (COS(RADIANS(n.lon)) * COS(RADIANS(p.lon)) + SIN(RADIANS(n.lon)) * SIN(RADIANS(p.lon)))"

@@ -3621,11 +3621,11 @@ def pipeline_fingerprint(spark, sf_dir):
 
 def knn_top3(spark, sf_dir):
     """Generic geographic 3-NN join (dest grid cells -> 3 nearest source
-    cells), bucketed strategy incl. the exact-rescue path."""
+    cells): the driver's exact voxel search as one local relation."""
     from xesmf_spark.weights.nearest import knn_join
 
     g_in, g_out = _fixture_grids(spark)
-    return knn_join(g_out, g_in, k=3, strategy="bucketed", bin_deg=40.0)
+    return knn_join(g_out, g_in, k=3)
 
 
 def multimodal_features(spark, sf_dir):

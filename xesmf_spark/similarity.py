@@ -1,7 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two physical strategies, mirroring the nearest-neighbor duality in
-``weights/nearest.py`` (broadcast-exact vs bucketed-scale):
+Two physical strategies, exact brute force vs bucketed scale:
 
 - ``cosine_topk``   — exact brute-force top-k: cross join with the pool
   broadcast, cosine as a pure Column fold (JVM), windowed rank. O(n*m)

@@ -6,8 +6,8 @@ Fortran). Each builder returns a lazy DataFrame of COO triplets
 Methods (xesmf/backend.py:241-246):
 - ``conservative``  → interval overlaps per axis  (conservative.py)
 - ``bilinear``      → 1-D brackets per axis        (bilinear.py)
-- ``nearest_s2d`` / ``nearest_d2s`` → argmin hash aggregate over a
-  broadcast or bin equi-join (nearest.py)
+- ``nearest_s2d`` / ``nearest_d2s`` → exact nearest center from a
+  driver-side voxel search, one local relation (nearest.py)
 - ``patch``         → Lagrange patch-recovery tensor build (patch.py)
 
 A rectilinear source has separable axes (``Grid.axes``, numpy read
@@ -29,7 +29,10 @@ over point destinations — emits the O(nnz) triplets. Otherwise:
 These general-mesh builders share one shape: they read the source on
 the driver (its centers, ``Grid.mesh``, or its corner rings,
 ``Grid.rings``), broadcast it with a numpy bin index, and run one
-``mapInPandas`` over the destination cells; no join or shuffle.
+``mapInPandas`` over the destination cells; no join or shuffle. The
+nearest builders and ``knn_join`` read both grids' centers and search
+on the driver: their rows, one per needle, enter Spark as one local
+relation.
 """
 
 from xesmf_spark.weights.conservative import conservative_weights

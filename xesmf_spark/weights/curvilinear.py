@@ -138,15 +138,19 @@ def _bin(v: np.ndarray, origin: float, bin_deg: float) -> np.ndarray:
     return np.floor((v + origin) / bin_deg).astype(np.int64)
 
 
+def _runs(n: np.ndarray):
+    """``(owner, offset)`` of each slot of consecutive runs of lengths ``n``."""
+    owner = np.repeat(np.arange(n.size), n)
+    return owner, np.arange(owner.size) - np.repeat(np.cumsum(n) - n, n)
+
+
 def _bins_of(xmin, xmax, ymin, ymax, nlon: int, bin_deg: float):
     """``(owner, bin)``: one entry per box and each seam-aware bin it
     overlaps (the lon-bin range wrapped mod ``nlon``), owners ascending."""
     bx0, by0 = _bin(xmin, 180.0, bin_deg), _bin(ymin, 90.0, bin_deg)
     nbx = _bin(xmax, 180.0, bin_deg) - bx0 + 1
     nby = _bin(ymax, 90.0, bin_deg) - by0 + 1
-    n = nbx * nby
-    e = np.repeat(np.arange(n.size), n)
-    off = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+    e, off = _runs(nbx * nby)
     return e, (by0[e] + off // nbx[e]) * nlon + np.mod(bx0[e] + off % nbx[e], nlon)
 
 
@@ -187,8 +191,8 @@ def _candidates(index: BinIndex, xmin, xmax, ymin, ymax):
     p, pb = _bins_of(xmin, xmax, ymin, ymax, index.nlon, index.bin_deg)
     pos = np.searchsorted(index.keys, pb)
     lo = index.starts[pos]
-    n = np.where(index.keys[pos] == pb, index.starts[pos + 1] - lo, 0)
-    return np.repeat(p, n), index.members[np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)]
+    j, off = _runs(np.where(index.keys[pos] == pb, index.starts[pos + 1] - lo, 0))
+    return p[j], index.members[lo[j] + off]
 
 
 def _locate(lon, lat, index: BinIndex, px: np.ndarray, py: np.ndarray) -> Located:

@@ -12,377 +12,217 @@ Reference: ``method='nearest_s2d'`` / ``'nearest_d2s'``
 
 Distance is 3-D chord distance on the unit sphere (the reference's math
 "happens in 3-D Cartesian", xesmf/backend.py:44-45) — monotone in
-great-circle distance and naturally periodic in longitude.
+great-circle distance and naturally periodic in longitude. Neighbors
+rank by the key ``(round(d2 * 1e9), id)``: the squared chord distance
+in the expanded form
+``2 - 2*(cos φn cos φp (cos λn cos λp + sin λn sin λp) + sin φn sin φp)``,
+rounded half-up on the 1e-9 grid, then the point id. The DuckDB oracle
+(``oracle.nearest_weights_ctes``, ``knn_topk_oracle_sql``) evaluates the
+same expression in the same operation order, so geometric ties break on
+the id in both.
 
-Two physical strategies:
+Search: the pool's unit-sphere xyz go into a grid of cubic voxels of
+side ``h``, sized from the pool's own spread (about two point spacings,
+whatever share of the globe the pool covers). Chord distance is
+Euclidean in R³, so the index has no lon wrap, seam or pole case. Each
+needle gathers the pool points in the cube of voxels of Chebyshev
+radius r around its own voxel; r starts where the cube first reaches
+the pool's voxels and doubles. A point outside that cube is more than
+``r·h`` away along some axis, so its key is at least ``(r·h)²·1e9``
+less half a quantum (plus fp dust). Once the needle's k-th key is below
+``(r·h)²·1e9 - 1`` — one quantum of margin, since a point just past the
+bound can round to the k-th key and win on its id — or the cube covers
+the whole pool, its top k is exact. After a cube that found k points,
+the next one visits only the voxels inside the ball that holds every
+key up to the k-th found, so a needle far from a compact pool does not
+gather all of it.
 
-- ``strategy='broadcast'``: broadcast the smaller point set and
-  cross-join. The per-point argmin is a ``min(struct(dist, id))``
-  HASH AGGREGATE, not a window — partial (map-side) aggregation means
-  each task emits at most one row per needle, so nothing resembling the
-  candidate set ever shuffles.
-- ``strategy='bucketed'``: the 100-TB path. Coarse lat/lon spatial bins,
-  candidates from an EQUI-join on bin keys (3x3 neighborhood via
-  exploded offsets, longitude wrapping modulo the bin count), argmin by
-  the same partial hash aggregate. EXACTNESS is enforced, not assumed:
-  a neighborhood winner only stands if its distance beats the bound
-  below; everything else (empty neighborhoods, near-pole points,
-  suspiciously-far winners) is routed through an exact rescue pass that
-  broadcasts the SMALL miss set against the distributed pool — the pool
-  is never collected or broadcast.
+Scale premise: both point sets already sit on the driver (``Grid.mesh``
+of every constructor grid), and the triplet count is one grid's cell
+count (k per needle for the k-NN join). So the search runs in numpy in
+the driver process — no Spark job, worker, pool or thread — and the
+result enters Spark as one local relation (``createDataFrame``). A
+numpy pass holds at most ``_PAIRS`` cube columns and candidate pairs
+(a pass of a single needle may exceed it; that is at most the pool).
 
-Exactness bound: any pool point OUTSIDE the 3x3 neighborhood differs by
->= 2 bins in latitude or longitude, so its distance is at least
-``2 * cos(phi_max) * sin(bin/2)`` (chord), with ``phi_max = min(90,
-|lat| + 2*bin)`` the worst latitude at which a 2-bin longitude gap can
-close. Near the poles the bound collapses to 0 and those (few) points
-fall through to the exact pass automatically — resolving the silent
-wrong-neighbor hazard of a neighborhood-only search.
-
-Tie-breaking: ``min(struct(round(dist2, 9), point_id))`` — rounding
-makes exact geometric ties (common on symmetric synthetic grids) break
-on the deterministic id in every engine, so Spark and the DuckDB oracle
-agree.
+Output schemas, every column nullable as a DDL schema string declares
+it (no value is ever null): ``row long, col long, S double`` for the
+weights, ``left_id long, right_id long, rank int, dist2 double`` for the
+k-NN join.
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Sequence
+from typing import NamedTuple
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from xesmf_spark.grids import Grid
-from xesmf_spark.materialize import pin
+from xesmf_spark.weights.curvilinear import _round_half_up, _runs
 
-#: brute-force is fine (and faster) below this many points on the
-#: broadcast side; above it the bucketed equi-join path takes over.
-BROADCAST_LIMIT = 2_000_000
-
-
-def _points(g: Grid | DataFrame, prefix: str) -> DataFrame:
-    """Project (id, lon, lat, cos_lat, sin_lat, cos_lon, sin_lon) —
-    trig ONCE per point, so the per-candidate distance below is pure
-    multiply-add (libm trig per candidate dominated the brute-force
-    strategy: ~10x slower than arithmetic)."""
-    df = g.df if isinstance(g, Grid) else g
-    return df.select(
-        F.col("cell_id").alias(f"{prefix}_id"),
-        F.radians("lon").alias(f"{prefix}_lon"),
-        F.radians("lat").alias(f"{prefix}_lat"),
-        F.cos(F.radians("lat")).alias(f"{prefix}_cla"),
-        F.sin(F.radians("lat")).alias(f"{prefix}_sla"),
-        F.cos(F.radians("lon")).alias(f"{prefix}_clo"),
-        F.sin(F.radians("lon")).alias(f"{prefix}_slo"),
-    )
+#: candidate pairs (and cube columns) one numpy pass may hold
+_PAIRS = 1 << 18
 
 
-def _dist2(p: str, q: str):
-    """Squared 3-D chord distance between unit-sphere points, in the
-    EXPANDED form over precomputed trig columns:
-    ``2 - 2*(cla_p*cla_q*(clo_p*clo_q + slo_p*slo_q) + sla_p*sla_q)``
-    (cos(a-b) expanded so candidates cost multiply-adds only; the
-    DuckDB oracle uses the identical expansion and op order)."""
-    return (
-        F.lit(2.0)
-        - F.lit(2.0)
-        * (
-            F.col(f"{p}_cla")
-            * F.col(f"{q}_cla")
-            * (
-                F.col(f"{p}_clo") * F.col(f"{q}_clo")
-                + F.col(f"{p}_slo") * F.col(f"{q}_slo")
-            )
-            + F.col(f"{p}_sla") * F.col(f"{q}_sla")
-        )
-    )
+class _Pool(NamedTuple):
+    """Pool points sorted by voxel key ``(i * m + j) * m + k``: voxel
+    ``(i, j, k)`` spans ``[i, i + 1) x [j, j + 1) x [k, k + 1)`` in the
+    units ``(xyz + 1) / h``. ``lo``/``hi`` bound the occupied voxels."""
+
+    h: float
+    m: int
+    lo: np.ndarray
+    hi: np.ndarray
+    keys: np.ndarray
+    ids: np.ndarray
+    trig: np.ndarray
 
 
-#: needle columns: id plus the precomputed trig of :func:`_points`
-_N_COLS = ("n_id", "n_lon", "n_lat", "n_cla", "n_sla", "n_clo", "n_slo")
-
-#: argmin encoding: quantized distance in the high bits, candidate id in
-#: the low 30 — lexicographic (dist, id) order as ONE primitive BIGINT.
-#: d2 <= 4 so the quantized part is < 4.1e9; 4.1e9 * 2^30 < 2^63. Ids
-#: must stay below 2^30 (~1.07e9 cells) — asserted by the caller's grid
-#: metadata at real scale.
-_ID_SHIFT = 1 << 30
+def _trig(lon, lat) -> np.ndarray:
+    """``(cos φ, sin φ, cos λ, sin λ)`` of points in degrees, ``(4, n)``."""
+    la, lo = np.radians(lat), np.radians(lon)
+    return np.stack([np.cos(la), np.sin(la), np.cos(lo), np.sin(lo)])
 
 
-def _quantized_d2():
-    """Squared chord distance on the 1e-9 grid, as a BIGINT: the
-    ordering key of every argmin and top-k here (and in the DuckDB
-    oracle), so geometric ties break on the point id everywhere."""
-    return F.round(_dist2("n", "p") * F.lit(1e9)).cast("long")
+def _xyz(t: np.ndarray) -> np.ndarray:
+    """Unit-sphere ``(x, y, z)``, ``(3, n)``, of the points of trig ``t``."""
+    return np.stack([t[0] * t[2], t[0] * t[3], t[1]])
 
 
-def _argmin_agg(cand: DataFrame, keys: Sequence[str] = ("n_id",)) -> DataFrame:
-    """``(*keys, p_id, d2r)`` of the nearest candidate per needle;
-    ``keys`` identify the needle (``n_id`` first, any needle columns
-    the caller wants carried along after it). A needle whose candidates
-    are all null gets null ``p_id`` and ``d2r``.
-
-    The min runs over a PRIMITIVE encoding of (quantized d2, p_id), not
-    min(struct(...)) / min_by(...): struct-ordered aggregates plan as
-    SortAggregate, which SORTS the whole candidate relation (measured:
-    a 2.9e10-row broadcast-nn candidate set spilled the disk to death).
-    A primitive min is a HashAggregate with map-side partial combine —
-    tasks emit at most one row per needle and nothing ever sorts."""
-    enc = (_quantized_d2() * F.lit(_ID_SHIFT) + F.col("p_id")).alias("enc")
-    return (
-        cand.select(*keys, enc)
-        .groupBy(*keys)
-        .agg(F.min("enc").alias("enc"))  # min() skips null candidates
-        .select(
-            *keys,
-            (F.col("enc") % _ID_SHIFT).alias("p_id"),
-            (F.floor(F.col("enc") / _ID_SHIFT).cast("double") / 1e9).alias("d2r"),
-        )
-    )
+def _keys(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The quantized squared chord distance of each column pair of the
+    trig arrays ``a`` and ``b``."""
+    d2 = 2.0 - 2.0 * (a[0] * b[0] * (a[2] * b[2] + a[3] * b[3]) + a[1] * b[1])
+    return _round_half_up(d2 * 1e9).astype(np.int64)
 
 
-def _trusted_d2(bin_deg: float):
-    """Exactness bound (see module docstring) as a squared chord
-    distance: a neighborhood winner at most this far from needle
-    ``n_lat`` is nearer than any point outside its 3x3 neighborhood."""
-    bin_rad = math.radians(bin_deg)
-    phi_max = F.least(F.lit(math.pi / 2), F.abs(F.col("n_lat")) + F.lit(2 * bin_rad))
-    bound = F.lit(2.0) * F.cos(phi_max) * F.lit(math.sin(bin_rad / 2.0))
-    return bound * bound
+def _pool(ids: np.ndarray, trig: np.ndarray, h: float | None = None) -> _Pool:
+    """Voxel index of the pool points ``ids`` with trig ``trig``. The
+    side ``h`` defaults to twice the point spacing of the pool's extent:
+    its two widest sides over the point count (an area), or the widest
+    over the count when the pool is a line."""
+    xyz = _xyz(trig)
+    if h is None:
+        n, (_, e1, e2) = max(ids.size, 1), np.sort(xyz.max(axis=1, initial=-1.0) - xyz.min(axis=1, initial=1.0))
+        h = 2.0 * max(np.sqrt(e1 * e2 / n), e2 / n)
+    h = max(h, 2e-6)  # keeps the voxel keys within int64
+    m = int(2.0 / h) + 2
+    c = np.floor((xyz + 1.0) / h).astype(np.int64)
+    key = (c[0] * m + c[1]) * m + c[2]
+    o = np.argsort(key, kind="stable")
+    return _Pool(h, m, c.min(axis=1, initial=m), c.max(axis=1, initial=-1), key[o], ids[o], trig[:, o])
 
 
-def _bin_candidates(
-    need: DataFrame, pool: DataFrame, bin_deg: float, join_type: str = "inner"
-) -> DataFrame:
-    """Candidate pairs from the coarse-bin equi-join (3x3 neighborhood,
-    longitude wraps modulo the bin count). ``join_type="left"`` keeps
-    needles whose neighborhood is empty (null pool columns) so
-    downstream logic sees every needle IN BAND instead of needing an
-    anti-join to find the absentees."""
-    nbins_lon = max(1, int(round(360.0 / bin_deg)))
-    binned_pool = pool.withColumn(
-        "blat", F.floor((F.degrees("p_lat") + F.lit(90.0)) / F.lit(bin_deg)).cast("int")
-    ).withColumn(
-        "blon",
-        (
-            F.floor((F.degrees("p_lon") + F.lit(180.0)) / F.lit(bin_deg)).cast("int")
-            % F.lit(nbins_lon)
-        ),
-    )
-    # the 3x3 neighborhood is built as WRAPPED (blat, blon) pairs and
-    # array_distinct-ed BEFORE the explode: with nbins_lon < 3
-    # (bin_deg > 120) the longitude wrap makes offsets collide, and
-    # duplicate bins would emit duplicate candidate pairs (harmless for
-    # the min-argmin, but knn_join's row_number would rank the same
-    # neighbor twice)
-    wrapped_bins = F.array_distinct(
-        F.array(
-            *[
-                F.struct(
-                    (F.col("blat0") + F.lit(a)).alias("blat"),
-                    (
-                        ((F.col("blon0") + F.lit(b)) % F.lit(nbins_lon) + F.lit(nbins_lon))
-                        % F.lit(nbins_lon)
-                    ).alias("blon"),
-                )
-                for a in (-1, 0, 1)
-                for b in (-1, 0, 1)
-            ]
-        )
-    )
-    binned_need = (
-        need.withColumn(
-            "blat0", F.floor((F.degrees("n_lat") + F.lit(90.0)) / F.lit(bin_deg)).cast("int")
-        )
-        .withColumn(
-            "blon0",
-            F.floor((F.degrees("n_lon") + F.lit(180.0)) / F.lit(bin_deg)).cast("int"),
-        )
-        .select("*", F.explode(wrapped_bins).alias("off"))
-        .select(
-            *_N_COLS,
-            F.col("off.blat").alias("blat"),
-            F.col("off.blon").alias("blon"),
-        )
-    )
-    return binned_need.join(binned_pool, ["blat", "blon"], join_type).drop("blat", "blon")
+def _pass(pool: _Pool, x: np.ndarray, trig: np.ndarray, r: np.ndarray, cap: np.ndarray, k: int):
+    """One search of the needles at voxel coordinates ``x`` (``(3, c)``)
+    through the cubes of Chebyshev radii ``r`` around their voxels, cut
+    to the balls of squared radii ``cap`` that hold every point still
+    able to rank: ``((needle, id, rank, key), done, cap)`` — the top-k
+    rows of the needles it proves exact, which those are, and the ball
+    of each other needle. None when the pass would hold more than
+    ``_PAIRS`` columns or pairs."""
+    v = np.floor(x).astype(np.int64)
+    lo, hi = np.maximum(v - r, pool.lo[:, None]), np.minimum(v + r, pool.hi[:, None])
+    w = np.maximum(hi - lo + 1, 0)
+    cols = w[0] * w[1] * (w[2] > 0)
+    if x.shape[1] > 1 and cols.sum() > _PAIRS:
+        return None
+    # one key range per (i, j) column of each cube: the ball's chord
+    q, off = _runs(cols)
+    i, j = lo[0, q] + off // w[1, q], lo[1, q] + off % w[1, q]
+    # the ball's squared radius less the squared distance to the column
+    rest = cap[q] - sum(np.maximum(np.maximum(a - x[d, q], x[d, q] - a - 1), 0.0) ** 2 for d, a in ((0, i), (1, j)))
+    half = np.sqrt(np.maximum(rest, 0.0))
+    k0 = np.maximum(lo[2, q], np.floor(x[2, q] - half)).astype(np.int64)
+    k1 = np.where(rest < 0, -1, np.minimum(hi[2, q], np.floor(x[2, q] + half))).astype(np.int64)
+    base = (i * pool.m + j) * pool.m
+    s = np.searchsorted(pool.keys, base + k0)
+    n = np.maximum(np.searchsorted(pool.keys, base + k1, "right") - s, 0)
+    if x.shape[1] > 1 and n.sum() > _PAIRS:
+        return None
+    c, off = _runs(n)
+    q, p = q[c], s[c] + off
+    key, ids = _keys(trig[:, q], pool.trig[:, p]), pool.ids[p]
+    o = np.lexsort((ids, q << 32 | key))  # q < 2**31, 0 <= key < 2**32
+    q, key, ids = q[o], key[o], ids[o]
+    found = np.bincount(q, minlength=x.shape[1])
+    first = np.cumsum(found) - found
+    rank = np.arange(q.size) - first[q]
+    # the k-th key, inf while fewer than k are found
+    kth = np.where(found >= k, np.append(key, 0)[np.minimum(first + k - 1, q.size)], np.inf)
+    # exact once the cube holds the whole pool, or the k-th key beats
+    # the nearest point outside the cube by a quantum
+    covers = (lo == pool.lo[:, None]).all(axis=0) & (hi == pool.hi[:, None]).all(axis=0)
+    done = covers | (kth < (r * pool.h) ** 2 * 1e9 - 1.0)
+    keep = (rank < k) & done[q]
+    # a point that can still displace the k-th key has a key up to it
+    cap = np.where(found >= k, (kth + 1.0) / 1e9 / pool.h**2, cap)
+    return (q[keep], ids[keep], rank[keep] + 1, key[keep]), done, cap
 
 
-def _argmin_join(need: DataFrame, pool: DataFrame, strategy: str, bin_deg: float) -> DataFrame:
-    """For each point in ``need`` (n_id, n_lon, n_lat — radians), find the
-    nearest point in ``pool`` (p_id, p_lon, p_lat). Returns (n_id, p_id).
-    """
-    if strategy == "broadcast":
-        return _argmin_agg(need.crossJoin(F.broadcast(pool))).select("n_id", "p_id")
-
-    # ONE aggregation does everything: the bin join is LEFT OUTER (so a
-    # needle with an empty 3x3 neighborhood is still present, with a
-    # null candidate) and the argmin groups by the FULL needle tuple
-    # (same cardinality as n_id — the extra key columns ride along in
-    # the hash key). No join against `need` afterwards: the exactness
-    # check reads n_lat straight from the aggregate, and the miss set
-    # already carries the trig columns the rescue pass needs.
-    hit = _argmin_agg(_bin_candidates(need, pool, bin_deg, join_type="left"), _N_COLS)
-    # a winner farther than the closest possible out-of-neighborhood
-    # point cannot be trusted
-    checked = pin(
-        hit.withColumn("_ok", F.col("p_id").isNotNull() & (F.col("d2r") <= _trusted_d2(bin_deg)))
-    )
-    ok = checked.filter("_ok").select("n_id", "p_id")
-    # rescue: empty neighborhoods + out-of-bound winners, resolved
-    # EXACTLY by broadcasting the (small) miss set against the
-    # distributed pool — the pool side is never collected
-    missed = checked.filter(~F.col("_ok")).select(*_N_COLS)
-    rescue = _argmin_agg(pool.crossJoin(F.broadcast(missed))).select("n_id", "p_id")
-    return ok.unionByName(rescue)
-
-
-def _est_rows(g: "Grid | DataFrame") -> int:
-    """Row-count estimate for strategy auto-selection WITHOUT running a
-    job: Grid metadata when available, else Catalyst's optimized-plan
-    statistics (rowCount if known, else sizeInBytes over a LOWER bound
-    on compressed bytes/row). Overestimation is safe — it only tips the
-    choice toward the bucketed path, which is correct at every size —
-    which is why the divisor is 4, not the ~24 in-memory bytes/row:
-    parquet with delta/RLE-encoded ids and gridded coords compresses
-    far below the logical width, and dividing by the logical width
-    would UNDERestimate rows and broadcast an oversized pool."""
-    if isinstance(g, Grid):
-        return g.n_cells
-    stats = g._jdf.queryExecution().optimizedPlan().stats()
-    rc = stats.rowCount()
-    if rc.isDefined():
-        return int(str(rc.get()))
-    return int(str(stats.sizeInBytes())) // 4
+def _search(pool: _Pool, trig: np.ndarray, k: int):
+    """``(needle, id, rank, key)`` of the k nearest pool points of each
+    needle (all of them when the pool is smaller), ordered by needle and
+    rank."""
+    x = (_xyz(trig) + 1.0) / pool.h
+    v = np.floor(x).astype(np.int64)
+    # the first cube reaches the pool's voxels; each next one doubles
+    r = np.maximum(np.maximum(pool.lo[:, None] - v, v - pool.hi[:, None]).max(axis=0), 1)
+    todo, cap = np.arange(x.shape[1]), np.full(x.shape[1], np.inf)
+    rows = [(np.empty(0, np.int64),) * 4]
+    while todo.size:
+        left, s, step = [], 0, todo.size
+        while s < todo.size:
+            t = slice(s, s + step)
+            got = _pass(pool, x[:, todo[t]], trig[:, todo[t]], r[t], cap[t], k)
+            if got is None:
+                step //= 2
+                continue
+            (q, ids, rank, key), done, c = got
+            rows.append((todo[t][q], ids, rank, key))
+            left.append((todo[t][~done], 2 * r[t][~done], c[~done]))
+            s += step
+        todo, r, cap = (np.concatenate(a) for a in zip(*left))
+    need, ids, rank, key = (np.concatenate(c) for c in zip(*rows))
+    o = np.lexsort((rank, need))
+    return need[o], ids[o], rank[o], key[o]
 
 
-def knn_join(
-    left: DataFrame | Grid,
-    right: DataFrame | Grid,
-    k: int = 1,
-    strategy: str = "auto",
-    bin_deg: float = 2.0,
-) -> DataFrame:
-    """Generic geographic k-NN join: for every left point, the k nearest
-    right points by great-circle (chord) distance. Inputs need columns
-    (cell_id, lon, lat) (degrees). Returns (left_id, right_id, rank,
-    dist2) with rank 1..k and dist2 the rounded squared chord distance.
-
-    Strategy mirrors the nearest-weights duality: ``broadcast`` for a
-    small right side; ``bucketed`` for the 100-TB shape — candidates
-    from the bin equi-join, per-needle top-k via window, and an exact
-    rescue for needles whose k-th winner fails the out-of-neighborhood
-    distance bound (or that found < k candidates).
-    """
-    need = _points(left, "n")
-    pool = _points(right, "p")
-    if strategy == "auto":
-        strategy = "broadcast" if _est_rows(right) <= BROADCAST_LIMIT else "bucketed"
-
-    # quantized ordering key (same 1e-9 grid as _argmin_agg, so ties
-    # break identically in Spark and the DuckDB oracle)
-    qd = _quantized_d2().alias("qd")
-    w = Window.partitionBy("n_id").orderBy(F.col("qd").asc(), F.col("p_id").asc())
-
-    def topk(cand: DataFrame) -> DataFrame:
-        return (
-            cand.select("n_id", "n_lat", "p_id", qd)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("dist2", F.col("qd").cast("double") / F.lit(1e9))
-            .drop("qd")
-        )
-
-    if strategy == "broadcast":
-        res = topk(need.crossJoin(F.broadcast(pool)))
-        return res.select(
-            F.col("n_id").alias("left_id"),
-            F.col("p_id").alias("right_id"),
-            "rank",
-            "dist2",
-        )
-
-    # single-pass bucketed plan (same shape as _argmin_join): LEFT
-    # OUTER bin join keeps empty-neighborhood needles in band, and the
-    # trust check (found k candidates AND the k-th beats the
-    # out-of-neighborhood bound) is computed by window aggregates over
-    # the SAME partitioning as the rank — no per-needle groupBy, no
-    # semi/anti joins, no persist
-    cand = _bin_candidates(need, pool, bin_deg, join_type="left")
-    w_ord = Window.partitionBy("n_id").orderBy(
-        F.col("qd").asc_nulls_last(), F.col("p_id").asc_nulls_last()
-    )
-    w_all = Window.partitionBy("n_id")
-    ranked = (
-        cand.select(*_N_COLS, "p_id", qd)
-        .withColumn("rank", F.row_number().over(w_ord))
-        .withColumn("n_found", F.count("p_id").over(w_all))
-        .withColumn(
-            "d_kth",
-            F.max(F.when(F.col("rank") <= k, F.col("qd"))).over(w_all).cast("double")
-            / F.lit(1e9),
-        )
-        .withColumn(
-            "_ok",
-            F.col("p_id").isNotNull()
-            & (F.col("n_found") >= k)
-            & (F.col("d_kth") <= _trusted_d2(bin_deg)),
-        )
-    )
-    ok = (
-        ranked.filter(F.col("_ok") & (F.col("rank") <= k))
-        .withColumn("dist2", F.col("qd").cast("double") / F.lit(1e9))
-        .select("n_id", "p_id", "rank", "dist2")
-    )
-    missed = ranked.filter((F.col("rank") == 1) & ~F.col("_ok")).select(*_N_COLS)
-    rescue = topk(pool.crossJoin(F.broadcast(missed)))
-    return (
-        ok.unionByName(rescue.select("n_id", "p_id", "rank", "dist2"))
-        .select(
-            F.col("n_id").alias("left_id"),
-            F.col("p_id").alias("right_id"),
-            "rank",
-            "dist2",
-        )
-    )
+def _centers(g: Grid):
+    """Ids and trig of the grid's cell centers (missing centers dropped)."""
+    lon, lat = (a.reshape(-1) for a in g.mesh)
+    ok = np.flatnonzero(np.isfinite(lon) & np.isfinite(lat))
+    return ok, _trig(lon[ok], lat[ok])
 
 
-def nearest_weights(
-    src: Grid,
-    dst: Grid,
-    direction: str = "s2d",
-    strategy: str = "auto",
-    bin_deg: float | None = None,
-) -> DataFrame:
+def _knn(left: Grid, right: Grid, k: int):
+    """``(left id, right id, rank, key)`` of the k nearest right centers
+    of every left center."""
+    lid, ltrig = _centers(left)
+    need, rid, rank, key = _search(_pool(*_centers(right)), ltrig, k)
+    return lid[need], rid, rank, key
+
+
+def knn_join(left: Grid, right: Grid, k: int = 1) -> DataFrame:
+    """Generic geographic k-NN join: for every left cell center, the k
+    nearest right cell centers by great-circle (chord) distance.
+    Returns (left_id, right_id, rank, dist2) with rank 1..k and dist2
+    the rounded squared chord distance."""
+    lid, rid, rank, key = _knn(left, right, k)
+    pdf = pd.DataFrame({"left_id": lid, "right_id": rid, "rank": rank.astype(np.int32), "dist2": key / 1e9})
+    return left.df.sparkSession.createDataFrame(pdf, "left_id long, right_id long, rank int, dist2 double")
+
+
+def nearest_weights(src: Grid, dst: Grid, direction: str = "s2d") -> DataFrame:
     """COO triplets for nearest_s2d / nearest_d2s. S is always 1.0;
     d2s accumulation happens naturally in the apply's group-by-sum.
     """
     if direction not in ("s2d", "d2s"):
         raise ValueError(f"direction must be 's2d' or 'd2s', got {direction!r}")
-
-    pool_grid = src if direction == "s2d" else dst
-    need_grid = dst if direction == "s2d" else src
-    if strategy == "auto":
-        # brute force costs |need| * |pool| candidate evaluations; the
-        # bucketed equi-join wins long before the pool alone is "big"
-        big = (pool_grid.n_cells > BROADCAST_LIMIT) or (
-            pool_grid.n_cells * need_grid.n_cells > 2_000_000_000
-        )
-        strategy = "bucketed" if big else "broadcast"
-    if bin_deg is None:
-        # heuristic: bins ~2 cells wide on the pool grid so the true
-        # nearest is inside the 3x3 neighborhood for quasi-uniform grids
-        bin_deg = max(1.0, 2.0 * 360.0 / max(pool_grid.n_x, 1))
-
-    need = _points(need_grid, "n")
-    pool = _points(pool_grid, "p")
-    pairs = _argmin_join(need, pool, strategy, bin_deg)
-    if direction == "s2d":
-        return pairs.select(
-            F.col("n_id").alias("row"), F.col("p_id").alias("col"), F.lit(1.0).alias("S")
-        )
-    return pairs.select(
-        F.col("p_id").alias("row"), F.col("n_id").alias("col"), F.lit(1.0).alias("S")
-    )
+    need, pool = (dst, src) if direction == "s2d" else (src, dst)
+    nid, pid, _, _ = _knn(need, pool, 1)
+    row, col = (nid, pid) if direction == "s2d" else (pid, nid)
+    pdf = pd.DataFrame({"row": row, "col": col, "S": np.ones(row.size)})
+    return src.df.sparkSession.createDataFrame(pdf, "row long, col long, S double")
