@@ -469,6 +469,26 @@ def test_cosine_topk_gemm_disjoint_pool_matches_fold(spark):
     assert len(gemm) == 20 * 3  # every query gets ALL 3 pool neighbors
 
 
+def test_knn_join_bucketed_wide_bins_match_broadcast(spark):
+    """Voxels wider than half the sphere leave two per axis, so every
+    needle's cube is clipped to the pool's voxel box on each side; the
+    clipped ranges must not double-rank the same neighbor."""
+    from tests.test_regrid import ONE_VOXEL, voxel_side
+    from xesmf_spark.grids import grid_2d, grid_global
+    from xesmf_spark.weights.nearest import knn_join
+
+    g_pool = grid_global(spark, 30.0, 18.0)
+    g_need = grid_2d(spark, -180, 180, 45.0, -80, 80, 40.0)
+    with voxel_side(ONE_VOXEL):
+        bb = knn_join(g_need, g_pool, k=3).collect()
+    with voxel_side(1.5):
+        bk = knn_join(g_need, g_pool, k=3).collect()
+    key = lambda r: (r.left_id, r.rank, r.right_id, r.dist2)
+    assert sorted(map(key, bb)) == sorted(map(key, bk))
+    assert len(bb) > 0
+    assert len({(r.left_id, r.right_id) for r in bk}) == len(bk)
+
+
 def test_ivf_topk_gemm_matches_fold(spark):
     """Per-cell GEMM scoring + gemm codebook assignment must reproduce
     the fold path exactly (same cells, same candidates, same ranks)."""

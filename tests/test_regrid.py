@@ -9,6 +9,9 @@ reference's tolerance thresholds remain valid (SURVEY.md §5, §7):
 - nearest to locstream: one source per location, S=1.0 (:209-246)
 """
 
+from contextlib import contextmanager
+from unittest import mock
+
 import numpy as np
 import pytest
 
@@ -26,6 +29,22 @@ def g_in(spark):
 @pytest.fixture(scope="module")
 def g_out(spark):
     return grid_global(spark, 15, 9)
+
+
+@contextmanager
+def voxel_side(h):
+    """Index every nearest/k-NN pool built inside the block at voxel side
+    ``h``. ``ONE_VOXEL`` puts the whole unit sphere into one voxel, so
+    each needle ranks every pool point, as a broadcast cross join does."""
+    from xesmf_spark.weights import nearest as NN
+
+    pool = NN._pool
+    with mock.patch.object(NN, "_pool", lambda ids, trig: pool(ids, trig, h)):
+        yield
+
+
+#: a voxel side wider than the unit sphere's extent
+ONE_VOXEL = 4.0
 
 
 def _field(g):
@@ -167,6 +186,19 @@ def test_nearest_d2s(spark, g_in, g_out):
     assert w.count() == g_out.n_cells
     assert w.select("col").distinct().count() == g_out.n_cells
     rg.clean_weight_file()
+
+
+def test_nearest_bucketed_parity(spark, g_in, g_out):
+    """The voxel-pruned search ≡ ranking every pool point (the whole
+    pool in one voxel) — the engine's analogue of the reference's
+    scipy≡ESMPy differential test (tests/test_backend.py:142-157)."""
+    from xesmf_spark.weights import nearest_weights
+
+    with voxel_side(ONE_VOXEL):
+        wb = nearest_weights(g_in, g_out, direction="s2d")
+    wk = nearest_weights(g_in, g_out, direction="s2d")
+    assert wb.count() == wk.count() == g_out.n_cells
+    assert wb.exceptAll(wk).count() == 0
 
 
 def test_conservative_without_bounds_raises(spark, g_in):
@@ -314,6 +346,26 @@ def test_smm_apply_scans_field_once(spark, g_in, g_out, tmp_path):
     assert plan.count("Location: InMemoryFileIndex") == 1, plan
     # and the result is still complete: every (cell, time) slot present
     assert out.count() == g_out.n_cells * 3
+
+
+def test_knn_join_bucketed_matches_broadcast(spark):
+    """The voxel-pruned k-NN join must reproduce ranking every pool
+    point, including near-pole needles, both with voxels sized from the
+    pool and with voxels far finer than its spacing (the cube then grows
+    over several passes before the k-th key beats its bound)."""
+    from xesmf_spark.grids import grid_2d, grid_global
+    from xesmf_spark.weights.nearest import knn_join
+
+    g_pool = grid_global(spark, 10.0, 6.0)     # coarse global incl. poles
+    g_need = grid_2d(spark, -180, 180, 15.0, -88, 88, 11.0)
+    key = lambda r: (r.left_id, r.rank, r.right_id, r.dist2)
+    with voxel_side(ONE_VOXEL):
+        bb = sorted(map(key, knn_join(g_need, g_pool, k=3).collect()))
+    with voxel_side(0.01):
+        fine = sorted(map(key, knn_join(g_need, g_pool, k=3).collect()))
+    bk = sorted(map(key, knn_join(g_need, g_pool, k=3).collect()))
+    assert bb == bk == fine
+    assert len(bb) == 3 * g_need.n_cells
 
 
 def test_knn_join_auto_runs_no_job(spark):

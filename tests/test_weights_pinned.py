@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from tests.test_curvilinear import _rotated_nodes, _seam_mesh
+from tests.test_regrid import ONE_VOXEL, voxel_side
 from xesmf_spark.grids import grid_2d, grid_from_2d_arrays, grid_global
 from xesmf_spark.queries import _curvilinear_pair, _fixture_grids, _locstream_pair
 from xesmf_spark.weights import (
@@ -32,6 +33,11 @@ def _global_mesh_pair(spark):
     lon, lat = np.meshgrid(g.geometry.lon, g.geometry.lat)
     src = grid_from_2d_arrays(spark, lon, lat, periodic=True)
     return src, grid_global(spark, 15, 9)
+
+
+def _one_voxel(build, *args, **kwargs):
+    with voxel_side(ONE_VOXEL):
+        return build(*args, **kwargs)
 
 
 def _cornered(spark, lonc, latc, lonb, latb):
@@ -81,11 +87,21 @@ CASES = {
         ),
         "22eb35e52e5cf10a4edc70c701a0a2a7",
     ),
-    "nearest_s2d": (
+    # "broadcast" ranks every pool point (the whole pool in one voxel),
+    # "bucketed" is the voxel-pruned search nearest_weights runs
+    "nearest_s2d_broadcast": (
+        lambda s: _one_voxel(nearest_weights, *_fixture_grids(s), direction="s2d"),
+        "f52ef643f3be7e063906ac8aa6488ffe",
+    ),
+    "nearest_s2d_bucketed": (
         lambda s: nearest_weights(*_fixture_grids(s), direction="s2d"),
         "f52ef643f3be7e063906ac8aa6488ffe",
     ),
-    "nearest_d2s": (
+    "nearest_d2s_broadcast": (
+        lambda s: _one_voxel(nearest_weights, *_fixture_grids(s), direction="d2s"),
+        "18e217f121212004e254c0fc32ff45c4",
+    ),
+    "nearest_d2s_bucketed": (
         lambda s: nearest_weights(*_fixture_grids(s), direction="d2s"),
         "18e217f121212004e254c0fc32ff45c4",
     ),
