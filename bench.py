@@ -228,7 +228,9 @@ def main():
 def _run_workloads(spark, sf_dir, timings, timed):
     import time
 
-    from xesmf_spark.grids import grid_2d
+    import numpy as np
+
+    from xesmf_spark.grids import grid_2d, grid_from_2d_arrays
     from xesmf_spark.weights import bilinear_weights, conservative_weights, nearest_weights
     from xesmf_spark.vectorized import smm_apply_files, write_wide_parquet
     from xesmf_spark.apply import smm_apply
@@ -286,17 +288,20 @@ def _run_workloads(spark, sf_dir, timings, timed):
         "weight_conservative_clip_240k_to_120k",
         lambda: conservative_weights_clip(g_in, g_out).count(),
     )
-    # the same pair with the curvilinear metadata flag set: the clip
-    # builder reads the rectilinear geometry's rings either way, so
-    # both keys time the same Sutherland-Hodgman path (the key is kept
-    # so bench records stay comparable across rounds)
-    from dataclasses import replace as _dc_replace
+    # the clipper on a genuinely curvilinear source of the same cell
+    # count: the source's centers and corner nodes rotated 10 degrees
+    # about (0, 0), onto the unrotated destination
+    cos, sin = np.cos(np.radians(10.0)), np.sin(np.radians(10.0))
 
-    g_in_c = _dc_replace(g_in, curvilinear=True)
-    g_out_c = _dc_replace(g_out, curvilinear=True)
+    def rotated(lon, lat):
+        lon, lat = np.meshgrid(lon, lat)
+        return lon * cos - lat * sin, lon * sin + lat * cos
+
+    geo = g_in.geometry
+    g_in_c = grid_from_2d_arrays(spark, *rotated(geo.lon, geo.lat), *rotated(geo.lon_b, geo.lat_b))
     timed2(
         "weight_conservative_clip_kernel_240k_to_120k",
-        lambda: conservative_weights_clip(g_in_c, g_out_c).count(),
+        lambda: conservative_weights_clip(g_in_c, g_out).count(),
     )
     timed2("weight_patch_240k_to_120k", lambda: patch_weights(g_in, g_out).count())
 
@@ -322,8 +327,6 @@ def _run_workloads(spark, sf_dir, timings, timed):
     # page-cache + python-worker warm-up) and steady-state (comparable
     # to the baseline's timeit steady-state 0.62 s, Backend.ipynb c33).
     import shutil
-
-    import numpy as np
 
     w_bl = bilinear_weights(g_in, g_out)
     w_bl.persist().count()

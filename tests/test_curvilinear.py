@@ -127,10 +127,10 @@ def test_conservative_clip_matches_axis_on_rectilinear(spark):
     """On a rectilinear pair the polygon clipper and the axis
     decomposition compute the SAME spherical-area overlaps — identical
     sparsity pattern, weights equal to fp round-off. The grids are
-    flagged curvilinear (as bench.py does), which routes them to the
-    clipper. The second pair has fractional steps far from lon 0, where
-    clipping in absolute coordinates turned shared edges into spurious
-    ~1e-11 overlaps."""
+    flagged curvilinear, which routes them to the clipper. The second
+    pair has fractional steps far from lon 0, where clipping in
+    absolute coordinates turned shared edges into spurious ~1e-11
+    overlaps."""
     import dataclasses
 
     from xesmf_spark.grids import grid_2d

@@ -163,16 +163,106 @@ def test_constructor_grid_facts_run_no_job(spark, jobs_in):
 
 def test_driver_facts_match_cell_table_aggregate(spark, jobs_in):
     """A hand-built Grid (no geometry) gets the same latitude and
-    degeneracy facts from ONE aggregate over its cells."""
+    degeneracy facts from ONE collect of its cells; a mesh-form grid's
+    table pivots back into its very geometry, so the digest agrees too."""
     from xesmf_spark.grids import Grid
 
     for name, g in _constructor_grids(spark).items():
         bare = Grid(df=g.df, shape=g.shape, has_bounds=g.has_bounds, curvilinear=g.curvilinear)
         facts, jobs = jobs_in(lambda: bare.facts)
-        assert jobs <= 2, name  # one aggregate: its shuffle map stage + result
+        assert jobs == 1, name
         assert facts.lat_out_of_range == g.facts.lat_out_of_range, name
         assert facts.n_degenerate == g.facts.n_degenerate, name
+        if not g.geometry.rectilinear:
+            assert facts.digest == g.facts.digest, name
         assert jobs_in(lambda: bare.facts)[1] == 0  # once per Grid
+
+
+@pytest.mark.parametrize("name", ["grid_from_arrays", "grid_from_2d_arrays"])
+def test_hand_built_grid_reads_its_table_in_one_job(spark, jobs_in, name):
+    """facts, axes, mesh and rings of a Grid built by hand around a cell
+    table (interval bounds, or corner columns) all read one geometry,
+    collected from the table in ONE job."""
+    import numpy as np
+
+    from xesmf_spark.grids import Grid
+
+    g = _constructor_grids(spark)[name]
+    bare = Grid(df=g.df, shape=g.shape, has_bounds=g.has_bounds, curvilinear=g.curvilinear)
+
+    def all_four():
+        if bare.curvilinear:
+            with pytest.raises(ValueError, match="separable"):
+                bare.axes
+        else:
+            assert all(
+                np.array_equal(getattr(a, f), getattr(b, f))
+                for a, b in zip(bare.axes, g.axes)
+                for f in ("c", "lo", "hi")
+            )
+        return bare.facts, bare.mesh, bare.rings
+
+    (facts, mesh, rings), jobs = jobs_in(all_four)
+    assert jobs == 1
+    assert facts.n_degenerate == g.facts.n_degenerate
+    assert all(np.array_equal(a, b) for a, b in zip(mesh + rings, g.mesh + g.rings))
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        "negative",  # -1 for the last id
+        "duplicate",  # the last id repeats the one before it
+        "missing",  # the last row dropped
+        "beyond",  # n_cells for the last id
+    ],
+)
+def test_hand_built_grid_rejects_bad_cell_ids(spark, bad):
+    """The table of a hand-built Grid must number its cells exactly
+    0..n_cells-1, each once; anything else would pivot cells into the
+    wrong place (or leave holes) without a word."""
+    from xesmf_spark.grids import Grid, grid_2d
+
+    g = grid_2d(spark, 0.0, 4.0, 1.0, 0.0, 2.0, 1.0)
+    last = F.col("cell_id") == g.n_cells - 1
+    df = {
+        "negative": g.df.withColumn("cell_id", F.when(last, -1).otherwise(F.col("cell_id"))),
+        "duplicate": g.df.withColumn("cell_id", F.when(last, g.n_cells - 2).otherwise(F.col("cell_id"))),
+        "missing": g.df.filter(~last),
+        "beyond": g.df.withColumn("cell_id", F.when(last, g.n_cells).otherwise(F.col("cell_id"))),
+    }[bad]
+    bare = Grid(df=df, shape=g.shape)
+    for prop in ("facts", "axes", "mesh", "rings"):
+        with pytest.raises(ValueError, match="cell_id"):
+            getattr(bare, prop)
+
+
+def test_constructor_mesh_cell_tables_are_literal(spark):
+    """The point list's cell table, column by column and row by row, and
+    the column layout of a mesh with corner nodes."""
+    grids = _constructor_grids(spark)
+    ls = grids["locstream"].df
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in ls.schema.fields] == [
+        ("cell_id", "bigint", True),
+        ("j", "bigint", True),
+        ("i", "bigint", True),
+        ("lon", "double", True),
+        ("lat", "double", True),
+        ("lon_lo", "double", True),
+        ("lon_hi", "double", True),
+        ("lat_lo", "double", True),
+        ("lat_hi", "double", True),
+    ]
+    assert [tuple(r) for r in ls.orderBy("cell_id").collect()] == [
+        (0, 0, 0, 0.0, -20.0, None, None, None, None),
+        (1, 0, 1, 5.0, 0.0, None, None, None, None),
+        (2, 0, 2, 10.0, 91.0, None, None, None, None),
+    ]
+    assert grids["grid_from_2d_arrays"].df.columns == [
+        "cell_id", "j", "i", "lon", "lat",
+        "clon0", "clat0", "clon1", "clat1", "clon2", "clat2", "clon3", "clat3",
+        "lon_lo", "lon_hi", "lat_lo", "lat_hi",
+    ]
 
 
 def test_geometry_digest_tells_same_shape_grids_apart(spark):

@@ -19,6 +19,7 @@ from xesmf_spark.queries import _curvilinear_pair, _fixture_grids, _locstream_pa
 from xesmf_spark.weights import (
     bilinear_weights,
     conservative_weights,
+    conservative_weights_clip,
     nearest_weights,
     patch_weights,
 )
@@ -62,13 +63,13 @@ CASES = {
         "a0669289b1a205f8925e87d10f935b6a",
     ),
     "conservative_axis": (
-        lambda s: conservative_weights(*_fixture_grids(s), strategy="axis"),
+        lambda s: conservative_weights(*_fixture_grids(s)),
         "ce98491cdd60abeb95862a22034b1cd4",
     ),
     # equal to the axis digest: on a rectilinear pair the clipper's
     # overlaps agree with the axis decomposition to 1e-12
     "conservative_clip": (
-        lambda s: conservative_weights(*_fixture_grids(s), strategy="clip"),
+        lambda s: conservative_weights_clip(*_fixture_grids(s)),
         "ce98491cdd60abeb95862a22034b1cd4",
     ),
     # curvilinear sources with corner nodes take the clipper's

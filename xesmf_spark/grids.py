@@ -25,13 +25,18 @@ Scale note: ``grid_2d`` cells are generated with ``spark.range``
 (distributed, no driver-side materialization), so an n_y x n_x grid of
 any size never touches the driver. What the driver does hold is the
 grid's :class:`Geometry` — the 1-D axes of a rectilinear grid, or the
-arrays a curvilinear mesh or point list was built from. The facts a
-Regridder construction checks (latitude range, degenerate cells, the
-weight-cache digest), the 1-D axes the rectilinear weight builders
-work on (:attr:`Grid.axes`), the 2-D centers the curvilinear-source
-builders broadcast (:attr:`Grid.mesh`) and the cell corner rings the
-polygon-clipping builder broadcasts (:attr:`Grid.rings`) are read from
-it with numpy, launching no Spark job.
+center fields and cell corner rings of a curvilinear mesh or point
+list. The facts a Regridder construction checks (latitude range,
+degenerate cells, the weight-cache digest), the 1-D axes the
+rectilinear weight builders work on (:attr:`Grid.axes`), the 2-D
+centers the curvilinear-source builders broadcast (:attr:`Grid.mesh`)
+and the cell corner rings the polygon-clipping builder broadcasts
+(:attr:`Grid.rings`) are read from it with numpy, launching no Spark
+job. A Grid built by hand around a cell table has no constructor
+geometry: its cells reach the driver ONCE, in one collect pivoted into
+the same record (:func:`_table_geometry`), which assumes the table fits
+there — true of the small point lists built this way
+(``queries._point_grid``: 49 points at the query default).
 """
 
 from __future__ import annotations
@@ -94,11 +99,9 @@ def grid_1d(
     return ax, n_cells
 
 
-def _frozen(a) -> np.ndarray:
+def _copy(a) -> np.ndarray:
     """Float64 copy the caller can no longer mutate under the grid."""
-    a = np.array(a, dtype=np.float64)
-    a.setflags(write=False)
-    return a
+    return np.array(a, dtype=np.float64)
 
 
 #: corner offsets ``(dj, di)`` of a cell's ring, the reference's corner
@@ -109,6 +112,9 @@ _RING = ((0, 0), (0, 1), (1, 1), (1, 0))
 #: with corner nodes (:func:`grid_from_2d_arrays`)
 CORNER_COLS = tuple(f"c{ax}{k}" for k in range(4) for ax in ("lon", "lat"))
 
+#: the interval-bound columns of the cell table (NULL on a mesh)
+BOUND_COLS = ("lon_lo", "lon_hi", "lat_lo", "lat_hi")
+
 
 def node_ring(b: np.ndarray) -> np.ndarray:
     """The 4 ring corners of every cell of the (n_y+1, n_x+1) corner-node
@@ -117,25 +123,42 @@ def node_ring(b: np.ndarray) -> np.ndarray:
     return np.stack([b[dj : dj + n_y, di : di + n_x] for dj, di in _RING])
 
 
+def _box_rings(lon_lo, lon_hi, lat_lo, lat_hi) -> tuple[np.ndarray, np.ndarray]:
+    """The ``(lon, lat)`` rings of lon/lat boxes, ``(4, *shape)`` in
+    :data:`_RING` order — the ring :func:`cell_quads` reads from interval
+    bounds. The bounds broadcast against each other."""
+    lon_lo, lon_hi, lat_lo, lat_hi = np.broadcast_arrays(lon_lo, lon_hi, lat_lo, lat_hi)
+    return np.stack([lon_lo, lon_hi, lon_hi, lon_lo]), np.stack([lat_lo, lat_lo, lat_hi, lat_hi])
+
+
 @dataclass(frozen=True, eq=False)
 class Geometry:
-    """Driver-side record of a grid's cell geometry, in degrees — what
-    every constructor already holds before it builds the cell table.
+    """Driver-side record of a grid's cell geometry, in degrees, in one
+    of two forms:
 
-    - rectilinear grids keep their separable 1-D axes: ``lon`` (n_x,) and
-      ``lat`` (n_y,) centers, ``lon_b`` (n_x+1,) and ``lat_b`` (n_y+1,)
-      bounds (cell ``k`` spans ``b[k]..b[k+1]``);
-    - curvilinear meshes and point lists keep (n_y, n_x) ``lon``/``lat``
-      center fields and (n_y+1, n_x+1) corner-node arrays.
+    - the separable form of a rectilinear constructor grid: 1-D axes
+      ``lon`` (n_x,) and ``lat`` (n_y,) centers, ``lon_b`` (n_x+1,) and
+      ``lat_b`` (n_y+1,) bounds (cell ``k`` spans ``b[k]..b[k+1]``);
+    - the mesh form of a curvilinear mesh, a point list or a Grid built
+      by hand around a cell table: (n_y, n_x) ``lon``/``lat`` center
+      fields and the per-cell corner rings ``lon_b``/``lat_b``, shape
+      (4, n_y, n_x) in :data:`_RING` order — :func:`node_ring` of a
+      mesh's corner nodes, or a table's corner columns or interval
+      bounds.
 
-    ``lon_b``/``lat_b`` are None for a grid without bounds. The weight
-    builders get a rectilinear record's axes through :attr:`Grid.axes`.
+    ``lon_b``/``lat_b`` are None for a grid without bounds. The arrays
+    are read-only: :class:`Grid` hands out views of them.
     """
 
     lon: np.ndarray
     lat: np.ndarray
     lon_b: np.ndarray | None = None
     lat_b: np.ndarray | None = None
+
+    def __post_init__(self):
+        for a in (self.lon, self.lat, self.lon_b, self.lat_b):
+            if a is not None:
+                a.setflags(write=False)
 
     @property
     def rectilinear(self) -> bool:
@@ -149,8 +172,8 @@ class Geometry:
             if a is None:
                 h.update(b"none")
             else:
-                # rounded to 9 decimals like the cell-table digest; +0.0
-                # folds -0.0 into 0.0 so equal geometry hashes equally
+                # rounded to 9 decimals; +0.0 folds -0.0 into 0.0 so
+                # equal geometry hashes equally
                 h.update(repr(a.shape).encode())
                 h.update((np.round(a, 9) + 0.0).tobytes())
         return CellFacts(bool(bad.any()), self._n_degenerate(), h.hexdigest()[:8])
@@ -164,12 +187,11 @@ class Geometry:
             good_x = int(np.count_nonzero(self.lon_b[1:] != self.lon_b[:-1]))
             good_y = int(np.count_nonzero(self.lat_b[1:] != self.lat_b[:-1]))
             return self.lon.size * self.lat.size - good_x * good_y
-        cx, cy = node_ring(self.lon_b), node_ring(self.lat_b)
+        cx, cy = self.lon_b, self.lat_b
         xs, ys = np.radians(cx), np.sin(np.radians(cy))
         area2 = sum(xs[k] * ys[(k + 1) % 4] - xs[(k + 1) % 4] * ys[k] for k in range(4))
         deg = np.abs(area2) < 1e-16
-        # a ring with fewer than 4 distinct nodes at 12 decimals (numpy
-        # rounds exact ties to even where Spark's round() rounds half up)
+        # a ring with fewer than 4 distinct nodes at 12 decimals
         rx, ry = np.round(cx, 12), np.round(cy, 12)
         for a in range(4):
             for b in range(a + 1, 4):
@@ -225,8 +247,9 @@ class Grid:
     #: (xesmf/frontend.py:424-430); carried as metadata and used by the
     #: Regridder facade to name attached dim-index columns
     dims: tuple[str, str] = ("y", "x")
-    #: driver-side geometry the constructors keep; None for a Grid built
-    #: by hand around a cell DataFrame
+    #: driver-side geometry a constructor passes in; None for a Grid
+    #: built by hand around a cell DataFrame, which reads its own from
+    #: the table on first use. Read through :attr:`_geometry`.
     geometry: Geometry | None = dc_field(default=None, repr=False)
 
     @property
@@ -242,42 +265,47 @@ class Grid:
         return self.shape[0]
 
     @cached_property
+    def _geometry(self) -> Geometry:
+        """The one geometry :attr:`facts`, :attr:`axes`, :attr:`mesh`
+        and :attr:`rings` read: the constructor's, or a hand-built
+        Grid's from ONE collect of its cell table
+        (:func:`_table_geometry`). Once per Grid."""
+        return self.geometry if self.geometry is not None else _table_geometry(self)
+
+    @cached_property
     def facts(self) -> CellFacts:
-        """Latitude range, degenerate-cell count and geometry digest.
-        Computed with numpy from :attr:`geometry` (no Spark job); a
-        hand-built Grid pays ONE aggregate over its cell table. Either
-        way, once per Grid."""
-        if self.geometry is not None:
-            return self.geometry.facts(self.shape)
-        return _cell_table_facts(self)
+        """Latitude range, degenerate-cell count and geometry digest,
+        computed with numpy from the geometry."""
+        return self._geometry.facts(self.shape)
 
     @cached_property
     def axes(self) -> tuple[Axis, Axis]:
         """The separable ``(lon, lat)`` :class:`Axis` pair of a
-        rectilinear grid, in numpy. Read from :attr:`geometry`; a
-        hand-built Grid pays ONE collect of its distinct axis rows.
-        Either way, once per Grid. Raises ValueError on a curvilinear
-        grid."""
+        rectilinear grid, in numpy. A hand-built grid's mesh form gives
+        its first cell row as the lon axis and its first cell column as
+        the lat axis. Raises ValueError on a curvilinear grid."""
         if self.curvilinear:
             raise ValueError(
                 "a curvilinear grid has no separable 1-D lon/lat axes; "
                 "its weights come from the mesh builders"
             )
-        g = self.geometry
-        if g is None or not g.rectilinear:
-            return _cell_table_axes(self)
-        return Axis.of(g.lon, g.lon_b), Axis.of(g.lat, g.lat_b)
+        g = self._geometry
+        if g.rectilinear:
+            return Axis.of(g.lon, g.lon_b), Axis.of(g.lat, g.lat_b)
+        if g.lon_b is None:
+            return Axis(g.lon[0], None, None), Axis(g.lat[:, 0], None, None)
+        # ring corner 0 is a cell's (lo, lo) corner, corner 2 its (hi, hi)
+        return (
+            Axis(g.lon[0], g.lon_b[0, 0], g.lon_b[2, 0]),
+            Axis(g.lat[:, 0], g.lat_b[0, :, 0], g.lat_b[2, :, 0]),
+        )
 
     @cached_property
     def mesh(self) -> tuple[np.ndarray, np.ndarray]:
         """The ``(lon, lat)`` cell centers as read-only ``(n_y, n_x)``
-        numpy arrays, ``[j, i]`` = cell ``j * n_x + i``. Read from
-        :attr:`geometry` (a rectilinear grid's axes broadcast, without
-        a copy); a hand-built Grid pays ONE collect of its cell table.
-        Either way, once per Grid."""
-        g = self.geometry
-        if g is None:
-            return _cell_table_mesh(self)
+        numpy arrays, ``[j, i]`` = cell ``j * n_x + i`` (a rectilinear
+        grid's axes broadcast, without a copy)."""
+        g = self._geometry
         if g.rectilinear:
             return np.broadcast_to(g.lon, self.shape), np.broadcast_to(g.lat[:, None], self.shape)
         return g.lon, g.lat
@@ -285,22 +313,17 @@ class Grid:
     @cached_property
     def rings(self) -> tuple[np.ndarray, np.ndarray]:
         """The ``(lon, lat)`` corner rings of the cells as read-only
-        ``(4, n_cells)`` numpy arrays in :func:`node_ring` order,
-        ``[:, k]`` = cell ``k``. Read from :attr:`geometry`: the corner
-        nodes of a curvilinear mesh, the axis bounds of a rectilinear
-        grid; a hand-built Grid pays ONE collect of :func:`cell_quads`.
-        Either way, once per Grid. Raises KeyError on a grid without
-        bounds."""
-        g = self.geometry
-        if g is None:
-            return _cell_table_rings(self)
+        ``(4, n_cells)`` numpy arrays in :data:`_RING` order, ``[:, k]``
+        = cell ``k``: a reshape of the mesh form's rings, or the boxes of
+        a rectilinear grid's axis bounds. Raises KeyError on a grid
+        without bounds."""
+        g = self._geometry
         if g.lon_b is None:
             raise KeyError(_NO_CORNERS)
-        lon_b, lat_b = g.lon_b, g.lat_b
+        x, y = g.lon_b, g.lat_b
         if g.rectilinear:
-            nodes = (self.n_y + 1, self.n_x + 1)
-            lon_b, lat_b = np.broadcast_to(lon_b, nodes), np.broadcast_to(lat_b[:, None], nodes)
-        x, y = (node_ring(b).reshape(4, self.n_cells) for b in (lon_b, lat_b))
+            x, y = _box_rings(x[:-1], x[1:], y[:-1, None], y[1:, None])
+        x, y = x.reshape(4, self.n_cells), y.reshape(4, self.n_cells)
         x.setflags(write=False)
         y.setflags(write=False)
         return x, y
@@ -349,7 +372,7 @@ def grid_2d(
         shape=(n_y, n_x),
         periodic=periodic,
         has_bounds=True,
-        geometry=Geometry(_frozen(lon), _frozen(lat), _frozen(lon_b), _frozen(lat_b)),
+        geometry=Geometry(_copy(lon), _copy(lat), _copy(lon_b), _copy(lat_b)),
     )
 
 
@@ -433,10 +456,10 @@ def grid_from_arrays(
         periodic=periodic,
         has_bounds=has_bounds,
         geometry=Geometry(
-            _frozen(lon),
-            _frozen(lat),
-            _frozen(lon_b) if has_bounds else None,
-            _frozen(lat_b) if has_bounds else None,
+            _copy(lon),
+            _copy(lat),
+            _copy(lon_b) if has_bounds else None,
+            _copy(lat_b) if has_bounds else None,
         ),
     )
 
@@ -456,10 +479,7 @@ def grid_from_2d_arrays(
     carries its 4-corner ring ``clon0..3 / clat0..3`` in node order
     (j,i) → (j,i+1) → (j+1,i+1) → (j+1,i). Without bounds: bilinear
     (point-in-quad) and nearest only, gated by the Regridder."""
-    import pandas as pd
-
-    lon2d = _frozen(lon2d)
-    lat2d = _frozen(lat2d)
+    lon2d, lat2d = _copy(lon2d), _copy(lat2d)
     if lon2d.ndim != 2 or lon2d.shape != lat2d.shape:
         raise ValueError("lon2d and lat2d must be equal-shaped 2-D arrays")
     n_y, n_x = lon2d.shape
@@ -467,42 +487,21 @@ def grid_from_2d_arrays(
     if (lon_b is None) != (lat_b is None):
         raise ValueError("provide both lon_b and lat_b, or neither")
     if has_corners:
-        lon_b = _frozen(lon_b)
-        lat_b = _frozen(lat_b)
+        lon_b = np.asarray(lon_b, dtype=np.float64)
+        lat_b = np.asarray(lat_b, dtype=np.float64)
         if lon_b.shape != (n_y + 1, n_x + 1) or lat_b.shape != lon_b.shape:
             raise ValueError(
                 "corner arrays lon_b/lat_b must have shape (n_y+1, n_x+1)"
             )
-    # vectorized assembly + ONE Arrow batch to the JVM — no per-cell
-    # Python row list on the driver (a 1Mx-cell mesh would otherwise
-    # materialize millions of tuples here)
-    jj, ii = np.divmod(np.arange(n_y * n_x, dtype=np.int64), n_x)
-    cols = {
-        "cell_id": np.arange(n_y * n_x, dtype=np.int64),
-        "j": jj,
-        "i": ii,
-        "lon": lon2d.ravel(),
-        "lat": lat2d.ravel(),
-    }
-    schema = "cell_id bigint, j bigint, i bigint, lon double, lat double"
-    if has_corners:
-        cx, cy = node_ring(lon_b), node_ring(lat_b)
-        for k in range(4):
-            cols[f"clon{k}"] = cx[k].ravel()
-            cols[f"clat{k}"] = cy[k].ravel()
-        schema += "".join(
-            f", clon{k} double, clat{k} double" for k in range(4)
-        )
-    df = spark.createDataFrame(pd.DataFrame(cols), schema)
-    for c in ("lon_lo", "lon_hi", "lat_lo", "lat_hi"):
-        df = df.withColumn(c, F.lit(None).cast("double"))
+        lon_b, lat_b = node_ring(lon_b), node_ring(lat_b)
+    geometry = Geometry(lon2d, lat2d, lon_b, lat_b)
     return Grid(
-        df=df,
+        df=_mesh_table(spark, geometry),
         shape=(n_y, n_x),
         periodic=periodic,
         has_bounds=has_corners,
         curvilinear=True,
-        geometry=Geometry(lon2d, lat2d, lon_b, lat_b),
+        geometry=geometry,
     )
 
 
@@ -513,24 +512,41 @@ def locstream(spark: SparkSession, lons: list[float], lats: list[float]) -> Grid
     """
     if len(lons) != len(lats):
         raise ValueError("lon and lat must have the same length")
-    rows = [
-        (int(k), 0, int(k), float(lon), float(lat))
-        for k, (lon, lat) in enumerate(zip(lons, lats))
-    ]
-    df = spark.createDataFrame(rows, "cell_id bigint, j bigint, i bigint, lon double, lat double")
-    df = (
-        df.withColumn("lon_lo", F.lit(None).cast("double"))
-        .withColumn("lon_hi", F.lit(None).cast("double"))
-        .withColumn("lat_lo", F.lit(None).cast("double"))
-        .withColumn("lat_hi", F.lit(None).cast("double"))
-    )
+    geometry = Geometry(_copy([lons]), _copy([lats]))
     return Grid(
-        df=df,
+        df=_mesh_table(spark, geometry),
         shape=(1, len(lons)),
         periodic=False,
         has_bounds=False,
-        geometry=Geometry(_frozen([lons]), _frozen([lats])),
+        geometry=geometry,
     )
+
+
+def _mesh_table(spark: SparkSession, geometry: Geometry) -> DataFrame:
+    """The cell table of a mesh-form :class:`Geometry`: ``cell_id, j, i,
+    lon, lat``, the corner columns when it has rings, then NULL interval
+    bounds. Assembled with numpy and sent to the JVM as ONE Arrow batch —
+    no per-cell Python row list on the driver (a 1M-cell mesh would
+    otherwise materialize millions of tuples here)."""
+    import pandas as pd
+
+    n_y, n_x = geometry.lon.shape
+    cell_id = np.arange(n_y * n_x, dtype=np.int64)
+    jj, ii = np.divmod(cell_id, n_x)
+    cols = {
+        "cell_id": cell_id,
+        "j": jj,
+        "i": ii,
+        "lon": geometry.lon.ravel(),
+        "lat": geometry.lat.ravel(),
+    }
+    if geometry.lon_b is not None:
+        for k in range(4):
+            cols[f"clon{k}"] = geometry.lon_b[k].ravel()
+            cols[f"clat{k}"] = geometry.lat_b[k].ravel()
+    schema = "cell_id bigint, j bigint, i bigint, " + ", ".join(f"{c} double" for c in list(cols)[3:])
+    df = spark.createDataFrame(pd.DataFrame(cols), schema)
+    return df.select("*", *(F.lit(None).cast("double").alias(c) for c in BOUND_COLS))
 
 
 def wave_smooth(lon: Column | str = "lon", lat: Column | str = "lat") -> Column:
@@ -581,90 +597,29 @@ def cell_quads(g: Grid, prefix: str) -> DataFrame:
     return g.df.select(*sel)
 
 
-def _cell_table_facts(grid: Grid) -> CellFacts:
-    """:class:`CellFacts` of a Grid without driver-side geometry, from
-    ONE aggregate over its cell table. The digest is an order-insensitive
-    sum of per-row md5 hashes over (cell_id, lon, lat [, bounds,
-    corners]) rounded to 9 decimals."""
-    df = grid.df
-    if all(c in df.columns for c in CORNER_COLS):
-        ring = F.array(
-            *[
-                F.struct(
-                    F.round(F.col(f"clon{k}"), 12).alias("x"),
-                    F.round(F.col(f"clat{k}"), 12).alias("y"),
-                )
-                for k in range(4)
-            ]
-        )
-        xs = [F.radians(F.col(f"clon{k}")) for k in range(4)]
-        ys = [F.sin(F.radians(F.col(f"clat{k}"))) for k in range(4)]
-        area2 = sum(
-            xs[k] * ys[(k + 1) % 4] - xs[(k + 1) % 4] * ys[k] for k in range(4)
-        )
-        deg = (F.size(F.array_distinct(ring)) < 4) | (F.abs(area2) < F.lit(1e-16))
-    elif grid.has_bounds:
-        deg = (F.col("lon_hi") == F.col("lon_lo")) | (
-            F.col("lat_hi") == F.col("lat_lo")
-        )
+def _table_geometry(grid: Grid) -> Geometry:
+    """The mesh-form :class:`Geometry` of a Grid built by hand around a
+    cell table: ONE collect of ``cell_id``, ``lon``, ``lat`` and, when
+    the grid has bounds, its corner columns (or else its interval
+    bounds), pivoted by ``cell_id``. Raises ValueError unless the ids
+    are exactly ``0 .. n_cells-1``, each once."""
+    corners = all(c in grid.df.columns for c in CORNER_COLS)
+    cols = ["lon", "lat"]
+    if grid.has_bounds:
+        cols += CORNER_COLS if corners else BOUND_COLS
+    pdf = grid.df.select("cell_id", *cols).toPandas()
+    ids = pdf["cell_id"].to_numpy(np.int64)
+    order = np.argsort(ids, kind="stable")
+    if not np.array_equal(ids[order], np.arange(grid.n_cells)):
+        raise ValueError(f"cell_id of a {grid.shape} grid must run 0..{grid.n_cells - 1}, each once")
+    f = {c: pdf[c].to_numpy(np.float64)[order].reshape(grid.shape) for c in cols}
+    if not grid.has_bounds:
+        return Geometry(f["lon"], f["lat"])
+    if corners:
+        rings = (np.stack([f[f"c{ax}{k}"] for k in range(4)]) for ax in ("lon", "lat"))
     else:
-        deg = F.lit(False)
-    cols = [F.col("cell_id").cast("string")]
-    geom_cols = ["lon", "lat", "lon_lo", "lon_hi", "lat_lo", "lat_hi", *CORNER_COLS]
-    for c in geom_cols:
-        if c in df.columns:
-            cols.append(F.round(F.col(c), 9).cast("string"))
-    row_h = F.conv(
-        F.substring(F.md5(F.encode(F.concat_ws(",", *cols), "utf-8")), 1, 15), 16, 10
-    ).cast("long")
-    n_bad, n_deg, digest = df.agg(
-        F.count(F.when(~F.col("lat").between(-90.0, 90.0), 1)),
-        F.count(F.when(deg, 1)),
-        F.sum(row_h % 1_000_000_007),
-    ).first()
-    raw = f"cells|{grid.shape}|{digest}"
-    return CellFacts(n_bad > 0, n_deg, hashlib.md5(raw.encode()).hexdigest()[:8])
-
-
-def _cell_table_axes(grid: Grid) -> tuple[Axis, Axis]:
-    """:attr:`Grid.axes` of a Grid without driver-side geometry, from
-    ONE collect of the distinct ``(axis, index, lo, hi, center)`` rows
-    of its cell table."""
-    rows = (
-        grid.df.select(F.lit(0), "i", "lon_lo", "lon_hi", "lon")
-        .union(grid.df.select(F.lit(1), "j", "lat_lo", "lat_hi", "lat"))
-        .distinct()
-        .collect()
-    )
-    axes = []
-    for a, n in enumerate((grid.n_x, grid.n_y)):
-        c, lo, hi = np.full((3, n), np.nan)
-        for axis, k, lo_k, hi_k, c_k in rows:
-            if axis == a:
-                lo[k], hi[k], c[k] = lo_k, hi_k, c_k  # None (no bounds) -> NaN
-        axes.append(Axis(c, lo, hi) if grid.has_bounds else Axis(c, None, None))
-    return axes[0], axes[1]
-
-
-def _cell_table_mesh(grid: Grid) -> tuple[np.ndarray, np.ndarray]:
-    """:attr:`Grid.mesh` of a Grid without driver-side geometry, from
-    ONE collect of its ``(cell_id, lon, lat)`` rows."""
-    pdf = grid.df.select("cell_id", "lon", "lat").toPandas()
-    lon, lat = np.full((2, grid.n_cells), np.nan)
-    k = pdf["cell_id"].to_numpy(np.int64)
-    lon[k], lat[k] = pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64)
-    return _frozen(lon.reshape(grid.shape)), _frozen(lat.reshape(grid.shape))
-
-
-def _cell_table_rings(grid: Grid) -> tuple[np.ndarray, np.ndarray]:
-    """:attr:`Grid.rings` of a Grid without driver-side geometry, from
-    ONE collect of its :func:`cell_quads`."""
-    pdf = cell_quads(grid, "").toPandas()
-    x, y = np.full((2, 4, grid.n_cells), np.nan)
-    k = pdf["id"].to_numpy(np.int64)
-    x[:, k] = pdf[[f"x{c}" for c in range(4)]].to_numpy(np.float64).T
-    y[:, k] = pdf[[f"y{c}" for c in range(4)]].to_numpy(np.float64).T
-    return _frozen(x), _frozen(y)
+        rings = _box_rings(*(f[c] for c in BOUND_COLS))
+    return Geometry(f["lon"], f["lat"], *rings)
 
 
 def count_degenerate_cells(grid: Grid) -> int:

@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 from xesmf_spark.apply import smm_apply
 from xesmf_spark.grids import grid_global, wave_smooth
 from xesmf_spark.materialize import pin
-from xesmf_spark.weights import bilinear_weights, conservative_weights, nearest_weights
+from xesmf_spark.weights import (
+    bilinear_weights,
+    conservative_weights,
+    conservative_weights_clip,
+    nearest_weights,
+)
 
 ROUND = 7
 
@@ -250,7 +255,7 @@ def regrid_conservative_clip(spark, sf_dir):
     full path (bin lookup, pair dedup, seam shift, clip kernel, area
     ratio) to the value hash."""
     g_in, g_out = _fixture_grids(spark)
-    w = conservative_weights(g_in, g_out, strategy="clip")
+    w = conservative_weights_clip(g_in, g_out)
     field = g_in.df.select("cell_id", wave_smooth().alias("value"))
     out = smm_apply(field, w, g_out)
     return out.select(

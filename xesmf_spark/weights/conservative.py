@@ -46,24 +46,20 @@ def _axis_overlap(src_ax: Axis, dst_ax: Axis, measure=None):
     return d, k, frac
 
 
-def conservative_weights(src: Grid, dst: Grid, strategy: str | None = None) -> DataFrame:
-    """COO weight triplets for first-order conservative regridding.
-
-    ``strategy=None`` auto-dispatches: the axis-decomposed plan below
-    for rectilinear pairs, the general polygon-clipping builder
-    (conservative_clip.py) when either mesh is curvilinear. ``"clip"``
-    forces the general builder on rectilinear pairs too (differential /
-    oracle checking — both compute spherical area in the same
-    (radians(lon), sin(lat)) measure, so they agree to fp round-off
-    there).
+def conservative_weights(src: Grid, dst: Grid) -> DataFrame:
+    """COO weight triplets for first-order conservative regridding:
+    the axis-decomposed plan below for rectilinear pairs, the general
+    polygon-clipping builder (conservative_clip.py) when either mesh is
+    curvilinear. Call ``conservative_weights_clip`` directly to run the
+    clipper on a rectilinear pair (differential / oracle checking —
+    both compute spherical area in the same (radians(lon), sin(lat))
+    measure, so they agree to fp round-off there).
 
     Unmapped destination cells simply get no rows — the apply's
     NULL-valued destination rows and ``coalesce(sum, 0.0)`` reproduce
     ``unmapped_action=IGNORE`` (xesmf/backend.py:275-279).
     """
-    if strategy is None:
-        strategy = "clip" if (src.curvilinear or dst.curvilinear) else "axis"
-    if strategy == "clip":
+    if src.curvilinear or dst.curvilinear:
         from xesmf_spark.weights.conservative_clip import conservative_weights_clip
 
         return conservative_weights_clip(src, dst)
