@@ -8,8 +8,8 @@ window is visible in the record.
 
 Usage: AB_ROUNDS=3 [extra env...] python scripts/ab_stash.py out.json q1 [q2 ...]
 
-Env is inherited by the child JVMs, so strategy knobs
-(e.g. XESMF_TRIANGLE_BROADCAST_MAX_EDGES=0) apply to BOTH arms.
+Env is inherited by the child JVMs, so session settings
+(e.g. SPARK_GRAFT_CPUS=4) apply to BOTH arms.
 """
 
 from __future__ import annotations
@@ -103,8 +103,7 @@ def main() -> None:
         for k in names
         if best["before"].get(k)
     }
-    payload = {"rounds": runs, "minima": best, "after_over_before": ratios,
-               "env": {k: v for k, v in os.environ.items() if k.startswith("XESMF_")}}
+    payload = {"rounds": runs, "minima": best, "after_over_before": ratios}
     with open(out_path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
     print(json.dumps({"minima": best, "after_over_before": ratios}, indent=1))

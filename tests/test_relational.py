@@ -1120,10 +1120,10 @@ def test_triangle_count_matches_brute_force(spark):
 
 
 def test_triangle_closing_probe_strategies_agree(spark, monkeypatch):
-    """The closing-edge probe picks broadcast-semi vs shuffled-semi by
-    the driver-measured edge count (TRIANGLE_BROADCAST_MAX_EDGES);
-    both strategies must return identical results — triangles AND
-    per-node coefficients."""
+    """The closing-edge probe picks broadcast-semi vs Bloom-pruned
+    shuffled semi by the driver-measured edge count
+    (TRIANGLE_BROADCAST_MAX_EDGES); both strategies must return
+    identical results — triangles AND per-node coefficients."""
     from itertools import combinations
 
     from xesmf_spark import relational as R
@@ -1146,12 +1146,8 @@ def test_triangle_closing_probe_strategies_agree(spark, monkeypatch):
     bcast = snap()
     # force the big-graph path: bloom-pruned shuffled semi join
     monkeypatch.setattr(R, "TRIANGLE_BROADCAST_MAX_EDGES", 0)
-    assert R.TRIANGLE_BLOOM_BITS_PER_EDGE > 0
     bloomed = snap()
-    # third branch: bloom prune disabled -> plain shuffled semi join
-    monkeypatch.setattr(R, "TRIANGLE_BLOOM_BITS_PER_EDGE", 0)
-    shuffled = snap()
-    assert bcast == bloomed == shuffled
+    assert bcast == bloomed
     assert bcast[0]["n_triangles"] == 5
 
 
@@ -1286,8 +1282,13 @@ def test_graph_ops_degenerate_inputs(spark):
     results, not errors — the guards a pipeline composing these ops
     on filtered edge sets relies on."""
     from xesmf_spark.relational import (
+        connected_components,
+        connected_components_converged,
         kcore_nodes,
+        label_propagation,
+        pagerank_weighted,
         shared_neighbor_jaccard,
+        shortest_paths,
         triangle_count,
     )
 
@@ -1308,6 +1309,79 @@ def test_graph_ops_degenerate_inputs(spark):
     bip = spark.createDataFrame([(1, 10), (2, 10)], "src long, dst long")
     assert shared_neighbor_jaccard(bip, min_inter=2).count() == 0
     assert shared_neighbor_jaccard(bip, min_inter=1).count() == 1
+
+    # empty edge lists through the iterative operators: no nodes, and a
+    # source reaches only itself
+    assert label_propagation(empty).count() == 0
+    assert connected_components(empty).count() == 0
+    assert connected_components_converged(empty).count() == 0
+    empty_w = spark.createDataFrame([], "src long, dst long, w long")
+    src = spark.createDataFrame([(1,)], "node long")
+    assert [tuple(r) for r in shortest_paths(empty_w, src, iters=2).collect()] == [
+        (1, 0)
+    ]
+    pw = pagerank_weighted(empty_w)
+    assert pw.columns == ["node", "rank_micro"] and pw.count() == 0
+
+
+_PIN_RELEASE_EDGES = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10)]
+
+
+def _pin_release_call(spark, name):
+    from xesmf_spark import pipeline as P
+    from xesmf_spark import relational as R
+
+    if name == "dedup_groups":
+        pairs = spark.createDataFrame(_PIN_RELEASE_EDGES, "id_a long, id_b long")
+        return P.dedup_groups(pairs)
+    if name == "shortest_paths":
+        weighted = spark.createDataFrame(
+            [(a, b, a + b) for a, b in _PIN_RELEASE_EDGES],
+            "src long, dst long, w long",
+        )
+        sources = spark.createDataFrame([(1,), (10,)], "node long")
+        return R.shortest_paths(weighted, sources, iters=4)
+    edges = spark.createDataFrame(_PIN_RELEASE_EDGES, "src long, dst long")
+    return getattr(R, name)(edges)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "label_propagation",
+        "connected_components",
+        "connected_components_converged",
+        "shortest_paths",
+        "dedup_groups",
+    ],
+)
+def test_graph_loops_release_their_edge_pins(spark, monkeypatch, name):
+    """The iterative graph operators hold their edge list cached only
+    while their eager per-round checkpoints read it: each returns with
+    the registry at its prior depth and nothing it persisted still
+    cached, and its result does not depend on the cache."""
+    from xesmf_spark import materialize
+
+    cls = type(spark.range(1))
+    persisted = []
+    persist = cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", recording_persist)
+    depth = materialize.mark()
+    out = _pin_release_call(spark, name)
+    assert materialize.mark() == depth
+    assert persisted
+    for df in persisted:
+        lvl = df.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk)
+    before = sorted(tuple(r) for r in out.collect())
+    spark.catalog.clearCache()
+    assert sorted(tuple(r) for r in out.collect()) == before
+    assert before
 
 
 def test_shortest_paths_matches_dijkstra(spark):

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from xesmf_spark.materialize import pin
+from xesmf_spark.materialize import mark, pin, release_since
 from xesmf_spark.session import shuffle_partition_count
 
 #: modulus keeping all hash arithmetic < 2^60 (ANSI-safe in both engines)
@@ -419,7 +419,10 @@ def dedup_groups(
     # round's propagation join uses — so each round shuffles only the
     # O(N) label table against the cached partitioning instead of
     # re-exchanging |E| edges per round (guide §2.4; partition count
-    # inherits spark.sql.shuffle.partitions, scale-adaptive via conf)
+    # inherits spark.sql.shuffle.partitions, scale-adaptive via conf);
+    # released after the loop, whose every label frame is an eager
+    # checkpoint
+    depth = mark()
     edges = pin(
         half.unionByName(
             half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -463,6 +466,7 @@ def dedup_groups(
         labels = new_labels.select("node", "lbl")
         if changed == 0:
             break
+    release_since(depth)
     comp = labels.select(F.col("node"), F.col("lbl").alias("keep_id"))
     if nodes is None:
         return comp.select(F.col("node").alias(id_col), "keep_id")

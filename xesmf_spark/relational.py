@@ -21,50 +21,24 @@ blow-up even for a key holding millions of rows on both sides.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xesmf_spark.materialize import mark, pin, release_since
 
-# Closing-edge probe strategy bound for the triangle family (guide
-# §3.1/§3.2): when the oriented edge list is small enough to broadcast
-# (a pair-key hash relation; 4M edges ~ 64 MB built), the wedge table —
-# O(m^1.5) rows, the dominant exchange of the whole operator — is
-# probed map-side by a broadcast LEFT SEMI join and NEVER shuffled.
-# Larger graphs keep the shuffled semi join: the 100-TB path is
-# unchanged (an edge set at that scale is not a dim table).  Env knob
-# so a cluster can raise/lower it with executor memory; the PySpark
-# manual-Bloom fallback from the guide is not available (might_contain
-# / bloom_filter_agg are optimizer-internal, unresolvable from SQL in
-# 4.1), so the broadcast-semi-join "when they fit" variant is the
-# documented substitute.
-TRIANGLE_BROADCAST_MAX_EDGES = int(
-    os.environ.get("XESMF_TRIANGLE_BROADCAST_MAX_EDGES", "4000000")
-)
-
-# Above the broadcast bound (r15 verdict task 1): the oriented edge
-# set is no longer broadcastable, but the wedge table can still be
-# pruned MAP-SIDE before the shuffled semi join with a Bloom filter
-# over the oriented (u, w) closing keys (guide §3.2, via the in-repo
-# bloom_prune_join).  Wedges that provably don't close die in the
-# stage that builds them; only closing candidates (+ fpp false
-# positives) reach the O(m^1.5) exchange, and the trailing exact semi
-# join restores exactness (Bloom filters have no false negatives).
-# Sizing is scale-adaptive: BITS_PER_EDGE bits per oriented edge
-# (default 12 -> ~1.1% fpp at k=3 hashes), capped at MAX_BITS
-# (default 2^30 = a 128 MB bitmap, within the guide's "few hundred
-# MB broadcast is fine" bound; past the cap fpp degrades gracefully
-# and the result stays exact).  BITS_PER_EDGE=0 disables the prune
-# (plain shuffled semi join — the third strategy branch the
-# agreement pytest locks).
-TRIANGLE_BLOOM_BITS_PER_EDGE = int(
-    os.environ.get("XESMF_TRIANGLE_BLOOM_BITS_PER_EDGE", "12")
-)
-TRIANGLE_BLOOM_MAX_BITS = int(
-    os.environ.get("XESMF_TRIANGLE_BLOOM_MAX_BITS", str(1 << 30))
-)
+# Closing-edge probe bounds for the triangle family (guide §3.1/§3.2).
+# Up to TRIANGLE_BROADCAST_MAX_EDGES oriented edges (a pair-key hash
+# relation, ~64 MB built at 4M) the edge set is broadcast and the
+# O(m^1.5) wedge table is probed map-side, never shuffled.  Above it
+# the wedge table is Bloom-pruned map-side on the (u, w) closing keys
+# before the shuffled semi join: BITS_PER_EDGE bits per edge (~1.1%
+# fpp at 3 hashes), capped at MAX_BITS (a 128 MB bitmap; past the cap
+# fpp degrades and the result stays exact).  Spark's own
+# bloom_filter_agg / might_contain are not resolvable from SQL in 4.1,
+# hence the in-repo bloom_prune_join.
+TRIANGLE_BROADCAST_MAX_EDGES = 4_000_000
+TRIANGLE_BLOOM_BITS_PER_EDGE = 12
+TRIANGLE_BLOOM_MAX_BITS = 1 << 30
 
 
 def _wedge_closing_semi(wedges: "DataFrame", o: "DataFrame", n_e: int) -> "DataFrame":
@@ -77,14 +51,11 @@ def _wedge_closing_semi(wedges: "DataFrame", o: "DataFrame", n_e: int) -> "DataF
     - ``n_e <= TRIANGLE_BROADCAST_MAX_EDGES``: broadcast the edge set
       and probe map-side — the wedge table is never shuffled (§3.1);
     - above the bound: Bloom-prune the wedge table map-side, then the
-      shuffled semi join over survivors only (§3.2, constants above);
-    - ``TRIANGLE_BLOOM_BITS_PER_EDGE <= 0``: plain shuffled semi join.
+      shuffled semi join over survivors only (§3.2, constants above).
     """
     closing = o.select(F.col("u"), F.col("v").alias("w"))
     if n_e <= TRIANGLE_BROADCAST_MAX_EDGES:
         return wedges.join(F.broadcast(closing), ["u", "w"], "left_semi")
-    if TRIANGLE_BLOOM_BITS_PER_EDGE <= 0:
-        return wedges.join(closing, ["u", "w"], "left_semi")
     m = min(n_e * TRIANGLE_BLOOM_BITS_PER_EDGE, TRIANGLE_BLOOM_MAX_BITS)
     m = max(64, ((int(m) + 63) // 64) * 64)
     return bloom_prune_join(
@@ -996,6 +967,48 @@ def scd2_build(
     )
 
 
+def _rank_walk(
+    ed: DataFrame,
+    deg: DataFrame,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    share: str,
+    update: str,
+    iters: int,
+) -> DataFrame:
+    """The step loop of the PageRank family: ``iters`` rounds of
+    ``y = A·x`` as a join plus a group-by-sum.  ``ed`` is the pinned
+    (src, dst, per-source columns) edge frame, partitioned on src, and
+    ``deg`` the pinned ``src`` set of nodes with out-edges.  Each round
+    sums the per-edge ``share`` (SQL over ``ed``'s columns and
+    ``rank_micro``) per dst into ``__in``; sums the rank held by
+    dangling nodes (no out-edges — it would otherwise vanish) into the
+    1-row ``__dang``; and left-joins both onto ``nodes``, where
+    ``update`` (SQL over ``nodes``' columns, ``__in`` and ``__dang``)
+    is the new ``rank_micro``.  Each variant owns its pinned
+    recurrence through ``share`` and ``update``.  Lineage is truncated
+    per round with a lazy localCheckpoint, so ``iters`` stays
+    bounded-plan."""
+    for _ in range(iters):
+        contribs = ed.join(ranks.withColumnRenamed("node", "src"), "src").select(
+            F.col("dst").alias("node"), F.expr(share).alias("__share")
+        )
+        dang = ranks.join(
+            deg.select(F.col("src").alias("node")), "node", "left_anti"
+        ).agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("__dang"))
+        ranks = (
+            nodes.join(
+                contribs.groupBy("node").agg(F.sum("__share").alias("__in")),
+                "node",
+                "left",
+            )
+            .crossJoin(F.broadcast(dang))  # 1 row — scalar broadcast
+            .select("node", F.expr(update).alias("rank_micro"))
+            .localCheckpoint(eager=False)
+        )
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -1050,49 +1063,14 @@ def pagerank(
     ed = pin(e.join(outdeg, "src").repartition(F.col("src")))
     outdeg_nodes = pin(outdeg.select("src"))
     ranks = nodes.select("node", F.lit(1_000_000 // n).alias("rank_micro"))
-    for _ in range(iters):
-        contribs = (
-            ed
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                # exact BIGINT truncating division (both operands
-                # positive, so Spark DIV == DuckDB // bit-for-bit);
-                # double division + cast would truncate an INEXACT
-                # quotient and can disagree near integer boundaries
-                F.expr(
-                    f"(rank_micro * {damp_micro}L) div (1000000L * outdeg)"
-                ).alias("__share"),
-            )
-        )
-        # dangling mass: rank sitting on nodes with NO out-edges would
-        # otherwise vanish; redistribute it uniformly (damped), exact
-        # integer share per node
-        dang = (
-            ranks.join(
-                outdeg_nodes.select(F.col("src").alias("node")), "node", "left_anti"
-            ).agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("__dang"))
-        )
-        ranks = (
-            nodes.join(
-                contribs.groupBy("node").agg(F.sum("__share").alias("__in")),
-                "node",
-                "left",
-            )
-            .crossJoin(F.broadcast(dang))  # 1 row — scalar broadcast
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.coalesce("__in", F.lit(0))
-                    + F.expr(
-                        f"(__dang * {damp_micro}L) div (1000000L * {n}L)"
-                    )
-                ).alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    # exact BIGINT truncating division (both operands positive, so
+    # Spark DIV == DuckDB // bit-for-bit); double division + cast would
+    # truncate an INEXACT quotient and can disagree near integer
+    # boundaries
+    share = f"(rank_micro * {damp_micro}L) div (1000000L * outdeg)"
+    dang = f"(__dang * {damp_micro}L) div (1000000L * {n}L)"
+    update = f"{base} + coalesce(__in, 0) + {dang}"
+    return _rank_walk(ed, outdeg_nodes, nodes, ranks, share, update, iters)
 
 
 def concurrency_profile(
@@ -1248,6 +1226,22 @@ def table_diff(
     return j.select(*keys, status.alias("diff_status"))
 
 
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Pin the distinct both-way (src, dst) pairs of ``edges`` — the
+    undirected edge list of label propagation and the components
+    family — pre-partitioned on dst, the key every round's neighbor
+    join uses, so rounds shuffle only the O(N) label table against the
+    cached partitioning (guide §2.4).  The caller releases it (see
+    :func:`~xesmf_spark.materialize.mark`) once its eager per-round
+    checkpoints have consumed it."""
+    e = edges.select("src", "dst").distinct()
+    return pin(
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .repartition(F.col("dst"))
+    )
+
+
 def label_propagation(
     edges: DataFrame,
     iters: int = 3,
@@ -1274,22 +1268,14 @@ def label_propagation(
     agg, and one per-node top-1 window (partitioned by node — never
     global). Lineage truncated per iteration with an EAGER
     localCheckpoint — eager so each iteration's join consumes the
-    persisted symmetrized edge list while it is still cached (a lazy
-    checkpoint would defer every join past the unpersist below and
+    pinned symmetrized edge list while it is still cached (a lazy
+    checkpoint would defer every join past the release below and
     recompute ``sym`` per iteration), so ``iters`` stays bounded-plan.
     No driver scalars at all; nothing collects. Skewed hub nodes are
     bounded by their degree (the vote agg is map-side combinable on
     (node, label))."""
-    e = edges.select("src", "dst").distinct()
-    # pre-partitioned on dst — the key every round's neighbor join
-    # uses — so rounds shuffle only the O(N) label table against the
-    # cached partitioning (guide §2.4)
-    sym = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition(F.col("dst"))
-        .persist()
-    )
+    depth = mark()
+    sym = _symmetric(edges)
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1312,7 +1298,7 @@ def label_propagation(
             .select("node", "label")
             .localCheckpoint(eager=True)
         )
-    sym.unpersist()
+    release_since(depth)
     return labels
 
 
@@ -1342,17 +1328,10 @@ def connected_components(edges: DataFrame, iters: int = 5) -> DataFrame:
     list against the O(N) label table plus one map-side-combinable MIN
     agg — O(|E|) shuffle per round, never all-pairs, no windows, no
     driver scalars. Lineage truncated per round with an eager
-    localCheckpoint (consumes the persisted edge list while cached —
+    localCheckpoint (consumes the pinned edge list while cached —
     the :func:`label_propagation` discipline)."""
-    e = edges.select("src", "dst").distinct()
-    # pre-partitioned on dst, the per-round join key (guide §2.4; see
-    # :func:`label_propagation`)
-    sym = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition(F.col("dst"))
-        .persist()
-    )
+    depth = mark()
+    sym = _symmetric(edges)
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("component")
     )
@@ -1367,7 +1346,7 @@ def connected_components(edges: DataFrame, iters: int = 5) -> DataFrame:
             .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=True)
         )
-    sym.unpersist()
+    release_since(depth)
     return labels
 
 
@@ -1407,14 +1386,8 @@ def connected_components_converged(
     just-materialized frame (no separate join job); lineage truncated
     per round with an eager localCheckpoint. O(|E|) shuffle per
     round, O(log diameter) rounds."""
-    e = edges.select("src", "dst").distinct()
-    sym = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        # pre-partitioned on dst, the per-round hook-join key (§2.4)
-        .repartition(F.col("dst"))
-        .persist()
-    )
+    depth = mark()
+    sym = _symmetric(edges)
     f = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -1454,8 +1427,52 @@ def connected_components_converged(
         f = newf.select("node", "comp")
         if changed == 0:
             break
-    sym.unpersist()
+    release_since(depth)
     return f.select("node", F.col("comp").alias("component"))
+
+
+def _oriented(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The degree-oriented edge set of the triangle family: ``und``
+    (a, b) the distinct undirected non-loop edges with a < b, ``deg``
+    (node, deg) their degrees, and ``o`` (u, v) every edge oriented
+    from its lower (deg, id) endpoint to its higher one — a total
+    order, so every undirected edge gets exactly one direction."""
+    und = (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        # und feeds deg, the orientation join, AND the edge count —
+        # truncate lineage so the (possibly expensive) edge derivation
+        # upstream runs ONCE, not once per output branch (measured
+        # 11.7 s -> the wedge join alone on the sf0.1 co-purchase
+        # graph without it)
+        .localCheckpoint(eager=False)
+    )
+    deg = (
+        und.select(F.col("a").alias("node"))
+        .union(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    o = (
+        und.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
+        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
+        .select(
+            F.when(
+                (F.col("da") < F.col("db"))
+                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
+                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+            )
+            .otherwise(F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
+            .alias("e")
+        )
+        .select("e.u", "e.v")
+        # o feeds both wedge sides and the closing-edge probe (3 scans)
+        .localCheckpoint(eager=False)
+    )
+    return und, deg, o
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -1486,43 +1503,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     keys before the shuffled semi join (:func:`_wedge_closing_semi`),
     so the dominant exchange carries only closing candidates.  No
     windows."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # und feeds deg, the orientation join, AND the edge count —
-        # truncate lineage so the (possibly expensive) edge derivation
-        # upstream runs ONCE, not once per output branch (the pagerank
-        # localCheckpoint discipline; measured 11.7 s -> the wedge join
-        # alone on the sf0.1 co-purchase graph without it)
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # orient: lower (deg, id) -> higher (deg, id); total order, so
-    # every undirected edge gets exactly one direction
-    o = (
-        und.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            )
-            .otherwise(F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-        # o feeds both wedge sides and the closing-edge probe (3 scans)
-        .localCheckpoint(eager=False)
-    )
+    und, deg, o = _oriented(edges)
     # wedges u -> v -> w; closing edge must be the oriented (u, w)
     wedges = o.join(
         o.select(F.col("u").alias("v"), F.col("v").alias("w")), "v"
@@ -1651,37 +1632,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     shuffle keyed on node — nothing new materializes beyond the
     triangle set itself; the closing probe inherits triangle_count's
     conditional-broadcast strategy (one bounded driver scalar)."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # same lineage-truncation discipline as triangle_count: und and
-        # o each feed multiple plan branches
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    o = (
-        und.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            )
-            .otherwise(F.struct(F.col("b").alias("u"), F.col("a").alias("v")))
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-        .localCheckpoint(eager=False)
-    )
+    und, deg, o = _oriented(edges)
     wedges = o.join(
         o.select(F.col("u").alias("v"), F.col("v").alias("w")), "v"
     ).select("u", "v", "w")
@@ -1804,16 +1755,14 @@ def shortest_paths(
         )
     # parallel edges collapse to their min weight up front (halves the
     # per-round join volume on multigraphs; a no-op on simple graphs);
-    # persisted PRE-PARTITIONED on src, the key every round's
+    # pinned PRE-PARTITIONED on src, the key every round's
     # relaxation join uses, so rounds shuffle only the O(N) distance
     # table (guide §2.4).  The groupBy already hash-partitions on
     # (src, dst) — one extra narrow-input exchange here buys iters
     # shuffle-free probe sides.
-    e = (
-        e.groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(F.col("src"))
-        .persist()
+    depth = mark()
+    e = pin(
+        e.groupBy("src", "dst").agg(F.min("w").alias("w")).repartition(F.col("src"))
     )
     dist = sources.select(F.col(sources.columns[0]).alias("node")).distinct().select(
         "node", F.lit(0).cast("long").alias("dist")
@@ -1828,7 +1777,7 @@ def shortest_paths(
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=True)
         )
-    e.unpersist()
+    release_since(depth)
     return dist
 
 
@@ -1991,38 +1940,10 @@ def pagerank_weighted(
     ew = pin(e.join(wout, "src").repartition(F.col("src")))
     wout_nodes = pin(wout.select("src"))
     ranks = nodes.select("node", F.lit(1_000_000 // n).alias("rank_micro"))
-    for _ in range(iters):
-        contribs = (
-            ew
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"(((rank_micro * {damp_micro}L) div 1000000L) * w) div wout"
-                ).alias("__share"),
-            )
-        )
-        dang = ranks.join(
-            wout_nodes.select(F.col("src").alias("node")), "node", "left_anti"
-        ).agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("__dang"))
-        ranks = (
-            nodes.join(
-                contribs.groupBy("node").agg(F.sum("__share").alias("__in")),
-                "node",
-                "left",
-            )
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.coalesce("__in", F.lit(0))
-                    + F.expr(f"(__dang * {damp_micro}L) div (1000000L * {n}L)")
-                ).alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    share = f"(((rank_micro * {damp_micro}L) div 1000000L) * w) div wout"
+    dang = f"(__dang * {damp_micro}L) div (1000000L * {n}L)"
+    update = f"{base} + coalesce(__in, 0) + {dang}"
+    return _rank_walk(ew, wout_nodes, nodes, ranks, share, update, iters)
 
 
 def skyline(
@@ -2414,43 +2335,13 @@ def pagerank_personalized(
     # pre-partitioned on the per-iteration join key
     ed = pin(e.join(out_deg, "src").repartition(F.col("src")))
     deg_nodes = pin(out_deg.select("src"))
-    for _ in range(iters):
-        contribs = (
-            ed
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"((rank_micro * {damp_micro}L) div 1000000L) div deg"
-                ).alias("__share"),
-            )
-        )
-        dang = ranks.join(
-            deg_nodes.select(F.col("src").alias("node")), "node", "left_anti"
-        ).agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("__dang"))
-        ranks = (
-            base.join(
-                contribs.groupBy("node").agg(F.sum("__share").alias("__in")),
-                "node",
-                "left",
-            )
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                (
-                    F.when(F.col("__seed") == 1, F.lit(tele)).otherwise(F.lit(0))
-                    + F.coalesce("__in", F.lit(0))
-                    + F.when(
-                        F.col("__seed") == 1,
-                        F.expr(
-                            f"((__dang * {damp_micro}L) div 1000000L) div {n_s}L"
-                        ),
-                    ).otherwise(F.lit(0))
-                ).cast("long").alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    share = f"((rank_micro * {damp_micro}L) div 1000000L) div deg"
+    dang = f"((__dang * {damp_micro}L) div 1000000L) div {n_s}L"
+    update = (
+        f"CAST(CASE WHEN __seed = 1 THEN {tele} ELSE 0 END + coalesce(__in, 0)"
+        f" + CASE WHEN __seed = 1 THEN {dang} ELSE 0 END AS BIGINT)"
+    )
+    return _rank_walk(ed, deg_nodes, base, ranks, share, update, iters)
 
 
 #: keys sampled per range when dense_rank_distributed draws its
